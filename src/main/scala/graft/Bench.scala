@@ -33,6 +33,23 @@ object Bench {
     (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
   }
 
+  /** Wait for a SparkListener's asynchronous events to land: poll
+    * `counter` until it reads the same value on two consecutive 200 ms
+    * polls, bounded at 30 s. A fixed sleep undercounts on a loaded
+    * host, and `listenerBus.waitUntilEmpty` is private[spark]; this is
+    * the public-API equivalent the measurement mains share.
+    */
+  def awaitListenerDrain(counter: => Long): Unit = {
+    var prev = -1L
+    var stable = 0
+    var waited = 0
+    while (stable < 2 && waited < 30000) {
+      Thread.sleep(200); waited += 200
+      val cur = counter
+      if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Decompose the FIXED per-query cost of the bench (guide §1: measure
@@ -24,21 +26,22 @@ object FixedCost {
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.exists(n.startsWith) }
 
-    var jobs = 0; var stages = 0; var tasks = 0; var taskMs = 0L
+    // written on the listener-bus thread, read on this one
+    val jobs, stages, tasks, taskMs = new AtomicLong
     val listener = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit = jobs += 1
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        stages += 1; tasks += ev.stageInfo.numTasks
-        taskMs += ev.stageInfo.taskMetrics.executorRunTime
+        stages.incrementAndGet(); tasks.addAndGet(ev.stageInfo.numTasks)
+        taskMs.addAndGet(ev.stageInfo.taskMetrics.executorRunTime)
       }
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def codegen(): (Long, Long) = {
-      val src = org.apache.spark.metrics.source.CodegenMetrics
-      (src.METRIC_COMPILATION_TIME.getCount,
-        src.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum / 1000000L)
-    }
+    // CodegenMetrics' compilation histogram: one sample per compiled
+    // unit, in ms (CodeGenerator records the nanoTime delta / 1e6)
+    val compileMs =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 
     // warmup IO caches like the bench does
     Seq("orders", "lineitem", "customer", "part", "documents", "embeddings")
@@ -49,10 +52,8 @@ object FixedCost {
 
     (1 to reps).foreach { r =>
       var wall = 0.0; var phaseMs = 0L
-      jobs = 0; stages = 0; tasks = 0; taskMs = 0L
-      val (cgN0, _) = codegen()
-      val cgT0 = org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
+      Seq(jobs, stages, tasks, taskMs).foreach(_.set(0L))
+      val cgN0 = compileMs.getCount
       sel.foreach { case (name, fn) =>
         CacheScope.harness.release()
         spark.catalog.clearCache()
@@ -63,15 +64,14 @@ object FixedCost {
         phaseMs += df.queryExecution.tracker.phases.values
           .map(p => p.endTimeMs - p.startTimeMs).sum
       }
-      Thread.sleep(500)
-      val (cgN1, _) = codegen()
+      Bench.awaitListenerDrain(stages.get)
       println(f"[fixed] sweep $r: n=${sel.size} wall $wall%.2f s " +
-        f"taskTime ${taskMs / 1e3}%.2f s phases(outer df) ${phaseMs / 1e3}%.2f s " +
-        f"codegenUnits ${cgN1 - cgN0} jobs $jobs stages $stages tasks $tasks")
+        f"taskTime ${taskMs.get / 1e3}%.2f s phases(outer df) ${phaseMs / 1e3}%.2f s " +
+        f"codegenUnits ${compileMs.getCount - cgN0} jobs ${jobs.get} " +
+        f"stages ${stages.get} tasks ${tasks.get}")
     }
-    val src = org.apache.spark.metrics.source.CodegenMetrics
-    println(f"[fixed] codegen total: ${src.METRIC_COMPILATION_TIME.getCount} units, " +
-      f"mean ${src.METRIC_COMPILATION_TIME.getSnapshot.getMean / 1e6}%.1f ms")
+    println(f"[fixed] codegen total: ${compileMs.getCount} units, " +
+      f"mean ${compileMs.getSnapshot.getMean}%.1f ms")
     spark.stop()
   }
 }

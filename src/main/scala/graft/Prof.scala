@@ -24,9 +24,11 @@ object Prof {
 
     case class St(name: String, tasks: Int, runMs: Long, wallMs: Long,
                   shRead: Long, shWrite: Long, spill: Long)
-    val stages = scala.collection.mutable.ArrayBuffer[St]()
-    val stageJob = scala.collection.mutable.Map[Int, (Int, String)]()
-    var record = false
+    // filled on the listener-bus thread, read on this one
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]()
+    val stageJob =
+      new java.util.concurrent.ConcurrentHashMap[Int, (Int, String)]()
+    @volatile var record = false
     val listener = new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit =
         if (record) {
@@ -34,14 +36,14 @@ object Prof {
             .flatMap(p => Option(p.getProperty("spark.job.description")))
             .getOrElse("")
           ev.stageIds.foreach(sid =>
-            stageJob(sid) = (ev.jobId, desc.take(60)))
+            stageJob.put(sid, (ev.jobId, desc.take(60))))
         }
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
         if (record) {
           val si = ev.stageInfo
           val m = si.taskMetrics
-          val (jid, desc) = stageJob.getOrElse(si.stageId, (-1, ""))
-          stages += St(s"job$jid s${si.stageId} " +
+          val (jid, desc) = stageJob.getOrDefault(si.stageId, (-1, ""))
+          stages.add(St(s"job$jid s${si.stageId} " +
             si.name.takeWhile(_ != '\n') +
             (if (desc.nonEmpty) s" [$desc]" else ""), si.numTasks,
             m.executorRunTime,
@@ -49,7 +51,7 @@ object Prof {
               si.submissionTime.getOrElse(0L),
             m.shuffleReadMetrics.totalBytesRead,
             m.shuffleWriteMetrics.bytesWritten,
-            m.diskBytesSpilled)
+            m.diskBytesSpilled))
         }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -62,11 +64,13 @@ object Prof {
       println(f"[prof] rep $r wall ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     // let the listener bus drain before reading the buffer
-    Thread.sleep(1000)
-    val total = stages.map(_.runMs).sum
-    println(f"[prof] $name: ${stages.size} stages, " +
+    Bench.awaitListenerDrain(stages.size.toLong)
+    import scala.jdk.CollectionConverters._
+    val last = stages.asScala.toSeq
+    val total = last.map(_.runMs).sum
+    println(f"[prof] $name: ${last.size} stages, " +
       f"sum task time ${total / 1e3}%.2f s (last rep)")
-    stages.sortBy(-_.runMs).take(40).foreach { s =>
+    last.sortBy(-_.runMs).take(40).foreach { s =>
       println(f"[prof] ${s.runMs}%6d ms run ${s.wallMs}%6d ms wall " +
         f"${s.tasks}%4d tasks shR ${s.shRead}%9d shW ${s.shWrite}%9d " +
         f"spill ${s.spill}%8d  ${s.name}%s")

@@ -542,13 +542,10 @@ object RegistryLlm {
     // rep = min id of the component; oracle is transitive closure via a
     // DuckDB recursive CTE over the same edge set d06 verifies.
     Q("d08_dup_clusters",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").filter(col("doc_id") < 500)
-        Dedup.connectedComponents(
-          docs.select(col("doc_id").as("id")),
-          Dedup.exactNgramNearDups(docs, "text", "doc_id", 3, 0.5))
-          .orderBy("id")
-      },
+      (s, dir) => Dedup.nearDupClusters(
+          t(s, dir, "documents").filter(col("doc_id") < 500),
+          "text", "doc_id", 3, 0.5)
+        .orderBy("id"),
       Some("""WITH RECURSIVE t AS (
              |  SELECT doc_id,
              |    CASE WHEN len(toks) >= 3 THEN

@@ -786,122 +786,13 @@ object RegistryR11 {
     //      you run it on a sampled slice to certify band/row parameters,
     //      then trust the banded join those parameters drive.
     Q("d30_recall_portable",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val toks = expr(
-          "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-        // feeds signatures, the exact inverted-index join (twice) and
-        // sizes — plan-lifetime cache TRACKED in CacheScope.harness
-        // (released by the harness after the query)
-        val gramRows = graft.CacheScope.harness.track(
-          t(s, dir, "documents")
-          .filter(col("doc_id") < 1500)
-          .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-          .select(col("doc_id"), col("tok"),
-            lead("tok", 1).over(w).as("t1"),
-            lead("tok", 2).over(w).as("t2"))
-          .filter(col("t2").isNotNull)
-          .select(col("doc_id"),
-            concat_ws(" ", col("tok"), col("t1"), col("t2")).as("gram"))
-          .distinct())
-        val p = lit(2147483647L)
-        val sig = gramRows
-          .select(col("doc_id"),
-            (conv(substring(md5(col("gram")), 1, 8), 16, 10)
-              .cast("long") % p).as("g"))
-          .select(col("doc_id"), col("g"),
-            explode(sequence(lit(0), lit(31))).as("seed"))
-          .select(col("doc_id"), col("seed"),
-            (((lit(2654435761L) * (col("seed") + 1) % p) * col("g")
-              + lit(40503L) * (col("seed") + 1) % p) % p).as("h"))
-          .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-        val bands = sig
-          .groupBy(col("doc_id"), (col("seed") / 4).cast("int").as("band"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("seed"), col("mh")))),
-            x => x.getField("mh").cast("string")), "-").as("sig"))
-        val cand = bands.alias("a")
-          .join(bands.alias("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
-              && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        val sizes = gramRows.groupBy("doc_id").agg(count(lit(1)).as("n"))
-        val inter = gramRows.select(col("doc_id").as("id_a"), col("gram"))
-          .join(gramRows.select(col("doc_id").as("id_b"), col("gram")),
-            "gram")
-          .filter(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-        inter
-          .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
-            "id_a")
-          .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
-            "id_b")
-          .withColumn("uni", col("na") + col("nb") - col("inter"))
-          .filter(col("inter").cast("double") / col("uni").cast("double")
-            >= 0.5)
-          .join(cand.withColumn("caught", lit(1)), Seq("id_a", "id_b"),
-            "left")
-          .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
-            coalesce(col("caught"), lit(0)).as("caught"))
-          .orderBy("id_a", "id_b")
-      },
-      Some("""WITH base AS (
-             |  SELECT doc_id, text FROM documents WHERE doc_id < 1500),
-             |t AS (
-             |  SELECT doc_id,
-             |    list_distinct(list_transform(range(1, len(toks)-1),
-             |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |      AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)),
-             |        '\s+'), x -> strlen(x) > 0) AS toks
-             |    FROM base)),
-             |gs AS (
-             |  SELECT doc_id,
-             |    CAST(concat('0x', substr(md5(gram), 1, 8)) AS BIGINT)
-             |      % 2147483647 AS g
-             |  FROM (SELECT doc_id, unnest(grams) AS gram FROM t)),
-             |h AS (
-             |  SELECT doc_id, s.seed,
-             |    min(((2654435761 * (s.seed + 1) % 2147483647) * g
-             |      + 40503 * (s.seed + 1) % 2147483647) % 2147483647)
-             |      AS mh
-             |  FROM gs CROSS JOIN (SELECT unnest(range(32)) AS seed) s
-             |  GROUP BY doc_id, s.seed),
-             |bands AS (
-             |  SELECT doc_id, seed // 4 AS band,
-             |    string_agg(CAST(mh AS VARCHAR), '-' ORDER BY seed)
-             |      AS sig
-             |  FROM h GROUP BY doc_id, seed // 4),
-             |cand AS (
-             |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             |  FROM bands a JOIN bands b
-             |    ON a.band = b.band AND a.sig = b.sig
-             |   AND a.doc_id < b.doc_id),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |iv AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             |    count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |tp AS (
-             |  SELECT i.id_a, i.id_b, CAST(i.inter AS BIGINT) AS inter,
-             |    CAST(sa.n + sb.n - i.inter AS BIGINT) AS uni
-             |  FROM iv i
-             |  JOIN sizes sa ON sa.doc_id = i.id_a
-             |  JOIN sizes sb ON sb.doc_id = i.id_b
-             |  WHERE CAST(i.inter AS DOUBLE)
-             |    / (sa.n + sb.n - i.inter) >= 0.5)
-             |SELECT tp.id_a, tp.id_b, tp.inter, tp.uni,
-             |  CAST(CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END
-             |    AS INT) AS caught
-             |FROM tp LEFT JOIN cand c
-             |  ON c.id_a = tp.id_a AND c.id_b = tp.id_b
-             |ORDER BY tp.id_a, tp.id_b""".stripMargin)),
+      (s, dir) => graft.llm.Dedup.portableRecall(
+          t(s, dir, "documents").filter(col("doc_id") < 1500),
+          "text", "doc_id", threshold = 0.5)
+        .orderBy("id_a", "id_b"),
+      Some(graft.llm.Dedup.portableRecallOracleSql(
+        "(SELECT * FROM documents WHERE doc_id < 1500)", "doc_id", "text",
+        threshold = 0.5))),
 
     // ---- L13: temperature-based multilingual sampling — the published
     //      p^alpha rebalance (alpha=0.7, the multilingual-LM convention)
@@ -914,54 +805,14 @@ object RegistryR11 {
     //      BEFORE normalization, so the z-sum is associative BIGINT —
     //      no cross-engine summation-order drift.
     Q("l13_temperature_sample",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val counts = docs.groupBy("lang").agg(count(lit(1)).as("c"))
-        val tot = counts.agg(sum("c").as("total"))
-        val q = counts.crossJoin(broadcast(tot))
-          .withColumn("qs_micro",
-            round(pow(col("c").cast("double") /
-              col("total").cast("double"), 0.7) * 1e9).cast("long"))
-        val rates = q.crossJoin(broadcast(
-            q.agg(sum("qs_micro").as("z_micro"))))
-          .withColumn("rate_micro",
-            least(lit(1000000L),
-              round(lit(200.0) *
-                (col("qs_micro").cast("double") /
-                  col("z_micro").cast("double")) /
-                col("c").cast("double") * 1e6).cast("long")))
-          .select(col("lang"), col("rate_micro"))
-        docs.join(broadcast(rates), "lang")
-          .withColumn("u_micro",
-            conv(substring(md5(concat(lit("temp-"),
-              col("doc_id").cast("string"))), 1, 15), 16, 10)
-              .cast("long") % 1000000L)
-          .filter(col("u_micro") < col("rate_micro"))
-          .select(col("doc_id"), col("lang"), col("rate_micro"))
-          .orderBy("doc_id")
-      },
-      Some("""WITH c AS (
-             |  SELECT lang, count(*) AS c FROM documents GROUP BY lang),
-             |tot AS (SELECT sum(c) AS total FROM c),
-             |q AS (
-             |  SELECT lang, c,
-             |    CAST(round(pow(CAST(c AS DOUBLE) / CAST(total AS DOUBLE),
-             |      0.7) * 1e9) AS BIGINT) AS qs_micro
-             |  FROM c, tot),
-             |z AS (SELECT CAST(sum(qs_micro) AS BIGINT) AS z_micro FROM q),
-             |r AS (
-             |  SELECT lang,
-             |    least(1000000,
-             |      CAST(round(200.0
-             |        * (CAST(qs_micro AS DOUBLE) / CAST(z_micro AS DOUBLE))
-             |        / CAST(c AS DOUBLE) * 1e6) AS BIGINT)) AS rate_micro
-             |  FROM q, z)
-             |SELECT d.doc_id, d.lang, r.rate_micro
-             |FROM documents d JOIN r ON r.lang = d.lang
-             |WHERE CAST(concat('0x', substr(md5(concat('temp-',
-             |    CAST(d.doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-             |  % 1000000 < r.rate_micro
-             |ORDER BY d.doc_id""".stripMargin)),
+      (s, dir) => graft.llm.CorpusPipeline.temperatureSample(
+          t(s, dir, "documents"), "lang", "temp-", 200.0)
+        .select(col("doc_id"), col("lang"), col("rate_micro"))
+        .orderBy("doc_id"),
+      Some(s"""WITH ${graft.llm.CorpusPipeline.temperatureSampleOracleCtes(
+                 "documents", "lang", "temp-", 200.0, "smp")}
+              |SELECT doc_id, lang, rate_micro FROM smp
+              |ORDER BY doc_id""".stripMargin)),
 
     // ---- N21: hard-NEGATIVE mining (ANCE/DPR-style) — for each query
     //      vector, the k most-similar corpus vectors with a DIFFERENT
@@ -1641,41 +1492,18 @@ object RegistryR11 {
           .select(col("doc_id"), explode(gramsLower).as("g"))
           .join(broadcast(evalGrams), "g").select("doc_id").distinct()
         val q3 = train.join(contaminated, Seq("doc_id"), "left_anti")
-        val counts = q3.groupBy("lang").agg(count(lit(1)).as("c"))
-        val qq = counts.crossJoin(broadcast(counts.agg(sum("c").as("total"))))
-          .withColumn("qs_micro",
-            round(pow(col("c").cast("double") / col("total").cast("double"),
-              0.7) * 1e9).cast("long"))
-        val rates = qq.crossJoin(broadcast(
-            qq.agg(sum("qs_micro").as("z_micro"))))
-          .withColumn("rate_micro",
-            least(lit(1000000L),
-              round(lit(100.0) *
-                (col("qs_micro").cast("double") /
-                  col("z_micro").cast("double")) /
-                col("c").cast("double") * 1e6).cast("long")))
-          .select(col("lang"), col("rate_micro"))
-        val q4 = q3.join(broadcast(rates), "lang")
-          .filter(conv(substring(md5(concat(lit("l16-"),
-            col("doc_id").cast("string"))), 1, 15), 16, 10)
-            .cast("long") % 1000000L < col("rate_micro"))
-        def stage(name: String,
-                  df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        stage("0_raw", docs)
-          .union(stage("1_quality", q1))
-          .union(stage("2_dedup", q2))
-          .union(stage("3_decontam", q3))
-          .union(stage("4_sampled", q4))
-          .union(q4.agg(
-              expr("CAST((sum(n_words) + 511) div 512 AS BIGINT)")
-                .as("n_rows"))
-            .select(lit("5_blocks").as("stage"), col("n_rows")))
-          .orderBy("stage")
+        val cp = graft.llm.CorpusPipeline
+        val q4 = cp.temperatureSample(q3, "lang", "l16-", 100.0)
+        cp.stageReport(
+          cp.stageRow("0_raw", docs),
+          cp.stageRow("1_quality", q1),
+          cp.stageRow("2_dedup", q2),
+          cp.stageRow("3_decontam", q3),
+          cp.stageRow("4_sampled", q4),
+          cp.stageRow("5_blocks", q4,
+            expr("CAST((sum(n_words) + 511) div 512 AS BIGINT)")))
       },
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
              |  SELECT doc_id, lang,
              |    CASE WHEN doc_id % 83 = 0
              |      THEN 'the a spark table scan row key spark table' ||
@@ -1685,7 +1513,7 @@ object RegistryR11 {
              |  FROM documents),
              |w AS (
              |  SELECT doc_id, lang, text,
-             |    list_filter(regexp_split_to_array(trim(text), '\s+'),
+             |    list_filter(regexp_split_to_array(trim(text), '\\s+'),
              |      x -> length(x) > 0) AS ws
              |  FROM d),
              |q1 AS (
@@ -1711,7 +1539,7 @@ object RegistryR11 {
              |      i -> md5(array_to_string(lws[i : i + 7], ' '))) AS gs
              |  FROM (SELECT doc_id,
              |          list_filter(
-             |            regexp_split_to_array(trim(lower(text)), '\s+'),
+             |            regexp_split_to_array(trim(lower(text)), '\\s+'),
              |            x -> length(x) > 0) AS lws
              |        FROM d)),
              |eg AS (SELECT DISTINCT unnest(gs) AS g FROM lg
@@ -1725,24 +1553,8 @@ object RegistryR11 {
              |q3 AS (SELECT * FROM q2
              |       WHERE doc_id % 97 <> 0
              |         AND doc_id NOT IN (SELECT doc_id FROM cont)),
-             |c AS (SELECT lang, count(*) AS c FROM q3 GROUP BY lang),
-             |tot AS (SELECT sum(c) AS total FROM c),
-             |qv AS (SELECT lang, c,
-             |    CAST(round(pow(CAST(c AS DOUBLE) / CAST(total AS DOUBLE),
-             |      0.7) * 1e9) AS BIGINT) AS qs_micro
-             |  FROM c, tot),
-             |z AS (SELECT CAST(sum(qs_micro) AS BIGINT) AS z_micro FROM qv),
-             |r AS (SELECT lang,
-             |    least(1000000,
-             |      CAST(round(100.0
-             |        * (CAST(qs_micro AS DOUBLE) / CAST(z_micro AS DOUBLE))
-             |        / CAST(c AS DOUBLE) * 1e6) AS BIGINT)) AS rate_micro
-             |  FROM qv, z),
-             |q4 AS (
-             |  SELECT q3.* FROM q3 JOIN r USING (lang)
-             |  WHERE CAST(concat('0x', substr(md5(concat('l16-',
-             |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-             |    % 1000000 < r.rate_micro)
+             |${graft.llm.CorpusPipeline.temperatureSampleOracleCtes(
+                  "q3", "lang", "l16-", 100.0, "q4")}
              |SELECT stage, n_rows FROM (
              |  SELECT '0_raw' AS stage,
              |    CAST(count(*) AS BIGINT) AS n_rows FROM documents

@@ -77,195 +77,19 @@ object RegistryR14 {
         val docs = t(s, dir, "documents").filter(col("doc_id") < 300)
           .withColumn("text", when(col("doc_id") % 41 === 0, lit(dup))
             .otherwise(coalesce(col("text"), lit(""))))
-        val warcIn = docs.select(
-          col("doc_id"),
-          lit("conversion").as("warc_type"),
-          concat(lit("<urn:graft:doc:"), col("doc_id"), lit(">"))
-            .as("record_id"),
-          concat(lit("https://example.org/"), col("source"), lit("/"),
-            col("doc_id")).as("target_uri"),
-          lit("2026-01-01T00:00:00Z").as("warc_date"),
-          lit("text/plain").as("content_type"),
-          encode(col("text"), "UTF-8").as("payload"))
-        val tmp = Registry.scratchDir("warc_l22")
-        graft.sources.WarcIngest.writeWarcDir(
-          warcIn.repartition(4, col("doc_id")), tmp, gzip = true)
-        val (records, audit) = graft.sources.WarcIngest.readWarcDir(s, tmp)
-        require(audit.filter(col("corrupt")).count() == 0,
-          "l22: corrupt archives")
-        // persisted (harness scope): readWarcDir re-STREAMS the gzip
-        // archives on every action, and BOTH the stage-0 count and the
-        // c1 build hang off this frame — the pin bounds the chain to
-        // ONE container decode however many stages read it
-        val fromWarc = CacheScope.harness.track(records.select(
-          regexp_extract(col("record_id"), "doc:(\\d+)", 1)
-            .cast("long").as("doc_id"),
-          regexp_extract(col("target_uri"), "example\\.org/([^/]+)/", 1)
-            .as("source"),
-          decode(col("payload"), "UTF-8").as("text"))).toDF()
-        // C4-lite lines: 7-word chunks, keep chunks of >= 3 words, doc
-        // survives with >= 5 kept lines; ws binds ONCE per row (the
-        // one-element-transform trick)
-        // persisted (harness scope, released after the query drains):
-        // four stage aggregates hang off the CLEANED frame — the pin
-        // keeps the C4 transform single-pass on top of fromWarc's
-        // single container decode
-        val c1 = CacheScope.harness.track(
-          fromWarc.filter(col("text").rlike("\\S"))
-          .select(col("doc_id"), col("source"), expr(
-            """element_at(transform(
-              |  array(filter(split(trim(text), '\\s+'),
-              |        x -> length(x) > 0)),
-              |  ws -> filter(
-              |    transform(sequence(0,
-              |        cast(ceil(size(ws) / 7.0) as int) - 1),
-              |      i -> slice(ws, i * 7 + 1, 7)),
-              |    l -> size(l) >= 3)), 1)""".stripMargin).as("kept"))
-          .filter(size(col("kept")) >= 5)
-          .select(col("doc_id"), col("source"), expr(
-            "array_join(transform(kept, l -> array_join(l, ' ')), ' ')")
-            .as("ctext"))).toDF()
-        val dd = graft.llm.Dedup.exactSubstrDedup(c1, "ctext", "doc_id",
-          w = 8, floor = false) // c1 is a cached derived frame, not a scan
-        // dd derives from c1 (self-join lineage) — disambiguate by
-        // alias. Persisted: the ExactSubstr rewrite feeds the sampling
-        // stage, its count, AND the block fold — one rewrite, not three.
-        val surv = CacheScope.harness.track(
-          dd.as("dd").join(c1.as("c"),
-            col("dd.id") === col("c.doc_id"))
-          .select(col("c.doc_id").as("doc_id"),
-            col("c.source").as("source"),
-            (size(split(col("c.ctext"), " ")) -
-              col("dd.n_tokens_removed")).cast("long").as("nt"))
-          .filter(col("nt") > 0)).toDF()
-        val counts = surv.groupBy("source").agg(count(lit(1)).as("c"))
-        val qq = counts
-          .crossJoin(broadcast(counts.agg(sum("c").as("total"))))
-          .withColumn("qs_micro",
-            round(pow(col("c").cast("double") / col("total").cast("double"),
-              0.7) * 1e9).cast("long"))
-        val rates = qq.crossJoin(broadcast(
-            qq.agg(sum("qs_micro").as("z_micro"))))
-          .withColumn("rate_micro",
-            least(lit(1000000L),
-              round(lit(100.0) *
-                (col("qs_micro").cast("double") /
-                  col("z_micro").cast("double")) /
-                col("c").cast("double") * 1e6).cast("long")))
-          .select(col("source"), col("rate_micro"))
-        val q4 = surv.join(broadcast(rates), "source")
-          .filter(conv(substring(md5(concat(lit("l22-"),
-            col("doc_id").cast("string"))), 1, 15), 16, 10)
-            .cast("long") % 1000000L < col("rate_micro"))
-        def stage(name: String, df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        stage("0_warc_records", fromWarc)
-          .union(stage("1_c4_clean", c1))
-          .union(stage("2_exact_substr", surv))
-          .union(stage("3_sampled", q4))
-          .union(q4.agg(
-              expr("CAST((sum(nt) + 511) div 512 AS BIGINT)").as("n_rows"))
-            .select(lit("4_blocks").as("stage"), col("n_rows")))
-          .orderBy("stage")
+        graft.llm.CorpusPipeline.commonCrawlChain(docs,
+          Registry.scratchDir("warc_l22"), parts = 4)
       },
-      Some("""WITH d AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN doc_id % 41 = 0
-             |      THEN 'alpha beta gamma delta epsilon zeta eta theta' ||
-             |        ' iota kappa lambda mu nu xi omicron pi rho sigma' ||
-             |        ' tau upsilon phi chi psi omega one two three four' ||
-             |        ' five six seven eight nine ten eleven twelve' ||
-             |        ' thirteen fourteen fifteen sixteen'
-             |      ELSE coalesce(text, '') END AS text
-             |  FROM documents WHERE doc_id < 300),
-             |w0 AS (
-             |  SELECT doc_id, source,
-             |    list_filter(regexp_split_to_array(trim(text), '\s+'),
-             |      x -> length(x) > 0) AS ws
-             |  FROM d WHERE regexp_matches(text, '\S')),
-             |k AS (
-             |  SELECT doc_id, source,
-             |    list_filter(list_transform(
-             |      range(0, CAST(ceil(len(ws) / 7.0) AS INT)),
-             |      i -> ws[i*7+1 : i*7+7]), l -> len(l) >= 3) AS kept
-             |  FROM w0),
-             |c1 AS (
-             |  SELECT doc_id, source,
-             |    array_to_string(list_transform(kept,
-             |      l -> array_to_string(l, ' ')), ' ') AS ctext
-             |  FROM k WHERE len(kept) >= 5),
-             |words AS (SELECT doc_id AS id, source,
-             |    string_split(ctext, ' ') AS ws FROM c1),
-             |segs AS (
-             |  SELECT w.id, t.i AS span_idx,
-             |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-             |  FROM words w,
-             |    LATERAL (SELECT unnest(range(greatest(
-             |      len(w.ws) - 7, 0))) AS i) t),
-             |occ AS (
-             |  SELECT id, span_idx,
-             |    row_number() OVER (PARTITION BY h
-             |      ORDER BY id, span_idx) AS rn,
-             |    count(*) OVER (PARTITION BY h) AS cnt
-             |  FROM segs),
-             |losers AS (
-             |  SELECT id, span_idx AS s, span_idx + 8 AS e
-             |  FROM occ WHERE cnt > 1 AND rn > 1),
-             |isl AS (
-             |  SELECT id, s, e,
-             |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-             |        ORDER BY s, e
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-             |      THEN 1 ELSE 0 END AS brk
-             |  FROM losers),
-             |grp AS (
-             |  SELECT id, s, e,
-             |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-             |  FROM isl),
-             |spans AS (
-             |  SELECT id, g, min(s) AS s, max(e) AS e FROM grp
-             |  GROUP BY id, g),
-             |cutstats AS (
-             |  SELECT id, sum(e - s) AS cut FROM spans GROUP BY id),
-             |surv AS (
-             |  SELECT w.id AS doc_id, w.source,
-             |    CAST(len(w.ws) - coalesce(ct.cut, 0) AS BIGINT) AS nt
-             |  FROM words w
-             |  LEFT JOIN cutstats ct ON ct.id = w.id
-             |  WHERE len(w.ws) - coalesce(ct.cut, 0) > 0),
-             |c AS (SELECT source, count(*) AS c FROM surv GROUP BY source),
-             |tot AS (SELECT sum(c) AS total FROM c),
-             |qv AS (SELECT source, c,
-             |    CAST(round(pow(CAST(c AS DOUBLE) / CAST(total AS DOUBLE),
-             |      0.7) * 1e9) AS BIGINT) AS qs_micro
-             |  FROM c, tot),
-             |z AS (SELECT CAST(sum(qs_micro) AS BIGINT) AS z_micro FROM qv),
-             |r AS (SELECT source,
-             |    least(1000000,
-             |      CAST(round(100.0
-             |        * (CAST(qs_micro AS DOUBLE) / CAST(z_micro AS DOUBLE))
-             |        / CAST(c AS DOUBLE) * 1e6) AS BIGINT)) AS rate_micro
-             |  FROM qv, z),
-             |q4 AS (
-             |  SELECT surv.* FROM surv JOIN r USING (source)
-             |  WHERE CAST(concat('0x', substr(md5(concat('l22-',
-             |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-             |    % 1000000 < r.rate_micro)
-             |SELECT stage, n_rows FROM (
-             |  SELECT '0_warc_records' AS stage,
-             |    CAST(count(*) AS BIGINT) AS n_rows FROM d
-             |  UNION ALL SELECT '1_c4_clean', CAST(count(*) AS BIGINT)
-             |    FROM c1
-             |  UNION ALL SELECT '2_exact_substr', CAST(count(*) AS BIGINT)
-             |    FROM surv
-             |  UNION ALL SELECT '3_sampled', CAST(count(*) AS BIGINT)
-             |    FROM q4
-             |  UNION ALL SELECT '4_blocks',
-             |    CAST((sum(nt) + 511) // 512 AS BIGINT) FROM q4)
-             |ORDER BY stage""".stripMargin)),
+      Some(graft.llm.CorpusPipeline.commonCrawlChainOracleSql(
+        """SELECT doc_id, source,
+          |    CASE WHEN doc_id % 41 = 0
+          |      THEN 'alpha beta gamma delta epsilon zeta eta theta' ||
+          |        ' iota kappa lambda mu nu xi omicron pi rho sigma' ||
+          |        ' tau upsilon phi chi psi omega one two three four' ||
+          |        ' five six seven eight nine ten eleven twelve' ||
+          |        ' thirteen fourteen fifteen sixteen'
+          |      ELSE coalesce(text, '') END AS text
+          |  FROM documents WHERE doc_id < 300""".stripMargin))),
 
     // ---- M17: CANONICAL-image selection — the d14 keep-best recipe on
     //      the perceptual axis: m14's dHash groups (planted cross-scale

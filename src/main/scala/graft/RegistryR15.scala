@@ -86,44 +86,16 @@ object RegistryR15 {
     Q("t34_logreg_quality",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val w = lr.fit(train, iters = 10, lrDen = 4L)
-        lr.margins(heldout, w)
-          .select(col("id").as("doc_id"),
-            col("y").cast("int").as("label"),
-            col("m").as("score_micro"),
-            (col("m") > 0).cast("int").as("pred"),
-            ((col("m") > 0) === col("y")).cast("int").as("correct"))
+        val (train, heldout) = lr.labelledSplit(
+          lr.labelledDocs(t(s, dir, "documents"), "t34:"))
+        lr.verdicts(lr.margins(heldout, lr.fit(train, iters = 10,
+            lrDen = 4L)))
           .orderBy("doc_id")
       },
-      Some {
-        val ctes = graft.llm.LogReg.oracleCtes(buckets = 256, iters = 10,
-          lrDen = 4L)
-        s"""WITH lr_d AS (
-           |  SELECT doc_id,
-           |    (CAST(concat('0x', substr(md5('t34:' ||
-           |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-           |       % 100) < 70 AS is_train,
-           |    lang = 'en' AS is_pos,
-           |    list_filter(string_split_regex(trim(lower(
-           |      text || CASE WHEN doc_id % 2 = 0
-           |        THEN ' m' || lang ELSE '' END)), '\\s+'),
-           |      x -> strlen(x) > 0) AS ts
-           |  FROM documents),
-           |${ctes.mkString(",\n")}
-           |SELECT doc_id, label, score_micro, pred, correct
-           |FROM lr_out ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH ${graft.llm.LogReg.labelledOracleCtes("t34:")
+                 .mkString(",\n")}
+              |SELECT doc_id, label, score_micro, pred, correct
+              |FROM lr_out ORDER BY doc_id""".stripMargin)),
 
     // ---- M18: the MULTIMODAL end-to-end chain — l22's image twin,
     //      the published LAION/DataComp pipeline from the CONTAINER:
@@ -147,161 +119,11 @@ object RegistryR15 {
     //      breaks the gate. Pixels never shuffle: hashes, widths and
     //      token counts travel; payloads stay scan-side. --------------
     Q("m18_multimodal_chain",
-      (s, dir) => {
-        val mm = graft.llm.Multimodal
-        val docsAll = t(s, dir, "documents").filter(col("doc_id") < 150)
-        val ids = docsAll.select(col("doc_id").cast("long").as("id"),
-          (col("doc_id") % 25).as("key"),
-          when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
-        val pristine = mm.withSyntheticImagesScaled(ids, "id", "key",
-          "scale", baseW = 36, baseH = 32)
-        val gpsVals = docsAll.select(col("doc_id").cast("long").as("id"),
-          format_string("lat=%d;lon=%d",
-            col("doc_id") * 1003 % 180000000L - 90000000L,
-            col("doc_id") * 2017 % 360000000L - 180000000L).as("gps_v"))
-        val planted = mm.withPlantedText(
-          pristine.join(gpsVals, "id"), "id", "payload",
-          Seq("gps" -> "gps_v"))
-        val tarIn = planted
-          .select(col("id"),
-            format_string("img/%05d.png", col("id")).as("name"),
-            col("payload"))
-          .unionByName(docsAll.select(col("doc_id").cast("long").as("id"),
-            format_string("img/%05d.txt", col("doc_id")).as("name"),
-            encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-        val tmp = Registry.scratchDir("m18_tar")
-        graft.sources.TarIngest.writeTarDir(
-          tarIn.repartition(4, col("id")).drop("id"), tmp, gzip = true)
-        val (members, audit) = graft.sources.TarIngest.readTarDir(s, tmp)
-        require(audit.filter(col("corrupt")).count() == 0,
-          "m18: corrupt shards")
-        // persisted (harness scope): the TAR re-streams per action and
-        // five stages hang off the sample frame — one container decode
-        val samples = CacheScope.harness.track(
-          graft.sources.TarIngest.wdsSamples(members)).toDF()
-        val pngs = samples.filter(col("ext") === "png")
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"), col("payload"))
-        val caps = samples.filter(col("ext") === "txt")
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"),
-            decode(col("payload"), "UTF-8").as("caption"))
-        val gpsSeen = mm.pngMeta(pngs, "id", "payload")
-          .filter(col("keyword") === "gps")
-          .join(gpsVals, "id")
-          .filter(col("value") === col("gps_v"))
-        // strip INSIDE the chain, on the container bytes; pinned — the
-        // dHash, the width decode and the restored-proof all read it
-        val stripped = CacheScope.harness.track(
-          mm.stripPngMeta(pngs, "id", "payload")
-            .select(col("id"), col("payload"))).toDF()
-        val restored = stripped
-          .select(col("id"), md5(col("payload")).as("m1"))
-          .join(mm.stripPngMeta(pristine, "id", "payload")
-            .select(col("id"), md5(col("payload")).as("m0")), "id")
-          .filter(col("m1") === col("m0"))
-        val hashed = mm.dhashes(stripped, "id")
-          .filter(col("dhash").isNotNull)
-        val cc = graft.llm.Dedup.connectedComponents(
-          hashed.select(col("id")),
-          graft.llm.Dedup.starEdges(hashed, "dhash", "id"))
-        val meta = mm.decodeImageFeatures(stripped, "id")
-          .select(col("id"), col("width").cast("long").as("width"))
-        // m17's rule through the map-side-combinable argmax election —
-        // never a rank window over the connected-components rep key
-        val canonical = graft.llm.Dedup.electCanonical(
-            cc.join(meta, "id"), "rep", "id", "width")
-          .select(col("rep"), col("canonical"))
-        val withCap = canonical
-          .join(caps, canonical("canonical") === caps("id"))
-        val counts = withCap.select(col("canonical").as("doc_id"),
-          (lit(64L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-        val packed = graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 256, blockSize = 8)
-        def stage(name: String, df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        // stage 0 counts the CACHED sample frame (one row per member —
-        // wdsSamples is a per-member annotation), not `members`, which
-        // would re-stream the archives for one count (the l22 lesson)
-        stage("0_tar_members", samples)
-          .union(samples.agg(countDistinct(col("sample_key"))
-              .as("n_rows"))
-            .select(lit("1_samples").as("stage"), col("n_rows")))
-          .union(stage("2_gps_seen", gpsSeen))
-          .union(stage("3_strip_restored", restored))
-          .union(stage("4_canonical", canonical))
-          .union(stage("5_caption_join", withCap))
-          .union(packed.agg(countDistinct(
-              col("block") * 10000L + col("bin")).as("n_rows"))
-            .select(lit("6_blocks").as("stage"), col("n_rows")))
-          .union(counts.agg(sum(col("n_tokens")).as("n_rows"))
-            .select(lit("7_tokens").as("stage"), col("n_rows")))
-          .orderBy("stage")
-      },
-      Some("""WITH RECURSIVE ids AS (
-             |  SELECT doc_id AS id, doc_id % 25 AS key,
-             |    CASE WHEN doc_id < 75 THEN 1 ELSE 2 END AS scale
-             |  FROM documents WHERE doc_id < 150),
-             |e AS (
-             |  SELECT a.id AS a, b.id AS b FROM ids a JOIN ids b
-             |  ON a.key = b.key AND a.id <> b.id),
-             |reach AS (
-             |  SELECT id AS src, id AS dst FROM ids
-             |  UNION
-             |  SELECT r.src, e.b AS dst FROM reach r
-             |  JOIN e ON r.dst = e.a),
-             |cc AS (SELECT src AS id, min(dst) AS rep FROM reach
-             |       GROUP BY src),
-             |rk AS (
-             |  SELECT rep, id,
-             |    row_number() OVER (PARTITION BY rep
-             |      ORDER BY 36 * i.scale DESC, id) AS rk
-             |  FROM cc JOIN ids i USING (id)),
-             |canon AS (SELECT rep, id FROM rk WHERE rk = 1),
-             |cnt AS (
-             |  SELECT c.id AS doc_id,
-             |    64 + CAST(len(list_filter(string_split_regex(
-             |      trim(coalesce(d.text, '')), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt
-             |  FROM canon c JOIN documents d ON d.doc_id = c.id),
-             |pk_n AS (
-             |  SELECT doc_id, doc_id // 8 AS block, nt,
-             |    row_number() OVER (PARTITION BY doc_id // 8
-             |      ORDER BY doc_id) AS rn
-             |  FROM cnt),
-             |pk_p AS (
-             |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-             |  FROM pk_n WHERE rn = 1
-             |  UNION ALL
-             |  SELECT n.doc_id, n.block, n.nt, n.rn,
-             |    CASE WHEN p.bt + n.nt <= 256 THEN p.bin ELSE p.bin + 1
-             |      END,
-             |    CASE WHEN p.bt + n.nt <= 256 THEN p.bt + n.nt ELSE n.nt
-             |      END
-             |  FROM pk_p p JOIN pk_n n
-             |    ON n.block = p.block AND n.rn = p.rn + 1)
-             |SELECT stage, n_rows FROM (
-             |  SELECT '0_tar_members' AS stage,
-             |    CAST(2 * count(*) AS BIGINT) AS n_rows FROM ids
-             |  UNION ALL SELECT '1_samples', CAST(count(*) AS BIGINT)
-             |    FROM ids
-             |  UNION ALL SELECT '2_gps_seen', CAST(count(*) AS BIGINT)
-             |    FROM ids
-             |  UNION ALL SELECT '3_strip_restored',
-             |    CAST(count(*) AS BIGINT) FROM ids
-             |  UNION ALL SELECT '4_canonical',
-             |    CAST(count(DISTINCT rep) AS BIGINT) FROM cc
-             |  UNION ALL SELECT '5_caption_join',
-             |    CAST(count(*) AS BIGINT) FROM canon
-             |  UNION ALL SELECT '6_blocks',
-             |    CAST(count(DISTINCT block * 10000 + bin) AS BIGINT)
-             |    FROM pk_p
-             |  UNION ALL SELECT '7_tokens',
-             |    CAST(sum(nt) AS BIGINT) FROM cnt)
-             |ORDER BY stage""".stripMargin)),
+      (s, dir) => graft.llm.Multimodal.imageChain(t(s, dir, "documents"),
+        bound = 150, nKeys = 25, tarDir = Registry.scratchDir("m18_tar"),
+        parts = 4, blockSize = 8),
+      Some(graft.llm.Multimodal.imageChainOracleSql(bound = 150,
+        nKeys = 25, blockSize = 8))),
 
     // ---- D35: the degenerate-key pair VALVE, oracle-gated — the
     //      maxGroupSize cap on pairsWithinGroups with its
@@ -472,17 +294,8 @@ object RegistryR15 {
     Q("l26_trained_filter_chain",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("l26:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val rest = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
+        val docs = lr.labelledDocs(t(s, dir, "documents"), "l26:")
+        val (train, rest) = lr.labelledSplit(docs)
         val w = lr.fit(train, iters = 10, lrDen = 4L)
         val kept = lr.margins(rest, w).filter(col("m") > 0)
           .select(col("id").as("doc_id"))
@@ -497,20 +310,8 @@ object RegistryR15 {
           .orderBy("doc_id")
       },
       Some {
-        val ctes = graft.llm.LogReg.oracleCtes(buckets = 256, iters = 10,
-          lrDen = 4L)
-        s"""WITH RECURSIVE lr_d AS (
-           |  SELECT doc_id,
-           |    (CAST(concat('0x', substr(md5('l26:' ||
-           |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-           |       % 100) < 70 AS is_train,
-           |    lang = 'en' AS is_pos,
-           |    list_filter(string_split_regex(trim(lower(
-           |      text || CASE WHEN doc_id % 2 = 0
-           |        THEN ' m' || lang ELSE '' END)), '\\s+'),
-           |      x -> strlen(x) > 0) AS ts
-           |  FROM documents),
-           |${ctes.mkString(",\n")},
+        val ctes = graft.llm.LogReg.labelledOracleCtes("l26:")
+        s"""WITH RECURSIVE ${ctes.mkString(",\n")},
            |sel AS (SELECT doc_id FROM lr_out WHERE pred = 1),
            |txt AS (
            |  SELECT d.doc_id,

@@ -30,47 +30,18 @@ object RegistryR16 {
     Q("t35_logreg_persisted",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
+        val (train, heldout) = lr.labelledSplit(
+          lr.labelledDocs(t(s, dir, "documents"), "t34:"))
         val tmp = Registry.scratchDir("lr_t35")
         lr.saveWeights(s, lr.fit(train, iters = 10, lrDen = 4L),
           s"$tmp/w")
-        val w = lr.loadWeights(s, s"$tmp/w")
-        lr.margins(heldout, w)
-          .select(col("id").as("doc_id"),
-            col("y").cast("int").as("label"),
-            col("m").as("score_micro"),
-            (col("m") > 0).cast("int").as("pred"),
-            ((col("m") > 0) === col("y")).cast("int").as("correct"))
+        lr.verdicts(lr.margins(heldout, lr.loadWeights(s, s"$tmp/w")))
           .orderBy("doc_id")
       },
-      Some {
-        val ctes = graft.llm.LogReg.oracleCtes(buckets = 256, iters = 10,
-          lrDen = 4L)
-        s"""WITH lr_d AS (
-           |  SELECT doc_id,
-           |    (CAST(concat('0x', substr(md5('t34:' ||
-           |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-           |       % 100) < 70 AS is_train,
-           |    lang = 'en' AS is_pos,
-           |    list_filter(string_split_regex(trim(lower(
-           |      text || CASE WHEN doc_id % 2 = 0
-           |        THEN ' m' || lang ELSE '' END)), '\\s+'),
-           |      x -> strlen(x) > 0) AS ts
-           |  FROM documents),
-           |${ctes.mkString(",\n")}
-           |SELECT doc_id, label, score_micro, pred, correct
-           |FROM lr_out ORDER BY doc_id""".stripMargin
-      }),
+      Some(s"""WITH ${graft.llm.LogReg.labelledOracleCtes("t34:")
+                 .mkString(",\n")}
+              |SELECT doc_id, label, score_micro, pred, correct
+              |FROM lr_out ORDER BY doc_id""".stripMargin)),
 
     // ---- M19: the AUDIO/VIDEO end-to-end chain — m18's twin for the
     //      remaining modalities, the LAION-audio/video shape from the
@@ -97,176 +68,11 @@ object RegistryR16 {
     //      envelopes, durations and token counts travel; pixels and
     //      samples stay scan-side. -----------------------------------
     Q("m19_av_chain",
-      (s, dir) => {
-        val mm = graft.llm.Multimodal
-        val docsAll = t(s, dir, "documents").filter(col("doc_id") < 150)
-        val ids = docsAll.select(col("doc_id").cast("long").as("id"),
-          (col("doc_id") % 25).as("key"),
-          when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
-        val wavs = mm.withSyntheticAudioScaled(ids, "id", "key", "scale",
-          baseSamples = 1000, rate = 8000)
-        val avis = mm.withSyntheticVideos(ids, "id", frames = 6)
-        val tarIn = wavs.select(col("id"),
-            format_string("av/%05d.wav", col("id")).as("name"),
-            col("payload"))
-          .unionByName(avis.select(col("id"),
-            format_string("av/%05d.avi", col("id")).as("name"),
-            col("payload")))
-          .unionByName(docsAll.select(
-            col("doc_id").cast("long").as("id"),
-            format_string("av/%05d.txt", col("doc_id")).as("name"),
-            encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-        val tmp = Registry.scratchDir("m19_tar")
-        graft.sources.TarIngest.writeTarDir(
-          tarIn.repartition(4, col("id")).drop("id"), tmp, gzip = true)
-        val (members, audit) = graft.sources.TarIngest.readTarDir(s, tmp)
-        require(audit.filter(col("corrupt")).count() == 0,
-          "m19: corrupt shards")
-        // persisted (harness scope): the TAR re-streams per action and
-        // six stages hang off the sample frame — one container decode
-        val samples = CacheScope.harness.track(
-          graft.sources.TarIngest.wdsSamples(members)).toDF()
-        def byExt(e: String) = samples.filter(col("ext") === e)
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"), col("payload"))
-        val wavsIn = byExt("wav")
-        val avisIn = byExt("avi")
-        val caps = samples.filter(col("ext") === "txt")
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"),
-            decode(col("payload"), "UTF-8").as("caption"))
-        // container round trip proven lossless on the audio bytes
-        val restored = wavsIn
-          .select(col("id"), md5(col("payload")).as("m1"))
-          .join(wavs.select(col("id"), md5(col("payload")).as("m0")),
-            "id")
-          .filter(col("m1") === col("m0"))
-        // ONE audio decode feeds dedup key, duration and the count
-        val env = CacheScope.harness.track(
-          mm.audioEnvelopes(wavsIn, "id", windows = 10)).toDF()
-        val cc = graft.llm.Dedup.connectedComponents(
-          env.select(col("id")),
-          graft.llm.Dedup.starEdges(
-            env.select(col("id"),
-              md5(to_json(col("envelope"))).as("akey")), "akey", "id"))
-        val canonical = graft.llm.Dedup.electCanonical(
-          cc.join(env.select(col("id"), col("num_samples")), "id"),
-          "rep", "id", "num_samples")
-        // video features: the real AVI walk, m11's scene-cut rule
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("id").orderBy("frame_idx")
-        val cuts = mm.decodeVideoFrames(avisIn, "id")
-          .withColumn("prev", lag(col("sum_gray"), 1).over(w))
-          .filter(col("prev").isNotNull &&
-            abs(col("sum_gray") - col("prev")) > 300)
-        val withCap = canonical
-          .join(caps, canonical("canonical") === caps("id"))
-        val counts = withCap.select(col("canonical").as("doc_id"),
-          (lit(128L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-        val packed = graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 384, blockSize = 8)
-        def stage(name: String, df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        stage("0_tar_members", samples)
-          .union(samples.agg(countDistinct(col("sample_key"))
-              .as("n_rows"))
-            .select(lit("1_samples").as("stage"), col("n_rows")))
-          .union(stage("2_wav_restored", restored))
-          .union(stage("3_audio_envelopes", env))
-          .union(stage("4_scene_cuts", cuts))
-          .union(cc.agg(countDistinct(col("rep")).as("n_rows"))
-            .select(lit("5_clusters").as("stage"), col("n_rows")))
-          .union(canonical.agg(sum(col("canonical")).as("n_rows"))
-            .select(lit("6_canonical_idsum").as("stage"), col("n_rows")))
-          .union(stage("7_caption_join", withCap))
-          .union(packed.agg(countDistinct(
-              col("block") * 10000L + col("bin")).as("n_rows"))
-            .select(lit("8_blocks").as("stage"), col("n_rows")))
-          .union(counts.agg(sum(col("n_tokens")).as("n_rows"))
-            .select(lit("9_tokens").as("stage"), col("n_rows")))
-          .orderBy("stage")
-      },
-      Some("""WITH RECURSIVE ids AS (
-             |  SELECT doc_id AS id, doc_id % 25 AS key,
-             |    CASE WHEN doc_id < 75 THEN 1 ELSE 2 END AS scale
-             |  FROM documents WHERE doc_id < 150),
-             |e AS (
-             |  SELECT a.id AS a, b.id AS b FROM ids a JOIN ids b
-             |  ON a.key = b.key AND a.id <> b.id),
-             |reach AS (
-             |  SELECT id AS src, id AS dst FROM ids
-             |  UNION
-             |  SELECT r.src, e.b AS dst FROM reach r
-             |  JOIN e ON r.dst = e.a),
-             |cc AS (SELECT src AS id, min(dst) AS rep FROM reach
-             |       GROUP BY src),
-             |rk AS (
-             |  SELECT rep, id,
-             |    row_number() OVER (PARTITION BY rep
-             |      ORDER BY 1000 * i.scale DESC, id) AS rk
-             |  FROM cc JOIN ids i USING (id)),
-             |canon AS (SELECT rep, id FROM rk WHERE rk = 1),
-             |fr AS (
-             |  SELECT d.doc_id, f.frame_idx,
-             |    (SELECT CAST(sum((d.doc_id*31 + f.frame_idx*7 + i) % 256)
-             |       AS BIGINT) FROM range(64) t(i)) AS sum_gray
-             |  FROM documents d CROSS JOIN
-             |    (SELECT unnest(generate_series(0, 5)) AS frame_idx) f
-             |  WHERE d.doc_id < 150),
-             |d2 AS (
-             |  SELECT doc_id,
-             |    abs(sum_gray - lag(sum_gray) OVER (PARTITION BY doc_id
-             |      ORDER BY frame_idx)) AS delta
-             |  FROM fr),
-             |cnt AS (
-             |  SELECT c.id AS doc_id,
-             |    128 + CAST(len(list_filter(string_split_regex(
-             |      trim(coalesce(d.text, '')), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt
-             |  FROM canon c JOIN documents d ON d.doc_id = c.id),
-             |pk_n AS (
-             |  SELECT doc_id, doc_id // 8 AS block, nt,
-             |    row_number() OVER (PARTITION BY doc_id // 8
-             |      ORDER BY doc_id) AS rn
-             |  FROM cnt),
-             |pk_p AS (
-             |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-             |  FROM pk_n WHERE rn = 1
-             |  UNION ALL
-             |  SELECT n.doc_id, n.block, n.nt, n.rn,
-             |    CASE WHEN p.bt + n.nt <= 384 THEN p.bin ELSE p.bin + 1
-             |      END,
-             |    CASE WHEN p.bt + n.nt <= 384 THEN p.bt + n.nt ELSE n.nt
-             |      END
-             |  FROM pk_p p JOIN pk_n n
-             |    ON n.block = p.block AND n.rn = p.rn + 1)
-             |SELECT stage, n_rows FROM (
-             |  SELECT '0_tar_members' AS stage,
-             |    CAST(3 * count(*) AS BIGINT) AS n_rows FROM ids
-             |  UNION ALL SELECT '1_samples', CAST(count(*) AS BIGINT)
-             |    FROM ids
-             |  UNION ALL SELECT '2_wav_restored', CAST(count(*) AS BIGINT)
-             |    FROM ids
-             |  UNION ALL SELECT '3_audio_envelopes',
-             |    CAST(count(*) AS BIGINT) FROM ids
-             |  UNION ALL SELECT '4_scene_cuts',
-             |    (SELECT CAST(count(*) AS BIGINT) FROM d2
-             |     WHERE delta IS NOT NULL AND delta > 300)
-             |  UNION ALL SELECT '5_clusters',
-             |    CAST(count(DISTINCT rep) AS BIGINT) FROM cc
-             |  UNION ALL SELECT '6_canonical_idsum',
-             |    (SELECT CAST(sum(id) AS BIGINT) FROM canon)
-             |  UNION ALL SELECT '7_caption_join',
-             |    CAST(count(*) AS BIGINT) FROM canon
-             |  UNION ALL SELECT '8_blocks',
-             |    CAST(count(DISTINCT block * 10000 + bin) AS BIGINT)
-             |    FROM pk_p
-             |  UNION ALL SELECT '9_tokens',
-             |    CAST(sum(nt) AS BIGINT) FROM cnt)
-             |ORDER BY stage""".stripMargin)),
+      (s, dir) => graft.llm.Multimodal.avChain(t(s, dir, "documents"),
+        bound = 150, nKeys = 25, tarDir = Registry.scratchDir("m19_tar"),
+        parts = 4, blockSize = 8),
+      Some(graft.llm.Multimodal.avChainOracleSql(bound = 150, nKeys = 25,
+        blockSize = 8))),
 
     // ---- M20: the d35 valve contract ON THE REAL MEDIA DECODE PATH —
     //      m13's shape (WAV → RIFF decode → exact windowed-energy
@@ -283,24 +89,10 @@ object RegistryR16 {
     //      uncapped hot key alone is C(5000,2) ≈ 12.5M pairs; capped,
     //      the quadratic term vanishes and bounded keys stay exact). --
     Q("m20_capped_media_pairs",
-      (s, dir) => {
-        val keyed = t(s, dir, "documents").filter(col("doc_id") < 400)
-          .select(col("doc_id").cast("long").as("id"),
-            when(col("doc_id") % 10 === 0, lit(0L))
-              .otherwise(col("doc_id") % 97 + 1L).as("key"),
-            lit(1).as("scale"))
-        val wavs = graft.llm.Multimodal.withSyntheticAudioScaled(
-          keyed, "id", "key", "scale", baseSamples = 200, rate = 8000)
-        val env = graft.llm.Multimodal.audioWindowEnergy(wavs, "id",
-          windows = 10)
-        val feats = env.groupBy("id")
-          .agg(md5(to_json(sort_array(
-            collect_list(struct(col("win"), col("energy"))))))
-            .as("content_key"))
-        graft.llm.Dedup.pairsWithinGroups(feats, "content_key", "id",
-            maxGroupSize = 8)
-          .orderBy("id_a", "id_b")
-      },
+      (s, dir) => graft.llm.Multimodal.plantedMediaPairs(
+          t(s, dir, "documents"), bound = 400, nClasses = 97,
+          maxGroupSize = 8)
+        .orderBy("id_a", "id_b"),
       Some("""WITH k AS (
              |  SELECT doc_id AS id,
              |    CASE WHEN doc_id % 10 = 0 THEN 0
@@ -431,35 +223,14 @@ object RegistryR16 {
     Q("t36_filter_calibration",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
+        val (train, heldout) = lr.labelledSplit(
+          lr.labelledDocs(t(s, dir, "documents"), "t34:"))
         val sc = lr.margins(heldout, lr.fit(train, iters = 10, lrDen = 4L))
         lr.calibrationSweep(sc).orderBy("thr_micro")
       },
       Some {
-        val ctes = graft.llm.LogReg.oracleCtes(buckets = 256, iters = 10,
-          lrDen = 4L)
-        s"""WITH lr_d AS (
-           |  SELECT doc_id,
-           |    (CAST(concat('0x', substr(md5('t34:' ||
-           |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-           |       % 100) < 70 AS is_train,
-           |    lang = 'en' AS is_pos,
-           |    list_filter(string_split_regex(trim(lower(
-           |      text || CASE WHEN doc_id % 2 = 0
-           |        THEN ' m' || lang ELSE '' END)), '\\s+'),
-           |      x -> strlen(x) > 0) AS ts
-           |  FROM documents),
-           |${ctes.mkString(",\n")},
+        val ctes = graft.llm.LogReg.labelledOracleCtes("t34:")
+        s"""WITH ${ctes.mkString(",\n")},
            |cal_m AS (
            |  SELECT score_micro AS thr_micro,
            |    CAST(sum(label) AS BIGINT) AS pos,
@@ -496,35 +267,14 @@ object RegistryR16 {
     Q("t37_operating_point",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
+        val (train, heldout) = lr.labelledSplit(
+          lr.labelledDocs(t(s, dir, "documents"), "t34:"))
         val sc = lr.margins(heldout, lr.fit(train, iters = 10, lrDen = 4L))
         lr.operatingPoint(lr.calibrationSweep(sc))
       },
       Some {
-        val ctes = graft.llm.LogReg.oracleCtes(buckets = 256, iters = 10,
-          lrDen = 4L)
-        s"""WITH lr_d AS (
-           |  SELECT doc_id,
-           |    (CAST(concat('0x', substr(md5('t34:' ||
-           |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-           |       % 100) < 70 AS is_train,
-           |    lang = 'en' AS is_pos,
-           |    list_filter(string_split_regex(trim(lower(
-           |      text || CASE WHEN doc_id % 2 = 0
-           |        THEN ' m' || lang ELSE '' END)), '\\s+'),
-           |      x -> strlen(x) > 0) AS ts
-           |  FROM documents),
-           |${ctes.mkString(",\n")},
+        val ctes = graft.llm.LogReg.labelledOracleCtes("t34:")
+        s"""WITH ${ctes.mkString(",\n")},
            |cal_m AS (
            |  SELECT score_micro AS thr_micro,
            |    CAST(sum(label) AS BIGINT) AS pos,
@@ -641,13 +391,10 @@ object RegistryR16 {
     //      form (the u11/l25/t36 gate shape), replaying mass, prefix,
     //      cut row, level and remainder from source rows. ------------
     Q("l28_waterfill_budget",
-      (s, dir) => {
-        val tc = graft.llm.TextAnalysis.tokenCount(col("text"))
-        val bySrc = t(s, dir, "documents").groupBy(col("source"))
-          .agg(sum(tc).as("mass"))
-        graft.llm.CorpusPipeline.waterfillBudget(bySrc, num = 3, den = 5)
-          .orderBy("source")
-      },
+      (s, dir) => graft.llm.CorpusPipeline.waterfillBudget(
+          graft.llm.CorpusPipeline.sourceMasses(t(s, dir, "documents"),
+            col("source")), num = 3, den = 5)
+        .orderBy("source"),
       Some("""WITH m AS (
              |  SELECT source, CAST(sum(len(list_filter(
              |    string_split_regex(trim(text), '\s+'),

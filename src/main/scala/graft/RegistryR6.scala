@@ -971,124 +971,13 @@ object RegistryR6 {
     //      oracle SQL, so the whole LSH pipeline is hash-matched, not
     //      just row-counted ---------------------------------------------
     Q("d20_minhash_portable",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // Shingles via posexplode + window lead — every expression in
-        // the hot path is whole-stage-codegen'd. (A transform/element_at
-        // lambda formulation of the same trigrams ran ~10x slower here:
-        // higher-order functions evaluate interpreted, and under a
-        // Generate they dominate the runtime.) Short docs (<3 tokens)
-        // yield no shingle and so can never pair — same as the oracle.
-        val toks = expr(
-          "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-        // referenced by signature, intersection (twice) and sizes —
-        // plan-lifetime cache TRACKED in CacheScope.harness (released by
-        // the harness after the query; embedders release it themselves)
-        val gramRows = graft.CacheScope.harness.track(
-          t(s, dir, "documents")
-          .filter(col("doc_id") < 2000)
-          .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-          .select(col("doc_id"), col("tok"),
-            lead("tok", 1).over(w).as("t1"),
-            lead("tok", 2).over(w).as("t2"))
-          .filter(col("t2").isNotNull)
-          .select(col("doc_id"),
-            concat_ws(" ", col("tok"), col("t1"), col("t2")).as("gram"))
-          .distinct())
-        // ONE md5 per distinct (doc, gram); the 32 seed hashes are pure
-        // 64-bit integer arithmetic from the universal family.
-        val p = lit(2147483647L)
-        val sig = gramRows
-          .select(col("doc_id"),
-            (conv(substring(md5(col("gram")), 1, 8), 16, 10)
-              .cast("long") % p).as("g"))
-          .select(col("doc_id"), col("g"),
-            explode(sequence(lit(0), lit(31))).as("seed"))
-          .select(col("doc_id"), col("seed"),
-            (((lit(2654435761L) * (col("seed") + 1) % p) * col("g")
-              + lit(40503L) * (col("seed") + 1) % p) % p).as("h"))
-          .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-        val bands = sig
-          .groupBy(col("doc_id"), (col("seed") / 4).cast("int").as("band"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("seed"), col("mh")))),
-            x => x.getField("mh").cast("string")), "-").as("sig"))
-        val cand = bands.alias("a")
-          .join(bands.alias("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
-              && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        // Exact verify on candidates only: |A∩B| by gram equi-join,
-        // |A∪B| = |A| + |B| - |A∩B| — integer counting end to end.
-        val sizes = gramRows.groupBy("doc_id")
-          .agg(count(lit(1)).as("n"))
-        val inter = cand
-          .join(gramRows.select(col("doc_id").as("id_a"), col("gram")),
-            "id_a")
-          .join(gramRows.select(col("doc_id").as("id_b"), col("gram")),
-            Seq("id_b", "gram"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-        inter
-          .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
-            "id_a")
-          .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
-            "id_b")
-          .select(col("id_a"), col("id_b"), col("inter"),
-            (col("na") + col("nb") - col("inter")).as("uni"))
-          .withColumn("jaccard",
-            col("inter").cast("double") / col("uni").cast("double"))
-          .filter(col("jaccard") >= 0.5)
-          .orderBy("id_a", "id_b")
-      },
-      Some("""WITH base AS (
-             |  SELECT doc_id, text FROM documents WHERE doc_id < 2000),
-             |t AS (
-             |  SELECT doc_id,
-             |    list_distinct(list_transform(range(1, len(toks)-1),
-             |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |      AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)),
-             |        '\s+'), x -> strlen(x) > 0) AS toks
-             |    FROM base)),
-             |gs AS (
-             |  SELECT doc_id,
-             |    CAST(concat('0x', substr(md5(gram), 1, 8)) AS BIGINT)
-             |      % 2147483647 AS g
-             |  FROM (SELECT doc_id, unnest(grams) AS gram FROM t)),
-             |h AS (
-             |  SELECT doc_id, s.seed,
-             |    min(((2654435761 * (s.seed + 1) % 2147483647) * g
-             |      + 40503 * (s.seed + 1) % 2147483647) % 2147483647)
-             |      AS mh
-             |  FROM gs CROSS JOIN (SELECT unnest(range(32)) AS seed) s
-             |  GROUP BY doc_id, s.seed),
-             |bands AS (
-             |  SELECT doc_id, seed // 4 AS band,
-             |    string_agg(CAST(mh AS VARCHAR), '-' ORDER BY seed)
-             |      AS sig
-             |  FROM h GROUP BY doc_id, seed // 4),
-             |cand AS (
-             |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             |  FROM bands a JOIN bands b
-             |    ON a.band = b.band AND a.sig = b.sig
-             |   AND a.doc_id < b.doc_id),
-             |withg AS (
-             |  SELECT c.id_a, c.id_b,
-             |    CAST(len(list_intersect(ta.grams, tb.grams)) AS BIGINT)
-             |      AS inter,
-             |    CAST(len(list_distinct(list_concat(ta.grams, tb.grams)))
-             |      AS BIGINT) AS uni
-             |  FROM cand c
-             |  JOIN t ta ON ta.doc_id = c.id_a
-             |  JOIN t tb ON tb.doc_id = c.id_b)
-             |SELECT id_a, id_b, inter, uni,
-             |  CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE) AS jaccard
-             |FROM withg
-             |WHERE CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE) >= 0.5
-             |ORDER BY id_a, id_b""".stripMargin)),
+      (s, dir) => graft.llm.Dedup.portableNearDups(
+          t(s, dir, "documents").filter(col("doc_id") < 2000),
+          "text", "doc_id", threshold = 0.5)
+        .orderBy("id_a", "id_b"),
+      Some(graft.llm.Dedup.portableNearDupsOracleSql(
+        "(SELECT * FROM documents WHERE doc_id < 2000)", "doc_id", "text",
+        threshold = 0.5))),
 
     // ---- A40: ordered-set aggregate — PERCENTILE_DISC ... WITHIN GROUP
     //      (Spark 4 SQL surface). Disc quantiles SELECT an actual member

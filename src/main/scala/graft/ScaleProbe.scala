@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scaling-exponent probe for the algorithmically-superlinear family —
@@ -13,97 +11,53 @@ import org.apache.spark.sql.functions._
   * records — so the observed exponent separates "CPU got 10x work"
   * (fine) from "the shuffle grew superlinearly" (a plan problem).
   *
-  * Probes deliberately run the operators UNBOUNDED (or on a constant
-  * FRACTION of the corpus) where the registry entries pin a constant
-  * absolute slice: the registry bound is the audit-valve posture, the
-  * probe measures how cost grows when the INPUT grows.
+  * Every row CALLS the library function (or the registry entry) the
+  * system runs — never a copy of it. Where the registry pins a constant
+  * absolute slice (the audit-valve posture), the probe passes the FULL
+  * corpus or a constant FRACTION of it: it measures how cost grows when
+  * the INPUT grows.
   *
   * Usage: runMain graft.ScaleProbe <dir1> <dir2> ...
   */
 object ScaleProbe {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Registry.t(s, dir, "documents")
 
-  private def eventsTable(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df = s.read.parquet(s"$dir/events.parquet")
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => df
-    }
-  }
-
-  /** The d20-shape portable LSH candidate pipeline (signatures + bands +
-    * bucket self-join), on a constant FRACTION of the corpus.
+  /** The documents split at doc_id = num/den of the row count: (below,
+    * at-or-above) — a constant FRACTION of the corpus at every scale.
     */
-  private def lshCandidates(s: SparkSession, dir: String): DataFrame = {
+  private def split(s: SparkSession, dir: String, num: Long, den: Long)
+      : (DataFrame, DataFrame) = {
     val d = docs(s, dir)
-    val maxId = 2L * d.count() / 5L // 40% — d20's fraction at sf0.1
-    val toks = expr(
-      "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val gramRows = d.filter(col("doc_id") < maxId)
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-      .select(col("doc_id"), col("tok"),
-        lead("tok", 1).over(w).as("t1"), lead("tok", 2).over(w).as("t2"))
-      .filter(col("t2").isNotNull)
-      .select(col("doc_id"),
-        concat_ws(" ", col("tok"), col("t1"), col("t2")).as("gram"))
-      .distinct()
-    val p = lit(2147483647L)
-    val sig = gramRows
-      .select(col("doc_id"),
-        (conv(substring(md5(col("gram")), 1, 8), 16, 10)
-          .cast("long") % p).as("g"))
-      .select(col("doc_id"), col("g"),
-        explode(sequence(lit(0), lit(31))).as("seed"))
-      .select(col("doc_id"), col("seed"),
-        (((lit(2654435761L) * (col("seed") + 1) % p) * col("g")
-          + lit(40503L) * (col("seed") + 1) % p) % p).as("h"))
-      .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-    val bands = sig
-      .groupBy(col("doc_id"), (col("seed") / 4).cast("int").as("band"))
-      .agg(array_join(transform(
-        sort_array(collect_list(struct(col("seed"), col("mh")))),
-        x => x.getField("mh").cast("string")), "-").as("sig"))
-    bands.alias("a").join(bands.alias("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val cut = num * d.count() / den
+    (d.filter(col("doc_id") < cut), d.filter(col("doc_id") >= cut))
   }
+
+  private def head(s: SparkSession, dir: String, num: Long, den: Long)
+      : DataFrame = split(s, dir, num, den)._1
+
+  private def nDocs(s: SparkSession, dir: String): Long =
+    docs(s, dir).count()
 
   def probes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // d26 shape: stride-1 window fingerprints over the FULL corpus
-    "d26_dup_spans" -> ((s, dir) =>
-      graft.llm.Dedup.dupSpans(docs(s, dir), "text", "doc_id", 8, 1)),
+    "d26_dup_spans" -> SparkEntry.queries("d26_dup_spans"),
     // d31 shape: full ExactSubstr rewrite over the FULL corpus
-    "d31_exact_substr" -> ((s, dir) =>
-      graft.llm.Dedup.exactSubstrDedup(docs(s, dir), "text", "doc_id", 8)),
+    "d31_exact_substr" -> SparkEntry.queries("d31_exact_substr"),
     // g03 shape: degree-oriented wedge join over the FULL event stream
-    "g03_triangles" -> ((s, dir) => {
-      val w = Window.partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val edges = eventsTable(s, dir)
-        .select(col("user_id").as("src"),
-          lead(col("user_id"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-      graft.graph.Triangles.count(edges)
-    }),
+    "g03_triangles" -> SparkEntry.queries("g03_triangles"),
     // d08/d14 shape: gram-index near-dup pairs + connected components on
     // a constant 10% FRACTION (the registry pins 10% of sf0.1 = 500)
-    "d08_cc_neardup" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val maxId = d.count() / 10L
-      val slice = d.filter(col("doc_id") < maxId)
-      graft.llm.Dedup.connectedComponents(
-        slice.select(col("doc_id").as("id")),
-        graft.llm.Dedup.exactNgramNearDups(slice, "text", "doc_id", 3, 0.5))
-    }),
+    "d08_cc_neardup" -> ((s, dir) =>
+      graft.llm.Dedup.nearDupClusters(head(s, dir, 1, 10), "text",
+        "doc_id", 3, 0.5)),
     // d20 shape: portable MinHash signatures -> banded bucket join on a
     // constant 40% fraction (d20's own fraction at sf0.1)
-    "d20_lsh_candidates" -> ((s, dir) => lshCandidates(s, dir)),
+    "d20_lsh_candidates" -> ((s, dir) =>
+      graft.llm.Dedup.portableCandidates(
+        graft.llm.Dedup.portableMinhashBands(head(s, dir, 2, 5), "text",
+          "doc_id"))),
     // d06/d08 df-cap VALVE measurement (round-12 probe finding: under
     // the fixed synthetic vocabulary, candidates-per-gram grow linearly
     // with corpus size, so the pair join goes quadratic at the next 10x
@@ -113,27 +67,19 @@ object ScaleProbe {
     // sf0.1 (max gram df there is 7) and to engage exactly where the
     // growth would go quadratic: rows = true pairs found (the
     // conservative-miss accounting), shuffle = the valve's effect.
-    "d06_pairs_uncapped" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val maxId = d.count() / 10L
-      graft.llm.Dedup.exactNgramNearDups(
-        d.filter(col("doc_id") < maxId), "text", "doc_id", 3, 0.5)
-    }),
-    "d06_pairs_capped" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val maxId = d.count() / 10L
-      graft.llm.Dedup.exactNgramNearDups(
-        d.filter(col("doc_id") < maxId), "text", "doc_id", 3, 0.5,
-        maxGramDf = 8)
-    }),
+    "d06_pairs_uncapped" -> ((s, dir) =>
+      graft.llm.Dedup.exactNgramNearDups(head(s, dir, 1, 10), "text",
+        "doc_id", 3, 0.5)),
+    "d06_pairs_capped" -> ((s, dir) =>
+      graft.llm.Dedup.exactNgramNearDups(head(s, dir, 1, 10), "text",
+        "doc_id", 3, 0.5, maxGramDf = 8)),
     // t30 shape: KN trigram stats fitted AND scored over the FULL
     // corpus — measures the trigram-TYPE table's growth (the design
     // claim: stats tables are type-bounded, so they saturate under a
     // bounded vocabulary while the scored stream grows linearly)
-    "t30_kn_trigram" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.llm.TextAnalysis.knTrigramScores(d, d, "doc_id", "text")
-    }),
+    "t30_kn_trigram" -> ((s, dir) =>
+      graft.llm.TextAnalysis.knTrigramScores(docs(s, dir), docs(s, dir),
+        "doc_id", "text")),
     // d33 shape: digest-index BUILD on 90% (persisted through the real
     // bloom-filtered parquet layout — the write is part of the measured
     // cost) + one batch (10%) rewritten against the PERSISTED index via
@@ -141,15 +87,12 @@ object ScaleProbe {
     // digest frame would measure the d32 shape instead and skip the
     // index write + parquet probe that dominate real maintenance)
     "d33_index_rewrite" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val cut = 9L * d.count() / 10L
-      val idx = graft.Registry.scratchDir("probe_d33_idx") + "/digests"
-      graft.llm.Dedup.buildDigestIndex(d.filter(col("doc_id") < cut),
-        "text", "doc_id", 8, idx, expectedNdv = 10000000L)
-      graft.llm.Dedup.exactSubstrWithIndex(
-        d.filter(col("doc_id") >= cut),
-        graft.llm.Dedup.readDigestIndex(s, idx),
-        "text", "doc_id", 8)
+      val (base, batch) = split(s, dir, 9, 10)
+      val idx = Registry.scratchDir("probe_d33_idx") + "/digests"
+      graft.llm.Dedup.buildDigestIndex(base, "text", "doc_id", 8, idx,
+        expectedNdv = 10000000L)
+      graft.llm.Dedup.exactSubstrWithIndex(batch,
+        graft.llm.Dedup.readDigestIndex(s, idx), "text", "doc_id", 8)
     }),
     // t32 shape (round-14): the steady-state LM maintenance step —
     // 90% of the corpus collapses to a persisted KN stats artifact
@@ -159,277 +102,67 @@ object ScaleProbe {
     // and scoring shuffle tracks the BATCH and the type-bounded stats
     // tables, never the scored history.
     "t32_kn_fold" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val cut = 9L * d.count() / 10L
+      val (base, batch) = split(s, dir, 9, 10)
       val ta = graft.llm.TextAnalysis
-      val statsDir = graft.Registry.scratchDir("probe_kn_stats") + "/s"
-      ta.saveKnStats(
-        ta.knStats(d.filter(col("doc_id") < cut), "doc_id", "text"),
-        statsDir)
+      val statsDir = Registry.scratchDir("probe_kn_stats") + "/s"
+      ta.saveKnStats(ta.knStats(base, "doc_id", "text"), statsDir)
       val folded = ta.mergeKnStats(ta.loadKnStats(s, statsDir),
-        ta.knStats(d.filter(col("doc_id") >= cut), "doc_id", "text"))
-      ta.knScoreFromStats(d.filter(col("doc_id") >= cut), folded,
-        "doc_id", "text")
+        ta.knStats(batch, "doc_id", "text"))
+      ta.knScoreFromStats(batch, folded, "doc_id", "text")
     }),
     // l07 shape (round-14): the per-source token-budget prefix sum as
     // the GROUPED runningTotal (range partition + per-key broadcast
-    // offsets) vs the one-task-per-source window form it replaced —
-    // same result set, the window form sorts each source's WHOLE slice
-    // in a single task (wall should grow ~linearly with the dominant
-    // source; the grouped form's tasks stay bounded by data/parts)
+    // offsets); its tasks stay bounded by data/parts
     "l07_budget_grouped" -> ((s, dir) =>
       graft.llm.CorpusPipeline.sampleToTokenBudget(docs(s, dir),
         budget = 100000L)),
-    "l07_budget_window" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val w = Window.partitionBy(col("source"))
-        .orderBy(pmod(pmod(col("doc_id"), lit(100000L)) *
-          lit(2654435761L), lit(100000L)), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      d.withColumn("__nt",
-          graft.llm.TextAnalysis.tokenCount(col("text")))
-        .withColumn("cum_tokens", sum(col("__nt")).over(w))
-        .filter(col("cum_tokens") <= 100000L)
-        .drop("__nt")
-    }),
     // t29 shape: unigram-LM fit (bounded driver EM over the word-freq
     // table) + full-corpus Viterbi encode — the encode pass should be
     // linear and the fit constant (the frequent-word table saturates)
     "t29_unigram_encode" -> ((s, dir) => {
       val d = docs(s, dir)
-      val vocab = graft.llm.UnigramLm.fit(d, "text",
-        graft.llm.UnigramLm.Params())
-      graft.llm.UnigramLm.encode(d, "doc_id", "text", vocab,
-        graft.llm.UnigramLm.Params())
+      val um = graft.llm.UnigramLm
+      um.encode(d, "doc_id", "text", um.fit(d, "text", um.Params()),
+        um.Params())
     }),
-    // l22 shape (round-15): the COMPOSED CommonCrawl chain, unbounded —
-    // stages are probed individually (d31 above, l07/l13 shapes), but
-    // the chain is the product and its composed exponent was unmeasured:
-    // full corpus → executor-written gzip WARC archives → container
-    // read-back → C4-lite line cleaning → ExactSubstr-FULL → temperature
-    // mix → 512-token block count, one probe row (wall + shuffle).
-    "l22_chain" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val warcIn = d.select(
-        col("doc_id"),
-        lit("conversion").as("warc_type"),
-        concat(lit("<urn:graft:doc:"), col("doc_id"), lit(">"))
-          .as("record_id"),
-        concat(lit("https://example.org/"), col("source"), lit("/"),
-          col("doc_id")).as("target_uri"),
-        lit("2026-01-01T00:00:00Z").as("warc_date"),
-        lit("text/plain").as("content_type"),
-        encode(coalesce(col("text"), lit("")), "UTF-8").as("payload"))
-      val tmp = graft.Registry.scratchDir("probe_l22_warc")
-      graft.sources.WarcIngest.writeWarcDir(
-        warcIn.repartition(32, col("doc_id")), tmp, gzip = true)
-      val (records, _) = graft.sources.WarcIngest.readWarcDir(s, tmp)
-      val fromWarc = graft.CacheScope.harness.track(records.select(
-        regexp_extract(col("record_id"), "doc:(\\d+)", 1)
-          .cast("long").as("doc_id"),
-        regexp_extract(col("target_uri"), "example\\.org/([^/]+)/", 1)
-          .as("source"),
-        decode(col("payload"), "UTF-8").as("text"))).toDF()
-      val c1 = graft.CacheScope.harness.track(
-        fromWarc.filter(col("text").rlike("\\S"))
-          .select(col("doc_id"), col("source"), expr(
-            """element_at(transform(
-              |  array(filter(split(trim(text), '\\s+'),
-              |        x -> length(x) > 0)),
-              |  ws -> filter(
-              |    transform(sequence(0,
-              |        cast(ceil(size(ws) / 7.0) as int) - 1),
-              |      i -> slice(ws, i * 7 + 1, 7)),
-              |    l -> size(l) >= 3)), 1)""".stripMargin).as("kept"))
-          .filter(size(col("kept")) >= 5)
-          .select(col("doc_id"), col("source"), expr(
-            "array_join(transform(kept, l -> array_join(l, ' ')), ' ')")
-            .as("ctext"))).toDF()
-      val dd = graft.llm.Dedup.exactSubstrDedup(c1, "ctext", "doc_id",
-        w = 8)
-      val surv = graft.CacheScope.harness.track(
-        dd.as("dd").join(c1.as("c"), col("dd.id") === col("c.doc_id"))
-          .select(col("c.doc_id").as("doc_id"),
-            col("c.source").as("source"),
-            (size(split(col("c.ctext"), " ")) -
-              col("dd.n_tokens_removed")).cast("long").as("nt"))
-          .filter(col("nt") > 0)).toDF()
-      val counts = surv.groupBy("source").agg(count(lit(1)).as("c"))
-      val qq = counts
-        .crossJoin(broadcast(counts.agg(sum("c").as("total"))))
-        .withColumn("qs_micro",
-          round(pow(col("c").cast("double") / col("total").cast("double"),
-            0.7) * 1e9).cast("long"))
-      val rates = qq.crossJoin(broadcast(
-          qq.agg(sum("qs_micro").as("z_micro"))))
-        .withColumn("rate_micro",
-          least(lit(1000000L),
-            round(lit(100.0) *
-              (col("qs_micro").cast("double") /
-                col("z_micro").cast("double")) /
-              col("c").cast("double") * 1e6).cast("long")))
-        .select(col("source"), col("rate_micro"))
-      val q4 = surv.join(broadcast(rates), "source")
-        .filter(conv(substring(md5(concat(lit("l22-"),
-          col("doc_id").cast("string"))), 1, 15), 16, 10)
-          .cast("long") % 1000000L < col("rate_micro"))
-      q4.agg(
-        count(lit(1)).as("n_sampled"),
-        expr("CAST((sum(nt) + 511) div 512 AS BIGINT)").as("n_blocks"))
-    }),
-    // m18 shape (round-15): the COMPOSED multimodal chain, unbounded —
-    // synthetic cross-scale image corpus (1000 perceptual clusters,
-    // half the corpus pixel-doubled) + captions through the TAR
-    // container, metadata strip, dHash, star-edge connected
-    // components, canonical election by decoded width, caption join,
-    // interleaved packing. The claim measured: pixels never shuffle
-    // (payloads stay scan-side; hashes/widths/token counts travel), so
-    // the chain's shuffle tracks members, not bytes, and CC rounds
-    // stay bounded under 10x more clusters.
-    "m18_chain" -> ((s, dir) => {
-      val mm = graft.llm.Multimodal
-      val d = docs(s, dir)
-      val ids = d.select(col("doc_id").cast("long").as("id"),
-        (col("doc_id") % 1000).as("key"),
-        (col("doc_id") % 2 + 1).cast("int").as("scale"))
-      val pristine = mm.withSyntheticImagesScaled(ids, "id", "key",
-        "scale", baseW = 36, baseH = 32)
-      val planted = mm.withPlantedText(
-        pristine.join(d.select(col("doc_id").cast("long").as("id"),
-          concat(lit("gps-"), col("doc_id")).as("gps_v")), "id"),
-        "id", "payload", Seq("gps" -> "gps_v"))
-      val tarIn = planted
-        .select(col("id"),
-          format_string("img/%07d.png", col("id")).as("name"),
-          col("payload"))
-        .unionByName(d.select(col("doc_id").cast("long").as("id"),
-          format_string("img/%07d.txt", col("doc_id")).as("name"),
-          encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-      val tmp = graft.Registry.scratchDir("probe_m18_tar")
-      graft.sources.TarIngest.writeTarDir(
-        tarIn.repartition(32, col("id")).drop("id"), tmp, gzip = true)
-      val (members, _) = graft.sources.TarIngest.readTarDir(s, tmp)
-      val samples = graft.CacheScope.harness.track(
-        graft.sources.TarIngest.wdsSamples(members)).toDF()
-      val pngs = samples.filter(col("ext") === "png")
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"), col("payload"))
-      val caps = samples.filter(col("ext") === "txt")
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"),
-          decode(col("payload"), "UTF-8").as("caption"))
-      val stripped = graft.CacheScope.harness.track(
-        mm.stripPngMeta(pngs, "id", "payload")
-          .select(col("id"), col("payload"))).toDF()
-      val hashed = mm.dhashes(stripped, "id")
-        .filter(col("dhash").isNotNull)
-      val cc = graft.llm.Dedup.connectedComponents(
-        hashed.select(col("id")),
-        graft.llm.Dedup.starEdges(hashed, "dhash", "id"))
-      val meta = mm.decodeImageFeatures(stripped, "id")
-        .select(col("id"), col("width").cast("long").as("width"))
-      val canonical = graft.llm.Dedup.electCanonical(
-          cc.join(meta, "id"), "rep", "id", "width")
-        .select(col("rep"), col("canonical"))
-      val counts = canonical
-        .join(caps, canonical("canonical") === caps("id"))
-        .select(col("canonical").as("doc_id"),
-          (lit(64L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-      graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 256, blockSize = 64)
-        .agg(count(lit(1)).as("n_canonical"),
-          countDistinct(col("block") * 100000L + col("bin"))
-            .as("n_blocks"))
-    }),
-    // m19 shape (round-16): the COMPOSED audio/video chain, unbounded —
-    // cross-duration WAV corpus (1000 envelope clusters, half
-    // integer-upsampled 2x) + MJPEG AVIs + captions through the TAR
-    // container, RIFF decode to the duration-invariant envelope,
-    // star-edge CC, longest-rendition argmax election, scene-cut walk,
-    // caption join, packing. Claim measured: samples/pixels never
-    // shuffle — envelopes, durations and token counts travel — so the
-    // chain's shuffle tracks members, not media bytes.
-    "m19_chain" -> ((s, dir) => {
-      val mm = graft.llm.Multimodal
-      val d = docs(s, dir)
-      val ids = d.select(col("doc_id").cast("long").as("id"),
-        (col("doc_id") % 1000).as("key"),
-        (col("doc_id") % 2 + 1).cast("int").as("scale"))
-      val wavs = mm.withSyntheticAudioScaled(ids, "id", "key", "scale",
-        baseSamples = 1000, rate = 8000)
-      val avis = mm.withSyntheticVideos(ids, "id", frames = 6)
-      val tarIn = wavs.select(col("id"),
-          format_string("av/%07d.wav", col("id")).as("name"),
-          col("payload"))
-        .unionByName(avis.select(col("id"),
-          format_string("av/%07d.avi", col("id")).as("name"),
-          col("payload")))
-        .unionByName(d.select(col("doc_id").cast("long").as("id"),
-          format_string("av/%07d.txt", col("doc_id")).as("name"),
-          encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-      val tmp = graft.Registry.scratchDir("probe_m19_tar")
-      graft.sources.TarIngest.writeTarDir(
-        tarIn.repartition(32, col("id")).drop("id"), tmp, gzip = true)
-      val (members, _) = graft.sources.TarIngest.readTarDir(s, tmp)
-      val samples = graft.CacheScope.harness.track(
-        graft.sources.TarIngest.wdsSamples(members)).toDF()
-      def byExt(e: String) = samples.filter(col("ext") === e)
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"), col("payload"))
-      val caps = samples.filter(col("ext") === "txt")
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"),
-          decode(col("payload"), "UTF-8").as("caption"))
-      val env = graft.CacheScope.harness.track(
-        mm.audioEnvelopes(byExt("wav"), "id", windows = 10)).toDF()
-      val cc = graft.llm.Dedup.connectedComponents(
-        env.select(col("id")),
-        graft.llm.Dedup.starEdges(
-          env.select(col("id"),
-            md5(to_json(col("envelope"))).as("akey")), "akey", "id"))
-      val canonical = graft.llm.Dedup.electCanonical(
-        cc.join(env.select(col("id"), col("num_samples")), "id"),
-        "rep", "id", "num_samples")
-      val w = Window.partitionBy("id").orderBy("frame_idx")
-      val cuts = mm.decodeVideoFrames(byExt("avi"), "id")
-        .withColumn("prev", lag(col("sum_gray"), 1).over(w))
-        .filter(col("prev").isNotNull &&
-          abs(col("sum_gray") - col("prev")) > 300)
-      val counts = canonical
-        .join(caps, canonical("canonical") === caps("id"))
-        .select(col("canonical").as("doc_id"),
-          (lit(128L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-      graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 384, blockSize = 64)
-        .agg(count(lit(1)).as("n_canonical"),
-          countDistinct(col("block") * 100000L + col("bin"))
-            .as("n_blocks"))
-        .crossJoin(cuts.agg(count(lit(1)).as("n_cuts")))
-    }),
+    // l22 shape (round-15): the COMPOSED CommonCrawl chain over the FULL
+    // corpus — stages are probed individually (d31 above, l07/l13
+    // shapes), but the chain is the product: executor-written gzip WARC
+    // archives → container read-back → C4-lite line cleaning →
+    // ExactSubstr-FULL → temperature mix → 512-token block count.
+    "l22_chain" -> ((s, dir) =>
+      graft.llm.CorpusPipeline.commonCrawlChain(docs(s, dir),
+        Registry.scratchDir("probe_l22_warc"), parts = 32)),
+    // m18 shape (round-15): the COMPOSED multimodal chain over the FULL
+    // corpus (1000 perceptual clusters, half the corpus pixel-doubled).
+    // The claim measured: pixels never shuffle (payloads stay
+    // scan-side; hashes/widths/token counts travel), so the chain's
+    // shuffle tracks members, not bytes, and CC rounds stay bounded
+    // under 10x more clusters.
+    "m18_chain" -> ((s, dir) =>
+      graft.llm.Multimodal.imageChain(docs(s, dir), bound = nDocs(s, dir),
+        nKeys = 1000, tarDir = Registry.scratchDir("probe_m18_tar"),
+        parts = 32, blockSize = 64)),
+    // m19 shape (round-16): the COMPOSED audio/video chain over the FULL
+    // corpus (1000 envelope clusters, half integer-upsampled 2x). Claim
+    // measured: samples/pixels never shuffle — envelopes, durations and
+    // token counts travel — so the chain's shuffle tracks members, not
+    // media bytes.
+    "m19_chain" -> ((s, dir) =>
+      graft.llm.Multimodal.avChain(docs(s, dir), bound = nDocs(s, dir),
+        nKeys = 1000, tarDir = Registry.scratchDir("probe_m19_tar"),
+        parts = 32, blockSize = 64)),
     // t34/l26 shape (round-16): the trained-filter fit+score at scale —
-    // 10 integer-GD iterations over the cached presence-feature table
-    // (the new cost ceiling, 5.2-5.3 s committed at sf0.1). Claim
-    // measured: iteration cost is linear in the count table (built
-    // once, cached), the per-round driver round-trip stays <=257 rows,
-    // and the scoring pass is one broadcast join — so wall and shuffle
-    // grow ~linearly with the corpus at a FIXED iteration count.
+    // 10 integer-GD iterations over the cached presence-feature table.
+    // Claim measured: iteration cost is linear in the count table
+    // (built once, cached), the per-round driver round-trip stays <=257
+    // rows, and the scoring pass is one broadcast join — so wall and
+    // shuffle grow ~linearly with the corpus at a FIXED iteration count.
     "t34_logreg_fit" -> ((s, dir) => {
       val lr = graft.llm.LogReg
-      val d = docs(s, dir).select(col("doc_id"),
-        (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-          1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-        (col("lang") === "en").as("is_pos"),
-        concat(col("text"), when(col("doc_id") % 2 === 0,
-          concat(lit(" m"), col("lang"))).otherwise(lit("")))
-          .as("text"))
-      val train = lr.hashedCounts(d.filter(col("is_train")),
-        "doc_id", "is_pos", "text", buckets = 256)
-      val rest = lr.hashedCounts(d.filter(!col("is_train")),
-        "doc_id", "is_pos", "text", buckets = 256)
-      val w = lr.fit(train, iters = 10, lrDen = 4L)
-      lr.margins(rest, w)
+      val (train, rest) = lr.labelledSplit(
+        lr.labelledDocs(docs(s, dir), "t34:"))
+      lr.margins(rest, lr.fit(train, iters = 10, lrDen = 4L))
     }),
     // m13-shape media pair VALVE posture (round-16): the real audio
     // decode → envelope digest → pair join, planted with 1000 bounded
@@ -441,9 +174,12 @@ object ScaleProbe {
     // (conservative miss, the d35 contract) while bounded keys keep
     // their exact pair sets. rows = pairs emitted (the forgone-pairs
     // accounting), shuffle = the valve's effect.
-    "m13_pairs_uncapped" -> ((s, dir) => mediaPairs(s, dir, cap = 0)),
-    "m13_pairs_capped" -> ((s, dir) => mediaPairs(s, dir, cap = 128)),
-
+    "m13_pairs_uncapped" -> ((s, dir) =>
+      graft.llm.Multimodal.plantedMediaPairs(docs(s, dir), Long.MaxValue,
+        nClasses = 1000, maxGroupSize = 0)),
+    "m13_pairs_capped" -> ((s, dir) =>
+      graft.llm.Multimodal.plantedMediaPairs(docs(s, dir), Long.MaxValue,
+        nClasses = 1000, maxGroupSize = 128)),
     // round-16 batch 2: the shard-audit loop priced at scale — write
     // the corpus's shard files (64 shards), read them back, recompute
     // every manifest statistic and diff. The audit is one scan of the
@@ -453,7 +189,7 @@ object ScaleProbe {
       val sm = graft.llm.ShardManifest
       val packed = graft.llm.CorpusPipeline.packSequences(
         docs(s, dir), capacity = 120, blockSize = 256)
-      val tmp = graft.Registry.scratchDir("probe_l27")
+      val tmp = Registry.scratchDir("probe_l27")
       sm.writeShards(packed, tmp, nShards = 64)
       sm.auditShards(sm.readShards(s, tmp),
         sm.manifest(packed, nShards = 64), nShards = 64)
@@ -462,36 +198,11 @@ object ScaleProbe {
     // synthetic domains) — the distributed runningTotal path priced at
     // 10x; the corpus shuffles once into the skinny per-source frame.
     "l28_waterfill" -> ((s, dir) => {
-      val tc = graft.llm.TextAnalysis.tokenCount(col("text"))
-      val bySrc = docs(s, dir)
-        .groupBy((col("doc_id") % 997).as("source"))
-        .agg(sum(tc).as("mass"))
-      graft.llm.CorpusPipeline.waterfillBudget(bySrc, num = 3, den = 5)
+      val cp = graft.llm.CorpusPipeline
+      cp.waterfillBudget(cp.sourceMasses(docs(s, dir), col("doc_id") % 997),
+        num = 3, den = 5)
     })
   )
-
-  /** The m13 registry shape — synthetic WAVs, real RIFF decode, exact
-    * envelope digest, distributed pair self-join — with a skew plant:
-    * every 10th doc shares ONE degenerate content key; the rest spread
-    * over 1000 bounded classes.
-    */
-  private def mediaPairs(s: SparkSession, dir: String, cap: Int)
-      : DataFrame = {
-    val keyed = docs(s, dir).select(col("doc_id").cast("long").as("id"),
-      when(col("doc_id") % 10 === 0, lit(0L))
-        .otherwise(col("doc_id") % 1000 + 1L).as("key"),
-      lit(1).as("scale"))
-    val wavs = graft.llm.Multimodal.withSyntheticAudioScaled(
-      keyed, "id", "key", "scale", baseSamples = 200, rate = 8000)
-    val env = graft.llm.Multimodal.audioWindowEnergy(wavs, "id",
-      windows = 10)
-    val feats = env.groupBy("id")
-      .agg(md5(to_json(sort_array(
-        collect_list(struct(col("win"), col("energy"))))))
-        .as("content_key"))
-    graft.llm.Dedup.pairsWithinGroups(feats, "content_key", "id",
-      maxGroupSize = cap)
-  }
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <dir1> <dir2> ...")
@@ -499,13 +210,16 @@ object ScaleProbe {
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null)
-          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    })
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onStageCompleted(
+            e: org.apache.spark.scheduler.SparkListenerStageCompleted)
+            : Unit = {
+          val m = e.stageInfo.taskMetrics
+          if (m != null)
+            shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        }
+      })
     // dev iteration filter (comma-separated probe-name prefixes)
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -523,19 +237,7 @@ object ScaleProbe {
         // from drifting, incl. the map/variant to_json routing)
         val (rows, _) = Bench.checksum(fn(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
-        // listener events drain asynchronously; poll until the counter
-        // is stable for two consecutive 200 ms reads (a fixed sleep
-        // undercounts nondeterministically on a loaded host —
-        // listenerBus.waitUntilEmpty is private[spark], so poll-stable
-        // is the public-API equivalent), bounded at 30 s
-        var prev = -1L
-        var stable = 0
-        var waited = 0
-        while (stable < 2 && waited < 30000) {
-          Thread.sleep(200); waited += 200
-          val cur = shuffleRecords.get
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
+        Bench.awaitListenerDrain(shuffleRecords.get)
         val line =
           f"""{"probe":"$name","dir":"$dir","sec":$sec%.2f,"rows":$rows,"shuffle_records":${shuffleRecords.get}}"""
         println(line)

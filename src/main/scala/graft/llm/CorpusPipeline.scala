@@ -344,6 +344,14 @@ object CorpusPipeline {
       .drop("__tb_key", "__tb_nt")
   }
 
+  /** Per-source token mass, the [[waterfillBudget]] input:
+    * (source, mass) — whitespace tokens of `text` summed per `source`,
+    * any grouping column of `docs`.
+    */
+  def sourceMasses(docs: DataFrame, source: Column): DataFrame =
+    docs.groupBy(source.as("source"))
+      .agg(sum(TextAnalysis.tokenCount(col("text"))).as("mass"))
+
   /** WATERFILLING token-budget allocation across sources — the
     * training-mix solve a budgeted pretraining run computes: given one
     * row per source with its token mass and a budget B =
@@ -442,6 +450,229 @@ object CorpusPipeline {
     docs.withColumn("shuffle_key", expr(
         s"CAST(conv(substring(md5(CAST($idCol AS STRING)), 1, 15), 16, 10) AS BIGINT)"))
       .orderBy(col("shuffle_key"), col(idCol))
+
+  /** Temperature (p^0.7) sampling, the multilingual-LM rebalance that
+    * upsamples tail groups: each `keyCol` group keeps a document at rate
+    * min(1, target · q_k / c_k), q_k = the group's p_k^0.7 share. Float
+    * portability: the single pow() per group quantizes to integer
+    * micro-mass BEFORE normalization, so the z-sum is associative
+    * BIGINT. Selection is the md5 micro-uniform of `salt || doc_id`
+    * below the group's `rate_micro` (added as a column) — deterministic,
+    * stream-stable and replayed by [[temperatureSampleOracleCtes]].
+    */
+  def temperatureSample(docs: DataFrame, keyCol: String, salt: String,
+                        target: Double): DataFrame = {
+    val counts = docs.groupBy(keyCol).agg(count(lit(1)).as("c"))
+    val q = counts.crossJoin(broadcast(counts.agg(sum("c").as("total"))))
+      .withColumn("qs_micro",
+        round(pow(col("c").cast("double") / col("total").cast("double"),
+          0.7) * 1e9).cast("long"))
+    val rates = q.crossJoin(broadcast(q.agg(sum("qs_micro").as("z_micro"))))
+      .withColumn("rate_micro",
+        least(lit(1000000L),
+          round(lit(target) *
+            (col("qs_micro").cast("double") /
+              col("z_micro").cast("double")) /
+            col("c").cast("double") * 1e6).cast("long")))
+      .select(col(keyCol), col("rate_micro"))
+    docs.join(broadcast(rates), keyCol)
+      .filter(conv(substring(md5(concat(lit(salt),
+        col("doc_id").cast("string"))), 1, 15), 16, 10)
+        .cast("long") % 1000000L < col("rate_micro"))
+  }
+
+  /** DuckDB CTEs replaying [[temperatureSample]] over the relation
+    * `input`: defines tp_c, tp_q, tp_r and `out` (input's columns plus
+    * rate_micro). Splice into `WITH ...` of an oracle query.
+    */
+  def temperatureSampleOracleCtes(input: String, keyCol: String,
+                                  salt: String, target: Double,
+                                  out: String): String =
+    s"""tp_c AS (
+       |  SELECT $keyCol, count(*) AS c FROM $input GROUP BY $keyCol),
+       |tp_q AS (
+       |  SELECT $keyCol, c,
+       |    CAST(round(pow(CAST(c AS DOUBLE) / CAST(total AS DOUBLE),
+       |      0.7) * 1e9) AS BIGINT) AS qs_micro
+       |  FROM tp_c, (SELECT sum(c) AS total FROM tp_c)),
+       |tp_r AS (
+       |  SELECT $keyCol,
+       |    least(1000000,
+       |      CAST(round($target
+       |        * (CAST(qs_micro AS DOUBLE) / CAST(z_micro AS DOUBLE))
+       |        / CAST(c AS DOUBLE) * 1e6) AS BIGINT)) AS rate_micro
+       |  FROM tp_q,
+       |    (SELECT CAST(sum(qs_micro) AS BIGINT) AS z_micro FROM tp_q)),
+       |$out AS (
+       |  SELECT i.*, tp_r.rate_micro FROM $input i JOIN tp_r USING ($keyCol)
+       |  WHERE CAST(concat('0x', substr(md5(concat('$salt',
+       |      CAST(i.doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
+       |    % 1000000 < tp_r.rate_micro)""".stripMargin
+
+  /** One row of a chain's (stage, n_rows) report: `agg` over `df`,
+    * the row count by default.
+    */
+  def stageRow(name: String, df: DataFrame,
+               agg: Column = count(lit(1))): DataFrame =
+    df.agg(agg.as("n_rows")).select(lit(name).as("stage"), col("n_rows"))
+
+  /** A composed chain's per-stage report, ordered by stage name. */
+  def stageReport(rows: DataFrame*): DataFrame =
+    rows.reduce(_ union _).orderBy("stage")
+
+  /** The CommonCrawl END-TO-END chain, starting from the CONTAINER:
+    * `docs` (doc_id, source, text) → executor-written gzip WARC archives
+    * (`parts` files; the source rides target_uri and is parsed BACK
+    * from the container) → C4-lite line cleaning (7-word lines, keep
+    * lines of >= 3 words, a doc survives with >= 5 kept lines) →
+    * ExactSubstr-FULL (w = 8) over the cleaned text → temperature
+    * sampling over the post-dedup source distribution (target 100) →
+    * 512-token block count. Returns the (stage, n_rows) report;
+    * [[commonCrawlChainOracleSql]] replays every stage transition.
+    * A corrupt archive fails the chain. The container decode, the C4
+    * pass and the ExactSubstr rewrite each run once: every stage that
+    * reads them hangs off a `CacheScope.harness` pin.
+    */
+  def commonCrawlChain(docs: DataFrame, warcDir: String,
+                       parts: Int): DataFrame = {
+    val s = docs.sparkSession
+    val warcIn = docs.select(
+      col("doc_id"),
+      lit("conversion").as("warc_type"),
+      concat(lit("<urn:graft:doc:"), col("doc_id"), lit(">"))
+        .as("record_id"),
+      concat(lit("https://example.org/"), col("source"), lit("/"),
+        col("doc_id")).as("target_uri"),
+      lit("2026-01-01T00:00:00Z").as("warc_date"),
+      lit("text/plain").as("content_type"),
+      encode(coalesce(col("text"), lit("")), "UTF-8").as("payload"))
+    graft.sources.WarcIngest.writeWarcDir(
+      warcIn.repartition(parts, col("doc_id")), warcDir, gzip = true)
+    val (records, audit) = graft.sources.WarcIngest.readWarcDir(s, warcDir)
+    require(audit.filter(col("corrupt")).count() == 0,
+      "commonCrawlChain: corrupt archives")
+    // readWarcDir re-STREAMS the gzip archives on every action; the
+    // stage-0 count and the C4 pass both read this frame
+    val fromWarc = graft.CacheScope.harness.track(records.select(
+      regexp_extract(col("record_id"), "doc:(\\d+)", 1)
+        .cast("long").as("doc_id"),
+      regexp_extract(col("target_uri"), "example\\.org/([^/]+)/", 1)
+        .as("source"),
+      decode(col("payload"), "UTF-8").as("text"))).toDF()
+    // C4-lite lines; ws binds ONCE per row (the one-element-transform
+    // trick). Four stage aggregates hang off the cleaned frame.
+    val c1 = graft.CacheScope.harness.track(
+      fromWarc.filter(col("text").rlike("\\S"))
+      .select(col("doc_id"), col("source"), expr(
+        """element_at(transform(
+          |  array(filter(split(trim(text), '\\s+'),
+          |        x -> length(x) > 0)),
+          |  ws -> filter(
+          |    transform(sequence(0,
+          |        cast(ceil(size(ws) / 7.0) as int) - 1),
+          |      i -> slice(ws, i * 7 + 1, 7)),
+          |    l -> size(l) >= 3)), 1)""".stripMargin).as("kept"))
+      .filter(size(col("kept")) >= 5)
+      .select(col("doc_id"), col("source"), expr(
+        "array_join(transform(kept, l -> array_join(l, ' ')), ' ')")
+        .as("ctext"))).toDF()
+    val dd = Dedup.exactSubstrDedup(c1, "ctext", "doc_id",
+      w = 8, floor = false) // c1 is a cached derived frame, not a scan
+    // dd derives from c1 (self-join lineage) — disambiguate by alias.
+    // The rewrite feeds the sampling stage, its count AND the block
+    // fold — one rewrite, not three.
+    val surv = graft.CacheScope.harness.track(
+      dd.as("dd").join(c1.as("c"), col("dd.id") === col("c.doc_id"))
+      .select(col("c.doc_id").as("doc_id"),
+        col("c.source").as("source"),
+        (size(split(col("c.ctext"), " ")) -
+          col("dd.n_tokens_removed")).cast("long").as("nt"))
+      .filter(col("nt") > 0)).toDF()
+    val q4 = temperatureSample(surv, "source", "l22-", 100.0)
+    stageReport(
+      stageRow("0_warc_records", fromWarc),
+      stageRow("1_c4_clean", c1),
+      stageRow("2_exact_substr", surv),
+      stageRow("3_sampled", q4),
+      stageRow("4_blocks", q4,
+        expr("CAST((sum(nt) + 511) div 512 AS BIGINT)")))
+  }
+
+  /** DuckDB replay of [[commonCrawlChain]] over `docsSql`, a query
+    * yielding (doc_id, source, text) with non-NULL text.
+    */
+  def commonCrawlChainOracleSql(docsSql: String): String =
+    s"""WITH d AS ($docsSql),
+       |w0 AS (
+       |  SELECT doc_id, source,
+       |    list_filter(regexp_split_to_array(trim(text), '\\s+'),
+       |      x -> length(x) > 0) AS ws
+       |  FROM d WHERE regexp_matches(text, '\\S')),
+       |k AS (
+       |  SELECT doc_id, source,
+       |    list_filter(list_transform(
+       |      range(0, CAST(ceil(len(ws) / 7.0) AS INT)),
+       |      i -> ws[i*7+1 : i*7+7]), l -> len(l) >= 3) AS kept
+       |  FROM w0),
+       |c1 AS (
+       |  SELECT doc_id, source,
+       |    array_to_string(list_transform(kept,
+       |      l -> array_to_string(l, ' ')), ' ') AS ctext
+       |  FROM k WHERE len(kept) >= 5),
+       |words AS (SELECT doc_id AS id, source,
+       |    string_split(ctext, ' ') AS ws FROM c1),
+       |segs AS (
+       |  SELECT w.id, t.i AS span_idx,
+       |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
+       |  FROM words w,
+       |    LATERAL (SELECT unnest(range(greatest(
+       |      len(w.ws) - 7, 0))) AS i) t),
+       |occ AS (
+       |  SELECT id, span_idx,
+       |    row_number() OVER (PARTITION BY h
+       |      ORDER BY id, span_idx) AS rn,
+       |    count(*) OVER (PARTITION BY h) AS cnt
+       |  FROM segs),
+       |losers AS (
+       |  SELECT id, span_idx AS s, span_idx + 8 AS e
+       |  FROM occ WHERE cnt > 1 AND rn > 1),
+       |isl AS (
+       |  SELECT id, s, e,
+       |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
+       |        ORDER BY s, e
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+       |      THEN 1 ELSE 0 END AS brk
+       |  FROM losers),
+       |grp AS (
+       |  SELECT id, s, e,
+       |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
+       |  FROM isl),
+       |spans AS (
+       |  SELECT id, g, min(s) AS s, max(e) AS e FROM grp
+       |  GROUP BY id, g),
+       |cutstats AS (
+       |  SELECT id, sum(e - s) AS cut FROM spans GROUP BY id),
+       |surv AS (
+       |  SELECT w.id AS doc_id, w.source,
+       |    CAST(len(w.ws) - coalesce(ct.cut, 0) AS BIGINT) AS nt
+       |  FROM words w
+       |  LEFT JOIN cutstats ct ON ct.id = w.id
+       |  WHERE len(w.ws) - coalesce(ct.cut, 0) > 0),
+       |${temperatureSampleOracleCtes("surv", "source", "l22-", 100.0,
+            "q4")}
+       |SELECT stage, n_rows FROM (
+       |  SELECT '0_warc_records' AS stage,
+       |    CAST(count(*) AS BIGINT) AS n_rows FROM d
+       |  UNION ALL SELECT '1_c4_clean', CAST(count(*) AS BIGINT)
+       |    FROM c1
+       |  UNION ALL SELECT '2_exact_substr', CAST(count(*) AS BIGINT)
+       |    FROM surv
+       |  UNION ALL SELECT '3_sampled', CAST(count(*) AS BIGINT)
+       |    FROM q4
+       |  UNION ALL SELECT '4_blocks',
+       |    CAST((sum(nt) + 511) // 512 AS BIGINT) FROM q4)
+       |ORDER BY stage""".stripMargin
 
   /** One-row summary of a cleaning pass: input/survivor counts per stage
     * boundary are what a 100 TB run monitors (a gate that drops 99% of a

@@ -685,6 +685,14 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** Near-duplicate CLUSTERS: [[connectedComponents]] over the
+    * [[exactNgramNearDups]] pairs of `df` — (id, rep) for every doc.
+    */
+  def nearDupClusters(df: DataFrame, textCol: String, idCol: String,
+                      n: Int, threshold: Double): DataFrame =
+    connectedComponents(df.select(col(idCol).as("id")),
+      exactNgramNearDups(df, textCol, idCol, n, threshold))
+
   /** Excerpt/subset detection via n-gram CONTAINMENT: score =
     * |A∩B| / min(|A|, |B|) — 1.0 when the smaller document's grams are
     * entirely inside the larger one, however large the larger is. This
@@ -733,8 +741,22 @@ object Dedup {
     * auditable twin.
     */
   def portableMinhashBands(df: DataFrame, textCol: String, idCol: String,
-                           numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    val p = 2147483647L
+                           numHashes: Int = 32, bands: Int = 8): DataFrame =
+    portableBandsOfGrams(portableGrams(df, textCol, idCol), numHashes,
+      bands)
+
+  /** (id, gram): the distinct word trigrams of each doc — a doc with
+    * fewer than 3 tokens is ONE gram, its whole token string (the
+    * [[wordShingles]] convention, replayed by `pm_t`).
+    */
+  private def portableGrams(df: DataFrame, textCol: String,
+                            idCol: String): DataFrame =
+    graft.sources.Scans.withParallelismFloor(
+        df.select(col(idCol).as("id"), col(textCol).as("__t")))
+      .select(col("id"), explode(wordShingles(col("__t"), 3)).as("gram"))
+
+  private def portableBandsOfGrams(gramRows: DataFrame, numHashes: Int,
+                                   bands: Int): DataFrame = {
     // One min aggregate PER SEED over the gram stream instead of the
     // old explode(sequence(0, numHashes-1)): that form materialized and
     // SHUFFLED numHashes rows per gram occurrence (plus a second
@@ -744,9 +766,7 @@ object Dedup {
     // map-side partial mins reduce each partition to |docs| rows before
     // the single id exchange. Same mins, same band signatures, same
     // oracle (the CTE replays the explode form; integer mins agree).
-    val gramRows = graft.sources.Scans.withParallelismFloor(
-        df.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), explode(wordShingles(col("__t"), 3)).as("gram"))
+    val p = 2147483647L
     val g = gramRows.select(col("id"),
       (conv(substring(md5(col("gram")), 1, 8), 16, 10)
         .cast("long") % p).as("g"))
@@ -797,6 +817,136 @@ object Dedup {
        |  SELECT id, seed // 4 AS band,
        |    string_agg(CAST(mh AS VARCHAR), '-' ORDER BY seed) AS sig
        |  FROM pm_h GROUP BY id, seed // 4)""".stripMargin
+
+  /** Candidate pairs (id_a < id_b) sharing any band of a
+    * [[portableMinhashBands]] frame: the banded bucket self-join.
+    */
+  def portableCandidates(bands: DataFrame): DataFrame =
+    bands.alias("a").join(bands.alias("b"),
+        col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
+          && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+
+  /** PORTABLE MinHash+LSH near-dup pairs with a FULL exact oracle: the
+    * [[portableMinhashBands]] signatures, their [[portableCandidates]],
+    * then EXACT integer gram-set Jaccard on the candidates only —
+    * |A∩B| by gram equi-join, |A∪B| = |A| + |B| - |A∩B|. Returns
+    * (id_a, id_b, inter, uni, jaccard) with jaccard >= `threshold`;
+    * [[portableNearDupsOracleSql]] re-derives every stage.
+    */
+  def portableNearDups(df: DataFrame, textCol: String, idCol: String,
+                       threshold: Double): DataFrame = {
+    // read by the signatures, the intersection (twice) and the sizes
+    val grams = graft.CacheScope.harness.track(
+      portableGrams(df, textCol, idCol)).toDF()
+    val inter = portableCandidates(portableBandsOfGrams(grams, 32, 8))
+      .join(grams.select(col("id").as("id_a"), col("gram")), "id_a")
+      .join(grams.select(col("id").as("id_b"), col("gram")),
+        Seq("id_b", "gram"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    withGramUnion(inter, grams)
+      .withColumn("jaccard",
+        col("inter").cast("double") / col("uni").cast("double"))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** RECALL audit of the portable LSH pipeline: every TRUE near-dup
+    * pair (exact gram-set Jaccard >= `threshold`, from the full
+    * inverted gram index) with `caught` = 1 when [[portableCandidates]]
+    * proposed it, else 0 — (id_a, id_b, inter, uni, caught). Ground
+    * truth enumerates every pair sharing a gram, so this is an AUDIT
+    * for a bounded sample, not a corpus-scale operator;
+    * [[portableRecallOracleSql]] replays it.
+    */
+  def portableRecall(df: DataFrame, textCol: String, idCol: String,
+                     threshold: Double): DataFrame = {
+    // read by the signatures, the inverted-index join (twice), the sizes
+    val grams = graft.CacheScope.harness.track(
+      portableGrams(df, textCol, idCol)).toDF()
+    val cand = portableCandidates(portableBandsOfGrams(grams, 32, 8))
+    val inter = grams.select(col("id").as("id_a"), col("gram"))
+      .join(grams.select(col("id").as("id_b"), col("gram")), "gram")
+      .filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    withGramUnion(inter, grams)
+      .filter(col("inter").cast("double") / col("uni").cast("double")
+        >= threshold)
+      .join(cand.withColumn("caught", lit(1)), Seq("id_a", "id_b"), "left")
+      .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
+        coalesce(col("caught"), lit(0)).as("caught"))
+  }
+
+  /** (id_a, id_b, inter) pairs + `uni` = |A| + |B| - |A∩B| from the
+    * per-doc gram counts of `grams` (id, gram).
+    */
+  private def withGramUnion(inter: DataFrame, grams: DataFrame)
+      : DataFrame = {
+    val sizes = grams.groupBy("id").agg(count(lit(1)).as("n"))
+    inter
+      .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
+      .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
+      .select(col("id_a"), col("id_b"), col("inter"),
+        (col("na") + col("nb") - col("inter")).as("uni"))
+  }
+
+  /** [[portableBandsOracleSql]] plus `cand` (id_a, id_b), the
+    * [[portableCandidates]] replay.
+    */
+  private def portableCandidatesOracleSql(table: String, idCol: String,
+                                          textCol: String): String =
+    s"""${portableBandsOracleSql(table, idCol, textCol)},
+       |cand AS (
+       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+       |  FROM pm_bands a JOIN pm_bands b
+       |    ON a.band = b.band AND a.sig = b.sig AND a.id < b.id)"""
+      .stripMargin
+
+  /** DuckDB replay of [[portableNearDups]] over `table`. */
+  def portableNearDupsOracleSql(table: String, idCol: String,
+                                textCol: String,
+                                threshold: Double): String =
+    s"""WITH ${portableCandidatesOracleSql(table, idCol, textCol)},
+       |withg AS (
+       |  SELECT c.id_a, c.id_b,
+       |    CAST(len(list_intersect(ta.grams, tb.grams)) AS BIGINT)
+       |      AS inter,
+       |    CAST(len(list_distinct(list_concat(ta.grams, tb.grams)))
+       |      AS BIGINT) AS uni
+       |  FROM cand c
+       |  JOIN pm_t ta ON ta.id = c.id_a
+       |  JOIN pm_t tb ON tb.id = c.id_b)
+       |SELECT id_a, id_b, inter, uni,
+       |  CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE) AS jaccard
+       |FROM withg
+       |WHERE CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE) >= $threshold
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** DuckDB replay of [[portableRecall]] over `table`. */
+  def portableRecallOracleSql(table: String, idCol: String,
+                              textCol: String,
+                              threshold: Double): String =
+    s"""WITH ${portableCandidatesOracleSql(table, idCol, textCol)},
+       |inv AS (SELECT id, unnest(grams) AS gram FROM pm_t),
+       |sizes AS (SELECT id, len(grams) AS n FROM pm_t),
+       |iv AS (
+       |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS inter
+       |  FROM inv a JOIN inv b ON a.gram = b.gram AND a.id < b.id
+       |  GROUP BY 1, 2),
+       |tp AS (
+       |  SELECT i.id_a, i.id_b, CAST(i.inter AS BIGINT) AS inter,
+       |    CAST(sa.n + sb.n - i.inter AS BIGINT) AS uni
+       |  FROM iv i
+       |  JOIN sizes sa ON sa.id = i.id_a
+       |  JOIN sizes sb ON sb.id = i.id_b
+       |  WHERE CAST(i.inter AS DOUBLE)
+       |    / (sa.n + sb.n - i.inter) >= $threshold)
+       |SELECT tp.id_a, tp.id_b, tp.inter, tp.uni,
+       |  CAST(CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END
+       |    AS INT) AS caught
+       |FROM tp LEFT JOIN cand c
+       |  ON c.id_a = tp.id_a AND c.id_b = tp.id_b
+       |ORDER BY tp.id_a, tp.id_b""".stripMargin
 
   /** Overlapping duplicate-SPAN detection — ExactSubstr-lite, the
     * token-window form of suffix-array training-data dedup ("find every

@@ -263,6 +263,59 @@ object LogReg {
     w.toMap
   }
 
+  /** The labelled-document fixture the trained-filter chains share:
+    * a deterministic 70% train split (md5 micro-uniform of
+    * `salt || doc_id`), `is_pos` = English, and a language marker token
+    * (" m<lang>") appended on even ids — a partial planted class
+    * signal. Yields (doc_id, is_train, is_pos, text) from a documents
+    * frame; [[labelledOracleCtes]] is the DuckDB twin.
+    */
+  def labelledDocs(docs: DataFrame, salt: String): DataFrame =
+    docs.select(col("doc_id"),
+      (conv(substring(md5(concat(lit(salt), col("doc_id"))),
+        1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
+      (col("lang") === "en").as("is_pos"),
+      concat(col("text"), when(col("doc_id") % 2 === 0,
+        concat(lit(" m"), col("lang"))).otherwise(lit("")))
+        .as("text"))
+
+  /** (train, held-out) [[hashedCounts]] tables of a [[labelledDocs]]
+    * frame, 256 buckets.
+    */
+  def labelledSplit(labelled: DataFrame): (DataFrame, DataFrame) = {
+    def feats(rows: DataFrame) =
+      hashedCounts(rows, "doc_id", "is_pos", "text", buckets = 256)
+    (feats(labelled.filter(col("is_train"))),
+      feats(labelled.filter(!col("is_train"))))
+  }
+
+  /** Held-out verdicts from [[margins]] — the Spark twin of the
+    * oracle's `lr_out`: (doc_id, label, score_micro, pred, correct).
+    */
+  def verdicts(sc: DataFrame): DataFrame =
+    sc.select(col("id").as("doc_id"),
+      col("y").cast("int").as("label"),
+      col("m").as("score_micro"),
+      (col("m") > 0).cast("int").as("pred"),
+      ((col("m") > 0) === col("y")).cast("int").as("correct"))
+
+  /** [[oracleCtes]] for a fit over [[labelledDocs]] of the `documents`
+    * table (256 buckets, 10 iterations, lrDen 4), `lr_d` included.
+    */
+  def labelledOracleCtes(salt: String): Seq[String] =
+    s"""lr_d AS (
+       |  SELECT doc_id,
+       |    (CAST(concat('0x', substr(md5('$salt' ||
+       |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+       |       % 100) < 70 AS is_train,
+       |    lang = 'en' AS is_pos,
+       |    list_filter(string_split_regex(trim(lower(
+       |      text || CASE WHEN doc_id % 2 = 0
+       |        THEN ' m' || lang ELSE '' END)), '\\s+'),
+       |      x -> strlen(x) > 0) AS ts
+       |  FROM documents)""".stripMargin +:
+      oracleCtes(buckets = 256, iters = 10, lrDen = 4L)
+
   /** Oracle CTE list replaying the ENTIRE fit — every margin, fast
     * sigmoid, gradient and weight update of every iteration — plus the
     * held-out scoring, in DuckDB SQL. The weight and feature CTEs are

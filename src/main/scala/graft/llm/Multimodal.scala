@@ -1665,4 +1665,357 @@ object Multimodal {
         }
       }(enc)
   }
+
+  /** The degenerate-key pair VALVE on the real media decode path:
+    * synthetic 200-sample WAVs for the docs below `bound` — every 10th
+    * doc byte-identical (ONE degenerate content class), the rest spread
+    * over `nClasses` bounded classes — through the RIFF decode to an
+    * exact windowed-energy digest, then
+    * [[Dedup.pairsWithinGroups]] capped at `maxGroupSize` (0 = uncapped):
+    * the degenerate class drops WHOLE once it exceeds the cap, bounded
+    * classes keep their exact pair sets.
+    */
+  def plantedMediaPairs(docs: DataFrame, bound: Long, nClasses: Int,
+                        maxGroupSize: Int): DataFrame = {
+    val keyed = docs.filter(col("doc_id") < bound)
+      .select(col("doc_id").cast("long").as("id"),
+        when(col("doc_id") % 10 === 0, lit(0L))
+          .otherwise(col("doc_id") % nClasses + 1L).as("key"),
+        lit(1).as("scale"))
+    val wavs = withSyntheticAudioScaled(keyed, "id", "key", "scale",
+      baseSamples = 200, rate = 8000)
+    val feats = audioWindowEnergy(wavs, "id", windows = 10)
+      .groupBy("id")
+      .agg(md5(to_json(sort_array(
+        collect_list(struct(col("win"), col("energy"))))))
+        .as("content_key"))
+    Dedup.pairsWithinGroups(feats, "content_key", "id",
+      maxGroupSize = maxGroupSize)
+  }
+
+  /** Fixture ids for the composed media chains: doc_id < `bound`, key
+    * doc_id mod `nKeys` (the planted duplicate clusters), scale 1 for
+    * the first half of the ids and 2 for the second (the upsampled
+    * renditions).
+    */
+  private def chainIds(docs: DataFrame, bound: Long, nKeys: Int)
+      : DataFrame =
+    docs.filter(col("doc_id") < bound)
+      .select(col("doc_id").cast("long").as("id"),
+        (col("doc_id") % nKeys).as("key"),
+        when(col("doc_id") < bound / 2, 1).otherwise(2).as("scale"))
+
+  /** TAR/WebDataset round trip for the media chains: `members` (id,
+    * name, payload) → `parts` executor-written gzip shards under
+    * `tarDir` → read back as the per-member sample frame (pinned in
+    * `CacheScope.harness`: the TAR re-streams per action and every
+    * stage hangs off it — one container decode). A corrupt shard fails
+    * the chain.
+    */
+  private def tarRoundTrip(members: DataFrame, tarDir: String,
+                           parts: Int): DataFrame = {
+    graft.sources.TarIngest.writeTarDir(
+      members.repartition(parts, col("id")).drop("id"), tarDir,
+      gzip = true)
+    val (read, audit) =
+      graft.sources.TarIngest.readTarDir(members.sparkSession, tarDir)
+    require(audit.filter(col("corrupt")).count() == 0,
+      s"corrupt shards in $tarDir")
+    graft.CacheScope.harness.track(
+      graft.sources.TarIngest.wdsSamples(read)).toDF()
+  }
+
+  /** (id, payload) of one sample extension, id parsed from the key. */
+  private def samplesByExt(samples: DataFrame, ext: String): DataFrame =
+    samples.filter(col("ext") === ext)
+      .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
+        .cast("long").as("id"), col("payload"))
+
+  /** The caption text of each sample's .txt member as (id, caption). */
+  private def captions(samples: DataFrame): DataFrame =
+    samplesByExt(samples, "txt")
+      .select(col("id"), decode(col("payload"), "UTF-8").as("caption"))
+
+  /** A doc's caption member: (id, name, payload). */
+  private def captionMembers(docs: DataFrame, prefix: String): DataFrame =
+    docs.select(col("doc_id").cast("long").as("id"),
+      format_string(s"$prefix/%05d.txt", col("doc_id")).as("name"),
+      encode(coalesce(col("text"), lit("")), "UTF-8").as("payload"))
+
+  /** The MULTIMODAL end-to-end chain (the LAION/DataComp shape) from
+    * the CONTAINER, over the first `bound` documents: synthetic
+    * cross-scale PNGs (`nKeys` perceptual clusters, second half
+    * pixel-doubled) carrying a planted GPS tEXt chunk, plus each doc's
+    * caption, through `parts` TAR/WebDataset shards → GPS proven to
+    * survive the round trip → ancillary strip, proven lossless against
+    * a strip of the pristine encode → dHash over the stripped bytes →
+    * star-edge connected components → canonical election by DECODED
+    * width → caption join → interleaved packing (64 image tokens +
+    * caption tokens, capacity 256, `blockSize`-doc blocks). Returns the
+    * (stage, n_rows) report; [[imageChainOracleSql]] replays it. Pixels
+    * never shuffle: hashes, widths and token counts travel.
+    */
+  def imageChain(docs: DataFrame, bound: Long, nKeys: Int, tarDir: String,
+                 parts: Int, blockSize: Int): DataFrame = {
+    val cp = CorpusPipeline
+    val docsIn = docs.filter(col("doc_id") < bound)
+    val pristine = withSyntheticImagesScaled(chainIds(docs, bound, nKeys),
+      "id", "key", "scale", baseW = 36, baseH = 32)
+    val gpsVals = docsIn.select(col("doc_id").cast("long").as("id"),
+      format_string("lat=%d;lon=%d",
+        col("doc_id") * 1003 % 180000000L - 90000000L,
+        col("doc_id") * 2017 % 360000000L - 180000000L).as("gps_v"))
+    val planted = withPlantedText(pristine.join(gpsVals, "id"), "id",
+      "payload", Seq("gps" -> "gps_v"))
+    val samples = tarRoundTrip(
+      planted.select(col("id"),
+          format_string("img/%05d.png", col("id")).as("name"),
+          col("payload"))
+        .unionByName(captionMembers(docsIn, "img")), tarDir, parts)
+    val pngs = samplesByExt(samples, "png")
+    val gpsSeen = pngMeta(pngs, "id", "payload")
+      .filter(col("keyword") === "gps")
+      .join(gpsVals, "id")
+      .filter(col("value") === col("gps_v"))
+    // strip INSIDE the chain, on the container bytes; pinned — the
+    // dHash, the width decode and the restored-proof all read it
+    val stripped = graft.CacheScope.harness.track(
+      stripPngMeta(pngs, "id", "payload")
+        .select(col("id"), col("payload"))).toDF()
+    val restored = stripped
+      .select(col("id"), md5(col("payload")).as("m1"))
+      .join(stripPngMeta(pristine, "id", "payload")
+        .select(col("id"), md5(col("payload")).as("m0")), "id")
+      .filter(col("m1") === col("m0"))
+    val hashed = dhashes(stripped, "id").filter(col("dhash").isNotNull)
+    val cc = Dedup.connectedComponents(hashed.select(col("id")),
+      Dedup.starEdges(hashed, "dhash", "id"))
+    val meta = decodeImageFeatures(stripped, "id")
+      .select(col("id"), col("width").cast("long").as("width"))
+    // the map-side-combinable argmax election — never a rank window
+    // over the connected-components rep key
+    val canonical = Dedup.electCanonical(cc.join(meta, "id"), "rep", "id",
+        "width")
+      .select(col("rep"), col("canonical"))
+    val caps = captions(samples)
+    val withCap = canonical.join(caps, canonical("canonical") === caps("id"))
+    val counts = withCap.select(col("canonical").as("doc_id"),
+      (lit(64L) + TextAnalysis.tokenCount(col("caption"))).as("n_tokens"))
+    val packed = cp.packByCount(counts, capacity = 256, blockSize = blockSize)
+    // stage 0 counts the CACHED sample frame (one row per member), not
+    // the reader's frame, which would re-stream the archives
+    cp.stageReport(
+      cp.stageRow("0_tar_members", samples),
+      cp.stageRow("1_samples", samples, countDistinct(col("sample_key"))),
+      cp.stageRow("2_gps_seen", gpsSeen),
+      cp.stageRow("3_strip_restored", restored),
+      cp.stageRow("4_canonical", canonical),
+      cp.stageRow("5_caption_join", withCap),
+      cp.stageRow("6_blocks", packed,
+        countDistinct(col("block") * 10000L + col("bin"))),
+      cp.stageRow("7_tokens", counts, sum(col("n_tokens"))))
+  }
+
+  /** DuckDB replay of [[imageChain]] over the `documents` table: the
+    * cluster count via a recursive closure over the planted keys, the
+    * election via the planted widths, the block count via the pack CTE.
+    */
+  def imageChainOracleSql(bound: Long, nKeys: Int, blockSize: Int): String =
+    s"""WITH RECURSIVE ${chainIdsOracleCtes(bound, nKeys, 36)},
+       |cnt AS (
+       |  SELECT c.id AS doc_id,
+       |    64 + CAST(len(list_filter(string_split_regex(
+       |      trim(coalesce(d.text, '')), '\\s+'),
+       |      t -> strlen(t) > 0)) AS BIGINT) AS nt
+       |  FROM canon c JOIN documents d ON d.doc_id = c.id),
+       |${packOracleCtes(256, blockSize)}
+       |SELECT stage, n_rows FROM (
+       |  SELECT '0_tar_members' AS stage,
+       |    CAST(2 * count(*) AS BIGINT) AS n_rows FROM ids
+       |  UNION ALL SELECT '1_samples', CAST(count(*) AS BIGINT)
+       |    FROM ids
+       |  UNION ALL SELECT '2_gps_seen', CAST(count(*) AS BIGINT)
+       |    FROM ids
+       |  UNION ALL SELECT '3_strip_restored',
+       |    CAST(count(*) AS BIGINT) FROM ids
+       |  UNION ALL SELECT '4_canonical',
+       |    CAST(count(DISTINCT rep) AS BIGINT) FROM cc
+       |  UNION ALL SELECT '5_caption_join',
+       |    CAST(count(*) AS BIGINT) FROM canon
+       |  UNION ALL SELECT '6_blocks',
+       |    CAST(count(DISTINCT block * 10000 + bin) AS BIGINT)
+       |    FROM pk_p
+       |  UNION ALL SELECT '7_tokens',
+       |    CAST(sum(nt) AS BIGINT) FROM cnt)
+       |ORDER BY stage""".stripMargin
+
+  /** The AUDIO/VIDEO end-to-end chain, [[imageChain]]'s twin for the
+    * remaining modalities, over the first `bound` documents: synthetic
+    * WAVs (`nKeys` envelope clusters, second half integer-upsampled 2×,
+    * so envelopes collide while bytes and durations differ), 6-frame
+    * MJPEG AVIs and captions through `parts` TAR/WebDataset shards →
+    * WAV bytes proven restored through the round trip → RIFF/PCM decode
+    * to the duration-invariant envelope → star-edge connected
+    * components → longest-rendition election via the argmax aggregate
+    * → AVI walk to scene-cut features → caption join → packing (128
+    * audio tokens + caption tokens, capacity 384, `blockSize`-doc
+    * blocks). Returns the (stage, n_rows) report; [[avChainOracleSql]]
+    * replays it. Payloads never shuffle: envelopes, durations and
+    * token counts travel.
+    */
+  def avChain(docs: DataFrame, bound: Long, nKeys: Int, tarDir: String,
+              parts: Int, blockSize: Int): DataFrame = {
+    val cp = CorpusPipeline
+    val ids = chainIds(docs, bound, nKeys)
+    val wavs = withSyntheticAudioScaled(ids, "id", "key", "scale",
+      baseSamples = 1000, rate = 8000)
+    val avis = withSyntheticVideos(ids, "id", frames = 6)
+    val samples = tarRoundTrip(
+      wavs.select(col("id"),
+          format_string("av/%05d.wav", col("id")).as("name"),
+          col("payload"))
+        .unionByName(avis.select(col("id"),
+          format_string("av/%05d.avi", col("id")).as("name"),
+          col("payload")))
+        .unionByName(captionMembers(docs.filter(col("doc_id") < bound),
+          "av")), tarDir, parts)
+    val wavsIn = samplesByExt(samples, "wav")
+    // container round trip proven lossless on the audio bytes
+    val restored = wavsIn
+      .select(col("id"), md5(col("payload")).as("m1"))
+      .join(wavs.select(col("id"), md5(col("payload")).as("m0")), "id")
+      .filter(col("m1") === col("m0"))
+    // ONE audio decode feeds dedup key, duration and the count
+    val env = graft.CacheScope.harness.track(
+      audioEnvelopes(wavsIn, "id", windows = 10)).toDF()
+    val cc = Dedup.connectedComponents(env.select(col("id")),
+      Dedup.starEdges(
+        env.select(col("id"), md5(to_json(col("envelope"))).as("akey")),
+        "akey", "id"))
+    val canonical = Dedup.electCanonical(
+      cc.join(env.select(col("id"), col("num_samples")), "id"),
+      "rep", "id", "num_samples")
+    // video features: the real AVI walk, the scene-cut rule
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy("frame_idx")
+    val cuts = decodeVideoFrames(samplesByExt(samples, "avi"), "id")
+      .withColumn("prev", lag(col("sum_gray"), 1).over(w))
+      .filter(col("prev").isNotNull &&
+        abs(col("sum_gray") - col("prev")) > 300)
+    val caps = captions(samples)
+    val withCap = canonical.join(caps, canonical("canonical") === caps("id"))
+    val counts = withCap.select(col("canonical").as("doc_id"),
+      (lit(128L) + TextAnalysis.tokenCount(col("caption"))).as("n_tokens"))
+    val packed = cp.packByCount(counts, capacity = 384, blockSize = blockSize)
+    cp.stageReport(
+      cp.stageRow("0_tar_members", samples),
+      cp.stageRow("1_samples", samples, countDistinct(col("sample_key"))),
+      cp.stageRow("2_wav_restored", restored),
+      cp.stageRow("3_audio_envelopes", env),
+      cp.stageRow("4_scene_cuts", cuts),
+      cp.stageRow("5_clusters", cc, countDistinct(col("rep"))),
+      cp.stageRow("6_canonical_idsum", canonical, sum(col("canonical"))),
+      cp.stageRow("7_caption_join", withCap),
+      cp.stageRow("8_blocks", packed,
+        countDistinct(col("block") * 10000L + col("bin"))),
+      cp.stageRow("9_tokens", counts, sum(col("n_tokens"))))
+  }
+
+  /** DuckDB replay of [[avChain]] over the `documents` table; the
+    * scene cuts replay analytically from the planted pixel formula.
+    */
+  def avChainOracleSql(bound: Long, nKeys: Int, blockSize: Int): String =
+    s"""WITH RECURSIVE ${chainIdsOracleCtes(bound, nKeys, 1000)},
+       |fr AS (
+       |  SELECT d.doc_id, f.frame_idx,
+       |    (SELECT CAST(sum((d.doc_id*31 + f.frame_idx*7 + i) % 256)
+       |       AS BIGINT) FROM range(64) t(i)) AS sum_gray
+       |  FROM documents d CROSS JOIN
+       |    (SELECT unnest(generate_series(0, 5)) AS frame_idx) f
+       |  WHERE d.doc_id < $bound),
+       |d2 AS (
+       |  SELECT doc_id,
+       |    abs(sum_gray - lag(sum_gray) OVER (PARTITION BY doc_id
+       |      ORDER BY frame_idx)) AS delta
+       |  FROM fr),
+       |cnt AS (
+       |  SELECT c.id AS doc_id,
+       |    128 + CAST(len(list_filter(string_split_regex(
+       |      trim(coalesce(d.text, '')), '\\s+'),
+       |      t -> strlen(t) > 0)) AS BIGINT) AS nt
+       |  FROM canon c JOIN documents d ON d.doc_id = c.id),
+       |${packOracleCtes(384, blockSize)}
+       |SELECT stage, n_rows FROM (
+       |  SELECT '0_tar_members' AS stage,
+       |    CAST(3 * count(*) AS BIGINT) AS n_rows FROM ids
+       |  UNION ALL SELECT '1_samples', CAST(count(*) AS BIGINT)
+       |    FROM ids
+       |  UNION ALL SELECT '2_wav_restored', CAST(count(*) AS BIGINT)
+       |    FROM ids
+       |  UNION ALL SELECT '3_audio_envelopes',
+       |    CAST(count(*) AS BIGINT) FROM ids
+       |  UNION ALL SELECT '4_scene_cuts',
+       |    (SELECT CAST(count(*) AS BIGINT) FROM d2
+       |     WHERE delta IS NOT NULL AND delta > 300)
+       |  UNION ALL SELECT '5_clusters',
+       |    CAST(count(DISTINCT rep) AS BIGINT) FROM cc
+       |  UNION ALL SELECT '6_canonical_idsum',
+       |    (SELECT CAST(sum(id) AS BIGINT) FROM canon)
+       |  UNION ALL SELECT '7_caption_join',
+       |    CAST(count(*) AS BIGINT) FROM canon
+       |  UNION ALL SELECT '8_blocks',
+       |    CAST(count(DISTINCT block * 10000 + bin) AS BIGINT)
+       |    FROM pk_p
+       |  UNION ALL SELECT '9_tokens',
+       |    CAST(sum(nt) AS BIGINT) FROM cnt)
+       |ORDER BY stage""".stripMargin
+
+  /** Oracle CTEs for [[chainIds]] and the canonical election: ids, the
+    * planted-key edges e, their recursive closure reach, cc (id, rep)
+    * and canon (rep, id) — the largest `unit · scale` rendition, ties to
+    * the smaller id. Needs `WITH RECURSIVE`.
+    */
+  private def chainIdsOracleCtes(bound: Long, nKeys: Int,
+                                 unit: Int): String =
+    s"""ids AS (
+       |  SELECT doc_id AS id, doc_id % $nKeys AS key,
+       |    CASE WHEN doc_id < ${bound / 2} THEN 1 ELSE 2 END AS scale
+       |  FROM documents WHERE doc_id < $bound),
+       |e AS (
+       |  SELECT a.id AS a, b.id AS b FROM ids a JOIN ids b
+       |  ON a.key = b.key AND a.id <> b.id),
+       |reach AS (
+       |  SELECT id AS src, id AS dst FROM ids
+       |  UNION
+       |  SELECT r.src, e.b AS dst FROM reach r
+       |  JOIN e ON r.dst = e.a),
+       |cc AS (SELECT src AS id, min(dst) AS rep FROM reach
+       |       GROUP BY src),
+       |rk AS (
+       |  SELECT rep, id,
+       |    row_number() OVER (PARTITION BY rep
+       |      ORDER BY $unit * i.scale DESC, id) AS rk
+       |  FROM cc JOIN ids i USING (id)),
+       |canon AS (SELECT rep, id FROM rk WHERE rk = 1)""".stripMargin
+
+  /** Oracle CTEs pk_n/pk_p replaying [[CorpusPipeline.packByCount]]
+    * over `cnt` (doc_id, nt): the greedy per-block bin walk.
+    */
+  private def packOracleCtes(capacity: Int, blockSize: Int): String =
+    s"""pk_n AS (
+       |  SELECT doc_id, doc_id // $blockSize AS block, nt,
+       |    row_number() OVER (PARTITION BY doc_id // $blockSize
+       |      ORDER BY doc_id) AS rn
+       |  FROM cnt),
+       |pk_p AS (
+       |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
+       |  FROM pk_n WHERE rn = 1
+       |  UNION ALL
+       |  SELECT n.doc_id, n.block, n.nt, n.rn,
+       |    CASE WHEN p.bt + n.nt <= $capacity THEN p.bin ELSE p.bin + 1
+       |      END,
+       |    CASE WHEN p.bt + n.nt <= $capacity THEN p.bt + n.nt ELSE n.nt
+       |      END
+       |  FROM pk_p p JOIN pk_n n
+       |    ON n.block = p.block AND n.rn = p.rn + 1)""".stripMargin
 }

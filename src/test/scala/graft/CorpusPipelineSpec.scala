@@ -357,4 +357,26 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(got.sum == 20L, got.toString) // 30*2/3
     assert(got == Seq(6L, 7L, 7L), got.toString)
   }
+
+  // (stage, n_rows) report of a registry chain at sf0.001
+  private def stageReport(name: String): Seq[(String, Long)] = {
+    val out = SparkEntry.queries(name)(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    CacheScope.harness.release()
+    spark.catalog.clearCache()
+    out
+  }
+
+  test("l16 corpus-build report through temperatureSample/stageReport, " +
+      "pinned at sf0.001") {
+    assert(stageReport("l16_corpus_build_report") == Seq(
+      "0_raw" -> 500L, "1_quality" -> 318L, "2_dedup" -> 312L,
+      "3_decontam" -> 306L, "4_sampled" -> 97L, "5_blocks" -> 13L))
+  }
+
+  test("commonCrawlChain (l22) stage report pinned at sf0.001") {
+    assert(stageReport("l22_commoncrawl_chain") == Seq(
+      "0_warc_records" -> 300L, "1_c4_clean" -> 241L,
+      "2_exact_substr" -> 231L, "3_sampled" -> 116L, "4_blocks" -> 15L))
+  }
 }

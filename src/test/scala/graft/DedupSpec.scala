@@ -489,4 +489,15 @@ class DedupSpec extends SparkSpec {
     assert(phys.contains("partial_max_by"),
       "argmax must partial-aggregate before the exchange:\n" + phys.take(800))
   }
+
+  test("portableNearDups (d20) and portableRecall (d30) output rows " +
+      "pinned at sf0.001") {
+    Seq("d20_minhash_portable" -> 28L, "d30_recall_portable" -> 28L)
+      .foreach { case (name, rows) =>
+        val n = SparkEntry.queries(name)(spark, sf).count()
+        CacheScope.harness.release()
+        spark.catalog.clearCache()
+        assert(n == rows, name)
+      }
+  }
 }

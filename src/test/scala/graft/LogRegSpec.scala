@@ -122,4 +122,16 @@ class LogRegSpec extends SparkSpec {
     assert(op2(0).getLong(0) == 3L, op2(0).toString)
     assert(op2(0).getLong(1) == 666666L, op2(0).toString)
   }
+
+  test("labelledDocs/labelledSplit chains (t34-t37) output rows " +
+      "pinned at sf0.001") {
+    Seq("t34_logreg_quality" -> 160L, "t35_logreg_persisted" -> 160L,
+      "t36_filter_calibration" -> 147L, "t37_operating_point" -> 1L)
+      .foreach { case (name, rows) =>
+        val n = SparkEntry.queries(name)(spark, sf).count()
+        CacheScope.harness.release()
+        spark.catalog.clearCache()
+        assert(n == rows, name)
+      }
+  }
 }

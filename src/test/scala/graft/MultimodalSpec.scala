@@ -375,4 +375,29 @@ class MultimodalSpec extends SparkSpec {
     assert(hg.isDefined && hg == hi,
       s"palette indices leaked into the hash: $hg vs $hi")
   }
+
+  // (stage, n_rows) report of a registry chain at sf0.001
+  private def stageReport(name: String): Seq[(String, Long)] = {
+    val out = SparkEntry.queries(name)(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    CacheScope.harness.release()
+    spark.catalog.clearCache()
+    out
+  }
+
+  test("imageChain (m18) stage report pinned at sf0.001") {
+    assert(stageReport("m18_multimodal_chain") == Seq(
+      "0_tar_members" -> 300L, "1_samples" -> 150L, "2_gps_seen" -> 150L,
+      "3_strip_restored" -> 150L, "4_canonical" -> 25L,
+      "5_caption_join" -> 25L, "6_blocks" -> 16L, "7_tokens" -> 3058L))
+  }
+
+  test("avChain (m19) stage report pinned at sf0.001") {
+    assert(stageReport("m19_av_chain") == Seq(
+      "0_tar_members" -> 450L, "1_samples" -> 150L,
+      "2_wav_restored" -> 150L, "3_audio_envelopes" -> 150L,
+      "4_scene_cuts" -> 743L, "5_clusters" -> 25L,
+      "6_canonical_idsum" -> 2175L, "7_caption_join" -> 25L,
+      "8_blocks" -> 16L, "9_tokens" -> 4658L))
+  }
 }

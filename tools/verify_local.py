@@ -67,4 +67,8 @@ ro = sum(1 for v in results.values() if v.startswith("ROWS-ONLY") and "EMPTY" no
 for k, v in sorted(results.items()):
     flag = "  " if v.startswith("OK") or (v.startswith("ROWS-ONLY") and "EMPTY" not in v) else "**"
     print(f"{flag} {k}: {v}")
-print(f"\n{ok} OK, {ro} rows-only-ok, {len(results)-ok-ro} bad, of {len(results)}")
+bad = len(results) - ok - ro
+print(f"\n{ok} OK, {ro} rows-only-ok, {bad} bad, of {len(results)}")
+# non-zero on any bad entry (mismatch, oracle/read failure, empty
+# rows-only result) so a scripted before/after check can fail
+sys.exit(1 if bad else 0)

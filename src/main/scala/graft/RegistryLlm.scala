@@ -917,7 +917,11 @@ object RegistryLlm {
              |  FROM embeddings WHERE vec_id < 5),
              |scored AS (
              |  SELECT q.query_id, c.vec_id AS neighbor_id,
-             |    list_cosine_similarity(q.qv, c.embedding::DOUBLE[]) AS sim
+             |    CASE WHEN list_dot_product(q.qv, q.qv) = 0
+             |      OR list_dot_product(c.embedding::DOUBLE[],
+             |        c.embedding::DOUBLE[]) = 0 THEN 0.0
+             |    ELSE list_cosine_similarity(q.qv, c.embedding::DOUBLE[])
+             |    END AS sim
              |  FROM q JOIN embeddings c ON c.vec_id <> q.query_id)
              |SELECT query_id, neighbor_id,
              |  CAST(row_number() OVER (PARTITION BY query_id

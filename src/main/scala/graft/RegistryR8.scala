@@ -284,8 +284,12 @@ object RegistryR8 {
       Some("""WITH scored AS (
              |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              |    c.label AS nl,
-             |    list_cosine_similarity(q.embedding::DOUBLE[],
-             |      c.embedding::DOUBLE[]) AS sim
+             |    CASE WHEN list_dot_product(q.embedding::DOUBLE[],
+             |        q.embedding::DOUBLE[]) = 0
+             |      OR list_dot_product(c.embedding::DOUBLE[],
+             |        c.embedding::DOUBLE[]) = 0 THEN 0.0
+             |    ELSE list_cosine_similarity(q.embedding::DOUBLE[],
+             |      c.embedding::DOUBLE[]) END AS sim
              |  FROM (SELECT * FROM embeddings WHERE vec_id < 500) q
              |  JOIN embeddings c ON c.vec_id <> q.vec_id),
              |nn AS (
@@ -792,11 +796,10 @@ object RegistryR8 {
     //      can never hash-match: summation order.) ----------------------
     Q("n10_centroid_cosine",
       (s, dir) => {
+        val sim = graft.llm.Similarity
         val q = t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
-            posexplode(col("embedding")).as(Seq("pos", "e")))
-          .withColumn("qe",
-            expr("CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT)"))
+            posexplode(sim.quantized(col("embedding"))).as(Seq("pos", "qe")))
         val cent = q.groupBy("label", "pos")
           .agg(sum("qe").as("sq"), count(lit(1)).as("n"))
           .select(col("label"), col("pos"), expr("sq div n").as("cq"))
@@ -805,9 +808,7 @@ object RegistryR8 {
           .agg(sum(expr("qe * cq")).as("dot"),
             sum(expr("qe * qe")).as("n2v"),
             sum(expr("cq * cq")).as("n2c"))
-          .withColumn("cos", expr(
-            "CASE WHEN n2v = 0 OR n2c = 0 THEN 0.0 " +
-              "ELSE dot / (sqrt(CAST(n2v AS DOUBLE)) * sqrt(CAST(n2c AS DOUBLE))) END"))
+          .withColumn("cos", expr(sim.cosSql("dot", "n2v", "n2c")))
         graft.plans.TopKPerKey(
             scored.select(col("label").cast("int").as("label"),
               col("vec_id"), col("cos")),
@@ -816,27 +817,19 @@ object RegistryR8 {
             k = 5)
           .orderBy("label", "vec_id")
       },
-      Some("""WITH q AS (
-             |  SELECT emb.vec_id, emb.label, t.i AS pos,
-             |    CAST(round(CAST(emb.embedding[t.i + 1] AS DOUBLE) * 1000000)
-             |      AS BIGINT) AS qe
-             |  FROM embeddings emb,
-             |    LATERAL (SELECT unnest(range(len(emb.embedding))) AS i) t),
+      Some(s"""WITH ${graft.llm.Similarity.qeSql("embeddings", "vec_id",
+                "embedding", extra = " emb.label AS label,")},
              |cent AS (
              |  SELECT label, pos, CAST(sum(qe) AS BIGINT) // count(*) AS cq
-             |  FROM q GROUP BY label, pos),
+             |  FROM qe GROUP BY label, pos),
              |sc AS (
-             |  SELECT q.vec_id, q.label,
-             |    CAST(sum(q.qe * c.cq) AS BIGINT) AS dot,
-             |    CAST(sum(q.qe * q.qe) AS BIGINT) AS n2v,
-             |    CAST(sum(c.cq * c.cq) AS BIGINT) AS n2c
-             |  FROM q JOIN cent c ON c.label = q.label AND c.pos = q.pos
+             |  SELECT q.id AS vec_id, q.label,
+             |    ${graft.llm.Similarity.dotNormsSql("q.qe", "c.cq")}
+             |  FROM qe q JOIN cent c ON c.label = q.label AND c.pos = q.pos
              |  GROUP BY 1, 2),
              |r AS (
              |  SELECT label, vec_id,
-             |    CASE WHEN n2v = 0 OR n2c = 0 THEN 0.0
-             |      ELSE dot / (sqrt(CAST(n2v AS DOUBLE)) * sqrt(CAST(n2c AS DOUBLE)))
-             |    END AS cos
+             |    ${graft.llm.Similarity.cosSql("dot", "n2a", "n2b")} AS cos
              |  FROM sc)
              |SELECT CAST(label AS INT) AS label, vec_id, cos FROM (
              |  SELECT label, vec_id, cos,

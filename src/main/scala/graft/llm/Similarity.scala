@@ -22,7 +22,9 @@ import graft.plans.{CosineSim, NearestCells, QCosineSim, SignBucket, SqQuantize}
   * per-element interpreted `aggregate`/`zip_with` dispatch (the round-2
   * scale blocker). Summation is a sequential left fold in double, so
   * results are reproducible across partitionings and match a
-  * row-at-a-time oracle bit-for-bit.
+  * row-at-a-time oracle bit-for-bit. The hash-exact `*Portable` twins
+  * run their integer arithmetic through the same kernels (see the
+  * portable-family helpers below).
   *
   * The embedding dimension is DERIVED from the data (first row) wherever
   * hyperplanes/centroids are built, and every kernel fails fast on a
@@ -31,23 +33,201 @@ import graft.plans.{CosineSim, NearestCells, QCosineSim, SignBucket, SqQuantize}
   */
 object Similarity {
 
-  /** The ONE quantized-cosine SQL shape every portable ANN kernel
-    * shares (the n12/n13 checklist): integer sum-of-squares, integer
-    * dot, and the single IEEE divide. Defined ONCE so the byte-identical
-    * arithmetic can never drift between the queries built on it —
-    * hash-exactness against the DuckDB twins depends on all call sites
-    * agreeing bit-for-bit.
+  // ---- The portable family's arithmetic, one form per engine ----------
+  //
+  // Every `*Portable` operator below is hash-exact against a DuckDB
+  // replay, and every replay depends on all call sites agreeing bit for
+  // bit, so each piece is written ONCE per engine:
+  //  - quantization: [[quantized]] / [[qeSql]] — `round(x·10⁶)` BIGINT
+  //    components (both engines round half away from zero);
+  //  - cosine: `QCosineSim` over the BIGINT arrays / [[dotNormsSql]] +
+  //    [[cosSql]] over the long form — exact integer dot and norms, 0.0
+  //    for a zero norm, else one IEEE divide of correctly-rounded square
+  //    roots;
+  //  - lattice LSH: [[latticeWeight]] planes in `SignBucket`'s exact Long
+  //    mode / [[latticeBucketsSql]];
+  //  - Forgy cells (first n vectors by id, SQL-expressible where a seeded
+  //    k-means++ is not) and the nearest-cell argmax: [[forgyCells]] +
+  //    [[nearestCell]] / [[forgySql]] + [[nearestCellSql]].
+
+  /** `round(x·scale)` as BIGINT, per component — the portable family's
+    * one quantization (×10⁶; power iteration uses ×10³). Integer dots
+    * and norms over it are exact and order-independent.
     */
-  private def sumSqSql(c: String): String =
-    s"aggregate(transform($c, x -> x * x), 0L, (s, x) -> s + x)"
+  def quantized(vec: Column, scale: Long = 1000000L): Column =
+    transform(vec, e => round(e.cast("double") * lit(scale)).cast("long"))
 
-  private def dotSql(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0L, (s, x) -> s + x)"
+  /** `(id, [extra...,] qv)`: each vector quantized once. */
+  private def quantizedVecs(emb: DataFrame, idCol: String, vecCol: String,
+                            extra: Column*): DataFrame =
+    emb.select((col(idCol).as("id") +: extra) :+
+      quantized(col(vecCol)).as("qv"): _*)
 
-  private def cosCaseSql(d: String, na: String, nb: String): String =
+  /** Forgy cells: the first `n` rows of `ids` by id, numbered from 0 as
+    * INT `cell`. `orderBy(id).limit(n)` is a distributed TakeOrdered; the
+    * window runs over the n surviving rows only.
+    */
+  private def forgyCells(ids: DataFrame, n: Int): DataFrame =
+    ids.orderBy("id").limit(n)
+      .withColumn("cell",
+        (row_number().over(Window.orderBy("id")) - 1).cast("int"))
+
+  /** `(id, cell, cos)`: every quantized vector of `q (id, qv)` against
+    * every centroid of `cent (cell, cv)` — the centroids broadcast
+    * against one scan of `q`.
+    */
+  private def cellCosines(q: DataFrame, cent: DataFrame): DataFrame =
+    q.crossJoin(broadcast(cent))
+      .select(col("id"), col("cell"), QCosineSim(col("qv"), col("cv")).as("cos"))
+
+  /** `(id, cell, cos)`: each id's nearest cell of a [[cellCosines]]
+    * frame, ties to the smallest cell — `max(struct(cos, -cell))`, the
+    * `row_number(ORDER BY cos DESC, cell)` of [[nearestCellSql]].
+    */
+  private def nearestCell(scored: DataFrame): DataFrame =
+    scored.groupBy("id")
+      .agg(max(struct(col("cos").as("cos"),
+        (-col("cell")).cast("long").as("negcell"))).as("b"))
+      .select(col("id"), (-col("b.negcell")).cast("int").as("cell"),
+        col("b.cos").as("cos"))
+
+  /** `(query_id, rank, neighbor_id, cos)`: per-query top-k of a scored
+    * `(qid, id, cos)` frame by (cos DESC, id) — [[topKSql]]'s order.
+    */
+  private def topKByCos(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id"))))
+      .filter(col("rank") <= k)
+      .select(col("qid").as("query_id"), col("rank").cast("long").as("rank"),
+        col("id").as("neighbor_id"), col("cos"))
+
+  /** `(a, b, cos)`: the quantized cosine of each candidate pair, both
+    * vectors joined back from `q (id, qv)` by id.
+    */
+  private def pairCosines(cand: DataFrame, q: DataFrame,
+                          a: String, b: String): DataFrame =
+    cand
+      .join(q.select(col("id").as(a), col("qv").as("va")), a)
+      .join(q.select(col("id").as(b), col("qv").as("vb")), b)
+      .select(col(a), col(b), QCosineSim(col("va"), col("vb")).as("cos"))
+
+  /** The integer-lattice hyperplane weight of table `t`, plane `p`,
+    * component `pos`: pure hash arithmetic, the `pl` CTE of
+    * [[latticeBucketsSql]].
+    */
+  private[graft] def latticeWeight(t: Int, p: Int, pos: Int): Long =
+    (2654435761L * (t * 1000 + p * 100 + pos + 1)) % 1000003 - 501001
+
+  /** `(id, t, bucket)`: the sign bucket of each quantized vector of
+    * `q (id, qv)` in each of `nTables` lattice tables — `SignBucket`'s
+    * exact Long mode, planes built once on the driver.
+    */
+  private def latticeBuckets(q: DataFrame, nTables: Int, nPlanes: Int,
+                             dim: Int): DataFrame =
+    q.select(col("id"), explode(array((0 until nTables).map { t =>
+        val planes = Array.tabulate(nPlanes, dim)(latticeWeight(t, _, _))
+        struct(lit(t).as("t"), SignBucket(col("qv"), planes).as("bucket"))
+      }: _*)).as("tb"))
+      .select(col("id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
+
+  /** SQL: the zero-guarded cosine of integer dot/norm columns. The text
+    * is valid in both engines, so it is also the form for Spark long-form
+    * callers (n10); `QCosineSim` computes the same bits.
+    */
+  def cosSql(dot: String, na: String, nb: String): String =
     s"CASE WHEN $na = 0 OR $nb = 0 THEN 0.0 " +
-      s"ELSE $d / (sqrt(CAST($na AS DOUBLE)) * sqrt(CAST($nb AS DOUBLE))) END"
+      s"ELSE $dot / (sqrt(CAST($na AS DOUBLE)) * sqrt(CAST($nb AS DOUBLE))) END"
 
+  /** SQL: the exact `dot, n2a, n2b` triple of two quantized columns. */
+  private[graft] def dotNormsSql(a: String, b: String): String =
+    s"CAST(sum($a * $b) AS BIGINT) AS dot, " +
+      s"CAST(sum($a * $a) AS BIGINT) AS n2a, CAST(sum($b * $b) AS BIGINT) AS n2b"
+
+  /** SQL: the CTE `qe(id, [extra,] pos, qe)` — [[quantized]] in long
+    * form, one row per component of `table`'s `vecCol`.
+    */
+  private[graft] def qeSql(table: String, idCol: String, vecCol: String,
+                           extra: String = "", where: String = "",
+                           scale: Long = 1000000L): String =
+    s"""qe AS (
+       |  SELECT emb.$idCol AS id,$extra CAST(t.i AS INT) AS pos,
+       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * $scale)
+       |      AS BIGINT) AS qe
+       |  FROM $table emb,
+       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t$where)""".stripMargin
+
+  /** SQL: [[forgyCells]] — `cid(id, cell)` over `table`, and `cent(cell,
+    * pos, cq)`, the centroids' `qe` rows.
+    */
+  private def forgySql(table: String, idCol: String, n: Int,
+                       where: String = "", cent: String = "cent",
+                       cell: String = "cell", cellType: String = "INT"): String =
+    s"""cid AS (SELECT $idCol AS id,
+       |          CAST(row_number() OVER (ORDER BY $idCol) - 1 AS $cellType)
+       |            AS $cell
+       |        FROM $table$where ORDER BY $idCol LIMIT $n),
+       |$cent AS (SELECT c.$cell, q.pos, q.qe AS cq
+       |         FROM cid c JOIN qe q ON q.id = c.id)""".stripMargin
+
+  /** SQL: [[cellCosines]] — `cosv(id, cell, cos)` over `qe` × `cent`. */
+  private def cellCosSql(where: String = ""): String =
+    s"""cosv AS (
+       |  SELECT id, cell, ${cosSql("dot", "n2a", "n2b")} AS cos FROM (
+       |    SELECT q.id, c.cell, ${dotNormsSql("q.qe", "c.cq")}
+       |    FROM qe q JOIN cent c ON c.pos = q.pos$where
+       |    GROUP BY 1, 2))""".stripMargin
+
+  /** SQL: [[nearestCell]] over `cosv` — `(id, cell, cos)`. */
+  private val nearestCellSql: String =
+    """SELECT id, cell, cos FROM (
+      |    SELECT id, cell, cos,
+      |      row_number() OVER (PARTITION BY id ORDER BY cos DESC, cell)
+      |        AS rn
+      |    FROM cosv) WHERE rn = 1""".stripMargin
+
+  /** SQL: the quantized cosine of each pair `(a, b)` of the CTE `cand`. */
+  private def pairCosSql(a: String, b: String): String =
+    s"""SELECT $a, $b, ${cosSql("dot", "n2a", "n2b")} AS cos FROM (
+       |  SELECT c.$a, c.$b, ${dotNormsSql("qa.qe", "qb.qe")}
+       |  FROM cand c
+       |  JOIN qe qa ON qa.id = c.$a
+       |  JOIN qe qb ON qb.id = c.$b AND qb.pos = qa.pos
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** SQL: [[topKByCos]] over a `(qid, id, cos)` relation. */
+  private def topKSql(scored: String, k: Int): String =
+    s"""SELECT qid AS query_id, CAST(rn AS BIGINT) AS rank,
+       |  id AS neighbor_id, cos
+       |FROM (
+       |  SELECT qid, id, cos,
+       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id)
+       |      AS rn
+       |  FROM $scored)
+       |WHERE rn <= $k""".stripMargin
+
+  /** SQL: [[latticeBuckets]] — the planes `pl`, per-plane dots `bits`
+    * and `bk(id, t, bucket)` over `qe`.
+    */
+  private def latticeBucketsSql(nTables: Int, nPlanes: Int, dim: Int): String =
+    s"""pl AS (
+       |  SELECT t.t, p.p, d.pos,
+       |    (2654435761 * (t.t * 1000 + p.p * 100 + d.pos + 1)) % 1000003
+       |      - 501001 AS w
+       |  FROM (SELECT unnest(range($nTables)) AS t) t,
+       |       (SELECT unnest(range($nPlanes)) AS p) p,
+       |       (SELECT unnest(range($dim)) AS pos) d),
+       |bits AS (
+       |  SELECT q.id, pl.t, pl.p,
+       |    CAST(sum(q.qe * pl.w) AS BIGINT) AS sdot
+       |  FROM qe q JOIN pl ON pl.pos = q.pos
+       |  GROUP BY 1, 2, 3),
+       |bk AS (
+       |  SELECT id, t,
+       |    CAST(sum(CASE WHEN sdot >= 0
+       |      THEN CAST(round(pow(2, p)) AS BIGINT) ELSE 0 END) AS BIGINT)
+       |      AS bucket
+       |  FROM bits GROUP BY 1, 2)""".stripMargin
 
   /** Cosine similarity of two float-array columns, computed in double
     * (native kernel — codegen-compiled loop, not per-element dispatch).
@@ -390,20 +570,6 @@ object Similarity {
           col("n_assigned") * lit((maxOutlierFrac * 10000L).round))
           .as("refit"))
 
-  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    * deduplication via embedding clustering — k-means cells bound the
-    * candidate space (duplicates land in the same cell), then within
-    * each cell any document whose cosine to a LOWER-id document exceeds
-    * `threshold` is dropped (keep-lowest-id, the deterministic stand-in
-    * for the paper's keep-lowest-centroid-distance).
-    *
-    * Scale shape: candidate pairs exist only WITHIN a cell, generated
-    * with the same head/star cap as `cosineNearDups` — a cell of N
-    * near-identical vectors costs O(cap² + N) pairs, never O(N²), and
-    * every member still meets the cell's minimum-id representative, so
-    * a degenerate all-duplicates cell still collapses to one survivor.
-    * Returns (id, cell, kept) for every input row.
-    */
   /** Hash-verified PORTABLE twin of [[semanticDedup]] (the d23 pattern:
     * the fast native path stays rows-only-audited, this exact replay is
     * the one DuckDB re-derives bit-for-bit). Differences, each for
@@ -428,24 +594,10 @@ object Similarity {
   def semanticDedupPortable(emb: DataFrame, idCol: String, vecCol: String,
                             nCells: Int = 8, threshold: Double = 0.95,
                             cap: Int = 16): DataFrame = {
-    val sumSq = sumSqSql _
-    val dot = dotSql _
-    val cosSql = cosCaseSql _
-    val q = emb.select(col(idCol).as("id"),
-      expr(s"transform($vecCol, e -> " +
-        "CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))").as("qv"))
-    val cent = q.orderBy("id").limit(nCells)
-      .withColumn("cell",
-        (row_number().over(Window.orderBy("id")) - 1).cast("int"))
-      .select(col("cell"), col("qv").as("cv"))
-    val scored = q.crossJoin(broadcast(cent))
-      .withColumn("cos", expr(cosSql(dot("qv", "cv"), sumSq("qv"),
-        sumSq("cv"))))
-    val best = scored.groupBy("id")
-      .agg(max(struct(col("cos").as("cos"),
-        (-col("cell")).cast("long").as("negcell"))).as("b"))
-      .select(col("id"), (-col("b.negcell")).cast("int").as("cell"))
-    val assigned = q.join(best, "id")
+    val q = quantizedVecs(emb, idCol, vecCol)
+    val cent = ivfCentroidsPortable(emb, idCol, vecCol, nCells)
+    val assigned = q.join(
+      nearestCell(cellCosines(q, cent)).select("id", "cell"), "id")
     val wC = Window.partitionBy(col("cell")).orderBy(col("id"))
     val ranked = assigned.withColumn("rn", row_number().over(wC))
     val a = ranked.as("a"); val b = ranked.as("b")
@@ -461,8 +613,7 @@ object Similarity {
       .select(col("rep_v").as("va"), col("t.id").as("id_b"),
         col("t.qv").as("vb"))
     val dropped = headPairs.unionByName(tailPairs)
-      .filter(expr(cosSql(dot("va", "vb"), sumSq("va"), sumSq("vb"))) >=
-        threshold)
+      .filter(QCosineSim(col("va"), col("vb")) >= threshold)
       .select(col("id_b").as("id")).distinct()
       .withColumn("__drop", lit(true))
     assigned.join(dropped, Seq("id"), "left")
@@ -479,37 +630,10 @@ object Similarity {
                                      vecCol: String, nCells: Int = 8,
                                      threshold: Double = 0.95,
                                      cap: Int = 16): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |cid AS (SELECT $idCol AS id,
-       |          CAST(row_number() OVER (ORDER BY $idCol) - 1 AS INT)
-       |            AS cell
-       |        FROM $table ORDER BY $idCol LIMIT $nCells),
-       |cent AS (SELECT c.cell, q.pos, q.qe AS cq
-       |         FROM cid c JOIN qe q ON q.id = c.id),
-       |sc AS (
-       |  SELECT q.id, c.cell,
-       |    CAST(sum(q.qe * c.cq) AS BIGINT) AS dot,
-       |    CAST(sum(q.qe * q.qe) AS BIGINT) AS n2v,
-       |    CAST(sum(c.cq * c.cq) AS BIGINT) AS n2c
-       |  FROM qe q JOIN cent c ON c.pos = q.pos
-       |  GROUP BY 1, 2),
-       |cosv AS (
-       |  SELECT id, cell,
-       |    CASE WHEN n2v = 0 OR n2c = 0 THEN 0.0
-       |      ELSE dot / (sqrt(CAST(n2v AS DOUBLE)) * sqrt(CAST(n2c AS DOUBLE)))
-       |    END AS cos
-       |  FROM sc),
-       |best AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell,
-       |      row_number() OVER (PARTITION BY id ORDER BY cos DESC, cell)
-       |        AS rn
-       |    FROM cosv) WHERE rn = 1),
+    s"""WITH ${qeSql(table, idCol, vecCol)},
+       |${forgySql(table, idCol, nCells)},
+       |${cellCosSql()},
+       |best AS ($nearestCellSql),
        |ranked AS (
        |  SELECT id, cell,
        |    row_number() OVER (PARTITION BY cell ORDER BY id) AS rn
@@ -524,20 +648,9 @@ object Similarity {
        |  FROM ranked t JOIN ranked r1
        |    ON r1.cell = t.cell AND r1.rn = 1
        |  WHERE t.rn > $cap),
-       |ps AS (
-       |  SELECT c.id_a, c.id_b,
-       |    CAST(sum(qa.qe * qb.qe) AS BIGINT) AS dot,
-       |    CAST(sum(qa.qe * qa.qe) AS BIGINT) AS n2a,
-       |    CAST(sum(qb.qe * qb.qe) AS BIGINT) AS n2b
-       |  FROM cand c
-       |  JOIN qe qa ON qa.id = c.id_a
-       |  JOIN qe qb ON qb.id = c.id_b AND qb.pos = qa.pos
-       |  GROUP BY 1, 2),
        |dropped AS (
-       |  SELECT DISTINCT id_b AS id FROM ps
-       |  WHERE (CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |    ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE)))
-       |    END) >= $threshold)
+       |  SELECT DISTINCT id_b AS id FROM (${pairCosSql("id_a", "id_b")})
+       |  WHERE cos >= $threshold)
        |SELECT b.id, b.cell, (d.id IS NULL) AS kept
        |FROM best b LEFT JOIN dropped d ON d.id = b.id
        |ORDER BY b.id""".stripMargin
@@ -551,126 +664,46 @@ object Similarity {
     * cosine ranking replay bit-for-bit in DuckDB SQL. (Integer-lattice
     * hyperplanes are a legitimate sign-LSH family: directions are
     * deterministic pseudo-uniform, and the sign test only needs the
-    * direction.) Buckets per (table, vector) are exact BIGINT sums;
-    * ranking reuses n10's quantized-cosine shape.
+    * direction.) Buckets per (table, vector) are exact `Long` dots in
+    * `SignBucket`; ranking is the quantized cosine of `QCosineSim`.
     *
     * Scale shape = [[lshTopK]]: candidates exist only within a
     * (table, bucket) equi-join — queries never scan the corpus.
     *
     * @param queryMaxId rows with id < queryMaxId are the query set (a
     *                   SQL-replayable predicate, mirroring n02's shape)
-    * @param dim hyperplane lattice width: bucketing hashes components
-    *            0 until dim ONLY (the pos equi-join drops positions the
-    *            lattice doesn't cover); the verify cosine is always
-    *            full-dimension. Set dim >= the embedding width — a
-    *            smaller dim silently degrades recall, never correctness.
+    * @param dim hyperplane lattice width; must equal the embedding
+    *            width — a vector of any other length fails fast in the
+    *            kernel, as in [[lshTopK]].
     */
   def lshTopKPortable(emb: DataFrame, idCol: String, vecCol: String,
                       queryMaxId: Long, k: Int, nTables: Int = 2,
                       nPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    val s = emb.sparkSession
-    val qe = emb.select(col(idCol).as("id"),
-        posexplode(col(vecCol)).as(Seq("pos", "e")))
-      .withColumn("qe",
-        expr("CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT)"))
-      .select(col("id"), col("pos"), col("qe"))
-    val planes = s.sql(
-      s"""SELECT t, p, pos,
-         |  (2654435761L * (t * 1000 + p * 100 + pos + 1)) % 1000003
-         |    - 501001 AS w
-         |FROM (SELECT explode(sequence(0, ${nTables - 1})) AS t)
-         |LATERAL VIEW explode(sequence(0, ${nPlanes - 1})) vp AS p
-         |LATERAL VIEW explode(sequence(0, ${dim - 1})) vd AS pos""".stripMargin)
-    val buckets = qe.join(broadcast(planes), "pos")
-      .groupBy("id", "t", "p")
-      .agg(sum(expr("qe * w")).as("sdot"))
-      .groupBy("id", "t")
-      .agg(sum(expr("CASE WHEN sdot >= 0 THEN " +
-        "CAST(round(pow(2, p)) AS BIGINT) ELSE 0L END")).as("bucket"))
+    val q = quantizedVecs(emb, idCol, vecCol)
+    val buckets = latticeBuckets(q, nTables, nPlanes, dim)
     val cand = buckets
       .join(buckets.filter(col("id") < queryMaxId)
           .select(col("id").as("qid"), col("t"), col("bucket")),
         Seq("t", "bucket"))
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id")).distinct()
-    val scored = cand
-      .join(qe.select(col("id").as("qid"), col("pos"),
-        col("qe").as("qa")), Seq("qid"))
-      .join(qe.select(col("id"), col("pos"), col("qe").as("qb")),
-        Seq("id", "pos"))
-      .groupBy("qid", "id")
-      .agg(sum(expr("qa * qb")).as("dot"),
-        sum(expr("qa * qa")).as("n2a"),
-        sum(expr("qb * qb")).as("n2b"))
-      .withColumn("cos", expr(
-        "CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0 " +
-          "ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE))) END"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank").cast("long").as("rank"),
-        col("id").as("neighbor_id"), col("cos"))
+    topKByCos(pairCosines(cand, q, "qid", "id"), k)
   }
 
   /** DuckDB replay of [[lshTopKPortable]] over `table`. `dim` must match
-    * the Spark call — it bounds the hyperplane lattice, not the verify.
+    * the Spark call — it is the hyperplane lattice width.
     */
   def lshTopKPortableOracleSql(table: String, idCol: String,
                                vecCol: String, queryMaxId: Long, k: Int,
                                nTables: Int = 2,
                                nPlanes: Int = 6, dim: Int = 64): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |pl AS (
-       |  SELECT t.t, p.p, d.pos,
-       |    (2654435761 * (t.t * 1000 + p.p * 100 + d.pos + 1)) % 1000003
-       |      - 501001 AS w
-       |  FROM (SELECT unnest(range($nTables)) AS t) t,
-       |       (SELECT unnest(range($nPlanes)) AS p) p,
-       |       (SELECT unnest(range($dim)) AS pos) d),
-       |bits AS (
-       |  SELECT q.id, pl.t, pl.p,
-       |    CAST(sum(q.qe * pl.w) AS BIGINT) AS sdot
-       |  FROM qe q JOIN pl ON pl.pos = q.pos
-       |  GROUP BY 1, 2, 3),
-       |bk AS (
-       |  SELECT id, t,
-       |    CAST(sum(CASE WHEN sdot >= 0
-       |      THEN CAST(round(pow(2, p)) AS BIGINT) ELSE 0 END) AS BIGINT)
-       |      AS bucket
-       |  FROM bits GROUP BY 1, 2),
+    s"""WITH ${qeSql(table, idCol, vecCol)},
+       |${latticeBucketsSql(nTables, nPlanes, dim)},
        |cand AS (
        |  SELECT DISTINCT qb.id AS qid, cb.id
        |  FROM bk cb JOIN bk qb ON qb.t = cb.t AND qb.bucket = cb.bucket
-       |  WHERE qb.id < $queryMaxId AND cb.id <> qb.id),
-       |sc AS (
-       |  SELECT c.qid, c.id,
-       |    CAST(sum(qa.qe * qb.qe) AS BIGINT) AS dot,
-       |    CAST(sum(qa.qe * qa.qe) AS BIGINT) AS n2a,
-       |    CAST(sum(qb.qe * qb.qe) AS BIGINT) AS n2b
-       |  FROM cand c
-       |  JOIN qe qa ON qa.id = c.qid
-       |  JOIN qe qb ON qb.id = c.id AND qb.pos = qa.pos
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT qid, id,
-       |    CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |      ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE)))
-       |    END AS cos
-       |  FROM sc)
-       |SELECT qid AS query_id, CAST(rn AS BIGINT) AS rank,
-       |  id AS neighbor_id, cos
-       |FROM (
-       |  SELECT qid, id, cos,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id)
-       |      AS rn
-       |  FROM r)
-       |WHERE rn <= $k
+       |  WHERE qb.id < $queryMaxId AND cb.id <> qb.id)
+       |${topKSql(s"(${pairCosSql("qid", "id")})", k)}
        |ORDER BY query_id, rank""".stripMargin
 
   /** Hash-verified PORTABLE cosine near-dup twin — the audit twin of
@@ -682,37 +715,17 @@ object Similarity {
     * verdict replays bit-for-bit in DuckDB. Returns distinct
     * (id_a < id_b, cos) pairs with cos >= threshold.
     *
-    * @param dim hyperplane lattice width: bucketing hashes components
-    *            0 until dim ONLY (positions beyond it are dropped by the
-    *            pos equi-join); the verify cosine is full-dimension. Set
-    *            dim >= the embedding width — a smaller dim degrades
-    *            recall silently, never correctness.
+    * @param dim hyperplane lattice width; must equal the embedding
+    *            width — a vector of any other length fails fast.
     */
   def cosineNearDupsPortable(emb: DataFrame, idCol: String,
                              vecCol: String, threshold: Double = 0.95,
                              nTables: Int = 2, nPlanes: Int = 6,
                              cap: Int = 16, dim: Int = 64): DataFrame = {
-    val s = emb.sparkSession
-    val qe = emb.select(col(idCol).as("id"),
-        posexplode(col(vecCol)).as(Seq("pos", "e")))
-      .withColumn("qe",
-        expr("CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT)"))
-      .select(col("id"), col("pos"), col("qe"))
-    val planes = s.sql(
-      s"""SELECT t, p, pos,
-         |  (2654435761L * (t * 1000 + p * 100 + pos + 1)) % 1000003
-         |    - 501001 AS w
-         |FROM (SELECT explode(sequence(0, ${nTables - 1})) AS t)
-         |LATERAL VIEW explode(sequence(0, ${nPlanes - 1})) vp AS p
-         |LATERAL VIEW explode(sequence(0, ${dim - 1})) vd AS pos""".stripMargin)
-    val buckets = qe.join(broadcast(planes), "pos")
-      .groupBy("id", "t", "p")
-      .agg(sum(expr("qe * w")).as("sdot"))
-      .groupBy("id", "t")
-      .agg(sum(expr("CASE WHEN sdot >= 0 THEN " +
-        "CAST(round(pow(2, p)) AS BIGINT) ELSE 0L END")).as("bucket"))
-    val ranked = buckets.withColumn("rn", row_number().over(
-      Window.partitionBy(col("t"), col("bucket")).orderBy(col("id"))))
+    val q = quantizedVecs(emb, idCol, vecCol)
+    val ranked = latticeBuckets(q, nTables, nPlanes, dim)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("t"), col("bucket")).orderBy(col("id"))))
     val a = ranked.as("a"); val b = ranked.as("b")
     val headPairs = a.join(b,
         col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
@@ -725,54 +738,20 @@ object Similarity {
       .join(reps, Seq("t", "bucket"))
       .select(col("rep_id").as("id_a"), col("x.id").as("id_b"))
     val cand = headPairs.unionByName(tailPairs).distinct()
-    cand
-      .join(qe.select(col("id").as("id_a"), col("pos"),
-        col("qe").as("qa")), Seq("id_a"))
-      .join(qe.select(col("id").as("id_b"), col("pos"),
-        col("qe").as("qb")), Seq("id_b", "pos"))
-      .groupBy("id_a", "id_b")
-      .agg(sum(expr("qa * qb")).as("dot"),
-        sum(expr("qa * qa")).as("n2a"),
-        sum(expr("qb * qb")).as("n2b"))
-      .withColumn("cos", expr(
-        "CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0 " +
-          "ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE))) END"))
+    pairCosines(cand, q, "id_a", "id_b")
       .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
   }
 
   /** DuckDB replay of [[cosineNearDupsPortable]] over `table`. `dim`
-    * must match the Spark call — it bounds the hyperplane lattice only.
+    * must match the Spark call — it is the hyperplane lattice width.
     */
   def cosineNearDupsPortableOracleSql(table: String, idCol: String,
                                       vecCol: String,
                                       threshold: Double = 0.95,
                                       nTables: Int = 2, nPlanes: Int = 6,
                                       cap: Int = 16, dim: Int = 64): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |pl AS (
-       |  SELECT t.t, p.p, d.pos,
-       |    (2654435761 * (t.t * 1000 + p.p * 100 + d.pos + 1)) % 1000003
-       |      - 501001 AS w
-       |  FROM (SELECT unnest(range($nTables)) AS t) t,
-       |       (SELECT unnest(range($nPlanes)) AS p) p,
-       |       (SELECT unnest(range($dim)) AS pos) d),
-       |bits AS (
-       |  SELECT q.id, pl.t, pl.p,
-       |    CAST(sum(q.qe * pl.w) AS BIGINT) AS sdot
-       |  FROM qe q JOIN pl ON pl.pos = q.pos
-       |  GROUP BY 1, 2, 3),
-       |bk AS (
-       |  SELECT id, t,
-       |    CAST(sum(CASE WHEN sdot >= 0
-       |      THEN CAST(round(pow(2, p)) AS BIGINT) ELSE 0 END) AS BIGINT)
-       |      AS bucket
-       |  FROM bits GROUP BY 1, 2),
+    s"""WITH ${qeSql(table, idCol, vecCol)},
+       |${latticeBucketsSql(nTables, nPlanes, dim)},
        |rk AS (
        |  SELECT id, t, bucket,
        |    row_number() OVER (PARTITION BY t, bucket ORDER BY id) AS rn
@@ -787,39 +766,11 @@ object Similarity {
        |    SELECT r1.id AS id_a, x.id AS id_b
        |    FROM rk x JOIN rk r1
        |      ON r1.t = x.t AND r1.bucket = x.bucket AND r1.rn = 1
-       |    WHERE x.rn > $cap)),
-       |ps AS (
-       |  SELECT c.id_a, c.id_b,
-       |    CAST(sum(qa.qe * qb.qe) AS BIGINT) AS dot,
-       |    CAST(sum(qa.qe * qa.qe) AS BIGINT) AS n2a,
-       |    CAST(sum(qb.qe * qb.qe) AS BIGINT) AS n2b
-       |  FROM cand c
-       |  JOIN qe qa ON qa.id = c.id_a
-       |  JOIN qe qb ON qb.id = c.id_b AND qb.pos = qa.pos
-       |  GROUP BY 1, 2)
-       |SELECT id_a, id_b,
-       |  CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |    ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE)))
-       |  END AS cos
-       |FROM ps
-       |WHERE (CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |    ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE)))
-       |  END) >= $threshold
+       |    WHERE x.rn > $cap))
+       |SELECT id_a, id_b, cos FROM (${pairCosSql("id_a", "id_b")})
+       |WHERE cos >= $threshold
        |ORDER BY id_a, id_b""".stripMargin
 
-  /** Hash-verified PORTABLE IVF ANN twin — completes the ANN audit
-    * family (n01 brute force is exact by construction, [[lshTopKPortable]]
-    * covers LSH): Forgy cells (first-`nCells`-by-id centroids, the same
-    * SQL-expressible 0-round fit as [[semanticDedupPortable]]), corpus
-    * vectors assigned to their quantized-cosine-nearest cell, queries
-    * probing their `nProbe` nearest cells and ranking ONLY within those
-    * cells' members by quantized cosine. Every cell assignment, probe
-    * choice and ranked neighbor replays bit-for-bit in DuckDB.
-    *
-    * Scale shape = [[ivfTopK]]: the probe is a cell equi-join — touched
-    * candidates are bounded by the probed cells' populations, never the
-    * corpus.
-    */
   /** The PORTABLE IVF index itself: (cell, cv) — Forgy first-`nCells`
     * centroids over the quantized vectors, the artifact
     * [[saveIvfIndex]] persists and [[ivfTopKFromIndex]] queries. Split
@@ -828,15 +779,9 @@ object Similarity {
     * artifact — t35's protocol on the ANN axis).
     */
   def ivfCentroidsPortable(emb: DataFrame, idCol: String, vecCol: String,
-                           nCells: Int): DataFrame = {
-    val q = emb.select(col(idCol).as("id"),
-      expr(s"transform($vecCol, e -> " +
-        "CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))").as("qv"))
-    q.orderBy("id").limit(nCells)
-      .withColumn("cell",
-        (row_number().over(Window.orderBy("id")) - 1).cast("int"))
+                           nCells: Int): DataFrame =
+    forgyCells(quantizedVecs(emb, idCol, vecCol), nCells)
       .select(col("cell"), col("qv").as("cv"))
-  }
 
   /** Persist a [[ivfCentroidsPortable]] index: ≤nCells rows of exact
     * BIGINT-quantized centroid components — lossless by construction,
@@ -862,21 +807,10 @@ object Similarity {
   def ivfTopKFromIndex(emb: DataFrame, idCol: String, vecCol: String,
                        cent: DataFrame, queryMaxId: Long, k: Int,
                        nProbe: Int = 2): DataFrame = {
-    val q = emb.select(col(idCol).as("id"),
-      expr(s"transform($vecCol, e -> " +
-        "CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))").as("qv"))
-    val sumSq = sumSqSql _
-    val dotE = dotSql _
-    val cosSql = cosCaseSql _
-    val scored = q.crossJoin(broadcast(cent))
-      .withColumn("cos",
-        expr(cosSql(dotE("qv", "cv"), sumSq("qv"), sumSq("cv"))))
-      .select(col("id"), col("cell"), col("cos"))
+    val q = quantizedVecs(emb, idCol, vecCol)
+    val scored = cellCosines(q, cent)
     // corpus: nearest cell; queries: nProbe nearest cells
-    val assigned = scored.groupBy("id")
-      .agg(max(struct(col("cos").as("cos"),
-        (-col("cell")).cast("long").as("negcell"))).as("b"))
-      .select(col("id"), (-col("b.negcell")).cast("int").as("cell"))
+    val assigned = nearestCell(scored).select("id", "cell")
     val probes = scored.filter(col("id") < queryMaxId)
       .withColumn("pr", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("cos").desc, col("cell"))))
@@ -885,19 +819,22 @@ object Similarity {
     val cand = assigned.join(probes, Seq("cell"))
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id")).distinct()
-    val ranked = cand
-      .join(q.select(col("id").as("qid"), col("qv").as("va")), Seq("qid"))
-      .join(q.select(col("id"), col("qv").as("vb")), Seq("id"))
-      .withColumn("cos",
-        expr(cosSql(dotE("va", "vb"), sumSq("va"), sumSq("vb"))))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id"))))
-      .filter(col("rank") <= k)
-    ranked.select(col("qid").as("query_id"),
-      col("rank").cast("long").as("rank"), col("id").as("neighbor_id"),
-      col("cos"))
+    topKByCos(pairCosines(cand, q, "qid", "id"), k)
   }
 
+  /** Hash-verified PORTABLE IVF ANN twin — completes the ANN audit
+    * family (n01 brute force is exact by construction, [[lshTopKPortable]]
+    * covers LSH): Forgy cells (first-`nCells`-by-id centroids, the same
+    * SQL-expressible 0-round fit as [[semanticDedupPortable]]), corpus
+    * vectors assigned to their quantized-cosine-nearest cell, queries
+    * probing their `nProbe` nearest cells and ranking ONLY within those
+    * cells' members by quantized cosine. Every cell assignment, probe
+    * choice and ranked neighbor replays bit-for-bit in DuckDB.
+    *
+    * Scale shape = [[ivfTopK]]: the probe is a cell equi-join — touched
+    * candidates are bounded by the probed cells' populations, never the
+    * corpus.
+    */
   def ivfTopKPortable(emb: DataFrame, idCol: String, vecCol: String,
                       queryMaxId: Long, k: Int, nCells: Int = 8,
                       nProbe: Int = 2): DataFrame =
@@ -910,37 +847,10 @@ object Similarity {
                                vecCol: String, queryMaxId: Long, k: Int,
                                nCells: Int = 8,
                                nProbe: Int = 2): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |cid AS (SELECT $idCol AS id,
-       |          CAST(row_number() OVER (ORDER BY $idCol) - 1 AS INT)
-       |            AS cell
-       |        FROM $table ORDER BY $idCol LIMIT $nCells),
-       |cent AS (SELECT c.cell, q.pos, q.qe AS cq
-       |         FROM cid c JOIN qe q ON q.id = c.id),
-       |sc AS (
-       |  SELECT q.id, c.cell,
-       |    CAST(sum(q.qe * c.cq) AS BIGINT) AS dot,
-       |    CAST(sum(q.qe * q.qe) AS BIGINT) AS n2v,
-       |    CAST(sum(c.cq * c.cq) AS BIGINT) AS n2c
-       |  FROM qe q JOIN cent c ON c.pos = q.pos
-       |  GROUP BY 1, 2),
-       |cosv AS (
-       |  SELECT id, cell,
-       |    CASE WHEN n2v = 0 OR n2c = 0 THEN 0.0
-       |      ELSE dot / (sqrt(CAST(n2v AS DOUBLE)) * sqrt(CAST(n2c AS DOUBLE)))
-       |    END AS cos
-       |  FROM sc),
-       |assigned AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell,
-       |      row_number() OVER (PARTITION BY id ORDER BY cos DESC, cell)
-       |        AS rn
-       |    FROM cosv) WHERE rn = 1),
+    s"""WITH ${qeSql(table, idCol, vecCol)},
+       |${forgySql(table, idCol, nCells)},
+       |${cellCosSql()},
+       |assigned AS ($nearestCellSql),
        |probes AS (
        |  SELECT id AS qid, cell FROM (
        |    SELECT id, cell,
@@ -950,30 +860,8 @@ object Similarity {
        |cand AS (
        |  SELECT DISTINCT p.qid, a.id
        |  FROM assigned a JOIN probes p ON p.cell = a.cell
-       |  WHERE a.id <> p.qid),
-       |ps AS (
-       |  SELECT c.qid, c.id,
-       |    CAST(sum(qa.qe * qb.qe) AS BIGINT) AS dot,
-       |    CAST(sum(qa.qe * qa.qe) AS BIGINT) AS n2a,
-       |    CAST(sum(qb.qe * qb.qe) AS BIGINT) AS n2b
-       |  FROM cand c
-       |  JOIN qe qa ON qa.id = c.qid
-       |  JOIN qe qb ON qb.id = c.id AND qb.pos = qa.pos
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT qid, id,
-       |    CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |      ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE)))
-       |    END AS cos
-       |  FROM ps)
-       |SELECT qid AS query_id, CAST(rn AS BIGINT) AS rank,
-       |  id AS neighbor_id, cos
-       |FROM (
-       |  SELECT qid, id, cos,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id)
-       |      AS rn
-       |  FROM r)
-       |WHERE rn <= $k
+       |  WHERE a.id <> p.qid)
+       |${topKSql(s"(${pairCosSql("qid", "id")})", k)}
        |ORDER BY query_id, rank""".stripMargin
 
   /** PORTABLE Forgy assignment of EVERY vector (the [[ivfAppendPortable]]
@@ -986,23 +874,9 @@ object Similarity {
     */
   def forgyAssignPortable(emb: DataFrame, idCol: String, vecCol: String,
                           nCells: Int = 8): DataFrame = {
-    val q = emb.select(col(idCol).as("id"),
-      expr(s"transform($vecCol, e -> " +
-        "CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))").as("qv"))
-    val cent = q.orderBy("id").limit(nCells)
-      .withColumn("cell",
-        (row_number().over(Window.orderBy("id")) - 1).cast("int"))
-      .select(col("cell"), col("qv").as("cv"))
-    val sumSq = sumSqSql _
-    val dotE = dotSql _
-    val cosSql = cosCaseSql _
-    q.crossJoin(broadcast(cent))
-      .withColumn("cos",
-        expr(cosSql(dotE("qv", "cv"), sumSq("qv"), sumSq("cv"))))
-      .groupBy("id")
-      .agg(max(struct(col("cos").as("cos"),
-        (-col("cell")).cast("long").as("negcell"))).as("b"))
-      .select(col("id"), (-col("b.negcell")).cast("int").as("cell"))
+    val cent = ivfCentroidsPortable(emb, idCol, vecCol, nCells)
+    nearestCell(cellCosines(quantizedVecs(emb, idCol, vecCol), cent))
+      .select("id", "cell")
   }
 
   /** DuckDB replay of [[forgyAssignPortable]] composed with the l15
@@ -1013,33 +887,10 @@ object Similarity {
   def clusterBalancedSampleOracleSql(table: String, idCol: String,
                                      vecCol: String, nCells: Int = 8,
                                      salt: String = "l15:"): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |cid AS (SELECT $idCol AS id,
-       |          CAST(row_number() OVER (ORDER BY $idCol) - 1 AS INT)
-       |            AS cell
-       |        FROM $table ORDER BY $idCol LIMIT $nCells),
-       |cent AS (SELECT c.cell, q.pos, q.qe AS cq
-       |         FROM cid c JOIN qe q ON q.id = c.id),
-       |sc AS (
-       |  SELECT q.id, c.cell,
-       |    CAST(sum(q.qe * c.cq) AS BIGINT) AS dot,
-       |    CAST(sum(q.qe * q.qe) AS BIGINT) AS n2v,
-       |    CAST(sum(c.cq * c.cq) AS BIGINT) AS n2c
-       |  FROM qe q JOIN cent c ON c.pos = q.pos
-       |  GROUP BY 1, 2),
-       |asg AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell,
-       |      row_number() OVER (PARTITION BY id ORDER BY
-       |        CASE WHEN n2v = 0 OR n2c = 0 THEN 0.0
-       |          ELSE dot / (sqrt(CAST(n2v AS DOUBLE))
-       |            * sqrt(CAST(n2c AS DOUBLE))) END DESC, cell) AS rn
-       |    FROM sc) WHERE rn = 1),
+    s"""WITH ${qeSql(table, idCol, vecCol)},
+       |${forgySql(table, idCol, nCells)},
+       |${cellCosSql()},
+       |asg AS ($nearestCellSql),
        |cc AS (SELECT cell, count(*) AS n_cell FROM asg GROUP BY cell),
        |mc AS (SELECT min(n_cell) AS m FROM cc),
        |rt AS (SELECT cc.cell, CAST(cc.n_cell AS BIGINT) AS n_cell,
@@ -1065,26 +916,10 @@ object Similarity {
   def ivfAppendPortable(emb: DataFrame, idCol: String, vecCol: String,
                         splitId: Long, nCells: Int = 8,
                         minCos: Double = 0.5): DataFrame = {
-    val q = emb.select(col(idCol).as("id"),
-      expr(s"transform($vecCol, e -> " +
-        "CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))").as("qv"))
-    val cent = q.filter(col("id") < splitId).orderBy("id").limit(nCells)
-      .withColumn("cell",
-        (row_number().over(Window.orderBy("id")) - 1).cast("int"))
-      .select(col("cell"), col("qv").as("cv"))
-    val sumSq = sumSqSql _
-    val dotE = dotSql _
-    val cosSql = cosCaseSql _
-    val scored = q.filter(col("id") >= splitId)
-      .crossJoin(broadcast(cent))
-      .withColumn("cos",
-        expr(cosSql(dotE("qv", "cv"), sumSq("qv"), sumSq("cv"))))
-      .select(col("id"), col("cell"), col("cos"))
-    scored.groupBy("id")
-      .agg(max(struct(col("cos").as("cos"),
-        (-col("cell")).cast("long").as("negcell"))).as("b"))
-      .select(col("id"), (-col("b.negcell")).cast("int").as("cell"),
-        col("b.cos").as("cos"))
+    val cent = ivfCentroidsPortable(emb.filter(col(idCol) < splitId),
+      idCol, vecCol, nCells)
+    val batch = quantizedVecs(emb, idCol, vecCol).filter(col("id") >= splitId)
+    nearestCell(cellCosines(batch, cent))
       .withColumn("is_outlier",
         when(col("cos") < minCos, 1).otherwise(0))
   }
@@ -1094,42 +929,28 @@ object Similarity {
                                  vecCol: String, splitId: Long,
                                  nCells: Int = 8,
                                  minCos: Double = 0.5): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |cid AS (SELECT $idCol AS id,
-       |          CAST(row_number() OVER (ORDER BY $idCol) - 1 AS INT)
-       |            AS cell
-       |        FROM $table WHERE $idCol < $splitId
-       |        ORDER BY $idCol LIMIT $nCells),
-       |cent AS (SELECT c.cell, q.pos, q.qe AS cq
-       |         FROM cid c JOIN qe q ON q.id = c.id),
-       |sc AS (
-       |  SELECT q.id, c.cell,
-       |    CAST(sum(q.qe * c.cq) AS BIGINT) AS dot,
-       |    CAST(sum(q.qe * q.qe) AS BIGINT) AS n2v,
-       |    CAST(sum(c.cq * c.cq) AS BIGINT) AS n2c
-       |  FROM qe q JOIN cent c ON c.pos = q.pos
-       |  WHERE q.id >= $splitId
-       |  GROUP BY 1, 2),
-       |cosv AS (
-       |  SELECT id, cell,
-       |    CASE WHEN n2v = 0 OR n2c = 0 THEN 0.0
-       |      ELSE dot / (sqrt(CAST(n2v AS DOUBLE)) * sqrt(CAST(n2c AS DOUBLE)))
-       |    END AS cos
-       |  FROM sc)
+    s"""WITH ${qeSql(table, idCol, vecCol)},
+       |${forgySql(table, idCol, nCells, where = s" WHERE $idCol < $splitId")},
+       |${cellCosSql(where = s" WHERE q.id >= $splitId")}
        |SELECT id, cell, cos,
        |  CASE WHEN cos < $minCos THEN 1 ELSE 0 END AS is_outlier
-       |FROM (
-       |  SELECT id, cell, cos,
-       |    row_number() OVER (PARTITION BY id ORDER BY cos DESC, cell)
-       |      AS rn
-       |  FROM cosv) WHERE rn = 1
+       |FROM ($nearestCellSql)
        |ORDER BY id""".stripMargin
 
+  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
+    * deduplication via embedding clustering — k-means cells bound the
+    * candidate space (duplicates land in the same cell), then within
+    * each cell any document whose cosine to a LOWER-id document exceeds
+    * `threshold` is dropped (keep-lowest-id, the deterministic stand-in
+    * for the paper's keep-lowest-centroid-distance).
+    *
+    * Scale shape: candidate pairs exist only WITHIN a cell, generated
+    * with the same head/star cap as `cosineNearDups` — a cell of N
+    * near-identical vectors costs O(cap² + N) pairs, never O(N²), and
+    * every member still meets the cell's minimum-id representative, so
+    * a degenerate all-duplicates cell still collapses to one survivor.
+    * Returns (id, cell, kept) for every input row.
+    */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
                     nCells: Int = 16, threshold: Double = 0.95,
                     cap: Int = 64): DataFrame = {
@@ -1253,12 +1074,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
   }
 
-  /** Recall@k summary of an approximate ANN result against the exact one:
-    * one row `(exact_pairs, hit_pairs, recall)`. Both inputs are
-    * `(query_id, neighbor_id, ...)` top-k frames; the comparison is a
-    * left join on the pair key followed by one aggregation — no collect,
-    * so the quality gate itself scales with the corpus.
-    */
   /** Sparse TF-cosine near-dup pairs over an inverted token index — the
     * bag-of-words complement to the shingle/embedding paths: robust to
     * local word reordering that breaks n-grams, cheaper than embeddings.
@@ -1314,47 +1129,25 @@ object Similarity {
     */
   def sqTopKPortable(emb: DataFrame, idCol: String, vecCol: String,
                      queryMaxId: Long, k: Int): DataFrame = {
-    val qe = emb.select(col(idCol).as("id"),
-        posexplode(col(vecCol)).as(Seq("pos", "e")))
-      .withColumn("qe",
-        expr("CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT)"))
-      .select(col("id"), col("pos"), col("qe"))
-    val codes = qe
-      .join(qe.groupBy("id").agg(max(abs(col("qe"))).as("maxabs")), "id")
-      .withColumn("code", expr(
-        "CASE WHEN maxabs = 0 THEN 0L ELSE (qe * 127L) div maxabs END"))
-      .select(col("id"), col("pos"), col("code"))
-    val q = codes.filter(col("id") < queryMaxId)
-      .select(col("id").as("qid"), col("pos"), col("code").as("ca"))
-    val scored = broadcast(q)
-      .join(codes.select(col("id"), col("pos"), col("code").as("cb")),
-        Seq("pos"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy("qid", "id")
-      .agg(sum(expr("ca * cb")).as("dot"),
-        sum(expr("ca * ca")).as("n2a"),
-        sum(expr("cb * cb")).as("n2b"))
-      .withColumn("cos", expr(
-        "CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0 " +
-          "ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE))) END"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank").cast("long").as("rank"),
-        col("id").as("neighbor_id"), col("cos"))
+    // the per-vector max-abs binds once per row (a lambda variable), not
+    // once per component
+    val codes = quantizedVecs(emb, idCol, vecCol).select(col("id"),
+      expr("element_at(transform(array(array_max(transform(qv, " +
+        "x -> abs(x)))), m -> transform(qv, x -> CASE WHEN m = 0 " +
+        "THEN 0L ELSE (x * 127L) div m END)), 1)").as("code"))
+    val scored = codes.select(col("id"), col("code").as("cb"))
+      .join(broadcast(codes.filter(col("id") < queryMaxId)
+        .select(col("id").as("qid"), col("code").as("ca"))),
+        col("id") =!= col("qid"))
+      .select(col("qid"), col("id"), QCosineSim(col("ca"), col("cb")).as("cos"))
+    topKByCos(scored, k)
   }
 
   /** DuckDB replay of [[sqTopKPortable]] over `table`. */
   def sqTopKPortableOracleSql(table: String, idCol: String,
                               vecCol: String, queryMaxId: Long,
                               k: Int): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
+    s"""WITH ${qeSql(table, idCol, vecCol)},
        |mx AS (SELECT id, max(abs(qe)) AS maxabs FROM qe GROUP BY 1),
        |codes AS (
        |  SELECT q.id, q.pos,
@@ -1362,28 +1155,12 @@ object Similarity {
        |      ELSE (q.qe * 127) // m.maxabs END AS code
        |  FROM qe q JOIN mx m ON m.id = q.id),
        |sc AS (
-       |  SELECT qa.id AS qid, qb.id,
-       |    CAST(sum(qa.code * qb.code) AS BIGINT) AS dot,
-       |    CAST(sum(qa.code * qa.code) AS BIGINT) AS n2a,
-       |    CAST(sum(qb.code * qb.code) AS BIGINT) AS n2b
+       |  SELECT qa.id AS qid, qb.id, ${dotNormsSql("qa.code", "qb.code")}
        |  FROM codes qa
        |  JOIN codes qb ON qb.pos = qa.pos AND qb.id <> qa.id
        |  WHERE qa.id < $queryMaxId
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT qid, id,
-       |    CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |      ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE)))
-       |    END AS cos
-       |  FROM sc)
-       |SELECT qid AS query_id, CAST(rn AS BIGINT) AS rank,
-       |  id AS neighbor_id, cos
-       |FROM (
-       |  SELECT qid, id, cos,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id)
-       |      AS rn
-       |  FROM r)
-       |WHERE rn <= $k
+       |  GROUP BY 1, 2)
+       |${topKSql(s"(SELECT qid, id, ${cosSql("dot", "n2a", "n2b")} AS cos FROM sc)", k)}
        |ORDER BY query_id, rank""".stripMargin
 
   /** Hash-verified PORTABLE product-quantization twin — the audit twin
@@ -1409,17 +1186,13 @@ object Similarity {
     require(dim % m == 0, s"pqTopKPortable: dim $dim not divisible by m=$m")
     val dsub = dim / m
     val qe = emb.select(col(idCol).as("id"),
-        posexplode(col(vecCol)).as(Seq("pos", "e")))
-      .withColumn("qe",
-        expr("CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT)"))
+        posexplode(quantized(col(vecCol))).as(Seq("pos", "qe")))
       .withColumn("s", expr(s"pos div $dsub"))
-      .select(col("id"), col("s"), col("pos"), col("qe"))
     // Forgy codebooks: code c of subspace s = subvector of the (c+1)-th
     // corpus vector by id
     val cb = broadcast(qe.join(
-        qe.select(col("id")).distinct().orderBy("id").limit(ksub)
-          .withColumn("code",
-            (row_number().over(Window.orderBy("id")) - 1).cast("long")),
+        forgyCells(qe.select(col("id")).distinct(), ksub)
+          .select(col("id"), col("cell").cast("long").as("code")),
         "id")
       .select(col("code"), col("s"), col("pos"), col("qe").as("cq")))
     // integer subspace distance of every vector to every code
@@ -1454,22 +1227,14 @@ object Similarity {
                               m: Int = 8, ksub: Int = 16,
                               dim: Int = 64): String = {
     val dsub = dim / m
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i // $dsub AS s, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |cid AS (SELECT $idCol AS id,
-       |          CAST(row_number() OVER (ORDER BY $idCol) - 1 AS BIGINT)
-       |            AS code
-       |        FROM $table ORDER BY $idCol LIMIT $ksub),
-       |cb AS (SELECT c.code, q.s, q.pos, q.qe AS cq
-       |       FROM cid c JOIN qe q ON q.id = c.id),
+    val codebooks = forgySql(table, idCol, ksub, cent = "cb", cell = "code",
+      cellType = "BIGINT")
+    s"""WITH ${qeSql(table, idCol, vecCol, extra = s" t.i // $dsub AS s,")},
+       |$codebooks,
        |d2 AS (
        |  SELECT q.id, q.s, b.code,
        |    CAST(sum((q.qe - b.cq) * (q.qe - b.cq)) AS BIGINT) AS d2
-       |  FROM qe q JOIN cb b ON b.s = q.s AND b.pos = q.pos
+       |  FROM qe q JOIN cb b ON b.pos = q.pos
        |  GROUP BY 1, 2, 3),
        |enc AS (
        |  SELECT id, s, code FROM (
@@ -1516,12 +1281,8 @@ object Similarity {
   def kmeansLloydPortable(emb: DataFrame, idCol: String, vecCol: String,
                           k: Int = 8, rounds: Int = 2): DataFrame = {
     val qe = emb.select(col(idCol).as("id"),
-        posexplode(expr(s"transform($vecCol, e -> " +
-          "CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))")))
-      .toDF("id", "pos", "qe")
-    val cid = emb.select(col(idCol).as("id")).orderBy("id").limit(k)
-      .withColumn("cell",
-        (row_number().over(Window.orderBy("id")) - 1).cast("int"))
+      posexplode(quantized(col(vecCol))).as(Seq("pos", "qe")))
+    val cid = forgyCells(emb.select(col(idCol).as("id")), k)
     def assign(cent: DataFrame): DataFrame =
       qe.join(broadcast(cent), "pos")
         .groupBy(col("id"), col("cell"))
@@ -1565,18 +1326,8 @@ object Similarity {
          |  FROM asg$r a JOIN qe q ON q.id = a.id
          |  GROUP BY 1, 2)""".stripMargin
     }.mkString(",\n")
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |cid AS (SELECT $idCol AS id,
-       |          CAST(row_number() OVER (ORDER BY $idCol) - 1 AS INT)
-       |            AS cell
-       |        FROM $table ORDER BY $idCol LIMIT $k),
-       |cent0 AS (SELECT c.cell, q.pos, q.qe AS cq
-       |          FROM cid c JOIN qe q ON q.id = c.id),
+    s"""WITH ${qeSql(table, idCol, vecCol)},
+       |${forgySql(table, idCol, k, cent = "cent0")},
        |$roundsSql
        |SELECT id, cell, dist FROM (
        |  ${asgSql(s"cent$rounds")})
@@ -1606,9 +1357,7 @@ object Similarity {
                              scale: Long = 4000L): DataFrame = {
     val q = emb.filter(col(labelCol) === label)
       .select(col(idCol).as("id"),
-        posexplode(expr(s"transform($vecCol, e -> " +
-          "CAST(round(CAST(e AS DOUBLE) * 1000) AS BIGINT))")))
-      .toDF("id", "pos", "qe")
+        posexplode(quantized(col(vecCol), scale = 1000L)).as(Seq("pos", "qe")))
     val cov = q.as("a").join(q.as("b"), col("a.id") === col("b.id"))
       .groupBy(col("a.pos").as("i"), col("b.pos").as("j"))
       .agg((count(lit(1)) * sum(expr("a.qe * b.qe")) -
@@ -1647,19 +1396,15 @@ object Similarity {
          |    END AS v
          |  FROM pw$r, pm$r)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pq AS (
-       |  SELECT emb.$idCol AS id, CAST(t.i AS INT) AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t
-       |  WHERE emb.$labelCol = $label),
+    val qe = qeSql(table, idCol, vecCol,
+      where = s"\n  WHERE emb.$labelCol = $label", scale = 1000L)
+    s"""WITH $qe,
        |pcov AS (
        |  SELECT a.pos AS i, b.pos AS j,
        |    CAST(count(*) * CAST(sum(a.qe * b.qe) AS BIGINT)
        |      - CAST(sum(a.qe) AS BIGINT) * CAST(sum(b.qe) AS BIGINT)
        |      AS BIGINT) AS c
-       |  FROM pq a JOIN pq b ON a.id = b.id
+       |  FROM qe a JOIN qe b ON a.id = b.id
        |  GROUP BY 1, 2),
        |pv0 AS (SELECT DISTINCT i AS j, CAST($scale AS BIGINT) AS v
        |        FROM pcov),
@@ -1684,39 +1429,21 @@ object Similarity {
                              vecCol: String, queryMaxId: Long,
                              prefixDims: Int, candidates: Int,
                              k: Int): DataFrame = {
-    val v = emb.select(col(idCol).as("id"),
-      expr(s"transform($vecCol, e -> " +
-        "CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT))").as("fv"))
-    val pe = v.select(col("id"),
-      posexplode(expr(s"slice(fv, 1, $prefixDims)")).as(Seq("pos", "qe")))
-    val cosShape =
-      "CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0 " +
-        "ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE))) END"
-    val cand = pe.filter(col("id") < queryMaxId)
-      .select(col("id").as("qid"), col("pos"), col("qe").as("qa"))
-      .join(pe.select(col("id"), col("pos"), col("qe").as("qb")),
-        Seq("pos"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy("qid", "id")
-      .agg(sum(expr("qa * qb")).as("dot"),
-        sum(expr("qa * qa")).as("n2a"),
-        sum(expr("qb * qb")).as("n2b"))
-      .withColumn("cosp", expr(cosShape))
+    val v = quantizedVecs(emb, idCol, vecCol)
+    val queries = broadcast(v.filter(col("id") < queryMaxId)
+      .select(col("id").as("qid"), col("qv").as("va")))
+    def prefix(c: String): Column = slice(col(c), 1, prefixDims)
+    val cand = v.join(queries, col("id") =!= col("qid"))
+      .withColumn("cosp", QCosineSim(prefix("va"), prefix("qv")))
       .withColumn("prefix_rank", row_number().over(
         Window.partitionBy(col("qid"))
           .orderBy(col("cosp").desc, col("id"))))
       .filter(col("prefix_rank") <= candidates)
       .select(col("qid"), col("id"), col("prefix_rank"))
-    val sumSq = sumSqSql _
-    val dotE = dotSql _
     cand
-      .join(broadcast(v.filter(col("id") < queryMaxId)
-        .select(col("id").as("qid"), col("fv").as("fa"))), Seq("qid"))
-      .join(v.select(col("id"), col("fv").as("fb")), Seq("id"))
-      .withColumn("cos", expr(
-        s"CASE WHEN ${sumSq("fa")} = 0 OR ${sumSq("fb")} = 0 THEN 0.0 " +
-          s"ELSE ${dotE("fa", "fb")} / (sqrt(CAST(${sumSq("fa")} AS DOUBLE))" +
-          s" * sqrt(CAST(${sumSq("fb")} AS DOUBLE))) END"))
+      .join(queries, Seq("qid"))
+      .join(v, Seq("id"))
+      .withColumn("cos", QCosineSim(col("va"), col("qv")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id"))))
       .filter(col("rank") <= k)
@@ -1730,39 +1457,20 @@ object Similarity {
   def matryoshkaTopKPortableOracleSql(table: String, idCol: String,
                                       vecCol: String, queryMaxId: Long,
                                       prefixDims: Int, candidates: Int,
-                                      k: Int): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
-       |pref AS (
-       |  SELECT q.id AS qid, c.id AS id,
-       |    CAST(sum(q.qe * c.qe) AS BIGINT) AS dot,
-       |    CAST(sum(q.qe * q.qe) AS BIGINT) AS n2a,
-       |    CAST(sum(c.qe * c.qe) AS BIGINT) AS n2b
-       |  FROM qe q JOIN qe c ON c.pos = q.pos AND c.id <> q.id
-       |  WHERE q.id < $queryMaxId AND q.pos < $prefixDims
-       |  GROUP BY 1, 2),
+                                      k: Int): String = {
+    def scores(pos: String): String =
+      s"""SELECT qid, id, ${cosSql("dot", "n2a", "n2b")} AS cos FROM (
+         |    SELECT q.id AS qid, c.id AS id, ${dotNormsSql("q.qe", "c.qe")}
+         |    FROM qe q JOIN qe c ON c.pos = q.pos AND c.id <> q.id
+         |    WHERE q.id < $queryMaxId$pos
+         |    GROUP BY 1, 2)""".stripMargin
+    s"""WITH ${qeSql(table, idCol, vecCol)},
        |pc AS (
-       |  SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY
-       |      CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |        ELSE dot / (sqrt(CAST(n2a AS DOUBLE))
-       |          * sqrt(CAST(n2b AS DOUBLE))) END DESC, id)
-       |    AS prefix_rank
-       |  FROM pref),
+       |  SELECT qid, id, row_number() OVER (PARTITION BY qid
+       |      ORDER BY cos DESC, id) AS prefix_rank
+       |  FROM (${scores(s" AND q.pos < $prefixDims")})),
        |cand AS (SELECT * FROM pc WHERE prefix_rank <= $candidates),
-       |fullsc AS (
-       |  SELECT q.id AS qid, c.id AS id,
-       |    CASE WHEN sum(q.qe * q.qe) = 0 OR sum(c.qe * c.qe) = 0 THEN 0.0
-       |      ELSE CAST(sum(q.qe * c.qe) AS BIGINT)
-       |        / (sqrt(CAST(CAST(sum(q.qe * q.qe) AS BIGINT) AS DOUBLE))
-       |          * sqrt(CAST(CAST(sum(c.qe * c.qe) AS BIGINT) AS DOUBLE)))
-       |    END AS cos
-       |  FROM qe q JOIN qe c ON c.pos = q.pos AND c.id <> q.id
-       |  WHERE q.id < $queryMaxId
-       |  GROUP BY 1, 2),
+       |fullsc AS (${scores("")}),
        |rr AS (
        |  SELECT cand.qid, cand.id, cand.prefix_rank, f.cos,
        |    row_number() OVER (PARTITION BY cand.qid
@@ -1772,14 +1480,15 @@ object Similarity {
        |  id AS neighbor_id, CAST(prefix_rank AS BIGINT) AS prefix_rank,
        |  cos
        |FROM rr WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+  }
 
   /** Hard-NEGATIVE mining for contrastive training — for each query
     * vector (`id <= queryMaxId`), the `k` most-cosine-similar corpus
     * vectors with a DIFFERENT label: maximally confusable negatives, the
     * published recipe for dense-retriever / embedding-model training
-    * batches (ANCE/DPR-style). The label-exclusion filter runs BEFORE
-    * the per-dimension aggregation, so same-label pairs never reach the
-    * dot-product stage.
+    * batches (ANCE/DPR-style). The label exclusion is the join
+    * condition of the broadcast query set against one corpus scan, so
+    * same-label pairs are never scored.
     *
     * Portability is the n12/n13 checklist: components quantize once to
     * `round(1e6·x)` BIGINT, dots and norms are associative integer sums,
@@ -1793,66 +1502,36 @@ object Similarity {
   def hardNegativesPortable(emb: DataFrame, idCol: String, vecCol: String,
                             labelCol: String, queryMaxId: Long,
                             k: Int): DataFrame = {
-    val qe = emb.select(col(idCol).as("id"), col(labelCol).as("lab"),
-        posexplode(col(vecCol)).as(Seq("pos", "e")))
-      .withColumn("qe",
-        expr("CAST(round(CAST(e AS DOUBLE) * 1000000) AS BIGINT)"))
-      .select(col("id"), col("lab"), col("pos"), col("qe"))
-    val scored = qe.filter(col("id") <= queryMaxId)
-      .select(col("id").as("query_id"), col("lab").as("qlab"),
-        col("pos"), col("qe").as("qa"))
-      .join(qe.select(col("id").as("neg_id"), col("lab").as("nlab"),
-        col("pos"), col("qe").as("qb")), Seq("pos"))
-      .filter(col("qlab") =!= col("nlab"))
-      .groupBy("query_id", "neg_id")
-      .agg(sum(expr("qa * qb")).as("dot"),
-        sum(expr("qa * qa")).as("n2a"),
-        sum(expr("qb * qb")).as("n2b"))
-      .withColumn("cos", expr(
-        "CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0 " +
-          "ELSE dot / (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE))) END"))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neg_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neg_id"), col("cos"))
+    val v = quantizedVecs(emb, idCol, vecCol, col(labelCol).as("lab"))
+    val scored = v.join(broadcast(v.filter(col("id") <= queryMaxId)
+        .select(col("id").as("qid"), col("lab").as("qlab"),
+          col("qv").as("qa"))),
+        col("lab") =!= col("qlab"))
+      .select(col("qid"), col("id"), QCosineSim(col("qa"), col("qv")).as("cos"))
+    topKByCos(scored, k).withColumnRenamed("neighbor_id", "neg_id")
   }
 
   /** DuckDB replay of [[hardNegativesPortable]] over `table`. */
   def hardNegativesPortableOracleSql(table: String, idCol: String,
                                      vecCol: String, labelCol: String,
                                      queryMaxId: Long, k: Int): String =
-    s"""WITH qe AS (
-       |  SELECT emb.$idCol AS id, emb.$labelCol AS lab, t.i AS pos,
-       |    CAST(round(CAST(emb.$vecCol[t.i + 1] AS DOUBLE) * 1000000)
-       |      AS BIGINT) AS qe
-       |  FROM $table emb,
-       |    LATERAL (SELECT unnest(range(len(emb.$vecCol))) AS i) t),
+    s"""WITH ${qeSql(table, idCol, vecCol, extra = s" emb.$labelCol AS lab,")},
        |ps AS (
-       |  SELECT qa.id AS query_id, qb.id AS neg_id,
-       |    CAST(sum(qa.qe * qb.qe) AS BIGINT) AS dot,
-       |    CAST(sum(qa.qe * qa.qe) AS BIGINT) AS n2a,
-       |    CAST(sum(qb.qe * qb.qe) AS BIGINT) AS n2b
+       |  SELECT qa.id AS qid, qb.id, ${dotNormsSql("qa.qe", "qb.qe")}
        |  FROM qe qa JOIN qe qb
        |    ON qb.pos = qa.pos AND qa.lab <> qb.lab
        |  WHERE qa.id <= $queryMaxId
-       |  GROUP BY 1, 2),
-       |sc AS (
-       |  SELECT query_id, neg_id,
-       |    CASE WHEN n2a = 0 OR n2b = 0 THEN 0.0
-       |      ELSE dot / (sqrt(CAST(n2a AS DOUBLE))
-       |        * sqrt(CAST(n2b AS DOUBLE))) END AS cos
-       |  FROM ps),
-       |rk AS (
-       |  SELECT query_id, neg_id, cos,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos DESC, neg_id) AS rank
-       |  FROM sc)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, neg_id, cos
-       |FROM rk WHERE rank <= $k
+       |  GROUP BY 1, 2)
+       |SELECT query_id, rank, neighbor_id AS neg_id, cos FROM (
+       |${topKSql(s"(SELECT qid, id, ${cosSql("dot", "n2a", "n2b")} AS cos FROM ps)", k)})
        |ORDER BY query_id, rank""".stripMargin
 
+  /** Recall@k summary of an approximate ANN result against the exact one:
+    * one row `(exact_pairs, hit_pairs, recall)`. Both inputs are
+    * `(query_id, neighbor_id, ...)` top-k frames; the comparison is a
+    * left join on the pair key followed by one aggregation — no collect,
+    * so the quality gate itself scales with the corpus.
+    */
   def recallAtK(exact: DataFrame, approx: DataFrame): DataFrame = {
     val e = exact.select(col("query_id"), col("neighbor_id"))
     val a = approx.select(col("query_id"), col("neighbor_id"))

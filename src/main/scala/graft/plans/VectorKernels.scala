@@ -33,6 +33,13 @@ import org.apache.spark.sql.types._
   * `CodegenFallback` is deliberate (same reasoning as `MinHashSig`):
   * codegen granularity is the row, and the row's work here is a bulk
   * primitive loop that is compiled Scala either way.
+  *
+  * Users: the native similarity operators (float vectors) and the
+  * portable, hash-exact family in `graft.llm.Similarity` (`*Portable`),
+  * which quantizes to `round(x·10⁶)` BIGINT arrays and scores every
+  * pair and centroid through `QCosineSim` and every integer-lattice LSH
+  * bucket through `SignBucket`'s exact `Long` mode. Their DuckDB
+  * replays spell the same integer arithmetic in SQL.
   */
 object VecOps {
 
@@ -61,6 +68,11 @@ object VecOps {
     case _ => false
   }
 
+  def isLongVec(dt: DataType): Boolean = dt match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
   def requireDim(found: Int, expected: Int, who: String): Unit =
     if (found != expected)
       throw new IllegalArgumentException(
@@ -70,7 +82,8 @@ object VecOps {
 
 /** Cosine similarity of two float/double-array columns, computed in
   * double: `dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b)))` with all three
-  * dots folded sequentially in one pass.
+  * dots folded sequentially in one pass. A zero vector has cosine 0.0
+  * (not `0/0 = NaN`, which Spark sorts above every number).
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -99,7 +112,7 @@ case class CosineSim(left: Expression, right: Expression)
       ab += a(i) * b(i); aa += a(i) * a(i); bb += b(i) * b(i)
       i += 1
     }
-    ab / (math.sqrt(aa) * math.sqrt(bb))
+    if (aa == 0.0 || bb == 0.0) 0.0 else ab / (math.sqrt(aa) * math.sqrt(bb))
   }
 
   override def prettyName: String = "cosine_sim"
@@ -128,6 +141,12 @@ object CosineSim {
   * All `planes.length` dot products run in one compiled pass. Planes are
   * `Seq[Seq[Double]]` (structural equality keeps `semanticEquals` exact);
   * they are materialized to primitive arrays once per task.
+  *
+  * Exact `Long` mode: over an ARRAY<BIGINT> (quantized) vector the
+  * planes must be integers, and each dot is an exact `Long` sum that
+  * raises `ArithmeticException` on overflow (as an ANSI `sum` of the
+  * same products does) — the portable integer-lattice LSH,
+  * bit-identical to its SQL replay.
   */
 case class SignBucket(child: Expression, planes: Seq[Seq[Double]])
     extends UnaryExpression with CodegenFallback {
@@ -136,15 +155,27 @@ case class SignBucket(child: Expression, planes: Seq[Seq[Double]])
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (VecOps.isVecType(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sign_bucket expects ARRAY<FLOAT|DOUBLE>, got ${child.dataType.catalogString}")
+    else if (VecOps.isLongVec(child.dataType)) {
+      // integral and within 2^53, so the `Long` weights are exact
+      if (planes.forall(_.forall(w =>
+          w == math.rint(w) && math.abs(w) <= 9.007199254740992e15)))
+        TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        "sign_bucket over ARRAY<BIGINT> needs integer planes")
+    } else TypeCheckResult.TypeCheckFailure(
+      s"sign_bucket expects ARRAY<FLOAT|DOUBLE|BIGINT>, got ${child.dataType.catalogString}")
 
   private lazy val isFloat = VecOps.isFloatVec(child.dataType)
+  private lazy val isLong = VecOps.isLongVec(child.dataType)
   @transient private lazy val p: Array[Array[Double]] =
     planes.map(_.toArray).toArray
+  @transient private lazy val pl: Array[Array[Long]] =
+    planes.map(_.map(_.toLong).toArray).toArray
 
   override protected def nullSafeEval(input: Any): Any = {
-    val v = VecOps.toDoubles(input.asInstanceOf[ArrayData], isFloat)
+    val a = input.asInstanceOf[ArrayData]
+    if (isLong) return longBucket(a)
+    val v = VecOps.toDoubles(a, isFloat)
     if (v == null) return null
     VecOps.requireDim(v.length, p(0).length, "sign_bucket")
     var bucket = 0L
@@ -154,6 +185,25 @@ case class SignBucket(child: Expression, planes: Seq[Seq[Double]])
       var d = 0.0
       var j = 0
       while (j < plane.length) { d += v(j) * plane(j); j += 1 }
+      if (d >= 0) bucket += (1L << i)
+      i += 1
+    }
+    bucket
+  }
+
+  private def longBucket(v: ArrayData): Any = {
+    VecOps.requireDim(v.numElements(), pl(0).length, "sign_bucket")
+    var bucket = 0L
+    var i = 0
+    while (i < pl.length) {
+      val plane = pl(i)
+      var d = 0L
+      var j = 0
+      while (j < plane.length) {
+        if (v.isNullAt(j)) return null
+        d = Math.addExact(d, Math.multiplyExact(v.getLong(j), plane(j)))
+        j += 1
+      }
       if (d >= 0) bucket += (1L << i)
       i += 1
     }
@@ -170,6 +220,12 @@ object SignBucket {
   def apply(vec: Column, planes: Array[Array[Double]]): Column =
     ColumnBridge.column(
       SignBucket(ColumnBridge.expression(vec), planes.toSeq.map(_.toSeq)))
+
+  /** Exact integer-lattice form over a quantized ARRAY<BIGINT> column
+    * (weights up to 2^53 in magnitude, which a `Double` holds exactly).
+    */
+  def apply(vec: Column, planes: Array[Array[Long]]): Column =
+    apply(vec, planes.map(_.map(_.toDouble)))
 }
 
 /** IVF cell ranking: squared L2 distance to every centroid in one pass,
@@ -275,27 +331,36 @@ object SqQuantize {
     ColumnBridge.column(SqQuantize(ColumnBridge.expression(vec)))
 }
 
-/** Cosine over two int8-quantized vectors: dot and norms accumulate in
-  * Long (exact — 64 dims of ±127 products is far below 2^63), one double
-  * division at the end. The per-vector quantization scales cancel in
-  * cosine, so this needs no floats until the final ratio.
+/** Cosine over two integer vectors — the int8 codes of `SqQuantize`
+  * (ARRAY<TINYINT>) or the `round(x·10⁶)` BIGINT arrays of the portable
+  * similarity family (ARRAY<BIGINT>). Dot and norms accumulate exactly in
+  * `Long` (`Math.multiplyExact`/`addExact`: an overflow raises
+  * `ArithmeticException`, as the ANSI long form does, instead of
+  * wrapping), then 0.0 for a zero norm, else one double division. The
+  * per-vector quantization scales cancel in cosine, so this needs no
+  * floats until the final ratio. Integer sums are order-independent, so
+  * the result is bit-identical to the SQL `sum`/`CASE` form on any
+  * engine.
   */
 case class QCosineSim(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
 
   override def dataType: DataType = DoubleType
 
-  private def isByteVec(dt: DataType): Boolean = dt match {
-    case ArrayType(ByteType, _) => true
+  private def isIntVec(dt: DataType): Boolean = dt match {
+    case ArrayType(ByteType, _) | ArrayType(LongType, _) => true
     case _ => false
   }
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isByteVec(left.dataType) && isByteVec(right.dataType))
+    if (isIntVec(left.dataType) && isIntVec(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"q_cosine_sim expects two ARRAY<TINYINT>, got " +
+      s"q_cosine_sim expects two ARRAY<TINYINT|BIGINT>, got " +
         s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+
+  private lazy val leftLong = VecOps.isLongVec(left.dataType)
+  private lazy val rightLong = VecOps.isLongVec(right.dataType)
 
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
@@ -305,11 +370,16 @@ case class QCosineSim(left: Expression, right: Expression)
     val n = a.numElements()
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = a.getByte(i).toLong; val y = b.getByte(i).toLong
-      ab += x * y; aa += x * x; bb += y * y
+      val x = if (leftLong) a.getLong(i) else a.getByte(i).toLong
+      val y = if (rightLong) b.getLong(i) else b.getByte(i).toLong
+      ab = Math.addExact(ab, Math.multiplyExact(x, y))
+      aa = Math.addExact(aa, Math.multiplyExact(x, x))
+      bb = Math.addExact(bb, Math.multiplyExact(y, y))
       i += 1
     }
-    ab.toDouble / (math.sqrt(aa.toDouble) * math.sqrt(bb.toDouble))
+    // the zero-guarded shape of `Similarity.cosSql`, bit for bit
+    if (aa == 0L || bb == 0L) 0.0
+    else ab.toDouble / (math.sqrt(aa.toDouble) * math.sqrt(bb.toDouble))
   }
 
   override def prettyName: String = "q_cosine_sim"

@@ -45,7 +45,13 @@ class RegistryInvariantsSpec extends SparkSpec {
       "n12_ann_lsh_portable", "n13_ann_ivf_portable", "d26_dup_spans",
       "d27_contamination_report", "t20_perplexity_buckets",
       "t21_script_mix", "a45_hll_portable", "a46_cm_portable",
-      "n14_cosine_neardup_portable")
+      "n14_cosine_neardup_portable",
+      // the rest of the portable similarity family, on the shared
+      // integer-cosine kernels
+      "n15_sq_portable", "n16_pq_portable", "n18_ivf_append_portable",
+      "n19_kmeans_portable", "n20_power_iteration", "n21_hard_negatives",
+      "n22_matryoshka_topk", "n23_ivf_persisted",
+      "l15_cluster_balanced_sample")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val base = names.map(n =>
@@ -56,6 +62,20 @@ class RegistryInvariantsSpec extends SparkSpec {
         assert(again == base(n), s"$n shifted under repartitioning")
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("registry names are unique (queries is a toMap: a duplicate " +
+      "would silently drop an entry)") {
+    val names = Registry.all.map(_.name)
+    val dupes = names.groupBy(identity).collect { case (n, v) if v.size > 1 => n }
+    assert(dupes.isEmpty, s"duplicate registry names: $dupes")
+    assert(Registry.queries.size == names.size)
+  }
+
+  test("rows-only ratchet: at most 17 entries lack an oracle") {
+    val rowsOnly = Registry.all.filter(_.oracle.isEmpty).map(_.name)
+    assert(rowsOnly.size <= 17,
+      s"${rowsOnly.size} rows-only entries (the set never grows): $rowsOnly")
   }
 
   test("d14_canonical_docs: one canonical per cluster, none beats it") {

@@ -627,4 +627,158 @@ class SimilaritySpec extends SparkSpec {
     assert(refit.orderBy("cell").collect().toSeq !=
       loaded.orderBy("cell").collect().toSeq)
   }
+
+  test("zero vector: cosine 0.0, never ranked first (float and int8 paths)") {
+    val r = new scala.util.Random(5)
+    def vec() = Array.fill(16)(r.nextGaussian().toFloat)
+    val base = (0 until 20).map(i => (i.toLong, vec()))
+    val zero = (999L, Array.fill(16)(0f))
+    val emb = (base :+ zero).toDF("vec_id", "embedding")
+    val queries = emb.filter(col("vec_id") < 3)
+    Seq(
+      Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 21),
+      Similarity.sqBruteForceTopK(emb, queries, "vec_id", "embedding", 21)
+    ).foreach { out =>
+      val rows = out.collect()
+      assert(rows.filter(_.getAs[Int]("rank") == 1)
+        .forall(_.getAs[Long]("neighbor_id") != 999L))
+      val zs = rows.filter(_.getAs[Long]("neighbor_id") == 999L)
+      assert(zs.length == 3 && zs.forall(_.getAs[Double]("sim") == 0.0),
+        zs.toSeq)
+    }
+    val c = Seq((zero._2, base(0)._2)).toDF("a", "b")
+      .select(Similarity.cosine(col("a"), col("b"))).as[Double].head
+    assert(c == 0.0)
+  }
+
+  test("quantized rounds half away from zero; scale is an argument") {
+    val v = Seq(Tuple1(Array(-1.25, 1.25, -0.25, 0.25, -0.2, 0.0)))
+      .toDF("v")
+    val q = v.select(Similarity.quantized(col("v"), scale = 2L))
+      .as[Seq[Long]].head
+    assert(q == Seq(-3L, 3L, -1L, 1L, 0L, 0L))
+    // ×10⁶ at doubles whose scaled value is exactly half-way
+    val halves = Seq(-2.5e-6, -0.5e-6, -1.5e-6, -1.25e-5, 3.5e-6)
+    assert(halves.forall(x => math.abs((x * 1000000.0) % 1.0) == 0.5))
+    val q6 = Seq(Tuple1(halves.toArray)).toDF("v")
+      .select(Similarity.quantized(col("v"))).as[Seq[Long]].head
+    assert(q6 == Seq(-3L, -1L, -2L, -13L, 4L))
+  }
+
+  test("QCosineSim over BIGINT ≡ the cosSql long form; zero, overflow, " +
+      "dimension, null edges") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.plans.QCosineSim
+    val r = new scala.util.Random(3)
+    // negative half-way components, a zero vector, random vectors
+    val rows = Seq(
+      (0L, Array(-2.5e-6, -0.5e-6, 0.25, -0.75)),
+      (1L, Array(0.0, 0.0, 0.0, 0.0)),
+      (2L, Array(-1.5e-6, 0.5, -0.5, 3.5e-6))) ++
+      (3 until 12).map(i => (i.toLong, Array.fill(4)(r.nextGaussian())))
+    val q = rows.toDF("id", "v")
+      .select(col("id"), Similarity.quantized(col("v")).as("qv"))
+    val pairs = q.as("a").crossJoin(q.as("b"))
+      .select(col("a.qv").as("qa"), col("b.qv").as("qb"))
+    def lam(f: String) = s"aggregate($f, 0L, (s, x) -> s + x)"
+    val got = pairs.select(
+        QCosineSim(col("qa"), col("qb")).as("k"),
+        expr(Similarity.cosSql(
+          lam("zip_with(qa, qb, (x, y) -> x * y)"),
+          lam("transform(qa, x -> x * x)"),
+          lam("transform(qb, x -> x * x)"))).as("s"))
+      .as[(Double, Double)].collect()
+    assert(got.length == 144 && got.exists(_._1 == 0.0))
+    got.foreach { case (k, s) =>
+      assert(java.lang.Double.doubleToRawLongBits(k) ==
+        java.lang.Double.doubleToRawLongBits(s), s"kernel $k vs sql $s")
+    }
+    def longs(xs: Any*) = Literal(new GenericArrayData(xs.toArray),
+      ArrayType(LongType, containsNull = true))
+    assert(QCosineSim(longs(0L, 0L), longs(1L, 2L)).eval() == 0.0)
+    intercept[ArithmeticException] {
+      QCosineSim(longs(Long.MaxValue, 1L), longs(2L, 1L)).eval()
+    }
+    intercept[IllegalArgumentException] {
+      QCosineSim(longs(1L, 2L), longs(1L, 2L, 3L)).eval()
+    }
+    assert(QCosineSim(longs(1L, null), longs(1L, 2L)).eval() == null)
+  }
+
+  test("SignBucket Long mode ≡ the lattice expr form; overflow, dimension, " +
+      "null edges") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.plans.SignBucket
+    val r = new scala.util.Random(9)
+    val (nTables, nPlanes, dim) = (3, 6, 8)
+    val rows = Seq((0L, Array.fill(dim)(-2.5e-6)), (1L, Array.fill(dim)(0.0))) ++
+      (2 until 30).map(i => (i.toLong, Array.fill(dim)(r.nextGaussian())))
+    val q = rows.toDF("id", "v")
+      .select(col("id"), Similarity.quantized(col("v")).as("qv"))
+    val kernel = (0 until nTables).flatMap { t =>
+      val planes = Array.tabulate(nPlanes, dim)(
+        Similarity.latticeWeight(t, _, _))
+      q.select(col("id"), SignBucket(col("qv"), planes).as("bucket"))
+        .as[(Long, Long)].collect().map { case (id, b) => (id, t, b) }
+    }.toSet
+    // the reference: the lattice SQL's long form — per-plane exact sums,
+    // then the sign bits as powers of two
+    val planes = spark.sql(
+      s"""SELECT t, p, pos,
+         |  (2654435761L * (t * 1000 + p * 100 + pos + 1)) % 1000003
+         |    - 501001 AS w
+         |FROM (SELECT explode(sequence(0, ${nTables - 1})) AS t)
+         |LATERAL VIEW explode(sequence(0, ${nPlanes - 1})) vp AS p
+         |LATERAL VIEW explode(sequence(0, ${dim - 1})) vd AS pos""".stripMargin)
+    val reference = q.select(col("id"), posexplode(col("qv")).as(Seq("pos", "qe")))
+      .join(planes, "pos")
+      .groupBy("id", "t", "p").agg(sum(expr("qe * w")).as("sdot"))
+      .groupBy("id", "t")
+      .agg(sum(expr("CASE WHEN sdot >= 0 THEN " +
+        "CAST(round(pow(2, p)) AS BIGINT) ELSE 0L END")).as("bucket"))
+      .select(col("id"), col("t"), col("bucket"))
+      .as[(Long, Int, Long)].collect().toSet
+    assert(kernel.size == 30 * nTables && kernel == reference)
+    def longs(xs: Any*) = Literal(new GenericArrayData(xs.toArray),
+      ArrayType(LongType, containsNull = true))
+    val big = Seq(Seq(4.0e15, 4.0e15))
+    intercept[ArithmeticException] {
+      SignBucket(longs(4000L, 4000L), big).eval()
+    }
+    intercept[IllegalArgumentException] {
+      SignBucket(longs(1L, 2L, 3L), big).eval()
+    }
+    assert(SignBucket(longs(1L, null), big).eval() == null)
+    assert(SignBucket(longs(1L, 2L), Seq(Seq(0.5, 1.0)))
+      .checkInputDataTypes().isFailure)
+  }
+
+  test("portable similarity family: sf0.001 checksums pinned") {
+    // (rows, xxhash64 sum) of each entry's output through Bench.checksum,
+    // pinned so a changed bit in the shared portable arithmetic fails
+    // here, without the DuckDB oracle
+    val pins = Seq(
+      "d24_semantic_dedup_portable" -> (500L, -5218888707532376060L),
+      "l15_cluster_balanced_sample" -> (500L, -892075139936439777L),
+      "n10_centroid_cosine" -> (50L, 5992677150988356351L),
+      "n12_ann_lsh_portable" -> (15L, -8182952576424660659L),
+      "n13_ann_ivf_portable" -> (15L, 2151220442889373044L),
+      "n14_cosine_neardup_portable" -> (52L, -2757438923231770241L),
+      "n15_sq_portable" -> (15L, -9170837913155493584L),
+      "n16_pq_portable" -> (15L, 5950843277603428337L),
+      "n18_ivf_append_portable" -> (100L, 3908435014828272423L),
+      "n19_kmeans_portable" -> (500L, 2286068191271010380L),
+      "n20_power_iteration" -> (64L, 177593510022357832L),
+      "n21_hard_negatives" -> (55L, -8016413840658177253L),
+      "n22_matryoshka_topk" -> (100L, 1014412829913338140L),
+      "n23_ivf_persisted" -> (60L, 4139618371408559794L))
+    pins.foreach { case (name, (n, chk)) =>
+      val got = Bench.checksum(SparkEntry.queries(name)(spark, sf))
+      assert(got == (n, Some(chk)), s"$name: $got")
+    }
+  }
 }

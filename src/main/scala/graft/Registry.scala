@@ -64,6 +64,27 @@ object Registry {
     }
   }
 
+  /** The user-transition graph g01–g05 run on: an edge (src, dst) from
+    * each event's user to the next event's user in the same event_type
+    * stream, ordered by (ts, event_id). [[transitionEdgesSql]] is the
+    * DuckDB twin.
+    */
+  def transitionEdges(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("event_type")
+      .orderBy(col("ts"), col("event_id"))
+    events(s, dir)
+      .select(col("user_id").as("src"),
+        lead(col("user_id"), 1).over(w).as("dst"))
+      .filter(col("dst").isNotNull)
+  }
+
+  val transitionEdgesSql: String =
+    """SELECT src, dst FROM (
+      |  SELECT user_id AS src,
+      |    lead(user_id) OVER (PARTITION BY event_type
+      |                        ORDER BY ts, event_id) AS dst
+      |  FROM events) WHERE dst IS NOT NULL""".stripMargin
+
   /** Exact decimal sum surfaced as double (order-independent). */
   def decSum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
 

@@ -250,29 +250,10 @@ object RegistryLlm {
           t(s, dir, "documents").filter(col("doc_id") < 500),
           "text", "doc_id", n = 3, threshold = 0.5)
         .orderBy("id_a", "id_b"),
-      Some("""WITH t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(toks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(toks)-1),
-             |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |    ELSE [array_to_string(toks, ' ')] END AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |        x -> strlen(x) > 0) AS toks
-             |    FROM documents WHERE doc_id < 500)),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |pairs AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
-             |SELECT id_a, id_b,
-             |  CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-             |FROM pairs
-             |JOIN sizes sa ON sa.doc_id = id_a
-             |JOIN sizes sb ON sb.doc_id = id_b
-             |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      Some(s"""WITH ${Dedup.wordGramsCte("t",
+                 "documents WHERE doc_id < 500", "doc_id", "text", "doc_id")},
+             |${Dedup.nearDupsOracleCtes("t", 0.5)}
+             |SELECT id_a, id_b, jaccard FROM near
              |ORDER BY id_a, id_b""".stripMargin)),
 
     // ---- D7: MinHash recall vs the exact near-dup set ------------------------
@@ -410,44 +391,15 @@ object RegistryLlm {
             max(col("quality")).as("quality"))
           .orderBy("rep")
       },
-      Some("""WITH RECURSIVE t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(toks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(toks)-1),
-             |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |    ELSE [array_to_string(toks, ' ')] END AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |        x -> strlen(x) > 0) AS toks
-             |    FROM documents WHERE doc_id < 500)),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |cand AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |e AS (
-             |  SELECT id_a AS a, id_b AS b FROM cand
-             |  JOIN sizes sa ON sa.doc_id = id_a
-             |  JOIN sizes sb ON sb.doc_id = id_b
-             |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5),
-             |edges AS (SELECT a, b FROM e UNION ALL
-             |          SELECT b AS a, a AS b FROM e),
-             |reach AS (
-             |  SELECT doc_id AS src, doc_id AS dst
-             |  FROM documents WHERE doc_id < 500
-             |  UNION
-             |  SELECT r.src, e2.b AS dst FROM reach r
-             |  JOIN edges e2 ON r.dst = e2.a),
-             |cc AS (SELECT src AS id, min(dst) AS rep FROM reach GROUP BY src),
+      Some(s"""WITH RECURSIVE ${Dedup.nearDupClustersOracleCtes(
+                 "documents WHERE doc_id < 500", 0.5)},
              |q0 AS (
              |  SELECT doc_id AS id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
+             |    list_filter(string_split_regex(trim(lower(text)), '\\s+'),
              |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
+             |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
              |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
+             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
              |      AS BIGINT) AS npunct,
              |    CAST(strlen(text) AS BIGINT) AS nchars
              |  FROM documents WHERE doc_id < 500),
@@ -514,18 +466,8 @@ object RegistryLlm {
             docs.filter(col("doc_id") % 10 === 0), n = 8)
           .select(col("doc_id")).orderBy("doc_id")
       },
-      Some("""WITH toks AS (
-             |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      t -> strlen(t) > 0) AS lt
-             |  FROM documents),
-             |g AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(lt) >= 8 THEN
-             |      list_distinct(list_transform(range(1, len(lt) - 6),
-             |        i -> array_to_string(lt[i:i+7], ' ')))
-             |    ELSE [array_to_string(lt, ' ')] END AS grams
-             |  FROM toks),
+      Some(s"""WITH ${Dedup.wordGramsCte("g", "documents", "doc_id",
+                 "text", "doc_id", n = 8)},
              |eg AS (SELECT DISTINCT unnest(grams) AS gram FROM g
              |       WHERE doc_id % 10 = 0),
              |cont AS (
@@ -546,37 +488,9 @@ object RegistryLlm {
           t(s, dir, "documents").filter(col("doc_id") < 500),
           "text", "doc_id", 3, 0.5)
         .orderBy("id"),
-      Some("""WITH RECURSIVE t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(toks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(toks)-1),
-             |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |    ELSE [array_to_string(toks, ' ')] END AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |        x -> strlen(x) > 0) AS toks
-             |    FROM documents WHERE doc_id < 500)),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |cand AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |e AS (
-             |  SELECT id_a AS a, id_b AS b FROM cand
-             |  JOIN sizes sa ON sa.doc_id = id_a
-             |  JOIN sizes sb ON sb.doc_id = id_b
-             |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5),
-             |edges AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
-             |reach AS (
-             |  SELECT doc_id AS src, doc_id AS dst
-             |  FROM documents WHERE doc_id < 500
-             |  UNION
-             |  SELECT r.src, e2.b AS dst FROM reach r
-             |  JOIN edges e2 ON r.dst = e2.a)
-             |SELECT src AS id, min(dst) AS rep FROM reach
-             |GROUP BY src ORDER BY id""".stripMargin)),
+      Some(s"""WITH RECURSIVE ${Dedup.nearDupClustersOracleCtes(
+                 "documents WHERE doc_id < 500", 0.5)}
+             |SELECT id, rep FROM cc ORDER BY id""".stripMargin)),
 
     // ---- L10: leakage-safe train/val/test split — the x21 hash split
     //      keyed by the near-dup CLUSTER representative (d08's connected
@@ -598,42 +512,15 @@ object RegistryLlm {
               .otherwise("test").as("split"))
           .orderBy("doc_id")
       },
-      Some("""WITH RECURSIVE t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(toks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(toks)-1),
-             |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |    ELSE [array_to_string(toks, ' ')] END AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |        x -> strlen(x) > 0) AS toks
-             |    FROM documents WHERE doc_id < 500)),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |cand AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |e AS (
-             |  SELECT id_a AS a, id_b AS b FROM cand
-             |  JOIN sizes sa ON sa.doc_id = id_a
-             |  JOIN sizes sb ON sb.doc_id = id_b
-             |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5),
-             |edges AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
-             |reach AS (
-             |  SELECT doc_id AS src, doc_id AS dst
-             |  FROM documents WHERE doc_id < 500
-             |  UNION
-             |  SELECT r.src, e2.b AS dst FROM reach r
-             |  JOIN edges e2 ON r.dst = e2.a)
-             |SELECT src AS doc_id,
-             |  CASE WHEN substr(md5(CAST(min(dst) AS VARCHAR)), 1, 2) < 'cd'
+      Some(s"""WITH RECURSIVE ${Dedup.nearDupClustersOracleCtes(
+                 "documents WHERE doc_id < 500", 0.5)}
+             |SELECT id AS doc_id,
+             |  CASE WHEN substr(md5(CAST(rep AS VARCHAR)), 1, 2) < 'cd'
              |         THEN 'train'
-             |       WHEN substr(md5(CAST(min(dst) AS VARCHAR)), 1, 2) < 'e6'
+             |       WHEN substr(md5(CAST(rep AS VARCHAR)), 1, 2) < 'e6'
              |         THEN 'val'
              |       ELSE 'test' END AS split
-             |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin)),
+             |FROM cc ORDER BY doc_id""".stripMargin)),
 
     // ---- L1: end-to-end corpus cleaning (quality → lang → dedup → near-dup) --
     // The whole training-data pipeline as ONE hash-checked query: every
@@ -644,15 +531,15 @@ object RegistryLlm {
       (s, dir) => graft.llm.CorpusPipeline.cleanCorpus(
           t(s, dir, "documents").filter(col("doc_id") < 500))
         .select(col("doc_id")).orderBy("doc_id"),
-      Some("""WITH base AS (
+      Some(s"""WITH base AS (
              |  SELECT doc_id, text FROM documents WHERE doc_id < 500),
              |feat AS (
              |  SELECT doc_id, text,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
+             |    list_filter(string_split_regex(trim(lower(text)), '\\s+'),
              |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
+             |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
              |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
+             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
              |      AS BIGINT) AS npunct,
              |    CAST(strlen(text) AS BIGINT) AS nchars
              |  FROM base),
@@ -678,31 +565,15 @@ object RegistryLlm {
              |    ])[-1]['lang'] AS lang_pred
              |  FROM feat),
              |dedup AS (
-             |  SELECT doc_id, text, ltoks FROM q
+             |  SELECT doc_id, text FROM q
              |  WHERE quality >= 0.6 AND lang_pred IN ('en')
              |  QUALIFY row_number() OVER (PARTITION BY md5(text)
              |    ORDER BY doc_id) = 1),
-             |t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(ltoks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(ltoks)-1),
-             |        i -> ltoks[i] || ' ' || ltoks[i+1] || ' ' || ltoks[i+2]))
-             |    ELSE [array_to_string(ltoks, ' ')] END AS grams
-             |  FROM dedup),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |pairs AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |losers AS (
-             |  SELECT DISTINCT id_b FROM pairs
-             |  JOIN sizes sa ON sa.doc_id = id_a
-             |  JOIN sizes sb ON sb.doc_id = id_b
-             |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5)
+             |${Dedup.wordGramsCte("t", "dedup", "doc_id", "text",
+                  "doc_id")},
+             |${Dedup.nearDupsOracleCtes("t", 0.5)}
              |SELECT doc_id FROM dedup
-             |WHERE doc_id NOT IN (SELECT id_b FROM losers)
+             |WHERE doc_id NOT IN (SELECT id_b FROM near)
              |ORDER BY doc_id""".stripMargin)),
 
     // ---- L2: cleaning pipeline + PII redaction as the final stage —
@@ -711,15 +582,15 @@ object RegistryLlm {
       (s, dir) => graft.llm.CorpusPipeline.cleanCorpus(
           t(s, dir, "documents").filter(col("doc_id") < 500), redact = true)
         .select(col("doc_id"), col("text")).orderBy("doc_id"),
-      Some("""WITH base AS (
+      Some(s"""WITH base AS (
              |  SELECT doc_id, text FROM documents WHERE doc_id < 500),
              |feat AS (
              |  SELECT doc_id, text,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
+             |    list_filter(string_split_regex(trim(lower(text)), '\\s+'),
              |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
+             |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
              |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
+             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
              |      AS BIGINT) AS npunct,
              |    CAST(strlen(text) AS BIGINT) AS nchars
              |  FROM base),
@@ -745,37 +616,21 @@ object RegistryLlm {
              |    ])[-1]['lang'] AS lang_pred
              |  FROM feat),
              |dedup AS (
-             |  SELECT doc_id, text, ltoks FROM q
+             |  SELECT doc_id, text FROM q
              |  WHERE quality >= 0.6 AND lang_pred IN ('en')
              |  QUALIFY row_number() OVER (PARTITION BY md5(text)
              |    ORDER BY doc_id) = 1),
-             |t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(ltoks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(ltoks)-1),
-             |        i -> ltoks[i] || ' ' || ltoks[i+1] || ' ' || ltoks[i+2]))
-             |    ELSE [array_to_string(ltoks, ' ')] END AS grams
-             |  FROM dedup),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |pairs AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |losers AS (
-             |  SELECT DISTINCT id_b FROM pairs
-             |  JOIN sizes sa ON sa.doc_id = id_a
-             |  JOIN sizes sb ON sb.doc_id = id_b
-             |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5)
+             |${Dedup.wordGramsCte("t", "dedup", "doc_id", "text",
+                  "doc_id")},
+             |${Dedup.nearDupsOracleCtes("t", 0.5)}
              |SELECT doc_id,
              |  regexp_replace(regexp_replace(regexp_replace(text,
-             |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+             |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
              |    '<EMAIL>', 'g'),
-             |    '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-             |    '\+?\d(?:[\- ]?\d){8,}', '<PHONE>', 'g') AS text
+             |    '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '<IP>', 'g'),
+             |    '\\+?\\d(?:[\\- ]?\\d){8,}', '<PHONE>', 'g') AS text
              |FROM dedup
-             |WHERE doc_id NOT IN (SELECT id_b FROM losers)
+             |WHERE doc_id NOT IN (SELECT id_b FROM near)
              |ORDER BY doc_id""".stripMargin)),
 
     // ---- L4: corpus-adaptive length-outlier pruning (Tukey fences over
@@ -824,24 +679,9 @@ object RegistryLlm {
         .select(col("doc_id"), col("block"), col("bin").cast("long").as("bin"),
           col("n_tokens"))
         .orderBy("doc_id"),
-      Some("""WITH RECURSIVE n AS (
-             |  SELECT doc_id, doc_id // 256 AS block,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt,
-             |    row_number() OVER (PARTITION BY doc_id // 256
-             |      ORDER BY doc_id) AS rn
-             |  FROM documents),
-             |p AS (
-             |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-             |  FROM n WHERE rn = 1
-             |  UNION ALL
-             |  SELECT n.doc_id, n.block, n.nt, n.rn,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bin ELSE p.bin + 1 END,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bt + n.nt ELSE n.nt END
-             |  FROM p JOIN n ON n.block = p.block AND n.rn = p.rn + 1)
-             |SELECT doc_id, block, CAST(bin AS BIGINT) AS bin,
-             |  nt AS n_tokens
-             |FROM p ORDER BY doc_id""".stripMargin)),
+      Some(graft.llm.CorpusPipeline.packedOracleSql(Seq(
+        graft.llm.CorpusPipeline.packSequencesOracleCtes("documents",
+          capacity = 120, blockSize = 256))))),
 
     // ---- L7: per-source token-budget sampling — the hash-ordered prefix
     //      whose running token total stays within 1200 tokens/source ------

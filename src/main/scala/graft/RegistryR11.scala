@@ -326,36 +326,8 @@ object RegistryR11 {
             (lit(1.0) / col("cluster_size")).as("weight"))
           .orderBy("id")
       },
-      Some("""WITH RECURSIVE t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(toks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(toks)-1),
-             |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |    ELSE [array_to_string(toks, ' ')] END AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |        x -> strlen(x) > 0) AS toks
-             |    FROM documents WHERE doc_id < 500)),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |cand AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2),
-             |e AS (
-             |  SELECT id_a AS a, id_b AS b FROM cand
-             |  JOIN sizes sa ON sa.doc_id = id_a
-             |  JOIN sizes sb ON sb.doc_id = id_b
-             |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5),
-             |edges AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
-             |reach AS (
-             |  SELECT doc_id AS src, doc_id AS dst
-             |  FROM documents WHERE doc_id < 500
-             |  UNION
-             |  SELECT r.src, e2.b AS dst FROM reach r
-             |  JOIN edges e2 ON r.dst = e2.a),
-             |cc AS (SELECT src AS id, min(dst) AS rep FROM reach GROUP BY src),
+      Some(s"""WITH RECURSIVE ${graft.llm.Dedup.nearDupClustersOracleCtes(
+                 "documents WHERE doc_id < 500", 0.5)},
              |cs AS (SELECT rep, count(*) AS cluster_size FROM cc GROUP BY 1)
              |SELECT cc.id, cc.rep, cs.cluster_size,
              |  CAST(1 AS DOUBLE) / cs.cluster_size AS weight

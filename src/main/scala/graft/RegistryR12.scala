@@ -32,63 +32,7 @@ object RegistryR12 {
           t(s, dir, "documents"), "text", "doc_id", w = 8)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id"),
-      Some("""WITH words AS (
-             |  SELECT doc_id AS id,
-             |    string_split(coalesce(text, ''), ' ') AS ws
-             |  FROM documents),
-             |segs AS (
-             |  SELECT w.id, t.i AS span_idx,
-             |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-             |  FROM words w,
-             |    LATERAL (SELECT unnest(range(greatest(
-             |      len(w.ws) - 7, 0))) AS i) t),
-             |occ AS (
-             |  SELECT id, span_idx,
-             |    row_number() OVER (PARTITION BY h
-             |      ORDER BY id, span_idx) AS rn,
-             |    count(*) OVER (PARTITION BY h) AS cnt
-             |  FROM segs),
-             |losers AS (
-             |  SELECT id, span_idx AS s, span_idx + 8 AS e
-             |  FROM occ WHERE cnt > 1 AND rn > 1),
-             |isl AS (
-             |  SELECT id, s, e,
-             |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-             |        ORDER BY s, e
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-             |      THEN 1 ELSE 0 END AS brk
-             |  FROM losers),
-             |grp AS (
-             |  SELECT id, s, e,
-             |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-             |  FROM isl),
-             |spans AS (
-             |  SELECT id, g, min(s) AS s, max(e) AS e FROM grp
-             |  GROUP BY id, g),
-             |cutstats AS (
-             |  SELECT id, count(*) AS n_spans, sum(e - s) AS cut_tokens
-             |  FROM spans GROUP BY id),
-             |tok AS (
-             |  SELECT w.id, t.i AS idx, t.tk
-             |  FROM words w,
-             |    LATERAL (SELECT unnest(w.ws) AS tk,
-             |             unnest(range(len(w.ws))) AS i) t),
-             |kept AS (
-             |  SELECT tok.id, tok.idx, tok.tk
-             |  FROM tok LEFT JOIN spans sp
-             |    ON sp.id = tok.id AND tok.idx >= sp.s AND tok.idx < sp.e
-             |  WHERE sp.id IS NULL),
-             |agg AS (
-             |  SELECT id, string_agg(tk, ' ' ORDER BY idx) AS clean_text
-             |  FROM kept GROUP BY id)
-             |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text,
-             |  CAST(coalesce(c.n_spans, 0) AS BIGINT) AS n_spans_cut,
-             |  CAST(coalesce(c.cut_tokens, 0) AS BIGINT) AS n_tokens_removed
-             |FROM documents d
-             |LEFT JOIN agg a ON a.id = d.doc_id
-             |LEFT JOIN cutstats c ON c.id = d.doc_id
-             |ORDER BY doc_id""".stripMargin)),
+      Some(exactSubstrOracle("documents"))),
 
     // ---- D32: INCREMENTAL ExactSubstr-full (llm/Dedup
     //      .exactSubstrIncremental) — the steady-state form of d31 the
@@ -112,80 +56,8 @@ object RegistryR12 {
           .withColumnRenamed("id", "doc_id")
           .orderBy("doc_id")
       },
-      Some("""WITH words_b AS (
-             |  SELECT doc_id AS id,
-             |    string_split(coalesce(text, ''), ' ') AS ws
-             |  FROM documents WHERE doc_id >= 400),
-             |words_p AS (
-             |  SELECT doc_id AS id,
-             |    string_split(coalesce(text, ''), ' ') AS ws
-             |  FROM documents WHERE doc_id < 400),
-             |segs_b AS (
-             |  SELECT w.id, t.i AS span_idx,
-             |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-             |  FROM words_b w,
-             |    LATERAL (SELECT unnest(range(greatest(
-             |      len(w.ws) - 7, 0))) AS i) t),
-             |prior_h AS (
-             |  SELECT DISTINCT
-             |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-             |  FROM words_p w,
-             |    LATERAL (SELECT unnest(range(greatest(
-             |      len(w.ws) - 7, 0))) AS i) t),
-             |from_prior AS (
-             |  SELECT id, span_idx AS s, span_idx + 8 AS e FROM segs_b
-             |  WHERE h IN (SELECT h FROM prior_h)),
-             |batch_only AS (
-             |  SELECT id, span_idx,
-             |    row_number() OVER (PARTITION BY h
-             |      ORDER BY id, span_idx) AS rn,
-             |    count(*) OVER (PARTITION BY h) AS cnt
-             |  FROM segs_b WHERE h NOT IN (SELECT h FROM prior_h)),
-             |batch_losers AS (
-             |  SELECT id, span_idx AS s, span_idx + 8 AS e
-             |  FROM batch_only WHERE cnt > 1 AND rn > 1),
-             |losers AS (SELECT * FROM from_prior
-             |           UNION ALL SELECT * FROM batch_losers),
-             |isl AS (
-             |  SELECT id, s, e,
-             |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-             |        ORDER BY s, e
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-             |      THEN 1 ELSE 0 END AS brk
-             |  FROM losers),
-             |grp AS (
-             |  SELECT id, s, e,
-             |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-             |  FROM isl),
-             |spans AS (
-             |  SELECT id, g, min(s) AS s, max(e) AS e FROM grp
-             |  GROUP BY id, g),
-             |cutstats AS (
-             |  SELECT id, count(*) AS n_spans, sum(e - s) AS cut_tokens
-             |  FROM spans GROUP BY id),
-             |tok AS (
-             |  SELECT w.id, t.i AS idx, t.tk
-             |  FROM words_b w,
-             |    LATERAL (SELECT unnest(w.ws) AS tk,
-             |             unnest(range(len(w.ws))) AS i) t),
-             |kept AS (
-             |  SELECT tok.id, tok.idx, tok.tk
-             |  FROM tok LEFT JOIN spans sp
-             |    ON sp.id = tok.id AND tok.idx >= sp.s AND tok.idx < sp.e
-             |  WHERE sp.id IS NULL),
-             |agg AS (
-             |  SELECT id, string_agg(tk, ' ' ORDER BY idx) AS clean_text
-             |  FROM kept GROUP BY id)
-             |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text,
-             |  CAST(coalesce(c.n_spans, 0) AS BIGINT) AS n_spans_cut,
-             |  CAST(coalesce(c.cut_tokens, 0) AS BIGINT)
-             |    AS n_tokens_removed
-             |FROM documents d
-             |LEFT JOIN agg a ON a.id = d.doc_id
-             |LEFT JOIN cutstats c ON c.id = d.doc_id
-             |WHERE d.doc_id >= 400
-             |ORDER BY doc_id""".stripMargin)),
+      Some(exactSubstrOracle("documents WHERE doc_id >= 400",
+        prior = Some("documents WHERE doc_id < 400")))),
 
     // ---- M15: JPEG/EXIF metadata extract + strip THROUGH real marker
     //      and TIFF-IFD arithmetic — m12's compliance pass for the
@@ -257,21 +129,17 @@ object RegistryR12 {
     //      entry closes that gap with the whole chain (training rounds,
     //      per-word encode, counts, greedy walk) on one hash path. ----
     Q("l17_pack_bpe",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-        val merges = graft.llm.Bpe.fit(docs, "text", numMerges = 8,
-          maxVocabWords = 200)
-        val counts = graft.llm.Bpe
-          .encodePortable(docs, "doc_id", "text", merges)
-          .select(col("id").as("doc_id"),
-            col("n_bpe_tokens").cast("long").as("n_tokens"))
-        graft.llm.CorpusPipeline.packByCount(counts,
-            capacity = 512, blockSize = 16)
-          .select(col("doc_id"), col("block"),
-            col("bin").cast("long").as("bin"), col("n_tokens"))
-          .orderBy("doc_id")
-      },
-      oracleL17),
+      (s, dir) => graft.llm.CorpusPipeline.packBpe(
+          t(s, dir, "documents").filter(col("doc_id") < 100),
+          numMerges = 8, maxVocabWords = 200, capacity = 512,
+          blockSize = 16)
+        .orderBy("doc_id"),
+      Some {
+        val cp = graft.llm.CorpusPipeline
+        cp.packedOracleSql(cp.packBpeOracleCtes("documents",
+            maxDocId = 100L, numMerges = 8, maxVocabWords = 200,
+            capacity = 512, blockSize = 16))
+      }),
 
     // ---- M16: JPEG GPS coordinate extraction — the concrete PII the
     //      EXIF family exists to catch (m15 strips the segment; this
@@ -338,143 +206,27 @@ object RegistryR12 {
     //      the hash path: a drift anywhere (a span survived, a merge
     //      flipped, a bin seam moved) breaks the gate. ---------------
     Q("l18_dedup_tokenize_pack",
-      (s, dir) => {
-        val docs = t(s, dir, "documents").filter(col("doc_id") < 300)
-        val clean = graft.llm.Dedup
-          .exactSubstrDedup(docs, "text", "doc_id", w = 8,
-            floor = false) // clean feeds the iterative BPE fit
-          .select(col("id").as("doc_id"), col("clean_text").as("text"))
-        val merges = graft.llm.Bpe.fit(clean, "text", numMerges = 8,
-          maxVocabWords = 200)
-        val counts = graft.llm.Bpe
-          .encodePortable(clean, "doc_id", "text", merges)
-          .select(col("id").as("doc_id"),
-            col("n_bpe_tokens").cast("long").as("n_tokens"))
-        graft.llm.CorpusPipeline.packByCount(counts,
-            capacity = 512, blockSize = 32)
-          .select(col("doc_id"), col("block"),
-            col("bin").cast("long").as("bin"), col("n_tokens"))
-          .orderBy("doc_id")
-      },
-      oracleL18)
+      (s, dir) => graft.llm.CorpusPipeline.dedupTokenizePack(
+          t(s, dir, "documents").filter(col("doc_id") < 300),
+          numMerges = 8, maxVocabWords = 200, capacity = 512,
+          blockSize = 32)
+        ._2.orderBy("doc_id"),
+      Some {
+        val cp = graft.llm.CorpusPipeline
+        cp.packedOracleSql(cp.dedupTokenizePackOracleCtes(
+            maxDocId = 300L, numMerges = 8, maxVocabWords = 200,
+            capacity = 512, blockSize = 32))
+      })
   )
 
-  /** l18 oracle: the d31 rewrite CTEs (es_*) feed `clean_docs`, the BPE
-    * chain re-derives its merges from the CLEANED text, and the greedy
-    * pack walks the BPE counts — three proven oracles composed into one
-    * WITH RECURSIVE statement.
-    */
-  private val oracleL18: Option[String] = Some {
-    val bpe = graft.llm.Bpe.portableCtes("clean_docs", "doc_id",
-      "text", maxDocId = 300L, numMerges = 8, maxVocabWords = 200)
-    s"""WITH RECURSIVE es_words AS (
-       |  SELECT doc_id AS id,
-       |    string_split(coalesce(text, ''), ' ') AS ws
-       |  FROM documents WHERE doc_id < 300),
-       |es_segs AS (
-       |  SELECT w.id, t.i AS span_idx,
-       |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-       |  FROM es_words w,
-       |    LATERAL (SELECT unnest(range(greatest(
-       |      len(w.ws) - 7, 0))) AS i) t),
-       |es_occ AS (
-       |  SELECT id, span_idx,
-       |    row_number() OVER (PARTITION BY h ORDER BY id, span_idx) AS rn,
-       |    count(*) OVER (PARTITION BY h) AS cnt
-       |  FROM es_segs),
-       |es_losers AS (
-       |  SELECT id, span_idx AS s, span_idx + 8 AS e
-       |  FROM es_occ WHERE cnt > 1 AND rn > 1),
-       |es_isl AS (
-       |  SELECT id, s, e,
-       |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-       |        ORDER BY s, e
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-       |      THEN 1 ELSE 0 END AS brk
-       |  FROM es_losers),
-       |es_grp AS (
-       |  SELECT id, s, e,
-       |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-       |  FROM es_isl),
-       |es_spans AS (
-       |  SELECT id, g, min(s) AS s, max(e) AS e FROM es_grp
-       |  GROUP BY id, g),
-       |es_tok AS (
-       |  SELECT w.id, t.i AS idx, t.tk
-       |  FROM es_words w,
-       |    LATERAL (SELECT unnest(w.ws) AS tk,
-       |             unnest(range(len(w.ws))) AS i) t),
-       |es_kept AS (
-       |  SELECT es_tok.id, es_tok.idx, es_tok.tk
-       |  FROM es_tok LEFT JOIN es_spans sp
-       |    ON sp.id = es_tok.id AND es_tok.idx >= sp.s
-       |      AND es_tok.idx < sp.e
-       |  WHERE sp.id IS NULL),
-       |es_agg AS (
-       |  SELECT id, string_agg(tk, ' ' ORDER BY idx) AS clean_text
-       |  FROM es_kept GROUP BY id),
-       |clean_docs AS (
-       |  SELECT w.id AS doc_id, coalesce(a.clean_text, '') AS text
-       |  FROM es_words w LEFT JOIN es_agg a ON a.id = w.id),
-       |${bpe.mkString(",\n")},
-       |bp_counts AS (
-       |  SELECT d.id AS doc_id,
-       |    CAST(coalesce(sum(len(e.toks)), 0) AS BIGINT) AS nt
-       |  FROM bp_d d
-       |  LEFT JOIN bp_w0 o ON o.id = d.id
-       |  LEFT JOIN bp_enc e ON e.w = o.w
-       |  GROUP BY 1),
-       |pk_n AS (
-       |  SELECT doc_id, doc_id // 32 AS block, nt,
-       |    row_number() OVER (PARTITION BY doc_id // 32
-       |      ORDER BY doc_id) AS rn
-       |  FROM bp_counts),
-       |pk_p AS (
-       |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-       |  FROM pk_n WHERE rn = 1
-       |  UNION ALL
-       |  SELECT n.doc_id, n.block, n.nt, n.rn,
-       |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-       |      THEN p.bin ELSE p.bin + 1 END,
-       |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-       |      THEN p.bt + n.nt ELSE n.nt END
-       |  FROM pk_p p JOIN pk_n n
-       |    ON n.block = p.block AND n.rn = p.rn + 1)
-       |SELECT doc_id, block, CAST(bin AS BIGINT) AS bin,
-       |  nt AS n_tokens
-       |FROM pk_p ORDER BY doc_id""".stripMargin
-  }
-
-  private val oracleL17: Option[String] = Some {
-        val ctes = graft.llm.Bpe.portableCtes("documents", "doc_id",
-          "text", maxDocId = 100L, numMerges = 8, maxVocabWords = 200)
-        s"""WITH RECURSIVE ${ctes.mkString(",\n")},
-           |bp_counts AS (
-           |  SELECT d.id AS doc_id,
-           |    CAST(coalesce(sum(len(e.toks)), 0) AS BIGINT) AS nt
-           |  FROM bp_d d
-           |  LEFT JOIN bp_w0 o ON o.id = d.id
-           |  LEFT JOIN bp_enc e ON e.w = o.w
-           |  GROUP BY 1),
-           |pk_n AS (
-           |  SELECT doc_id, doc_id // 16 AS block, nt,
-           |    row_number() OVER (PARTITION BY doc_id // 16
-           |      ORDER BY doc_id) AS rn
-           |  FROM bp_counts),
-           |pk_p AS (
-           |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-           |  FROM pk_n WHERE rn = 1
-           |  UNION ALL
-           |  SELECT n.doc_id, n.block, n.nt, n.rn,
-           |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-           |      THEN p.bin ELSE p.bin + 1 END,
-           |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-           |      THEN p.bt + n.nt ELSE n.nt END
-           |  FROM pk_p p JOIN pk_n n
-           |    ON n.block = p.block AND n.rn = p.rn + 1)
-           |SELECT doc_id, block, CAST(bin AS BIGINT) AS bin,
-           |  nt AS n_tokens
-           |FROM pk_p ORDER BY doc_id""".stripMargin
+  /** d31/d32/d34 oracle: the ExactSubstr rewrite of `docs`' rows. */
+  private[graft] def exactSubstrOracle(docs: String, minSpanChars: Long = 0L,
+                                       prior: Option[String] = None)
+      : String = {
+    val ctes = graft.llm.Dedup.exactSubstrOracleCtes("es_", docs, w = 8,
+      minSpanChars, prior)
+    s"""WITH ${ctes.mkString(",\n")}
+       |SELECT id AS doc_id, clean_text, n_spans_cut, n_tokens_removed
+       |FROM es_res ORDER BY doc_id""".stripMargin
   }
 }

@@ -201,13 +201,16 @@ object RegistryR13 {
           .orderBy("doc_id")
       },
       Some {
-        val c1 = exactSubstrIncrOracle("i1", "doc_id < 400",
-          "doc_id >= 400 AND doc_id < 450")
-        val c2 = exactSubstrIncrOracle("i2", "doc_id < 450",
-          "doc_id >= 450")
+        val dd = graft.llm.Dedup
+        val c1 = dd.exactSubstrOracleCtes("es1_",
+          "documents WHERE doc_id >= 400 AND doc_id < 450", w = 8,
+          prior = Some("documents WHERE doc_id < 400"))
+        val c2 = dd.exactSubstrOracleCtes("es2_",
+          "documents WHERE doc_id >= 450", w = 8,
+          prior = Some("documents WHERE doc_id < 450"))
         s"""WITH ${(c1 ++ c2).mkString(",\n")}
-           |SELECT * FROM (
-           |  SELECT * FROM i1res UNION ALL SELECT * FROM i2res)
+           |SELECT id AS doc_id, clean_text, n_spans_cut, n_tokens_removed
+           |FROM (SELECT * FROM es1_res UNION ALL SELECT * FROM es2_res)
            |ORDER BY doc_id""".stripMargin
       }),
 
@@ -225,7 +228,7 @@ object RegistryR13 {
           minSpanChars = 200L)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id"),
-      Some(exactSubstrCharsOracle(minSpanChars = 200L))),
+      Some(RegistryR12.exactSubstrOracle("documents", minSpanChars = 200L))),
 
     // ---- L19: the FULL prep DAG — l18 stops at packing; the
     //      production chain ends with training-order layout. One hash
@@ -241,19 +244,10 @@ object RegistryR13 {
     //      single entry. ---------------------------------------------
     Q("l19_full_prep_dag",
       (s, dir) => {
-        val docs = t(s, dir, "documents").filter(col("doc_id") < 300)
-        val clean = graft.llm.Dedup
-          .exactSubstrDedup(docs, "text", "doc_id", w = 8,
-            floor = false) // clean feeds the iterative BPE fit
-          .select(col("id").as("doc_id"), col("clean_text").as("text"))
-        val merges = graft.llm.Bpe.fit(clean, "text", numMerges = 8,
-          maxVocabWords = 200)
-        val counts = graft.llm.Bpe
-          .encodePortable(clean, "doc_id", "text", merges)
-          .select(col("id").as("doc_id"),
-            col("n_bpe_tokens").cast("long").as("n_tokens"))
-        val packed = graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 512, blockSize = 32)
+        val (clean, packed) = graft.llm.CorpusPipeline.dedupTokenizePack(
+          t(s, dir, "documents").filter(col("doc_id") < 300),
+          numMerges = 8, maxVocabWords = 200, capacity = 512,
+          blockSize = 32)
         val phase = clean.select(col("doc_id"),
           graft.llm.TextAnalysis.qualityPhase(col("text")).as("phase"))
         val binPhase = packed.join(phase, "doc_id")
@@ -264,9 +258,8 @@ object RegistryR13 {
               "':', CAST(bin AS STRING))), 1, 15), 16, 10) AS BIGINT)"))
         packed.join(phase, "doc_id")
           .join(binPhase, Seq("block", "bin"))
-          .select(col("doc_id"), col("block"),
-            col("bin").cast("long").as("bin"), col("n_tokens"),
-            col("phase"), col("bin_phase"), col("pri"))
+          .select(col("doc_id"), col("block"), col("bin"),
+            col("n_tokens"), col("phase"), col("bin_phase"), col("pri"))
           .orderBy("doc_id")
       },
       oracleL19),
@@ -371,33 +364,17 @@ object RegistryR13 {
       Some {
         val ctes = graft.llm.UnigramLm.encodeCtes("documents", "doc_id",
           "text", maxDocId = 100L, ugParams)
-        s"""WITH RECURSIVE ${ctes.mkString(",\n")},
-           |ug_counts AS (
-           |  SELECT d.id AS doc_id,
-           |    CAST(coalesce(sum(e.np), 0) AS BIGINT) AS nt
-           |  FROM ug_d d
-           |  LEFT JOIN ug_w0 o ON o.id = d.id
-           |  LEFT JOIN ug_enc e ON e.w = o.w
-           |  GROUP BY 1),
-           |pk_n AS (
-           |  SELECT doc_id, doc_id // 16 AS block, nt,
-           |    row_number() OVER (PARTITION BY doc_id // 16
-           |      ORDER BY doc_id) AS rn
-           |  FROM ug_counts),
-           |pk_p AS (
-           |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-           |  FROM pk_n WHERE rn = 1
-           |  UNION ALL
-           |  SELECT n.doc_id, n.block, n.nt, n.rn,
-           |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-           |      THEN p.bin ELSE p.bin + 1 END,
-           |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-           |      THEN p.bt + n.nt ELSE n.nt END
-           |  FROM pk_p p JOIN pk_n n
-           |    ON n.block = p.block AND n.rn = p.rn + 1)
-           |SELECT doc_id, block, CAST(bin AS BIGINT) AS bin,
-           |  nt AS n_tokens
-           |FROM pk_p ORDER BY doc_id""".stripMargin
+        val cp = graft.llm.CorpusPipeline
+        cp.packedOracleSql(ctes ++ Seq(
+          """ug_counts AS (
+            |  SELECT d.id AS doc_id,
+            |    CAST(coalesce(sum(e.np), 0) AS BIGINT) AS nt
+            |  FROM ug_d d
+            |  LEFT JOIN ug_w0 o ON o.id = d.id
+            |  LEFT JOIN ug_enc e ON e.w = o.w
+            |  GROUP BY 1)""".stripMargin,
+          cp.packByCountOracleCtes("ug_counts", capacity = 512,
+            blockSize = 16)))
       })
   )
 
@@ -407,82 +384,10 @@ object RegistryR13 {
     * training-layout DAG in one replay.
     */
   private val oracleL19: Option[String] = Some {
-    val bpe = graft.llm.Bpe.portableCtes("clean_docs", "doc_id",
-      "text", maxDocId = 300L, numMerges = 8, maxVocabWords = 200)
-    s"""WITH RECURSIVE es_words AS (
-       |  SELECT doc_id AS id,
-       |    string_split(coalesce(text, ''), ' ') AS ws
-       |  FROM documents WHERE doc_id < 300),
-       |es_segs AS (
-       |  SELECT w.id, t.i AS span_idx,
-       |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-       |  FROM es_words w,
-       |    LATERAL (SELECT unnest(range(greatest(
-       |      len(w.ws) - 7, 0))) AS i) t),
-       |es_occ AS (
-       |  SELECT id, span_idx,
-       |    row_number() OVER (PARTITION BY h ORDER BY id, span_idx) AS rn,
-       |    count(*) OVER (PARTITION BY h) AS cnt
-       |  FROM es_segs),
-       |es_losers AS (
-       |  SELECT id, span_idx AS s, span_idx + 8 AS e
-       |  FROM es_occ WHERE cnt > 1 AND rn > 1),
-       |es_isl AS (
-       |  SELECT id, s, e,
-       |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-       |        ORDER BY s, e
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-       |      THEN 1 ELSE 0 END AS brk
-       |  FROM es_losers),
-       |es_grp AS (
-       |  SELECT id, s, e,
-       |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-       |  FROM es_isl),
-       |es_spans AS (
-       |  SELECT id, g, min(s) AS s, max(e) AS e FROM es_grp
-       |  GROUP BY id, g),
-       |es_tok AS (
-       |  SELECT w.id, t.i AS idx, t.tk
-       |  FROM es_words w,
-       |    LATERAL (SELECT unnest(w.ws) AS tk,
-       |             unnest(range(len(w.ws))) AS i) t),
-       |es_kept AS (
-       |  SELECT es_tok.id, es_tok.idx, es_tok.tk
-       |  FROM es_tok LEFT JOIN es_spans sp
-       |    ON sp.id = es_tok.id AND es_tok.idx >= sp.s
-       |      AND es_tok.idx < sp.e
-       |  WHERE sp.id IS NULL),
-       |es_agg AS (
-       |  SELECT id, string_agg(tk, ' ' ORDER BY idx) AS clean_text
-       |  FROM es_kept GROUP BY id),
-       |clean_docs AS (
-       |  SELECT w.id AS doc_id, coalesce(a.clean_text, '') AS text
-       |  FROM es_words w LEFT JOIN es_agg a ON a.id = w.id),
-       |${bpe.mkString(",\n")},
-       |bp_counts AS (
-       |  SELECT d.id AS doc_id,
-       |    CAST(coalesce(sum(len(e.toks)), 0) AS BIGINT) AS nt
-       |  FROM bp_d d
-       |  LEFT JOIN bp_w0 o ON o.id = d.id
-       |  LEFT JOIN bp_enc e ON e.w = o.w
-       |  GROUP BY 1),
-       |pk_n AS (
-       |  SELECT doc_id, doc_id // 32 AS block, nt,
-       |    row_number() OVER (PARTITION BY doc_id // 32
-       |      ORDER BY doc_id) AS rn
-       |  FROM bp_counts),
-       |pk_p AS (
-       |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-       |  FROM pk_n WHERE rn = 1
-       |  UNION ALL
-       |  SELECT n.doc_id, n.block, n.nt, n.rn,
-       |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-       |      THEN p.bin ELSE p.bin + 1 END,
-       |    CASE WHEN p.bt = 0 OR p.bt + n.nt <= 512
-       |      THEN p.bt + n.nt ELSE n.nt END
-       |  FROM pk_p p JOIN pk_n n
-       |    ON n.block = p.block AND n.rn = p.rn + 1),
+    val ctes = graft.llm.CorpusPipeline.dedupTokenizePackOracleCtes(
+      maxDocId = 300L, numMerges = 8, maxVocabWords = 200,
+      capacity = 512, blockSize = 32)
+    s"""WITH RECURSIVE ${ctes.mkString(",\n")},
        |ph AS (
        |  SELECT doc_id,
        |    CAST(CAST(n BETWEEN 10 AND 100000 AS INT)
@@ -517,155 +422,4 @@ object RegistryR13 {
        |JOIN binkey b ON b.block = k.block AND b.bin = k.bin
        |ORDER BY 1""".stripMargin
   }
-
-  /** The d32-shape incremental-ExactSubstr DuckDB replay, prefix-
-    * parameterized so d33 chains two batches in one statement. Emits
-    * CTEs ending in `{p}res(doc_id, clean_text, n_spans_cut,
-    * n_tokens_removed)`.
-    */
-  private def exactSubstrIncrOracle(p: String, priorPred: String,
-                                    batchPred: String): Seq[String] = Seq(
-    s"""${p}words_b AS (
-       |  SELECT doc_id AS id,
-       |    string_split(coalesce(text, ''), ' ') AS ws
-       |  FROM documents WHERE $batchPred)""".stripMargin,
-    s"""${p}words_p AS (
-       |  SELECT doc_id AS id,
-       |    string_split(coalesce(text, ''), ' ') AS ws
-       |  FROM documents WHERE $priorPred)""".stripMargin,
-    s"""${p}segs_b AS (
-       |  SELECT w.id, t.i AS span_idx,
-       |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-       |  FROM ${p}words_b w,
-       |    LATERAL (SELECT unnest(range(greatest(
-       |      len(w.ws) - 7, 0))) AS i) t)""".stripMargin,
-    s"""${p}prior_h AS (
-       |  SELECT DISTINCT
-       |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-       |  FROM ${p}words_p w,
-       |    LATERAL (SELECT unnest(range(greatest(
-       |      len(w.ws) - 7, 0))) AS i) t)""".stripMargin,
-    s"""${p}from_prior AS (
-       |  SELECT id, span_idx AS s, span_idx + 8 AS e FROM ${p}segs_b
-       |  WHERE h IN (SELECT h FROM ${p}prior_h))""".stripMargin,
-    s"""${p}batch_only AS (
-       |  SELECT id, span_idx,
-       |    row_number() OVER (PARTITION BY h
-       |      ORDER BY id, span_idx) AS rn,
-       |    count(*) OVER (PARTITION BY h) AS cnt
-       |  FROM ${p}segs_b
-       |  WHERE h NOT IN (SELECT h FROM ${p}prior_h))""".stripMargin,
-    s"""${p}losers AS (
-       |  SELECT * FROM ${p}from_prior
-       |  UNION ALL
-       |  SELECT id, span_idx AS s, span_idx + 8 AS e
-       |  FROM ${p}batch_only WHERE cnt > 1 AND rn > 1)""".stripMargin,
-    s"""${p}isl AS (
-       |  SELECT id, s, e,
-       |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-       |        ORDER BY s, e
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-       |      THEN 1 ELSE 0 END AS brk
-       |  FROM ${p}losers)""".stripMargin,
-    s"""${p}grp AS (
-       |  SELECT id, s, e,
-       |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-       |  FROM ${p}isl)""".stripMargin,
-    s"""${p}spans AS (
-       |  SELECT id, g, min(s) AS s, max(e) AS e FROM ${p}grp
-       |  GROUP BY id, g)""".stripMargin,
-    s"""${p}cutstats AS (
-       |  SELECT id, count(*) AS n_spans, sum(e - s) AS cut_tokens
-       |  FROM ${p}spans GROUP BY id)""".stripMargin,
-    s"""${p}tok AS (
-       |  SELECT w.id, t.i AS idx, t.tk
-       |  FROM ${p}words_b w,
-       |    LATERAL (SELECT unnest(w.ws) AS tk,
-       |             unnest(range(len(w.ws))) AS i) t)""".stripMargin,
-    s"""${p}kept AS (
-       |  SELECT k.id, k.idx, k.tk
-       |  FROM ${p}tok k LEFT JOIN ${p}spans sp
-       |    ON sp.id = k.id AND k.idx >= sp.s AND k.idx < sp.e
-       |  WHERE sp.id IS NULL)""".stripMargin,
-    s"""${p}agg AS (
-       |  SELECT id, string_agg(tk, ' ' ORDER BY idx) AS clean_text
-       |  FROM ${p}kept GROUP BY id)""".stripMargin,
-    s"""${p}res AS (
-       |  SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text,
-       |    CAST(coalesce(c.n_spans, 0) AS BIGINT) AS n_spans_cut,
-       |    CAST(coalesce(c.cut_tokens, 0) AS BIGINT)
-       |      AS n_tokens_removed
-       |  FROM documents d
-       |  LEFT JOIN ${p}agg a ON a.id = d.doc_id
-       |  LEFT JOIN ${p}cutstats c ON c.id = d.doc_id
-       |  WHERE $batchPred)""".stripMargin)
-
-  /** d31's full-corpus replay with the minSpanChars post-filter on the
-    * merged spans (char length = token lengths + single-space gaps).
-    */
-  private def exactSubstrCharsOracle(minSpanChars: Long): String =
-    s"""WITH words AS (
-       |  SELECT doc_id AS id,
-       |    string_split(coalesce(text, ''), ' ') AS ws
-       |  FROM documents),
-       |segs AS (
-       |  SELECT w.id, t.i AS span_idx,
-       |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-       |  FROM words w,
-       |    LATERAL (SELECT unnest(range(greatest(
-       |      len(w.ws) - 7, 0))) AS i) t),
-       |occ AS (
-       |  SELECT id, span_idx,
-       |    row_number() OVER (PARTITION BY h
-       |      ORDER BY id, span_idx) AS rn,
-       |    count(*) OVER (PARTITION BY h) AS cnt
-       |  FROM segs),
-       |losers AS (
-       |  SELECT id, span_idx AS s, span_idx + 8 AS e
-       |  FROM occ WHERE cnt > 1 AND rn > 1),
-       |isl AS (
-       |  SELECT id, s, e,
-       |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-       |        ORDER BY s, e
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-       |      THEN 1 ELSE 0 END AS brk
-       |  FROM losers),
-       |grp AS (
-       |  SELECT id, s, e,
-       |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-       |  FROM isl),
-       |merged AS (
-       |  SELECT id, g, min(s) AS s, max(e) AS e FROM grp
-       |  GROUP BY id, g),
-       |tok AS (
-       |  SELECT w.id, t.i AS idx, t.tk
-       |  FROM words w,
-       |    LATERAL (SELECT unnest(w.ws) AS tk,
-       |             unnest(range(len(w.ws))) AS i) t),
-       |spans AS (
-       |  SELECT m.id, m.s, m.e
-       |  FROM merged m JOIN tok t
-       |    ON t.id = m.id AND t.idx >= m.s AND t.idx < m.e
-       |  GROUP BY m.id, m.s, m.e
-       |  HAVING sum(strlen(t.tk)) + (m.e - m.s - 1) >= $minSpanChars),
-       |cutstats AS (
-       |  SELECT id, count(*) AS n_spans, sum(e - s) AS cut_tokens
-       |  FROM spans GROUP BY id),
-       |kept AS (
-       |  SELECT tok.id, tok.idx, tok.tk
-       |  FROM tok LEFT JOIN spans sp
-       |    ON sp.id = tok.id AND tok.idx >= sp.s AND tok.idx < sp.e
-       |  WHERE sp.id IS NULL),
-       |agg AS (
-       |  SELECT id, string_agg(tk, ' ' ORDER BY idx) AS clean_text
-       |  FROM kept GROUP BY id)
-       |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text,
-       |  CAST(coalesce(c.n_spans, 0) AS BIGINT) AS n_spans_cut,
-       |  CAST(coalesce(c.cut_tokens, 0) AS BIGINT) AS n_tokens_removed
-       |FROM documents d
-       |LEFT JOIN agg a ON a.id = d.doc_id
-       |LEFT JOIN cutstats c ON c.id = d.doc_id
-       |ORDER BY doc_id""".stripMargin
 }

@@ -35,26 +35,14 @@ object RegistryR15 {
         graft.llm.ShardManifest.manifest(blocks, nShards = 7)
           .orderBy("shard")
       },
-      Some("""WITH RECURSIVE n AS (
-             |  SELECT doc_id, doc_id // 256 AS block,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt,
-             |    row_number() OVER (PARTITION BY doc_id // 256
-             |      ORDER BY doc_id) AS rn
-             |  FROM documents),
-             |p AS (
-             |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-             |  FROM n WHERE rn = 1
-             |  UNION ALL
-             |  SELECT n.doc_id, n.block, n.nt, n.rn,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bin ELSE p.bin + 1 END,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bt + n.nt ELSE n.nt END
-             |  FROM p JOIN n ON n.block = p.block AND n.rn = p.rn + 1),
+      Some(s"""WITH RECURSIVE ${graft.llm.CorpusPipeline
+               .packSequencesOracleCtes("documents", capacity = 120,
+                 blockSize = 256)},
              |b AS (
              |  SELECT doc_id, nt, block * 10000 + bin AS bkey,
              |    ((((block * 10000 + bin) % 100000) * 2654435761)
              |      % 100000) % 7 AS shard
-             |  FROM p),
+             |  FROM pk_p),
              |h AS (
              |  SELECT shard, bkey, nt,
              |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
@@ -187,26 +175,14 @@ object RegistryR15 {
         sm.manifestFromBinStats(sm.loadBinStats(s, s"$tmp/b2"))
           .orderBy("shard")
       },
-      Some("""WITH RECURSIVE n AS (
-             |  SELECT doc_id, doc_id // 256 AS block,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt,
-             |    row_number() OVER (PARTITION BY doc_id // 256
-             |      ORDER BY doc_id) AS rn
-             |  FROM documents),
-             |p AS (
-             |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-             |  FROM n WHERE rn = 1
-             |  UNION ALL
-             |  SELECT n.doc_id, n.block, n.nt, n.rn,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bin ELSE p.bin + 1 END,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bt + n.nt ELSE n.nt END
-             |  FROM p JOIN n ON n.block = p.block AND n.rn = p.rn + 1),
+      Some(s"""WITH RECURSIVE ${graft.llm.CorpusPipeline
+               .packSequencesOracleCtes("documents", capacity = 120,
+                 blockSize = 256)},
              |b AS (
              |  SELECT doc_id, nt, block * 10000 + bin AS bkey,
              |    ((((block * 10000 + bin) % 100000) * 2654435761)
              |      % 100000) % 7 AS shard
-             |  FROM p),
+             |  FROM pk_p),
              |h AS (
              |  SELECT shard, bkey, nt,
              |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
@@ -244,25 +220,13 @@ object RegistryR15 {
             sum(col("bin_tokens")).as("n_tokens"))
           .orderBy("shard")
       },
-      Some("""WITH RECURSIVE n AS (
-             |  SELECT doc_id, doc_id // 256 AS block,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt,
-             |    row_number() OVER (PARTITION BY doc_id // 256
-             |      ORDER BY doc_id) AS rn
-             |  FROM documents),
-             |p AS (
-             |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-             |  FROM n WHERE rn = 1
-             |  UNION ALL
-             |  SELECT n.doc_id, n.block, n.nt, n.rn,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bin ELSE p.bin + 1 END,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bt + n.nt ELSE n.nt END
-             |  FROM p JOIN n ON n.block = p.block AND n.rn = p.rn + 1),
+      Some(s"""WITH RECURSIVE ${graft.llm.CorpusPipeline
+               .packSequencesOracleCtes("documents", capacity = 120,
+                 blockSize = 256)},
              |bins AS (
              |  SELECT block, bin, count(*) AS nd,
              |    CAST(sum(nt) AS BIGINT) AS bt
-             |  FROM p GROUP BY 1, 2),
+             |  FROM pk_p GROUP BY 1, 2),
              |tot AS (SELECT CAST(sum(bt) AS BIGINT) AS t FROM bins),
              |c AS (
              |  SELECT block, bin, nd, bt,
@@ -311,34 +275,16 @@ object RegistryR15 {
       },
       Some {
         val ctes = graft.llm.LogReg.labelledOracleCtes("l26:")
-        s"""WITH RECURSIVE ${ctes.mkString(",\n")},
-           |sel AS (SELECT doc_id FROM lr_out WHERE pred = 1),
-           |txt AS (
-           |  SELECT d.doc_id,
-           |    d.text || CASE WHEN d.doc_id % 2 = 0
-           |      THEN ' m' || d.lang ELSE '' END AS text
-           |  FROM documents d JOIN sel USING (doc_id)),
-           |pk_n AS (
-           |  SELECT doc_id, doc_id // 32 AS block,
-           |    CAST(len(list_filter(string_split_regex(trim(text),
-           |      '\\s+'), x -> strlen(x) > 0)) AS BIGINT) AS nt,
-           |    row_number() OVER (PARTITION BY doc_id // 32
-           |      ORDER BY doc_id) AS rn
-           |  FROM txt),
-           |pk_p AS (
-           |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-           |  FROM pk_n WHERE rn = 1
-           |  UNION ALL
-           |  SELECT n.doc_id, n.block, n.nt, n.rn,
-           |    CASE WHEN p.bt + n.nt <= 512 THEN p.bin ELSE p.bin + 1
-           |      END,
-           |    CASE WHEN p.bt + n.nt <= 512 THEN p.bt + n.nt ELSE n.nt
-           |      END
-           |  FROM pk_p p JOIN pk_n n
-           |    ON n.block = p.block AND n.rn = p.rn + 1)
-           |SELECT doc_id, block, CAST(bin AS BIGINT) AS bin,
-           |  nt AS n_tokens
-           |FROM pk_p ORDER BY doc_id""".stripMargin
+        val cp = graft.llm.CorpusPipeline
+        cp.packedOracleSql(ctes ++ Seq(
+          "sel AS (SELECT doc_id FROM lr_out WHERE pred = 1)",
+          """txt AS (
+            |  SELECT d.doc_id,
+            |    d.text || CASE WHEN d.doc_id % 2 = 0
+            |      THEN ' m' || d.lang ELSE '' END AS text
+            |  FROM documents d JOIN sel USING (doc_id))""".stripMargin,
+          cp.packSequencesOracleCtes("txt", capacity = 512,
+            blockSize = 32)))
       })
 
   )

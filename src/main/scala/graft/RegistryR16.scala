@@ -152,26 +152,14 @@ object RegistryR16 {
             sm.manifest(packed, nShards = 7), nShards = 7)
           .orderBy("shard")
       },
-      Some("""WITH RECURSIVE n AS (
-             |  SELECT doc_id, doc_id // 256 AS block,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt,
-             |    row_number() OVER (PARTITION BY doc_id // 256
-             |      ORDER BY doc_id) AS rn
-             |  FROM documents),
-             |p AS (
-             |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-             |  FROM n WHERE rn = 1
-             |  UNION ALL
-             |  SELECT n.doc_id, n.block, n.nt, n.rn,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bin ELSE p.bin + 1 END,
-             |    CASE WHEN p.bt + n.nt <= 120 THEN p.bt + n.nt ELSE n.nt END
-             |  FROM p JOIN n ON n.block = p.block AND n.rn = p.rn + 1),
+      Some(s"""WITH RECURSIVE ${graft.llm.CorpusPipeline
+               .packSequencesOracleCtes("documents", capacity = 120,
+                 blockSize = 256)},
              |b AS (
              |  SELECT doc_id, nt, block, bin, block * 10000 + bin AS bkey,
              |    ((((block * 10000 + bin) % 100000) * 2654435761)
              |      % 100000) % 7 AS shard
-             |  FROM p),
+             |  FROM pk_p),
              |h AS (
              |  SELECT shard, bkey, nt,
              |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)

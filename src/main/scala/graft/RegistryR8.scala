@@ -716,21 +716,9 @@ object RegistryR8 {
     //      driver sync per round; the edge relation is partitioned by
     //      src once and only the small rank table re-shuffles. ---------
     Q("g01_pagerank",
-      (s, dir) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("ts"), col("event_id"))
-        val edges = events(s, dir)
-          .select(col("user_id").as("src"),
-            lead(col("user_id"), 1).over(w).as("dst"))
-          .filter(col("dst").isNotNull)
-        graft.graph.PageRank.ranksInt(edges, iters = 5).orderBy("id")
-      },
-      Some(graft.graph.PageRank.oracleSql(
-        """SELECT src, dst FROM (
-          |  SELECT user_id AS src,
-          |    lead(user_id) OVER (PARTITION BY event_type
-          |                        ORDER BY ts, event_id) AS dst
-          |  FROM events) WHERE dst IS NOT NULL""".stripMargin,
+      (s, dir) => graft.graph.PageRank.ranksInt(
+          Registry.transitionEdges(s, dir), iters = 5).orderBy("id"),
+      Some(graft.graph.PageRank.oracleSql(Registry.transitionEdgesSql,
         iters = 5)))) ++ Seq(
 
     // ---- D21: per-domain document caps (RefinedWeb-style URL/domain
@@ -844,23 +832,11 @@ object RegistryR8 {
     //      ranking. Same integer-exact machinery and one-lazy-plan
     //      shape as g01, so the oracle replays it bit-for-bit. ---------
     Q("g02_personalized_pagerank",
-      (s, dir) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("ts"), col("event_id"))
-        val edges = events(s, dir)
-          .select(col("user_id").as("src"),
-            lead(col("user_id"), 1).over(w).as("dst"))
-          .filter(col("dst").isNotNull)
-        graft.graph.PageRank.ranksInt(edges, iters = 5,
-            seeds = Some(col("id") % 2 === 0))
-          .orderBy("id")
-      },
-      Some(graft.graph.PageRank.oracleSql(
-        """SELECT src, dst FROM (
-          |  SELECT user_id AS src,
-          |    lead(user_id) OVER (PARTITION BY event_type
-          |                        ORDER BY ts, event_id) AS dst
-          |  FROM events) WHERE dst IS NOT NULL""".stripMargin,
+      (s, dir) => graft.graph.PageRank.ranksInt(
+          Registry.transitionEdges(s, dir), iters = 5,
+          seeds = Some(col("id") % 2 === 0))
+        .orderBy("id"),
+      Some(graft.graph.PageRank.oracleSql(Registry.transitionEdgesSql,
         iters = 5, seedPred = Some("id % 2 = 0")))),
 
     // ---- T19: bigram-LM quality scoring (llm/TextAnalysis
@@ -945,21 +921,9 @@ object RegistryR8 {
     //      never materialize). All integer counts; the oracle replays
     //      the same orientation with SQL row-value comparisons. --------
     Q("g03_triangles",
-      (s, dir) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("ts"), col("event_id"))
-        val edges = events(s, dir)
-          .select(col("user_id").as("src"),
-            lead(col("user_id"), 1).over(w).as("dst"))
-          .filter(col("dst").isNotNull)
-        graft.graph.Triangles.count(edges)
-      },
-      Some(graft.graph.Triangles.oracleSql(
-        """SELECT src, dst FROM (
-          |  SELECT user_id AS src,
-          |    lead(user_id) OVER (PARTITION BY event_type
-          |                        ORDER BY ts, event_id) AS dst
-          |  FROM events) WHERE dst IS NOT NULL""".stripMargin))),
+      (s, dir) => graft.graph.Triangles.count(
+        Registry.transitionEdges(s, dir)),
+      Some(graft.graph.Triangles.oracleSql(Registry.transitionEdgesSql))),
 
     // ---- G4: deterministic synchronous label propagation (community
     //      detection) — 3 rounds, most-frequent neighbor label, ties to
@@ -969,22 +933,10 @@ object RegistryR8 {
     //      each round is count + argmax-by-struct-min, no window, no
     //      driver action. ----------------------------------------------
     Q("g04_label_propagation",
-      (s, dir) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("ts"), col("event_id"))
-        val edges = events(s, dir)
-          .select(col("user_id").as("src"),
-            lead(col("user_id"), 1).over(w).as("dst"))
-          .filter(col("dst").isNotNull)
-        graft.graph.LabelPropagation.labels(edges, iters = 3).orderBy("id")
-      },
+      (s, dir) => graft.graph.LabelPropagation.labels(
+          Registry.transitionEdges(s, dir), iters = 3).orderBy("id"),
       Some(graft.graph.LabelPropagation.oracleSql(
-        """SELECT src, dst FROM (
-          |  SELECT user_id AS src,
-          |    lead(user_id) OVER (PARTITION BY event_type
-          |                        ORDER BY ts, event_id) AS dst
-          |  FROM events) WHERE dst IS NOT NULL""".stripMargin,
-        iters = 3))),
+        Registry.transitionEdgesSql, iters = 3))),
 
     // ---- G5: seeded BFS / shortest-hop distances (graph/Bfs.scala) —
     //      "within k hops of a trusted seed set" curation, the graph
@@ -995,22 +947,11 @@ object RegistryR8 {
     //      Edges partition once; each round shuffles only the reached
     //      distance rows. ----------------------------------------------
     Q("g05_bfs_distances",
-      (s, dir) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("ts"), col("event_id"))
-        val edges = events(s, dir)
-          .select(col("user_id").as("src"),
-            lead(col("user_id"), 1).over(w).as("dst"))
-          .filter(col("dst").isNotNull)
-        graft.graph.Bfs.distances(edges, col("id") % 37 === 0, maxHops = 4)
-          .orderBy("id")
-      },
-      Some(graft.graph.Bfs.oracleSql(
-        """SELECT src, dst FROM (
-          |  SELECT user_id AS src,
-          |    lead(user_id) OVER (PARTITION BY event_type
-          |                        ORDER BY ts, event_id) AS dst
-          |  FROM events) WHERE dst IS NOT NULL""".stripMargin,
+      (s, dir) => graft.graph.Bfs.distances(
+          Registry.transitionEdges(s, dir), col("id") % 37 === 0,
+          maxHops = 4)
+        .orderBy("id"),
+      Some(graft.graph.Bfs.oracleSql(Registry.transitionEdgesSql,
         seedPred = "id % 37 = 0", maxHops = 4))),
 
     // ---- W25: CHAINED window aggregation — `window(window_time(w))`
@@ -1340,18 +1281,8 @@ object RegistryR8 {
             docs.filter(col("doc_id") % 10 === 0))
           .orderBy("eval_id")
       },
-      Some("""WITH toks AS (
-             |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> strlen(x) > 0) AS toks
-             |  FROM documents),
-             |g AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(toks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(toks) - 1),
-             |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |    ELSE [array_to_string(toks, ' ')] END AS grams
-             |  FROM toks),
+      Some(s"""WITH ${graft.llm.Dedup.wordGramsCte("g", "documents",
+                 "doc_id", "text", "doc_id")},
              |eg AS (SELECT doc_id AS eval_id, unnest(grams) AS gram
              |       FROM g WHERE doc_id % 10 = 0),
              |tg AS (SELECT DISTINCT unnest(grams) AS gram

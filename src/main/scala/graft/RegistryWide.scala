@@ -657,31 +657,16 @@ object RegistryWide {
             "text", "doc_id", n = 3, threshold = 0.9)
           .orderBy("id_a", "id_b")
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text FROM documents WHERE doc_id < 300
              |  UNION ALL
              |  SELECT doc_id + 1000 AS doc_id,
              |    array_to_string(list_filter(
-             |      string_split_regex(trim(text), '\s+'),
+             |      string_split_regex(trim(text), '\\s+'),
              |      x -> strlen(x) > 0)[1:20], ' ') AS text
              |  FROM documents WHERE doc_id < 300),
-             |t AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(toks) >= 3 THEN
-             |      list_distinct(list_transform(range(1, len(toks)-1),
-             |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |    ELSE [array_to_string(toks, ' ')] END AS grams
-             |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |        x -> strlen(x) > 0) AS toks
-             |    FROM corpus)),
-             |sizes AS (SELECT doc_id, len(grams) AS n FROM t),
-             |inv AS (SELECT doc_id, unnest(grams) AS gram FROM t),
-             |pairs AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |  FROM inv a JOIN inv b
-             |    ON a.gram = b.gram AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2)
+             |${Dedup.wordGramsCte("t", "corpus", "doc_id", "text", "doc_id")},
+             |${Dedup.gramPairsCtes("t")}
              |SELECT id_a, id_b,
              |  CAST(inter AS DOUBLE) / least(sa.n, sb.n) AS containment
              |FROM pairs

@@ -306,6 +306,119 @@ object CorpusPipeline {
         col("p.nt").as("n_tokens"))
   }
 
+  /** DuckDB CTEs `pk_n` and `pk_p` (doc_id, block, nt, rn, bin, bt)
+    * replaying [[packByCount]] over `counts` (doc_id, nt): the same
+    * greedy walk, one recursive step per doc, all blocks in parallel.
+    * Needs `WITH RECURSIVE`.
+    */
+  def packByCountOracleCtes(counts: String, capacity: Int,
+                            blockSize: Int): String = {
+    // an empty bin takes the next doc whatever its size (the fold's rule)
+    val fits = s"p.bt = 0 OR p.bt + n.nt <= $capacity"
+    s"""pk_n AS (
+       |  SELECT doc_id, doc_id // $blockSize AS block, nt,
+       |    row_number() OVER (PARTITION BY doc_id // $blockSize
+       |      ORDER BY doc_id) AS rn
+       |  FROM $counts),
+       |pk_p AS (
+       |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
+       |  FROM pk_n WHERE rn = 1
+       |  UNION ALL
+       |  SELECT n.doc_id, n.block, n.nt, n.rn,
+       |    CASE WHEN $fits THEN p.bin ELSE p.bin + 1 END,
+       |    CASE WHEN $fits THEN p.bt + n.nt ELSE n.nt END
+       |  FROM pk_p p JOIN pk_n n
+       |    ON n.block = p.block AND n.rn = p.rn + 1)""".stripMargin
+  }
+
+  /** `WITH RECURSIVE ctes` selecting the packed rows of `pk_p`
+    * (doc_id, block, bin BIGINT, n_tokens) by doc_id.
+    */
+  def packedOracleSql(ctes: Seq[String]): String =
+    s"""WITH RECURSIVE ${ctes.mkString(",\n")}
+       |SELECT doc_id, block, CAST(bin AS BIGINT) AS bin,
+       |  nt AS n_tokens
+       |FROM pk_p ORDER BY doc_id""".stripMargin
+
+  /** [[packByCountOracleCtes]] over the whitespace token counts `pk_c`
+    * (doc_id, nt) of `from`'s (doc_id, text) rows: the
+    * [[packSequences]] replay.
+    */
+  def packSequencesOracleCtes(from: String, capacity: Int,
+                              blockSize: Int): String =
+    s"""pk_c AS (
+       |  SELECT doc_id,
+       |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
+       |      t -> strlen(t) > 0)) AS BIGINT) AS nt
+       |  FROM $from),
+       |${packByCountOracleCtes("pk_c", capacity, blockSize)}""".stripMargin
+
+  /** Pack by BPE-token counts: fit `numMerges` BPE merges on `docs`
+    * (doc_id, text), encode every doc with [[Bpe.encodePortable]] and
+    * [[packByCount]] the counts. Returns (doc_id, block, bin BIGINT,
+    * n_tokens); [[packBpeOracleCtes]] replays it.
+    */
+  def packBpe(docs: DataFrame, numMerges: Int, maxVocabWords: Int,
+              capacity: Int, blockSize: Int): DataFrame = {
+    val merges = Bpe.fit(docs, "text", numMerges, maxVocabWords)
+    val counts = Bpe.encodePortable(docs, "doc_id", "text", merges)
+      .select(col("id").as("doc_id"),
+        col("n_bpe_tokens").cast("long").as("n_tokens"))
+    packByCount(counts, capacity, blockSize)
+      .select(col("doc_id"), col("block"),
+        col("bin").cast("long").as("bin"), col("n_tokens"))
+  }
+
+  /** DuckDB CTEs replaying [[packBpe]] over the (doc_id, text) rows of
+    * `table` with doc_id < `maxDocId`: the BPE chain of
+    * [[Bpe.portableCtes]], `bp_counts` (doc_id, nt) and the pack walk
+    * `pk_p`. Needs `WITH RECURSIVE`.
+    */
+  def packBpeOracleCtes(table: String, maxDocId: Long, numMerges: Int,
+                        maxVocabWords: Int, capacity: Int,
+                        blockSize: Int): Seq[String] =
+    Bpe.portableCtes(table, "doc_id", "text", maxDocId, numMerges,
+      maxVocabWords) ++ Seq(
+      """bp_counts AS (
+        |  SELECT d.id AS doc_id,
+        |    CAST(coalesce(sum(len(e.toks)), 0) AS BIGINT) AS nt
+        |  FROM bp_d d
+        |  LEFT JOIN bp_w0 o ON o.id = d.id
+        |  LEFT JOIN bp_enc e ON e.w = o.w
+        |  GROUP BY 1)""".stripMargin,
+      packByCountOracleCtes("bp_counts", capacity, blockSize))
+
+  /** Dedup → tokenize → pack (Lee et al.: dedup BEFORE tokenization):
+    * ExactSubstr (w = 8) cleans `docs` (doc_id, text), then [[packBpe]]
+    * fits, encodes and packs the CLEANED text, so duplicated passages
+    * no longer vote in BPE training. Returns (clean (doc_id, text),
+    * packed); [[dedupTokenizePackOracleCtes]] replays both.
+    */
+  def dedupTokenizePack(docs: DataFrame, numMerges: Int,
+                        maxVocabWords: Int, capacity: Int,
+                        blockSize: Int): (DataFrame, DataFrame) = {
+    val clean = Dedup
+      .exactSubstrDedup(docs, "text", "doc_id", w = 8,
+        floor = false) // clean feeds the iterative BPE fit
+      .select(col("id").as("doc_id"), col("clean_text").as("text"))
+    (clean, packBpe(clean, numMerges, maxVocabWords, capacity, blockSize))
+  }
+
+  /** DuckDB CTEs replaying [[dedupTokenizePack]] over the `documents`
+    * rows with doc_id < `maxDocId`: the ExactSubstr chain (`es_`),
+    * `clean_docs` (doc_id, text) and [[packBpeOracleCtes]] on it.
+    * Needs `WITH RECURSIVE`.
+    */
+  def dedupTokenizePackOracleCtes(maxDocId: Long, numMerges: Int,
+                                  maxVocabWords: Int, capacity: Int,
+                                  blockSize: Int): Seq[String] =
+    Dedup.exactSubstrOracleCtes("es_",
+      s"documents WHERE doc_id < $maxDocId", w = 8) ++
+    Seq("clean_docs AS (\n  SELECT id AS doc_id, clean_text AS text " +
+      "FROM es_res)") ++
+    packBpeOracleCtes("clean_docs", maxDocId, numMerges, maxVocabWords,
+      capacity, blockSize)
+
   /** Per-source token-budget sampling: keep, for every source, the
     * hash-ordered prefix of documents whose RUNNING token total stays
     * within `budget` — "take ~1B tokens per source" as one declarative
@@ -617,48 +730,16 @@ object CorpusPipeline {
        |c1 AS (
        |  SELECT doc_id, source,
        |    array_to_string(list_transform(kept,
-       |      l -> array_to_string(l, ' ')), ' ') AS ctext
+       |      l -> array_to_string(l, ' ')), ' ') AS text
        |  FROM k WHERE len(kept) >= 5),
-       |words AS (SELECT doc_id AS id, source,
-       |    string_split(ctext, ' ') AS ws FROM c1),
-       |segs AS (
-       |  SELECT w.id, t.i AS span_idx,
-       |    md5(array_to_string(w.ws[t.i+1:t.i+8], ' ')) AS h
-       |  FROM words w,
-       |    LATERAL (SELECT unnest(range(greatest(
-       |      len(w.ws) - 7, 0))) AS i) t),
-       |occ AS (
-       |  SELECT id, span_idx,
-       |    row_number() OVER (PARTITION BY h
-       |      ORDER BY id, span_idx) AS rn,
-       |    count(*) OVER (PARTITION BY h) AS cnt
-       |  FROM segs),
-       |losers AS (
-       |  SELECT id, span_idx AS s, span_idx + 8 AS e
-       |  FROM occ WHERE cnt > 1 AND rn > 1),
-       |isl AS (
-       |  SELECT id, s, e,
-       |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
-       |        ORDER BY s, e
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-       |      THEN 1 ELSE 0 END AS brk
-       |  FROM losers),
-       |grp AS (
-       |  SELECT id, s, e,
-       |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-       |  FROM isl),
-       |spans AS (
-       |  SELECT id, g, min(s) AS s, max(e) AS e FROM grp
-       |  GROUP BY id, g),
-       |cutstats AS (
-       |  SELECT id, sum(e - s) AS cut FROM spans GROUP BY id),
+       |${Dedup.exactSubstrOracleCtes("es_", "c1", w = 8).mkString(",\n")},
        |surv AS (
-       |  SELECT w.id AS doc_id, w.source,
-       |    CAST(len(w.ws) - coalesce(ct.cut, 0) AS BIGINT) AS nt
-       |  FROM words w
-       |  LEFT JOIN cutstats ct ON ct.id = w.id
-       |  WHERE len(w.ws) - coalesce(ct.cut, 0) > 0),
+       |  SELECT c1.doc_id, c1.source,
+       |    CAST(len(w.ws) - coalesce(ct.cut_tokens, 0) AS BIGINT) AS nt
+       |  FROM c1
+       |  JOIN es_words w ON w.id = c1.doc_id
+       |  LEFT JOIN es_cutstats ct ON ct.id = c1.doc_id
+       |  WHERE len(w.ws) - coalesce(ct.cut_tokens, 0) > 0),
        |${temperatureSampleOracleCtes("surv", "source", "l22-", 100.0,
             "q4")}
        |SELECT stage, n_rows FROM (

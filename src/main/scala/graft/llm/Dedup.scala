@@ -715,6 +715,75 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("containment"))
   }
 
+  /** DuckDB CTE `name` (`idAs`, grams) replaying [[wordShingles]] and
+    * [[gramIndex]] over the rows of `from` (a FROM clause): the distinct
+    * lowercase word `n`-grams of `textCol`; a row with fewer than `n`
+    * tokens is ONE gram, its whole token string, and NULL text behaves
+    * as empty text (the gram ''; DuckDB's `array_to_string` of an empty
+    * list is NULL, so that case is spelled out).
+    */
+  def wordGramsCte(name: String, from: String, idCol: String,
+                   textCol: String, idAs: String, n: Int = 3): String =
+    s"""$name AS (
+       |  SELECT $idCol AS $idAs,
+       |    CASE WHEN len(toks) >= $n THEN
+       |      list_distinct(list_transform(range(1, len(toks) - ${n - 2}),
+       |        i -> array_to_string(toks[i:i+${n - 1}], ' ')))
+       |    WHEN len(toks) = 0 THEN ['']
+       |    ELSE [array_to_string(toks, ' ')] END AS grams
+       |  FROM (SELECT $idCol,
+       |      list_filter(string_split_regex(
+       |        trim(lower(coalesce($textCol, ''))), '\\s+'),
+       |        x -> strlen(x) > 0) AS toks
+       |    FROM $from))""".stripMargin
+
+  /** DuckDB CTEs replaying the inverted-index self-join of
+    * [[exactNgramNearDups]] and [[containmentPairs]] over `grams`, a
+    * [[wordGramsCte]] relation (doc_id, grams): `sizes` (doc_id, n),
+    * `inv` (doc_id, gram) and `pairs` (id_a, id_b, inter) for every
+    * doc pair sharing a gram.
+    */
+  def gramPairsCtes(grams: String): String =
+    s"""sizes AS (SELECT doc_id, len(grams) AS n FROM $grams),
+       |inv AS (SELECT doc_id, unnest(grams) AS gram FROM $grams),
+       |pairs AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+       |  FROM inv a JOIN inv b
+       |    ON a.gram = b.gram AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** [[gramPairsCtes]] plus `near` (id_a, id_b, jaccard): the
+    * [[exactNgramNearDups]] pairs at `threshold`.
+    */
+  def nearDupsOracleCtes(grams: String, threshold: Double): String =
+    s"""${gramPairsCtes(grams)},
+       |near AS (
+       |  SELECT id_a, id_b,
+       |    CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
+       |  FROM pairs
+       |  JOIN sizes sa ON sa.doc_id = id_a
+       |  JOIN sizes sb ON sb.doc_id = id_b
+       |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter)
+       |    >= $threshold)""".stripMargin
+
+  /** DuckDB CTEs replaying [[nearDupClusters]] over the (doc_id, text)
+    * rows of `from`: the word-trigram grams `t`, [[nearDupsOracleCtes]],
+    * the transitive closure `reach` and `cc` (id, rep) with rep the
+    * smallest id of the component. Needs `WITH RECURSIVE`.
+    */
+  def nearDupClustersOracleCtes(from: String, threshold: Double): String =
+    s"""${wordGramsCte("t", from, "doc_id", "text", "doc_id")},
+       |${nearDupsOracleCtes("t", threshold)},
+       |edges AS (SELECT id_a AS a, id_b AS b FROM near UNION ALL
+       |          SELECT id_b AS a, id_a AS b FROM near),
+       |reach AS (
+       |  SELECT doc_id AS src, doc_id AS dst FROM t
+       |  UNION
+       |  SELECT r.src, e2.b AS dst FROM reach r
+       |  JOIN edges e2 ON r.dst = e2.a),
+       |cc AS (SELECT src AS id, min(dst) AS rep FROM reach
+       |       GROUP BY src)""".stripMargin
+
   /** CCNet-style sub-document dedup (Wenzek et al., arXiv:1911.00359
     * dedups paragraphs; here the unit is a fixed `segWords`-word segment
     * since the corpus has no paragraph breaks): across the WHOLE corpus,
@@ -793,16 +862,7 @@ object Dedup {
     */
   def portableBandsOracleSql(table: String, idCol: String,
                              textCol: String): String =
-    s"""pm_t AS (
-       |  SELECT $idCol AS id,
-       |    CASE WHEN len(toks) >= 3 THEN
-       |      list_distinct(list_transform(range(1, len(toks) - 1),
-       |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-       |    ELSE [array_to_string(toks, ' ')] END AS grams
-       |  FROM (SELECT $idCol,
-       |      list_filter(string_split_regex(trim(lower($textCol)), '\\s+'),
-       |        x -> strlen(x) > 0) AS toks
-       |    FROM $table)),
+    s"""${wordGramsCte("pm_t", table, idCol, textCol, "id")},
        |pm_gs AS (
        |  SELECT id, CAST(concat('0x', substr(md5(gram), 1, 8)) AS BIGINT)
        |    % 2147483647 AS g
@@ -1238,6 +1298,130 @@ object Dedup {
         coalesce(col("n_spans_cut"), lit(0L)).as("n_spans_cut"),
         coalesce(col("n_tokens_removed"), lit(0L)).as("n_tokens_removed"))
   }
+
+  /** DuckDB CTEs replaying the ExactSubstr family over the (doc_id, text)
+    * rows of `docs` (a FROM clause), every name prefixed with `p`:
+    * [[exactSubstrDedup]] (with `minSpanChars`), or with `prior` rows
+    * [[exactSubstrWithIndex]] against their window digests. Ends in
+    * `{p}res` (id, clean_text, n_spans_cut, n_tokens_removed) for every
+    * doc of `docs`; `{p}words` (id, ws) and `{p}cutstats` (id, n_spans,
+    * cut_tokens) are there for callers too.
+    */
+  def exactSubstrOracleCtes(p: String, docs: String, w: Int,
+                            minSpanChars: Long = 0L,
+                            prior: Option[String] = None): Seq[String] = {
+    val spans =
+      if (minSpanChars <= 0L) Nil
+      else Seq(
+        s"""${p}long_spans AS (
+           |  SELECT sp.id, sp.s, sp.e
+           |  FROM ${p}spans sp JOIN ${p}words w ON w.id = sp.id
+           |  WHERE length(array_to_string(w.ws[sp.s+1:sp.e], ' '))
+           |    >= $minSpanChars)""".stripMargin)
+    substrLoserCtes(p, docs, w, prior) ++ substrSpanCtes(p) ++ spans ++
+      substrRebuildCtes(p,
+        if (spans.isEmpty) s"${p}spans" else s"${p}long_spans")
+  }
+
+  /** `name` (id, ws): the [[toWords]] split of `docs`' (doc_id, text). */
+  private def substrWordsCte(name: String, docs: String): String =
+    s"""$name AS (
+       |  SELECT doc_id AS id,
+       |    string_split(coalesce(text, ''), ' ') AS ws
+       |  FROM $docs)""".stripMargin
+
+  /** The [[toSegs]] scan of `words`: (id, span_idx, h). */
+  private def substrSegsSql(words: String, w: Int): String =
+    s"""SELECT w.id, t.i AS span_idx,
+       |    md5(array_to_string(w.ws[t.i+1:t.i+$w], ' ')) AS h
+       |  FROM $words w,
+       |    LATERAL (SELECT unnest(range(greatest(
+       |      len(w.ws) - ${w - 1}, 0))) AS i) t""".stripMargin
+
+  /** `{p}words`, `{p}segs` and `{p}losers` (id, s, e): the token interval
+    * of every window occurrence that loses the first-occurrence
+    * election. With `prior`, every occurrence of a window whose digest
+    * occurs in `prior` loses, and the other windows elect among
+    * themselves.
+    */
+  private def substrLoserCtes(p: String, docs: String, w: Int,
+                              prior: Option[String]): Seq[String] = {
+    val fromPrior = prior.map(pd => Seq(
+      substrWordsCte(s"${p}words_p", pd),
+      s"""${p}prior_h AS (
+         |  SELECT DISTINCT h FROM (
+         |  ${substrSegsSql(s"${p}words_p", w)}))""".stripMargin))
+    val electing = fromPrior.fold(s"${p}segs")(_ =>
+      s"${p}segs WHERE h NOT IN (SELECT h FROM ${p}prior_h)")
+    val priorLosers = fromPrior.fold("")(_ =>
+      s"""SELECT id, span_idx AS s, span_idx + $w AS e FROM ${p}segs
+         |  WHERE h IN (SELECT h FROM ${p}prior_h)
+         |  UNION ALL
+         |  """.stripMargin)
+    Seq(substrWordsCte(s"${p}words", docs)) ++ fromPrior.getOrElse(Nil) ++
+    Seq(
+      s"${p}segs AS (\n  ${substrSegsSql(s"${p}words", w)})",
+      s"""${p}occ AS (
+         |  SELECT id, span_idx,
+         |    row_number() OVER (PARTITION BY h
+         |      ORDER BY id, span_idx) AS rn,
+         |    count(*) OVER (PARTITION BY h) AS cnt
+         |  FROM $electing)""".stripMargin,
+      s"""${p}losers AS (
+         |  ${priorLosers}SELECT id, span_idx AS s, span_idx + $w AS e
+         |  FROM ${p}occ WHERE cnt > 1 AND rn > 1)""".stripMargin)
+  }
+
+  /** `{p}isl`, `{p}grp` and `{p}spans` (id, g, s, e): the interval union
+    * of `{p}losers` into maximal per-doc spans.
+    */
+  private def substrSpanCtes(p: String): Seq[String] = Seq(
+    s"""${p}isl AS (
+       |  SELECT id, s, e,
+       |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY id
+       |        ORDER BY s, e
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+       |      THEN 1 ELSE 0 END AS brk
+       |  FROM ${p}losers)""".stripMargin,
+    s"""${p}grp AS (
+       |  SELECT id, s, e,
+       |    sum(brk) OVER (PARTITION BY id ORDER BY s, e
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
+       |  FROM ${p}isl)""".stripMargin,
+    s"""${p}spans AS (
+       |  SELECT id, g, min(s) AS s, max(e) AS e FROM ${p}grp
+       |  GROUP BY id, g)""".stripMargin)
+
+  /** `{p}cutstats`, `{p}tok`, `{p}kept`, `{p}agg` and `{p}res`: the
+    * `spans` (id, s, e) cut from every `{p}words` doc and the text
+    * rebuilt in token order.
+    */
+  private def substrRebuildCtes(p: String, spans: String): Seq[String] =
+    Seq(
+      s"""${p}cutstats AS (
+         |  SELECT id, count(*) AS n_spans, sum(e - s) AS cut_tokens
+         |  FROM $spans GROUP BY id)""".stripMargin,
+      s"""${p}tok AS (
+         |  SELECT w.id, t.i AS idx, t.tk
+         |  FROM ${p}words w,
+         |    LATERAL (SELECT unnest(w.ws) AS tk,
+         |             unnest(range(len(w.ws))) AS i) t)""".stripMargin,
+      s"""${p}kept AS (
+         |  SELECT k.id, k.idx, k.tk
+         |  FROM ${p}tok k LEFT JOIN $spans sp
+         |    ON sp.id = k.id AND k.idx >= sp.s AND k.idx < sp.e
+         |  WHERE sp.id IS NULL)""".stripMargin,
+      s"""${p}agg AS (
+         |  SELECT id, string_agg(tk, ' ' ORDER BY idx) AS clean_text
+         |  FROM ${p}kept GROUP BY id)""".stripMargin,
+      s"""${p}res AS (
+         |  SELECT w.id, coalesce(a.clean_text, '') AS clean_text,
+         |    CAST(coalesce(c.n_spans, 0) AS BIGINT) AS n_spans_cut,
+         |    CAST(coalesce(c.cut_tokens, 0) AS BIGINT)
+         |      AS n_tokens_removed
+         |  FROM ${p}words w
+         |  LEFT JOIN ${p}agg a ON a.id = w.id
+         |  LEFT JOIN ${p}cutstats c ON c.id = w.id)""".stripMargin)
 
   def segmentDedup(df: DataFrame, textCol: String, idCol: String,
                    segWords: Int = 10): DataFrame = {

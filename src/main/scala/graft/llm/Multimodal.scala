@@ -1828,7 +1828,7 @@ object Multimodal {
        |      trim(coalesce(d.text, '')), '\\s+'),
        |      t -> strlen(t) > 0)) AS BIGINT) AS nt
        |  FROM canon c JOIN documents d ON d.doc_id = c.id),
-       |${packOracleCtes(256, blockSize)}
+       |${CorpusPipeline.packByCountOracleCtes("cnt", 256, blockSize)}
        |SELECT stage, n_rows FROM (
        |  SELECT '0_tar_members' AS stage,
        |    CAST(2 * count(*) AS BIGINT) AS n_rows FROM ids
@@ -1944,7 +1944,7 @@ object Multimodal {
        |      trim(coalesce(d.text, '')), '\\s+'),
        |      t -> strlen(t) > 0)) AS BIGINT) AS nt
        |  FROM canon c JOIN documents d ON d.doc_id = c.id),
-       |${packOracleCtes(384, blockSize)}
+       |${CorpusPipeline.packByCountOracleCtes("cnt", 384, blockSize)}
        |SELECT stage, n_rows FROM (
        |  SELECT '0_tar_members' AS stage,
        |    CAST(3 * count(*) AS BIGINT) AS n_rows FROM ids
@@ -1997,25 +1997,4 @@ object Multimodal {
        |      ORDER BY $unit * i.scale DESC, id) AS rk
        |  FROM cc JOIN ids i USING (id)),
        |canon AS (SELECT rep, id FROM rk WHERE rk = 1)""".stripMargin
-
-  /** Oracle CTEs pk_n/pk_p replaying [[CorpusPipeline.packByCount]]
-    * over `cnt` (doc_id, nt): the greedy per-block bin walk.
-    */
-  private def packOracleCtes(capacity: Int, blockSize: Int): String =
-    s"""pk_n AS (
-       |  SELECT doc_id, doc_id // $blockSize AS block, nt,
-       |    row_number() OVER (PARTITION BY doc_id // $blockSize
-       |      ORDER BY doc_id) AS rn
-       |  FROM cnt),
-       |pk_p AS (
-       |  SELECT doc_id, block, nt, rn, 0 AS bin, nt AS bt
-       |  FROM pk_n WHERE rn = 1
-       |  UNION ALL
-       |  SELECT n.doc_id, n.block, n.nt, n.rn,
-       |    CASE WHEN p.bt + n.nt <= $capacity THEN p.bin ELSE p.bin + 1
-       |      END,
-       |    CASE WHEN p.bt + n.nt <= $capacity THEN p.bt + n.nt ELSE n.nt
-       |      END
-       |  FROM pk_p p JOIN pk_n n
-       |    ON n.block = p.block AND n.rn = p.rn + 1)""".stripMargin
 }

@@ -654,16 +654,7 @@ object TextAnalysis {
   /** DuckDB replay of [[ngramNovelty]] (n = 3) over `table`. */
   def ngramNoveltyOracleSql(table: String, idCol: String,
                             textCol: String): String =
-    s"""WITH nv_t AS (
-       |  SELECT $idCol AS id,
-       |    CASE WHEN len(toks) >= 3 THEN
-       |      list_distinct(list_transform(range(1, len(toks) - 1),
-       |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-       |    ELSE [array_to_string(toks, ' ')] END AS grams
-       |  FROM (SELECT $idCol,
-       |      list_filter(string_split_regex(trim(lower($textCol)), '\\s+'),
-       |        x -> strlen(x) > 0) AS toks
-       |    FROM $table)),
+    s"""WITH ${Dedup.wordGramsCte("nv_t", table, idCol, textCol, "id")},
        |nv_g AS (
        |  SELECT id, CAST(concat('0x', substr(md5(gram), 1, 15)) AS BIGINT)
        |    AS g

@@ -133,7 +133,10 @@ class CorpusPipelineSpec extends SparkSpec {
     val docs = Seq(
       (0L, words(4)), (1L, words(4)), (2L, words(4)), (3L, words(4)),
       (4L, words(12)), // block 1, exceeds capacity → bin of its own
-      (5L, words(2))
+      (5L, words(2)),
+      (8L, ""),        // block 2: an empty doc opens bin 0 at 0 tokens,
+      (9L, words(12)), // so the empty bin takes the oversized doc
+      (10L, words(2))
     ).toDF("doc_id", "text")
     val out = CorpusPipeline.packSequences(docs, capacity = 10,
         blockSize = 4)
@@ -144,7 +147,9 @@ class CorpusPipelineSpec extends SparkSpec {
       (0L, 0L, 0, 4L), (1L, 0L, 0, 4L),   // 4+4 fits in 10
       (2L, 0L, 1, 4L), (3L, 0L, 1, 4L),   // 8+4 > 10 → new bin
       (4L, 1L, 0, 12L),                   // oversized: own bin, block 1
-      (5L, 1L, 1, 2L)), out.toSeq)
+      (5L, 1L, 1, 2L),
+      (8L, 2L, 0, 0L), (9L, 2L, 0, 12L),  // empty bin takes any doc
+      (10L, 2L, 1, 2L)), out.toSeq)
     // every bin except oversized ones is within capacity
     val binTotals = out.groupBy(r => (r._2, r._3)).map { case (_, rs) =>
       rs.map(_._4).sum
@@ -378,5 +383,20 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(stageReport("l22_commoncrawl_chain") == Seq(
       "0_warc_records" -> 300L, "1_c4_clean" -> 241L,
       "2_exact_substr" -> 231L, "3_sampled" -> 116L, "4_blocks" -> 15L))
+  }
+
+  test("BPE packing chains (l17, l18, l19): sf0.001 checksums pinned") {
+    // (rows, xxhash64 sum) through Bench.checksum, pinned so a changed
+    // bit in packBpe/dedupTokenizePack fails here without the oracle
+    val pins = Seq(
+      "l17_pack_bpe" -> (100L, -4937488396499647622L),
+      "l18_dedup_tokenize_pack" -> (300L, -5029257151394803335L),
+      "l19_full_prep_dag" -> (300L, -5418677412154292124L))
+    pins.foreach { case (name, (n, chk)) =>
+      val got = Bench.checksum(SparkEntry.queries(name)(spark, sf))
+      CacheScope.harness.release()
+      spark.catalog.clearCache()
+      assert(got == (n, Some(chk)), s"$name: $got")
+    }
   }
 }

@@ -155,4 +155,19 @@ class R8Spec extends SparkSpec {
     val junk = Seq((1L, Array[Byte](1, 2, 3))).toDF("id", "payload")
     assert(Multimodal.audioWindowEnergy(junk, "id").count() == 0)
   }
+
+  test("transition-graph entries (g01–g05): sf0.001 checksums pinned") {
+    // (rows, xxhash64 sum) through Bench.checksum over the shared
+    // Registry.transitionEdges graph
+    val pins = Seq(
+      "g01_pagerank" -> (15L, -5293393593440597544L),
+      "g02_personalized_pagerank" -> (15L, -199751356201758024L),
+      "g03_triangles" -> (1L, 3717988064596635477L),
+      "g04_label_propagation" -> (15L, 6627424830155450705L),
+      "g05_bfs_distances" -> (15L, 3554936871571739458L))
+    pins.foreach { case (name, (n, chk)) =>
+      val got = Bench.checksum(SparkEntry.queries(name)(spark, sf))
+      assert(got == (n, Some(chk)), s"$name: $got")
+    }
+  }
 }

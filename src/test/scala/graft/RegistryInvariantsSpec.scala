@@ -72,6 +72,39 @@ class RegistryInvariantsSpec extends SparkSpec {
     assert(Registry.queries.size == names.size)
   }
 
+  test("no oracle defines a CTE name twice in one WITH clause") {
+    // DuckDB rejects the statement ("Duplicate CTE name"); spliced CTE
+    // builders are where a clash comes from. Names are keyed by the
+    // innermost enclosing parenthesis, so nested WITHs are own scopes.
+    val cte = ("(?i)(?:\\bWITH(?:\\s+RECURSIVE)?|,)\\s*([A-Za-z_]\\w*)" +
+      "\\s+AS\\s+(?:MATERIALIZED\\s+)?\\(").r
+    def clashes(sql: String): Seq[String] = {
+      val scope = new Array[Int](sql.length)
+      var open = List(-1)
+      var quoted = false
+      sql.indices.foreach { i =>
+        sql(i) match {
+          case '\'' => quoted = !quoted
+          case '(' if !quoted => open = i :: open
+          case ')' if !quoted => open = open.tail
+          case _ =>
+        }
+        scope(i) = open.head
+      }
+      cte.findAllMatchIn(sql)
+        .map(m => (scope(m.start(1)), m.group(1).toLowerCase)).toSeq
+        .groupBy(identity).collect { case ((_, n), v) if v.size > 1 => n }
+        .toSeq
+    }
+    assert(clashes("WITH a AS (SELECT 1), b AS (WITH a AS (SELECT 2) " +
+      "SELECT * FROM a), a AS (SELECT 3) SELECT * FROM b") == Seq("a"))
+    val bad = Registry.oracleSql.toSeq.flatMap { case (name, sql) =>
+      clashes(sql).map(n => s"$name: $n")
+    }
+    assert(Registry.oracleSql.size == 320)
+    assert(bad.isEmpty, bad)
+  }
+
   test("rows-only ratchet: at most 17 entries lack an oracle") {
     val rowsOnly = Registry.all.filter(_.oracle.isEmpty).map(_.name)
     assert(rowsOnly.size <= 17,

@@ -987,18 +987,14 @@ object Dedup {
                               textCol: String,
                               threshold: Double): String =
     s"""WITH ${portableCandidatesOracleSql(table, idCol, textCol)},
-       |inv AS (SELECT id, unnest(grams) AS gram FROM pm_t),
-       |sizes AS (SELECT id, len(grams) AS n FROM pm_t),
-       |iv AS (
-       |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS inter
-       |  FROM inv a JOIN inv b ON a.gram = b.gram AND a.id < b.id
-       |  GROUP BY 1, 2),
+       |pm_td AS (SELECT id AS doc_id, grams FROM pm_t),
+       |${gramPairsCtes("pm_td")},
        |tp AS (
        |  SELECT i.id_a, i.id_b, CAST(i.inter AS BIGINT) AS inter,
        |    CAST(sa.n + sb.n - i.inter AS BIGINT) AS uni
-       |  FROM iv i
-       |  JOIN sizes sa ON sa.id = i.id_a
-       |  JOIN sizes sb ON sb.id = i.id_b
+       |  FROM pairs i
+       |  JOIN sizes sa ON sa.doc_id = i.id_a
+       |  JOIN sizes sb ON sb.doc_id = i.id_b
        |  WHERE CAST(i.inter AS DOUBLE)
        |    / (sa.n + sb.n - i.inter) >= $threshold)
        |SELECT tp.id_a, tp.id_b, tp.inter, tp.uni,

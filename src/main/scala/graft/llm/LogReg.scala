@@ -44,8 +44,7 @@ object LogReg {
     */
   def hashedCounts(docs: DataFrame, idCol: String, labelCol: String,
                    textCol: String, buckets: Int): DataFrame = {
-    val toks = expr(s"filter(split(lower(trim($textCol)), " +
-      "'\\\\s+'), x -> length(x) > 0)")
+    val toks = TextAnalysis.tokens(lower(col(textCol)))
     val grams = docs.select(col(idCol).as("id"),
         col(labelCol).cast("boolean").as("y"), explode(toks).as("tok"))
       .select(col("id"), col("y"),
@@ -66,8 +65,7 @@ object LogReg {
     */
   def features(docs: DataFrame, idCol: String, textCol: String,
                buckets: Int): DataFrame = {
-    val toks = expr(s"filter(split(lower(trim($textCol)), " +
-      "'\\\\s+'), x -> length(x) > 0)")
+    val toks = TextAnalysis.tokens(lower(col(textCol)))
     docs.select(col(idCol).as("id"), explode(toks).as("tok"))
       .select(col("id"),
         (conv(substring(md5(col("tok")), 1, 8), 16, 10)

@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Whitespace tokens (empty-safe). */
+  /** Whitespace tokens (empty-safe). `split` never emits a NULL element,
+    * so removing the empty strings (a leading tab or newline, or empty
+    * text) is the whole filter — a compiled expression, no lambda.
+    */
   def tokens(text: Column): Column =
-    filter(split(trim(text), "\\s+"), t => length(t) > 0)
+    array_remove(split(trim(text), "\\s+"), lit(""))
 
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
@@ -451,31 +454,36 @@ object TextAnalysis {
     * and the scoring pass.
     */
   private def knTris(df: DataFrame, idCol: String, textCol: String)
-      : DataFrame =
-    // NB deliberately NO Scans.withParallelismFloor here: the stat
-    // tables fan out into ~5 aggregation trees that each re-consume
-    // this frame via exchange reuse, so flooring the (small) train side
-    // multiplies task counts across every tree — measured 2.3 -> 3.8 s
-    // on t30 with the floor, the opposite of its effect on the
-    // single-consumer md5 scans (d26/d31/d29).
+      : DataFrame = {
+    // NB deliberately NO Scans.withParallelismFloor here: the train side
+    // is read once into the trigram-type exchange that every stat
+    // consumer reuses (the invariant is stated in knScoreFromStats), and
+    // a floor on that small side multiplied task counts across the stat
+    // trees — measured 2.3 -> 3.8 s on t30, the opposite of its effect
+    // on the single-consumer md5 scans (d26/d31/d29).
+    // Trigrams are the zip of three equal-length windows of the token
+    // array (compiled expressions, no per-element lambda); size >= 3
+    // keeps every slice length positive.
+    val n = size(col("ws")) - 2
     df.select(col(idCol).as("id"), tokens(lower(col(textCol))).as("ws"))
       .filter(size(col("ws")) >= 3)
-      .select(col("id"), explode(expr(
-        "transform(sequence(0, size(ws) - 3), " +
-          "i -> struct(element_at(ws, i + 1) AS w1, " +
-          "element_at(ws, i + 2) AS w2, element_at(ws, i + 3) AS w3))"))
-        .as("t"))
+      .select(col("id"), explode(arrays_zip(
+        slice(col("ws"), lit(1), n).as("w1"),
+        slice(col("ws"), lit(2), n).as("w2"),
+        slice(col("ws"), lit(3), n).as("w3"))).as("t"))
       .select(col("id"), col("t.w1").as("w1"), col("t.w2").as("w2"),
         col("t.w3").as("w3"))
+  }
 
   /** MERGEABLE Kneser-Ney statistics of a corpus slice — the LM member
     * of the incremental-stats family (t18's `bm25Stats` posture): one
     * frame of exact BIGINT counts,
     *
-    *   - kind='tri' rows: (w1, w2, w3) trigram TYPE counts — every
-    *     higher-order KN table (c2ctx/n1ctx/n1mid/nmidctx/nfol/n1low/
-    *     ntot) derives from this table alone, so persisting it persists
-    *     the whole model;
+    *   - kind='tri' rows: (w1, w2, w3) trigram TYPE counts, words
+    *     never NULL and c >= 1 (the contract [[knScoreFromStats]]
+    *     states as filters) — every higher-order KN table (c2ctx/n1ctx/
+    *     n1mid/nmidctx/nfol/n1low/ntot) derives from this table alone,
+    *     so persisting it persists the whole model;
     *   - kind='uni' rows: (w1=word, NULL, NULL) unigram token counts —
     *     the vocabulary size V is the ROW count of this slice (counts
     *     carry the additive merge; distinct-word identity rides the
@@ -504,7 +512,8 @@ object TextAnalysis {
   /** Lossless merge of two [[knStats]] frames (disjoint corpus parts):
     * grouped element-wise addition — trigram-type counts add, unigram
     * counts add, and the distinct-word rows union by key, so V (the
-    * uni row count) is exactly the merged vocabulary size.
+    * uni row count) is exactly the merged vocabulary size. Sums of
+    * counts >= 1 stay >= 1, so the merge keeps the tri-row contract.
     */
   def mergeKnStats(a: DataFrame, b: DataFrame): DataFrame = {
     require(a.columns.sameElements(b.columns),
@@ -515,7 +524,8 @@ object TextAnalysis {
 
   /** Persist / restore a [[knStats]] frame as a parquet artifact (the
     * saveVocab/loadVocab posture applied to the LM): fit once, fold new
-    * batches in, score forever from stats.
+    * batches in, score forever from stats. A load returns the rows
+    * saved, so it keeps the tri-row contract of what was saved.
     */
   def saveKnStats(stats: DataFrame, dir: String): Unit =
     stats.write.mode("overwrite").parquet(dir)
@@ -532,16 +542,27 @@ object TextAnalysis {
     */
   def knScoreFromStats(score: DataFrame, stats: DataFrame,
                        idCol: String, textCol: String): DataFrame = {
-    // NB: tri/mid are consumed by several derived tables, but caching
-    // them was MEASURED SLOWER at sf0.1 (3.2/5.3/3.0 s vs 2.1/3.0/2.6
-    // for t30/t31/t32): the InMemoryRelation barrier costs more than
-    // exchange-reuse re-aggregation of the small stat tables and
-    // interferes with the broadcast-join pipeline on the scoring side.
+    // tri feeds tri/ctx/mid and mid feeds mid/mctx/low/glob; each is
+    // computed ONCE because every consumer compiles the same subtree
+    // below its exchange and AQE reuses that exchange. That holds only
+    // while the consumers ask the same of it, so the stats contract —
+    // tri rows have non-null words and c >= 1, which knStats,
+    // mergeKnStats and loadKnStats of their output guarantee — is
+    // stated here as filters (no-ops on such stats): the left joins
+    // then infer no extra per-consumer IsNotNull, and `c3 > 0` /
+    // `n1mid > 0` keep the count in every consumer's column set.
+    // Caching tri/mid instead was MEASURED SLOWER at sf0.1 (3.2/5.3/3.0
+    // s vs 2.1/3.0/2.6 for t30/t31/t32): the InMemoryRelation barrier
+    // costs more than it saves and interferes with the broadcast-join
+    // pipeline on the scoring side.
     val tri = stats.filter(col("kind") === "tri")
       .select(col("w1"), col("w2"), col("w3"), col("c").as("c3"))
+      .filter(col("c3") > 0 && col("w1").isNotNull &&
+        col("w2").isNotNull && col("w3").isNotNull)
     val ctx = tri.groupBy("w1", "w2")
       .agg(sum(col("c3")).as("c2ctx"), count(lit(1)).as("n1ctx"))
     val mid = tri.groupBy("w2", "w3").agg(count(lit(1)).as("n1mid"))
+      .filter(col("n1mid") > 0)
     val mctx = mid.groupBy("w2")
       .agg(sum(col("n1mid")).as("nmidctx"), count(lit(1)).as("nfol"))
     val low = mid.groupBy("w3").agg(count(lit(1)).as("n1low"))

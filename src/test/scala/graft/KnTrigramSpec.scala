@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.llm.TextAnalysis
+import graft.model.Tables
 
 /** Kneser-Ney trigram LM: short-doc and unseen-ngram edges, backoff
   * ordering, and (near-)normalization of the smoothed distribution.
@@ -88,5 +92,41 @@ class KnTrigramSpec extends SparkSpec {
     val mergedStats = merged
       .orderBy("kind", "w1", "w2", "w3").collect().map(_.toSeq).toSeq
     assert(mergedStats == wholeStats)
+  }
+
+  test("KN entries (t30, t31, t32): sf0.001 checksums pinned") {
+    // (rows, xxhash64 sum) through Bench.checksum; t32 scores from
+    // folded stats what t30 scores from one fit, so the two agree
+    val pins = Seq(
+      "t30_kn_trigram_lm" -> (100L, -7054782743861372501L),
+      "t31_kn_perplexity_buckets" -> (500L, 7679093905631607998L),
+      "t32_kn_incremental" -> (100L, -7054782743861372501L))
+    pins.foreach { case (name, (n, chk)) =>
+      val got = Bench.checksum(SparkEntry.queries(name)(spark, sf))
+      assert(got == (n, Some(chk)), s"$name: $got")
+    }
+  }
+
+  test("one training pass: the train slice is scanned twice (trigram " +
+    "types, unigrams) and every other stat consumer reuses an exchange") {
+    val docs = Tables.table(spark, sf, "documents")
+    val out = TextAnalysis.knTrigramScores(docs.filter(col("doc_id") < 400),
+      docs.filter(col("doc_id") >= 400), "doc_id", "text")
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    object H extends AdaptiveSparkPlanHelper
+    val trainScans = H.collect(plan) {
+      case s: FileSourceScanExec
+          if s.dataFilters.exists(_.sql.contains("< 400")) => s
+    }
+    assert(trainScans.size <= 2, plan.toString)
+    // tri/ctx/mid share the trigram-type exchange (2 reuses) and
+    // mid/mctx/low/glob the mid exchange (3 reuses)
+    def reusedWith(cols: Set[String]) = H.collect(plan) {
+      case r: ReusedExchangeExec
+          if r.child.output.map(_.name).toSet == cols => r
+    }.size
+    assert(reusedWith(Set("w1", "w2", "w3", "count")) == 2, plan.toString)
+    assert(reusedWith(Set("w2", "w3", "count")) == 3, plan.toString)
   }
 }

@@ -51,7 +51,11 @@ class RegistryInvariantsSpec extends SparkSpec {
       "n15_sq_portable", "n16_pq_portable", "n18_ivf_append_portable",
       "n19_kmeans_portable", "n20_power_iteration", "n21_hard_negatives",
       "n22_matryoshka_topk", "n23_ivf_persisted",
-      "l15_cluster_balanced_sample")
+      "l15_cluster_balanced_sample",
+      // the KN trigram LM: its stat exchanges are reused across
+      // consumers, which must not depend on the shuffle width
+      "t30_kn_trigram_lm", "t31_kn_perplexity_buckets",
+      "t32_kn_incremental")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val base = names.map(n =>

@@ -42,18 +42,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
         val deadline = System.currentTimeMillis() + timeoutMs
         // A progress event is posted only after its batch COMMITTED. The
         // zombie loop keeps running EMPTY batches, so "some batch carried
-        // rows and the newest batch carried none" means every input file
-        // present at the call is in the sink — all any assertion reads.
-        // (Callers append input before starting the query, so the rows>0
-        // batch always exists.)
+        // rows and the two newest batches carried none" means every
+        // input file present at the call is in the sink, and a timer that
+        // fired just after the input batch has had a whole empty batch to
+        // commit its output — all any assertion reads. (Callers append
+        // input before starting the query, so the rows>0 batch always
+        // exists.)
         def caughtUp: Boolean = {
           val ps = q.recentProgress
-          ps.exists(_.numInputRows > 0) && ps.last.numInputRows == 0
+          ps.exists(_.numInputRows > 0) &&
+            ps.takeRight(2).count(_.numInputRows == 0) == 2
         }
         while (q.isActive && !caughtUp &&
             System.currentTimeMillis() < deadline)
           Thread.sleep(50)
         q.exception.foreach(throw _) // surface a stream death, not a timeout
+        // a query that terminated on its own without an exception has
+        // committed everything it will: that is a drain too
         assert(caughtUp || !q.isActive,
           s"stream ${q.id} did not drain within $timeoutMs ms " +
             s"(lastProgress=${Option(q.lastProgress).orNull})")

@@ -13,6 +13,26 @@ class TextAnalysisSpec extends SparkSpec {
   private def redact(s: String): String =
     Seq(s).toDF("t").select(TextAnalysis.redactPii(col("t"))).head.getString(0)
 
+  test("tokens equals the filter-lambda form on whitespace, empty, " +
+    "NULL and non-ASCII edges") {
+    val texts = Seq("  lead and trail  ", "a  b   c", "\ttab\tsep\t",
+      "line\nbreaks\n\nhere\n", " \t\n mixed \r\n ws ", "", "   ",
+      "\t", null,
+      "na\u00efve caf\u00e9 \u65e5\u672c\u8a9e \u00c5ngstr\u00f6m",
+      "\u00a0nbsp\u00a0kept\u00a0", "one")
+    val df = texts.toDF("t")
+    val got = df.select(TextAnalysis.tokens(col("t")),
+      filter(split(trim(col("t")), "\\s+"), x => length(x) > 0))
+      .collect()
+    assert(got.length == texts.length)
+    got.zip(texts).foreach { case (r, t) =>
+      assert(Option(r.getSeq[String](0)) == Option(r.getSeq[String](1)),
+        s"tokens(${Option(t).map(_.toSeq.map(_.toInt))})")
+    }
+    assert(got(1).getSeq[String](0) == Seq("a", "b", "c"))
+    assert(got(8).isNullAt(0))
+  }
+
   test("emails, IPs, and phones redact to typed placeholders") {
     assert(redact("mail a.b+c@d-e.org now") == "mail <EMAIL> now")
     assert(redact("host 192.168.0.1 down") == "host <IP> down")

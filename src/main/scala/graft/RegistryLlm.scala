@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Boilerplate, Bpe, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.llm.TextAnalysis.{langIdSql, punctRatioSql, qualityFeaturesSql,
+  qualityScoreSql, stopwordRatioSql, tokenCountSql, tokensSql}
 import graft.streaming.EventStream
 import Registry._
 
@@ -36,8 +38,7 @@ object RegistryLlm {
     }.mkString(" ||\n    ")
     s"""WITH tk_sh AS (
        |  SELECT doc_id AS id,
-       |    unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-       |      x -> strlen(x) > 0)) AS tok
+       |    unnest(${tokensSql("lower(text)")}) AS tok
        |  FROM $table WHERE $pred),
        |hh_sh AS (SELECT id, md5(tok) AS h FROM tk_sh),
        |vt_sh AS (SELECT id,
@@ -56,21 +57,17 @@ object RegistryLlm {
           TextAnalysis.charCount(col("text")).as("n_chars_calc"),
           TextAnalysis.meanWordLength(col("text")).as("mean_word_len"))
         .orderBy("doc_id"),
-      // `list_filter(strlen > 0)` mirrors Spark's empty-safe tokenizer:
-      // a bare string_split_regex yields [''] (len 1) on empty/whitespace
-      // text, so counts and the mean divisor would diverge on empty docs.
-      Some("""WITH r AS (
+      Some(s"""WITH r AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(text), '\s+'),
-             |      x -> strlen(x) > 0) AS toks,
+             |    ${tokensSql("text")} AS toks,
              |    text
              |  FROM documents)
              |SELECT doc_id,
              |  CAST(len(toks) AS BIGINT) AS n_tokens,
              |  CAST(len(regexp_extract_all(text,
-             |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpeish,
-             |  CAST(strlen(text) AS BIGINT) AS n_chars_calc,
-             |  CAST(coalesce(list_sum(list_transform(toks, x -> strlen(x))),
+             |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_bpeish,
+             |  CAST(length(text) AS BIGINT) AS n_chars_calc,
+             |  CAST(coalesce(list_sum(list_transform(toks, x -> length(x))),
              |      0) AS BIGINT)
              |    / CAST(greatest(len(toks), 1) AS BIGINT) AS mean_word_len
              |FROM r ORDER BY doc_id""".stripMargin)),
@@ -82,29 +79,13 @@ object RegistryLlm {
           TextAnalysis.punctRatio(col("text")).as("punct_ratio"),
           TextAnalysis.qualityScore(col("text")).as("quality"))
         .orderBy("doc_id"),
-      Some("""WITH r AS (
-             |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      x -> strlen(x) > 0)) AS BIGINT)
-             |      AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-             |      AS BIGINT) AS npunct,
-             |    CAST(strlen(text) AS BIGINT) AS nchars
-             |  FROM documents),
-             |m AS (
-             |  SELECT doc_id, n, nchars, npunct,
-             |    CAST(len(list_filter(ltoks, x -> x IN ('the','a','an','and',
-             |      'or','of','to','in','is','it'))) AS BIGINT) AS nsw
-             |  FROM r)
+      Some(s"""WITH m AS (
+             |  SELECT doc_id, ${qualityFeaturesSql("text")}
+             |  FROM documents)
              |SELECT doc_id,
-             |  nsw / greatest(n, 1) AS stopword_ratio,
-             |  npunct / greatest(nchars, 1) AS punct_ratio,
-             |  (CAST(n >= 10 AND n <= 100000 AS INT)
-             |   + CAST(nsw / greatest(n, 1) >= 0.01 AS INT)
-             |   + CAST(npunct / greatest(nchars, 1) <= 0.2 AS INT)) / 3.0
-             |    AS quality
+             |  $stopwordRatioSql AS stopword_ratio,
+             |  $punctRatioSql AS punct_ratio,
+             |  $qualityScoreSql AS quality
              |FROM m ORDER BY doc_id""".stripMargin)),
 
     // ---- T3: language ID (stopword-hit argmax; DuckDB struct-sort
@@ -113,35 +94,17 @@ object RegistryLlm {
       (s, dir) => t(s, dir, "documents").select(col("doc_id"), col("lang"),
           TextAnalysis.langId(col("text")).as("lang_pred"))
         .orderBy("doc_id"),
-      Some("""WITH r AS (
-             |  SELECT doc_id, lang,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> strlen(x) > 0) AS ltoks
-             |  FROM documents)
-             |SELECT doc_id, lang,
-             |  list_sort([
-             |    {'hits': len(list_filter(ltoks, x -> x IN ('der','die',
-             |      'und','das','nicht','ist','ich','ein'))), 'lang': 'de'},
-             |    {'hits': len(list_filter(ltoks, x -> x IN ('the','and',
-             |      'of','to','is','in','that','it'))), 'lang': 'en'},
-             |    {'hits': len(list_filter(ltoks, x -> x IN ('el','la','de',
-             |      'que','y','en','los','del'))), 'lang': 'es'},
-             |    {'hits': len(list_filter(ltoks, x -> x IN ('le','la','les',
-             |      'des','est','une','dans','que'))), 'lang': 'fr'},
-             |    {'hits': len(list_filter(ltoks, x -> x IN ('的','是','了',
-             |      '在','我','有','和','不'))), 'lang': 'zh'}
-             |  ])[-1]['lang'] AS lang_pred
-             |FROM r ORDER BY doc_id""".stripMargin)),
+      Some(s"""SELECT doc_id, lang, ${langIdSql("text")} AS lang_pred
+             |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // ---- T4: document fingerprint -------------------------------------------
     Q("t04_fingerprint",
       (s, dir) => t(s, dir, "documents").select(col("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id"),
-      Some("""SELECT doc_id,
-             |  md5(array_to_string(list_sort(list_distinct(list_filter(
-             |    string_split_regex(trim(lower(text)), '\s+'),
-             |    x -> strlen(x) > 0))), ' ')) AS fp
+      Some(s"""SELECT doc_id,
+             |  md5(array_to_string(list_sort(list_distinct(
+             |    ${tokensSql("lower(text)")})), ' ')) AS fp
              |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // ---- T5: PII redaction (corpus hygiene) — deterministic fake PII
@@ -223,15 +186,8 @@ object RegistryLlm {
             Dedup.ngramJaccard(col("a.text"), col("b.text"), 3).as("jaccard"))
           .orderBy("id_a")
       },
-      Some("""WITH g AS (
-             |  SELECT doc_id,
-             |    list_distinct(list_transform(
-             |      range(1, greatest(len(toks) - 1, 2)),
-             |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             |      AS grams
-             |  FROM (SELECT doc_id,
-             |    string_split_regex(trim(lower(text)), '\s+') AS toks
-             |    FROM documents))
+      Some(s"""WITH ${Dedup.wordGramsCte("g", "documents", "doc_id",
+                 "text", "doc_id")}
              |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              |  CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
              |    greatest(len(list_distinct(list_concat(a.grams, b.grams))), 1)
@@ -393,28 +349,11 @@ object RegistryLlm {
       },
       Some(s"""WITH RECURSIVE ${Dedup.nearDupClustersOracleCtes(
                  "documents WHERE doc_id < 500", 0.5)},
-             |q0 AS (
-             |  SELECT doc_id AS id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-             |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-             |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
-             |      AS BIGINT) AS npunct,
-             |    CAST(strlen(text) AS BIGINT) AS nchars
-             |  FROM documents WHERE doc_id < 500),
              |q1 AS (
-             |  SELECT id, n, nchars, npunct,
-             |    CAST(len(list_filter(ltoks, x -> x IN ('the','a','an','and',
-             |      'or','of','to','in','is','it'))) AS BIGINT) AS nsw
-             |  FROM q0),
+             |  SELECT doc_id AS id, ${qualityFeaturesSql("text")}
+             |  FROM documents WHERE doc_id < 500),
              |scored AS (
-             |  SELECT id,
-             |    (CAST(n >= 10 AND n <= 100000 AS INT)
-             |     + CAST(nsw / greatest(n, 1) >= 0.01 AS INT)
-             |     + CAST(npunct / greatest(nchars, 1) <= 0.2 AS INT)) / 3.0
-             |      AS quality,
-             |    nchars AS len
+             |  SELECT id, $qualityScoreSql AS quality, nchars AS len
              |  FROM q1)
              |SELECT rep, id AS canonical, quality FROM (
              |  SELECT cc.rep, cc.id, scored.quality,
@@ -432,11 +371,9 @@ object RegistryLlm {
           t(s, dir, "documents").filter(col("doc_id") < 500),
           "text", "doc_id", threshold = 0.8)
         .orderBy("id_a", "id_b"),
-      Some("""WITH tf AS (
+      Some(s"""WITH tf AS (
              |  SELECT doc_id AS id, token, count(*) AS tf FROM (
-             |    SELECT doc_id, unnest(list_filter(
-             |      string_split_regex(trim(lower(text)), '\s+'),
-             |      t -> strlen(t) > 0)) AS token
+             |    SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS token
              |    FROM documents WHERE doc_id < 500)
              |  GROUP BY 1, 2),
              |norms AS (SELECT id, sum(tf * tf) AS n2 FROM tf GROUP BY 1),
@@ -534,35 +471,11 @@ object RegistryLlm {
       Some(s"""WITH base AS (
              |  SELECT doc_id, text FROM documents WHERE doc_id < 500),
              |feat AS (
-             |  SELECT doc_id, text,
-             |    list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-             |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-             |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
-             |      AS BIGINT) AS npunct,
-             |    CAST(strlen(text) AS BIGINT) AS nchars
+             |  SELECT doc_id, text, ${qualityFeaturesSql("text")},
+             |    ${langIdSql("text")} AS lang_pred
              |  FROM base),
              |q AS (
-             |  SELECT doc_id, text, ltoks,
-             |    (CAST(n >= 10 AND n <= 100000 AS INT)
-             |     + CAST(CAST(len(list_filter(ltoks, x -> x IN ('the','a',
-             |         'an','and','or','of','to','in','is','it'))) AS BIGINT)
-             |         / greatest(n, 1) >= 0.01 AS INT)
-             |     + CAST(npunct / greatest(nchars, 1) <= 0.2 AS INT)) / 3.0
-             |      AS quality,
-             |    list_sort([
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('der','die',
-             |        'und','das','nicht','ist','ich','ein'))), 'lang': 'de'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('the','and',
-             |        'of','to','is','in','that','it'))), 'lang': 'en'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('el','la','de',
-             |        'que','y','en','los','del'))), 'lang': 'es'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('le','la',
-             |        'les','des','est','une','dans','que'))), 'lang': 'fr'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('的','是','了',
-             |        '在','我','有','和','不'))), 'lang': 'zh'}
-             |    ])[-1]['lang'] AS lang_pred
+             |  SELECT doc_id, text, lang_pred, $qualityScoreSql AS quality
              |  FROM feat),
              |dedup AS (
              |  SELECT doc_id, text FROM q
@@ -585,35 +498,11 @@ object RegistryLlm {
       Some(s"""WITH base AS (
              |  SELECT doc_id, text FROM documents WHERE doc_id < 500),
              |feat AS (
-             |  SELECT doc_id, text,
-             |    list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-             |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-             |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
-             |      AS BIGINT) AS npunct,
-             |    CAST(strlen(text) AS BIGINT) AS nchars
+             |  SELECT doc_id, text, ${qualityFeaturesSql("text")},
+             |    ${langIdSql("text")} AS lang_pred
              |  FROM base),
              |q AS (
-             |  SELECT doc_id, text, ltoks,
-             |    (CAST(n >= 10 AND n <= 100000 AS INT)
-             |     + CAST(CAST(len(list_filter(ltoks, x -> x IN ('the','a',
-             |         'an','and','or','of','to','in','is','it'))) AS BIGINT)
-             |         / greatest(n, 1) >= 0.01 AS INT)
-             |     + CAST(npunct / greatest(nchars, 1) <= 0.2 AS INT)) / 3.0
-             |      AS quality,
-             |    list_sort([
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('der','die',
-             |        'und','das','nicht','ist','ich','ein'))), 'lang': 'de'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('the','and',
-             |        'of','to','is','in','that','it'))), 'lang': 'en'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('el','la','de',
-             |        'que','y','en','los','del'))), 'lang': 'es'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('le','la',
-             |        'les','des','est','une','dans','que'))), 'lang': 'fr'},
-             |      {'hits': len(list_filter(ltoks, x -> x IN ('的','是','了',
-             |        '在','我','有','和','不'))), 'lang': 'zh'}
-             |    ])[-1]['lang'] AS lang_pred
+             |  SELECT doc_id, text, lang_pred, $qualityScoreSql AS quality
              |  FROM feat),
              |dedup AS (
              |  SELECT doc_id, text FROM q
@@ -640,10 +529,9 @@ object RegistryLlm {
       (s, dir) => graft.llm.CorpusPipeline.dropLengthOutliers(
           t(s, dir, "documents"))
         .select(col("doc_id")).orderBy("doc_id"),
-      Some("""WITH n AS (
+      Some(s"""WITH n AS (
              |  SELECT doc_id,
-             |    len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0)) AS nt
+             |    len(${tokensSql("text")}) AS nt
              |  FROM documents),
              |f AS (
              |  SELECT quantile_cont(nt, 0.25) AS q1,
@@ -690,10 +578,9 @@ object RegistryLlm {
           t(s, dir, "documents"), budget = 1200L)
         .select(col("doc_id"), col("source"), col("cum_tokens"))
         .orderBy("doc_id"),
-      Some("""WITH n AS (
+      Some(s"""WITH n AS (
              |  SELECT doc_id, source,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0)) AS BIGINT) AS nt
+             |    ${tokenCountSql("text")} AS nt
              |  FROM documents)
              |SELECT doc_id, source, cum_tokens FROM (
              |  SELECT doc_id, source,
@@ -711,28 +598,10 @@ object RegistryLlm {
       (s, dir) => graft.llm.CorpusPipeline.epochRepeat(
           t(s, dir, "documents"))
         .orderBy("doc_id", "epoch"),
-      Some("""WITH r AS (
-             |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> strlen(x) > 0) AS ltoks,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-             |      AS BIGINT) AS npunct,
-             |    CAST(strlen(text) AS BIGINT) AS nchars
+      Some(s"""WITH m AS (
+             |  SELECT doc_id, ${qualityFeaturesSql("text")}
              |  FROM documents),
-             |m AS (
-             |  SELECT doc_id, n, nchars, npunct,
-             |    CAST(len(list_filter(ltoks, x -> x IN ('the','a','an','and',
-             |      'or','of','to','in','is','it'))) AS BIGINT) AS nsw
-             |  FROM r),
-             |q AS (
-             |  SELECT doc_id,
-             |    (CAST(n >= 10 AND n <= 100000 AS INT)
-             |     + CAST(nsw / greatest(n, 1) >= 0.01 AS INT)
-             |     + CAST(npunct / greatest(nchars, 1) <= 0.2 AS INT)) / 3.0
-             |      AS quality
-             |  FROM m),
+             |q AS (SELECT doc_id, $qualityScoreSql AS quality FROM m),
              |rep AS (
              |  SELECT doc_id,
              |    CAST(CASE WHEN quality > 0.9 THEN 3
@@ -1192,10 +1061,9 @@ object RegistryLlm {
         .orderBy("doc_id"),
       // identical sliding-gram construction: tokens of lower(text), grams
       // with multiplicity kept, distinct only where the measure needs it
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      t -> strlen(t) > 0) AS lt
+             |    ${tokensSql("lower(text)")} AS lt
              |  FROM documents),
              |grams AS (
              |  SELECT doc_id,
@@ -1220,10 +1088,9 @@ object RegistryLlm {
     //      tokenizer-training input; integer-exact, global top-k ----------
     Q("t07_vocab",
       (s, dir) => TextAnalysis.vocabulary(t(s, dir, "documents"), "text", 100),
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      t -> strlen(t) > 0) AS lt
+             |    ${tokensSql("lower(text)")} AS lt
              |  FROM documents),
              |occ AS (
              |  SELECT token, count(*) AS occurrences FROM (
@@ -1243,10 +1110,9 @@ object RegistryLlm {
       (s, dir) => TextAnalysis.topTermsPerDoc(
           t(s, dir, "documents"), "doc_id", "text", 3)
         .orderBy("doc_id", "rank"),
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      t -> strlen(t) > 0) AS lt
+             |    ${tokensSql("lower(text)")} AS lt
              |  FROM documents),
              |tf AS (
              |  SELECT doc_id, token, count(*) AS tf FROM (
@@ -1279,11 +1145,9 @@ object RegistryLlm {
           (col("vocab_size").cast("double") / col("n_tokens"))
             .as("type_token_ratio"))
       },
-      Some("""WITH occ AS (
+      Some(s"""WITH occ AS (
              |  SELECT token, count(*) AS occ FROM (
-             |    SELECT unnest(list_filter(
-             |      string_split_regex(trim(lower(text)), '\s+'),
-             |      t -> strlen(t) > 0)) AS token
+             |    SELECT unnest(${tokensSql("lower(text)")}) AS token
              |    FROM documents)
              |  GROUP BY 1)
              |SELECT CAST(sum(occ) AS BIGINT) AS n_tokens,
@@ -1307,10 +1171,9 @@ object RegistryLlm {
           col("chunk"),
           TextAnalysis.tokenCount(col("chunk")).as("chunk_tokens"))
         .orderBy("doc_id", "chunk_idx"),
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(text), '\s+'),
-             |      t -> strlen(t) > 0) AS lt
+             |    ${tokensSql("text")} AS lt
              |  FROM documents),
              |c AS (
              |  SELECT doc_id, lt,
@@ -1333,10 +1196,9 @@ object RegistryLlm {
       (s, dir) => TextAnalysis.rarityScore(
           t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      t -> strlen(t) > 0) AS lt
+             |    ${tokensSql("lower(text)")} AS lt
              |  FROM documents),
              |tok AS (SELECT doc_id, unnest(lt) AS token FROM toks),
              |dfreq AS (
@@ -1465,10 +1327,8 @@ object RegistryLlm {
         val merges = Bpe.fit(docs, "text", numMerges = 60)
         Bpe.encode(docs, "doc_id", "text", merges)
           .join(docs.select(col("doc_id").as("id"), col("source"),
-            // same filtered word count as Bpe.words: \s+ split emits a
-            // phantom "" token on empty/leading-whitespace text
-            size(filter(split(lower(col("text")), "\\s+"),
-              x => x =!= "")).as("n_words")), "id")
+            // Bpe.words' word count (lowercasing never adds whitespace)
+            TextAnalysis.tokenCount(col("text")).as("n_words")), "id")
           .groupBy("source")
           .agg(count(lit(1)).as("docs"),
             sum(col("n_bpe_tokens").cast("long")).as("bpe_tokens"),

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.llm.TextAnalysis
+import graft.llm.TextAnalysis.{tokenCountSql, tokensSql}
 import Registry.{t, tf}
 
 /** Round-11 widening: the in-engine HTML table scan wired end-to-end
@@ -353,23 +355,22 @@ object RegistryR11 {
     Q("d29_dsir_select",
       (s, dir) => {
         val B = 1024
-        // unigrams + bigrams with multiplicity, built as ARRAY ops with
-        // the token array bound ONCE per row (the t22 one-element-
-        // transform trick) — ZERO shuffle before the bucket groupBy.
-        // The previous posexplode + lead(window) form paid an extra
-        // hash-exchange + sort on doc_id for the SAME gram multiset:
-        // at corpus scale that exchange carries every token occurrence.
+        // unigrams + bigrams with multiplicity, built as ARRAY ops over
+        // the token array bound once per row as a column — ZERO shuffle
+        // before the bucket groupBy. The previous posexplode +
+        // lead(window) form paid an extra hash-exchange + sort on doc_id
+        // for the SAME gram multiset: at corpus scale that exchange
+        // carries every token occurrence.
         val grams = graft.sources.Scans.withParallelismFloor(
             t(s, dir, "documents")
               .select(col("doc_id"), col("lang"), col("text")))
+          .select(col("doc_id"), col("lang"),
+            TextAnalysis.tokens(lower(col("text"))).as("ws"))
           .select(col("doc_id"), col("lang"), explode(expr(
-            """element_at(transform(
-              |  array(filter(split(lower(trim(text)), '\\s+'),
-              |        x -> length(x) > 0)),
-              |  ws -> concat(ws,
-              |    transform(slice(ws, 1, greatest(size(ws) - 1, 0)),
-              |      (w, i) -> concat_ws(' ', w, element_at(ws, i + 2)))))
-              |, 1)""".stripMargin)).as("gram"))
+            """concat(ws,
+              |  transform(slice(ws, 1, greatest(size(ws) - 1, 0)),
+              |    (w, i) -> concat_ws(' ', w, element_at(ws, i + 2))))"""
+              .stripMargin)).as("gram"))
           .select(col("doc_id"), col("lang"),
             (conv(substring(md5(col("gram")), 1, 8), 16, 10)
               .cast("long") % B).as("b"))
@@ -396,10 +397,9 @@ object RegistryR11 {
           .orderBy(col("weight").desc, col("doc_id"))
           .limit(100)
       },
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
              |  SELECT doc_id, lang,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> strlen(x) > 0) AS ts
+             |    ${tokensSql("lower(text)")} AS ts
              |  FROM documents),
              |grams AS (
              |  SELECT doc_id, lang, unnest(ts) AS gram FROM toks
@@ -550,8 +550,7 @@ object RegistryR11 {
     Q("l12_gopher_rules",
       (s, dir) => {
         val txt = col("text")
-        val words = expr(
-          "filter(split(trim(text), '\\\\s+'), x -> length(x) > 0)")
+        val words = col("ws")
         val lines = expr("filter(split(text, '\\n'), x -> length(x) > 0)")
         val stops = Seq("the", "be", "to", "of", "and", "that",
           "have", "with")
@@ -561,6 +560,7 @@ object RegistryR11 {
         // but setting-dependent (NULL-able) in DuckDB, a latent
         // cross-engine hash divergence. n_words > 0 mirrors identically.
         t(s, dir, "documents")
+          .select(col("doc_id"), txt, TextAnalysis.tokens(txt).as("ws"))
           .filter(size(words) > 0)
           .select(col("doc_id"),
             size(words).as("n_words"),
@@ -575,9 +575,7 @@ object RegistryR11 {
               "x -> length(x) > 0), l -> l rlike '\\\\.\\\\.\\\\.\\\\s*$')"))
               .as("n_ellip"),
             size(lines).as("n_lines"),
-            size(expr("filter(filter(split(trim(text), '\\\\s+'), " +
-              "x -> length(x) > 0), w -> w rlike '[A-Za-z]')"))
-              .as("n_alpha"),
+            size(filter(words, w => w.rlike("[A-Za-z]"))).as("n_alpha"),
             size(filter(
               array(stops.map(lit): _*),
               sw => array_contains(words, sw))).as("n_stop"))
@@ -603,27 +601,25 @@ object RegistryR11 {
               col("r_alphawords") * col("r_stopwords")).cast("int"))
           .orderBy("doc_id")
       },
-      Some("""WITH f AS (
+      Some(s"""WITH f AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(text), '\s+'),
-             |      x -> strlen(x) > 0) AS ws,
+             |    ${tokensSql("text")} AS ws,
              |    list_filter(string_split(text, chr(10)),
              |      x -> strlen(x) > 0) AS ls,
-             |    strlen(regexp_replace(text, '\s+', '', 'g')) AS n_chars,
+             |    length(regexp_replace(text, '\\s+', '', 'g')) AS n_chars,
              |    strlen(text) - strlen(replace(text, '#', ''))
              |      + (strlen(text) - strlen(replace(text, '...', ''))) // 3
              |      AS n_sym
              |  FROM documents
-             |  WHERE len(list_filter(string_split_regex(trim(text), '\s+'),
-             |    x -> strlen(x) > 0)) > 0),
+             |  WHERE len(${tokensSql("text")}) > 0),
              |c AS (
              |  SELECT doc_id, n_chars, n_sym,
              |    len(ws) AS n_words,
              |    len(ls) AS n_lines,
              |    len(list_filter(ls,
-             |      l -> regexp_matches(l, '^\s*[-*]'))) AS n_bullet,
+             |      l -> regexp_matches(l, '^\\s*[-*]'))) AS n_bullet,
              |    len(list_filter(ls,
-             |      l -> regexp_matches(l, '\.\.\.\s*$'))) AS n_ellip,
+             |      l -> regexp_matches(l, '\\.\\.\\.\\s*$$'))) AS n_ellip,
              |    len(list_filter(ws,
              |      w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha,
              |    len(list_filter(['the','be','to','of','and','that',
@@ -663,14 +659,14 @@ object RegistryR11 {
     //      IEEE divisions at the end. One map-side-combinable pass.
     Q("t24_fertility",
       (s, dir) => {
-        val words = expr(
-          "filter(split(trim(text), '\\\\s+'), x -> length(x) > 0)")
         // n_words > 0 guard (not raw length): see l12 — a whitespace-only
         // doc would otherwise feed w = 0 into chars_per_word's division
         // with engine-dependent Inf/NULL semantics.
         t(s, dir, "documents")
-          .filter(size(words) > 0)
-          .select(col("lang"), size(words).cast("long").as("w"),
+          .select(col("lang"), col("text"),
+            TextAnalysis.tokenCount(col("text")).as("w"))
+          .filter(col("w") > 0)
+          .select(col("lang"), col("w"),
             length(regexp_replace(col("text"), "\\s+", ""))
               .cast("long").as("c"))
           .groupBy("lang")
@@ -683,15 +679,13 @@ object RegistryR11 {
               .as("words_per_doc"))
           .orderBy("lang")
       },
-      Some("""WITH f AS (
+      Some(s"""WITH f AS (
              |  SELECT lang,
-             |    CAST(len(list_filter(string_split_regex(trim(text),
-             |      '\s+'), x -> strlen(x) > 0)) AS BIGINT) AS w,
-             |    CAST(strlen(regexp_replace(text, '\s+', '', 'g'))
+             |    ${tokenCountSql("text")} AS w,
+             |    CAST(length(regexp_replace(text, '\\s+', '', 'g'))
              |      AS BIGINT) AS c
              |  FROM documents
-             |  WHERE len(list_filter(string_split_regex(trim(text), '\s+'),
-             |    x -> strlen(x) > 0)) > 0)
+             |  WHERE len(${tokensSql("text")}) > 0)
              |SELECT lang, count(*) AS docs,
              |  CAST(sum(w) AS BIGINT) AS words,
              |  CAST(sum(c) AS BIGINT) AS chars,
@@ -1011,21 +1005,20 @@ object RegistryR11 {
       (s, dir) => {
         val page = t(s, dir, "documents")
           .filter(col("text").rlike("\\S"))
+          .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ws"))
           .select(col("doc_id"), expr(
-            """element_at(transform(
-              |  array(filter(split(trim(text), '\\s+'), x -> length(x) > 0)),
-              |  ws -> concat(
-              |    transform(sequence(0, cast(ceil(size(ws) / 7.0) as int) - 1),
-              |      i -> concat(
-              |        case when doc_id % 7 = 0 and i = 0
-              |          then 'javascript alert ' else '' end,
-              |        array_join(slice(ws, i * 7 + 1, 7), ' '),
-              |        case when (doc_id + i) % 3 != 0 then '.' else '' end)),
-              |    slice(array('lorem ipsum dolor sit amet.'), 1,
-              |      case when doc_id % 11 = 0 then 1 else 0 end),
-              |    slice(array('function f() { return 1; }.'), 1,
-              |      case when doc_id % 13 = 0 then 1 else 0 end))
-              |), 1)""".stripMargin).as("lines"))
+            """concat(
+              |  transform(sequence(0, cast(ceil(size(ws) / 7.0) as int) - 1),
+              |    i -> concat(
+              |      case when doc_id % 7 = 0 and i = 0
+              |        then 'javascript alert ' else '' end,
+              |      array_join(slice(ws, i * 7 + 1, 7), ' '),
+              |      case when (doc_id + i) % 3 != 0 then '.' else '' end)),
+              |  slice(array('lorem ipsum dolor sit amet.'), 1,
+              |    case when doc_id % 11 = 0 then 1 else 0 end),
+              |  slice(array('function f() { return 1; }.'), 1,
+              |    case when doc_id % 13 = 0 then 1 else 0 end))"""
+              .stripMargin).as("lines"))
         page.select(col("doc_id"),
             size(col("lines")).as("n_lines"),
             expr("""filter(lines, l ->
@@ -1043,11 +1036,10 @@ object RegistryR11 {
               col("has_brace") === 0).cast("int"))
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
              |  SELECT doc_id,
-             |    list_filter(regexp_split_to_array(trim(text), '\s+'),
-             |      x -> length(x) > 0) AS ws
-             |  FROM documents WHERE regexp_matches(text, '\S')),
+             |    ${tokensSql("text")} AS ws
+             |  FROM documents WHERE regexp_matches(text, '\\S')),
              |pg AS (
              |  SELECT doc_id, list_concat(list_concat(
              |    list_transform(range(0, CAST(ceil(len(ws) / 7.0) AS INT)),
@@ -1144,22 +1136,15 @@ object RegistryR11 {
     Q("t27_nb_quality_filter",
       (s, dir) => {
         val B = 512
-        val toks = expr(
-          "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-        // plant a PARTIAL class signal (a lang-marker token on even ids
-        // only) so the held-out verdicts genuinely vary: even docs are
+        // a PARTIAL class signal (a lang-marker token on even ids only)
+        // so the held-out verdicts genuinely vary: even docs are
         // separable, odd docs fall back to the prior — the synthetic
         // vocab itself is lang-independent.
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t27:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
+        val docs = graft.llm.LogReg.labelledDocs(t(s, dir, "documents"),
+          "t27:")
         val grams = docs
           .select(col("doc_id"), col("is_train"), col("is_pos"),
-            explode(toks).as("tok"))
+            explode(TextAnalysis.tokens(lower(col("text")))).as("tok"))
           .select(col("doc_id"), col("is_train"), col("is_pos"),
             (conv(substring(md5(col("tok")), 1, 8), 16, 10)
               .cast("long") % B).as("b"))
@@ -1199,17 +1184,7 @@ object RegistryR11 {
             (col("label") === col("pred")).cast("int"))
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (
-             |  SELECT doc_id,
-             |    (CAST(concat('0x', substr(md5('t27:' ||
-             |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-             |       % 100) < 70 AS is_train,
-             |    lang = 'en' AS is_pos,
-             |    list_filter(string_split_regex(trim(lower(
-             |      text || CASE WHEN doc_id % 2 = 0
-             |        THEN ' m' || lang ELSE '' END)), '\s+'),
-             |      x -> strlen(x) > 0) AS ts
-             |  FROM documents),
+      Some(s"""WITH ${graft.llm.LogReg.labelledDocsCte("t27:", "d")},
              |g AS (
              |  SELECT doc_id, is_train, is_pos,
              |    CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)
@@ -1432,14 +1407,13 @@ object RegistryR11 {
         // (the l12 battery keeps the full published list as FLAGS; a
         // DROP gate needs words the generator actually emits)
         val stops = Seq("the", "a")
-        val ws = expr(
-          "filter(split(trim(text), '\\\\s+'), x -> length(x) > 0)")
+        val ws = col("ws")
         val q1 = docs
           .select(col("doc_id"), col("lang"), col("text"),
+            TextAnalysis.tokens(col("text")).as("ws"))
+          .select(col("doc_id"), col("lang"), col("text"),
             size(ws).as("n_words"),
-            size(expr("filter(filter(split(trim(text), '\\\\s+'), " +
-              "x -> length(x) > 0), w -> w rlike '[A-Za-z]')"))
-              .as("n_alpha"),
+            size(filter(ws, w => w.rlike("[A-Za-z]"))).as("n_alpha"),
             size(filter(array(stops.map(lit): _*),
               sw => array_contains(ws, sw))).as("n_stop"))
           .filter(col("n_words").between(20, 100000) &&
@@ -1450,18 +1424,18 @@ object RegistryR11 {
             Window.partitionBy(md5(graft.plans.NfcNormalize(col("text"))))
               .orderBy("doc_id")))
           .filter(col("rn") === 1).drop("rn")
-        val gramsLower = expr(
-          """element_at(transform(
-            |  array(filter(split(lower(trim(text)), '\\s+'),
-            |        x -> length(x) > 0)),
-            |  ws -> transform(slice(ws, 1, greatest(size(ws) - 7, 0)),
-            |    (w, i) -> md5(concat_ws(' ', slice(ws, i + 1, 8)))))
-            |, 1)""".stripMargin)
-        val evalGrams = docs.filter(col("doc_id") % 97 === 0)
-          .select(explode(gramsLower).as("g")).distinct()
+        // lowercase 8-gram digests over the token array bound as a column
+        def grams8(df: org.apache.spark.sql.DataFrame) =
+          df.select(col("doc_id"),
+              TextAnalysis.tokens(lower(col("text"))).as("lws"))
+            .select(col("doc_id"), explode(expr(
+              """transform(slice(lws, 1, greatest(size(lws) - 7, 0)),
+                |  (w, i) -> md5(concat_ws(' ', slice(lws, i + 1, 8))))"""
+                .stripMargin)).as("g"))
+        val evalGrams = grams8(docs.filter(col("doc_id") % 97 === 0))
+          .select(col("g")).distinct()
         val train = q2.filter(col("doc_id") % 97 =!= 0)
-        val contaminated = train
-          .select(col("doc_id"), explode(gramsLower).as("g"))
+        val contaminated = grams8(train)
           .join(broadcast(evalGrams), "g").select("doc_id").distinct()
         val q3 = train.join(contaminated, Seq("doc_id"), "left_anti")
         val cp = graft.llm.CorpusPipeline
@@ -1485,8 +1459,7 @@ object RegistryR11 {
              |  FROM documents),
              |w AS (
              |  SELECT doc_id, lang, text,
-             |    list_filter(regexp_split_to_array(trim(text), '\\s+'),
-             |      x -> length(x) > 0) AS ws
+             |    ${tokensSql("text")} AS ws
              |  FROM d),
              |q1 AS (
              |  SELECT doc_id, lang, text,
@@ -1510,9 +1483,7 @@ object RegistryR11 {
              |      range(1, greatest(len(lws) - 6, 1)),
              |      i -> md5(array_to_string(lws[i : i + 7], ' '))) AS gs
              |  FROM (SELECT doc_id,
-             |          list_filter(
-             |            regexp_split_to_array(trim(lower(text)), '\\s+'),
-             |            x -> length(x) > 0) AS lws
+             |          ${tokensSql("lower(text)")} AS lws
              |        FROM d)),
              |eg AS (SELECT DISTINCT unnest(gs) AS g FROM lg
              |       WHERE doc_id % 97 = 0),

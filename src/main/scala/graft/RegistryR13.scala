@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.llm.TextAnalysis
+import graft.llm.TextAnalysis.{qualityFeaturesSql, qualityPhaseSql,
+  tokenCountSql}
 import Registry.t
 
 /** Round-13 widening: the Unigram-LM (SentencePiece-style) tokenizer —
@@ -281,11 +284,8 @@ object RegistryR13 {
         // NULL text behaves as empty on BOTH engines (nt = 0, not the
         // legacy size(NULL) = -1 that would poison the running sum
         // while DuckDB's NULL silently drops out of its window)
-        val wordsE = expr(
-          "filter(split(trim(coalesce(text, '')), '\\\\s+'), " +
-            "x -> length(x) > 0)")
         val base = docs.select(col("doc_id"), col("lang"),
-          size(wordsE).cast("long").as("nt"),
+          TextAnalysis.tokenCount(coalesce(col("text"), lit(""))).as("nt"),
           length(regexp_replace(coalesce(col("text"), lit("")),
             "\\s+", "")).cast("long").as("nc"))
         val bud = base.filter(col("nt") > 0)
@@ -312,13 +312,11 @@ object RegistryR13 {
             col("cum_tokens"), col("budget_tokens"))
           .orderBy("doc_id")
       },
-      Some("""WITH fb_n AS (
+      Some(s"""WITH fb_n AS (
              |  SELECT doc_id, lang,
-             |    CAST(len(list_filter(string_split_regex(
-             |      trim(coalesce(text, '')), '\s+'),
-             |      x -> strlen(x) > 0)) AS BIGINT) AS nt,
-             |    CAST(strlen(regexp_replace(coalesce(text, ''),
-             |      '\s+', '', 'g')) AS BIGINT) AS nc
+             |    ${tokenCountSql("coalesce(text, '')")} AS nt,
+             |    CAST(length(regexp_replace(coalesce(text, ''),
+             |      '\\s+', '', 'g')) AS BIGINT) AS nc
              |  FROM documents),
              |fb_bud AS (
              |  SELECT lang,
@@ -389,22 +387,8 @@ object RegistryR13 {
       capacity = 512, blockSize = 32)
     s"""WITH RECURSIVE ${ctes.mkString(",\n")},
        |ph AS (
-       |  SELECT doc_id,
-       |    CAST(CAST(n BETWEEN 10 AND 100000 AS INT)
-       |      + CAST(nsw / greatest(n, 1) >= 0.01 AS INT)
-       |      + CAST(npunct / greatest(nchars, 1) <= 0.2 AS INT) AS INT)
-       |      AS phase
-       |  FROM (
-       |    SELECT doc_id,
-       |      CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-       |        x -> strlen(x) > 0)) AS BIGINT) AS n,
-       |      CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))
-       |        AS BIGINT) AS npunct,
-       |      CAST(strlen(text) AS BIGINT) AS nchars,
-       |      CAST(len(list_filter(
-       |        string_split_regex(trim(lower(text)), '\\s+'),
-       |        x -> x IN ('the','a','an','and','or','of','to','in',
-       |                   'is','it'))) AS BIGINT) AS nsw
+       |  SELECT doc_id, $qualityPhaseSql AS phase
+       |  FROM (SELECT doc_id, ${qualityFeaturesSql("text")}
        |    FROM clean_docs)),
        |binph AS (
        |  SELECT p.block, p.bin, min(ph.phase) AS bin_phase

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.llm.TextAnalysis.tokensSql
 import Registry.{t, tf}
 
 /** Round-16 widening: the trained-classifier ARTIFACT (fit once →
@@ -383,10 +384,9 @@ object RegistryR16 {
           graft.llm.CorpusPipeline.sourceMasses(t(s, dir, "documents"),
             col("source")), num = 3, den = 5)
         .orderBy("source"),
-      Some("""WITH m AS (
-             |  SELECT source, CAST(sum(len(list_filter(
-             |    string_split_regex(trim(text), '\s+'),
-             |    t -> strlen(t) > 0))) AS BIGINT) AS mass
+      Some(s"""WITH m AS (
+             |  SELECT source,
+             |    CAST(sum(len(${tokensSql("text")})) AS BIGINT) AS mass
              |  FROM documents GROUP BY 1),
              |w AS (
              |  SELECT source, mass,

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchStore
-import graft.llm.Dedup
+import graft.llm.{Dedup, TextAnalysis}
+import graft.llm.TextAnalysis.tokensSql
 import Registry.{events, t}
 
 /** Round-6 widening: mergeable sketch stores (incremental distinct /
@@ -115,7 +116,7 @@ object RegistryR6 {
     Q("x24_array_surface",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val words = filter(split(col("text"), "\\s+"), w => w =!= "")
+        val words = TextAnalysis.tokens(col("text"))
         val lens = transform(col("words"), w => length(w).cast("long"))
         docs.select(col("doc_id"), words.as("words"))
           .select(col("doc_id"), col("words"), lens.as("lens"))
@@ -133,10 +134,9 @@ object RegistryR6 {
               (a, b) => a * b), lit(0L), (a, x) => a + x).as("rev_dot"))
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(text, '\s+'),
-             |      w -> w <> '') AS words
+             |    ${tokensSql("text")} AS words
              |  FROM documents),
              |l AS (
              |  SELECT doc_id, words,
@@ -1130,8 +1130,7 @@ object RegistryR6 {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val wc = docs.select(col("doc_id"),
-          explode(filter(split(col("text"), "\\s+"), w => w =!= ""))
-            .as("word"))
+          explode(TextAnalysis.tokens(col("text"))).as("word"))
           .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
         wc.groupBy("doc_id")
           .agg(sort_array(collect_list(struct(col("word"), col("cnt"))))
@@ -1152,10 +1151,9 @@ object RegistryR6 {
               9).as("entropy"))
           .orderBy("doc_id")
       },
-      Some("""WITH w AS (
+      Some(s"""WITH w AS (
              |  SELECT doc_id,
-             |    unnest(list_filter(string_split_regex(text, '\s+'),
-             |      x -> x <> '')) AS word
+             |    unnest(${tokensSql("text")}) AS word
              |  FROM documents),
              |wc AS (
              |  SELECT doc_id, word, count(*) AS cnt FROM w GROUP BY 1, 2),
@@ -1195,13 +1193,13 @@ object RegistryR6 {
           try_divide(col("n_chars").cast("double"), lit(4.0)).as("div4"),
           try_add(lit(Long.MaxValue), col("n_chars")).as("overflow_add"),
           try_mod(col("n_chars"), lit(0L)).as("mod0"),
-          try_element_at(filter(split(col("text"), "\\s+"),
-            w => w =!= ""), lit(1000000)).as("far_elem"),
+          try_element_at(TextAnalysis.tokens(col("text")), lit(1000000))
+            .as("far_elem"),
           try_to_date(lit("not-a-date"), "yyyy-MM-dd").cast("string")
             .as("bad_date"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id,
+      Some(s"""SELECT doc_id,
              |  CAST(NULL AS BIGINT) AS bad_parse,
              |  CAST(n_chars AS BIGINT) AS good_parse,
              |  CAST(NULL AS DOUBLE) AS div0,
@@ -1210,8 +1208,7 @@ object RegistryR6 {
              |    ELSE 9223372036854775807 + CAST(n_chars AS BIGINT) END
              |    AS overflow_add,
              |  CAST(NULL AS BIGINT) AS mod0,
-             |  CASE WHEN len(list_filter(string_split_regex(text, '\s+'),
-             |      x -> x <> '')) >= 1000000
+             |  CASE WHEN len(${tokensSql("text")}) >= 1000000
              |    THEN 'impossible' ELSE CAST(NULL AS VARCHAR) END
              |    AS far_elem,
              |  CAST(NULL AS VARCHAR) AS bad_date

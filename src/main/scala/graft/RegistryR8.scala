@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Multimodal, Ranking, TextAnalysis}
+import graft.llm.TextAnalysis.{qualityFeaturesSql, qualityPhaseSql, tokensSql}
 import Registry.{events, t, tf}
 
 /** Round-8 widening: retrieval-style corpus scoring (BM25, plus its
@@ -75,10 +76,9 @@ object RegistryR8 {
               .as("dedup_text"))
           .orderBy("doc_id")
       },
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
              |  SELECT doc_id,
-             |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> strlen(x) > 0) AS lt
+             |    ${tokensSql("lower(text)")} AS lt
              |  FROM documents),
              |pos AS (
              |  SELECT doc_id, unnest(lt) AS w,
@@ -389,11 +389,9 @@ object RegistryR8 {
         g.select(col("n"), round(slope, 9).as("zipf_slope"),
           round((sy - slope * sx) / nd, 9).as("zipf_intercept"))
       },
-      Some("""WITH freq AS (
+      Some(s"""WITH freq AS (
              |  SELECT w AS word, count(*) AS freq FROM (
-             |    SELECT unnest(list_filter(
-             |      string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> strlen(x) > 0)) AS w
+             |    SELECT unnest(${tokensSql("lower(text)")}) AS w
              |    FROM documents)
              |  GROUP BY 1),
              |ranked AS (
@@ -849,10 +847,8 @@ object RegistryR8 {
       (s, dir) => graft.llm.TextAnalysis.bigramLmScores(
           t(s, dir, "documents"), "doc_id", "text")
         .withColumnRenamed("id", "doc_id").orderBy("doc_id"),
-      Some("""WITH toks AS (
-             |  SELECT doc_id AS id, list_filter(
-             |    string_split_regex(trim(lower(text)), '\s+'),
-             |    x -> strlen(x) > 0) AS ws
+      Some(s"""WITH toks AS (
+             |  SELECT doc_id AS id, ${tokensSql("lower(text)")} AS ws
              |  FROM documents),
              |bg AS (
              |  SELECT id, ws[t.i + 1] AS w1, ws[t.i + 2] AS w2
@@ -894,23 +890,10 @@ object RegistryR8 {
           graft.llm.TextAnalysis.qualityPhase(col("text")).as("phase"),
           expr("(doc_id % 100000) * 2654435761 % 100000").as("pri"))
         .orderBy(col("phase").desc, col("pri"), col("doc_id")),
-      Some("""WITH r AS (
-             |  SELECT doc_id, text,
-             |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-             |      x -> strlen(x) > 0)) AS BIGINT) AS n,
-             |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-             |      AS BIGINT) AS npunct,
-             |    CAST(strlen(text) AS BIGINT) AS nchars,
-             |    CAST(len(list_filter(
-             |      string_split_regex(trim(lower(text)), '\s+'),
-             |      x -> x IN ('the','a','an','and','or','of','to','in',
-             |                 'is','it'))) AS BIGINT) AS nsw
+      Some(s"""WITH r AS (
+             |  SELECT doc_id, ${qualityFeaturesSql("text")}
              |  FROM documents)
-             |SELECT doc_id,
-             |  CAST(CAST(n BETWEEN 10 AND 100000 AS INT)
-             |    + CAST(nsw / greatest(n, 1) >= 0.01 AS INT)
-             |    + CAST(npunct / greatest(nchars, 1) <= 0.2 AS INT) AS INT)
-             |    AS phase,
+             |SELECT doc_id, $qualityPhaseSql AS phase,
              |  (doc_id % 100000) * 2654435761 % 100000 AS pri
              |FROM r ORDER BY phase DESC, pri, doc_id""".stripMargin)),
 
@@ -1375,10 +1358,8 @@ object RegistryR8 {
               .otherwise("tail").as("bucket"))
           .orderBy("doc_id")
       },
-      Some("""WITH toks AS (
-             |  SELECT doc_id AS id, list_filter(
-             |    string_split_regex(trim(lower(text)), '\s+'),
-             |    x -> strlen(x) > 0) AS ws
+      Some(s"""WITH toks AS (
+             |  SELECT doc_id AS id, ${tokensSql("lower(text)")} AS ws
              |  FROM documents),
              |bg AS (
              |  SELECT id, ws[t.i + 1] AS w1, ws[t.i + 2] AS w2

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.{AsOfJoin, Merge, RangeJoin}
 import graft.llm.{Dedup, Multimodal}
+import graft.llm.TextAnalysis.tokensSql
 import Registry.{decSum, events, t}
 
 /** Round-5 widening: interval-overlap join, snapshot diff, deterministic
@@ -14,6 +16,40 @@ import Registry.{decSum, events, t}
   * live in RegistryLlm with their ScalaTest quality gates.
   */
 object RegistryWide {
+
+  /** l09's quality logit (a34 ranks it): a trained linear classifier
+    * (weights are a model artifact, here fixed constants) over
+    * codegen'd features of non-empty `txt`. Its token count is the
+    * UNFILTERED whitespace split — a different feature from
+    * `TextAnalysis.tokens` (a leading tab or newline counts one more),
+    * kept as the model was fit.
+    */
+  private def qualityLogit(txt: Column): Column = {
+    val nTok = size(split(trim(txt), "\\s+")).cast("double")
+    val len = length(txt).cast("double")
+    val punct = (len - length(regexp_replace(txt, "[.,!?]", ""))
+      .cast("double")) / len
+    val upper = (len - length(regexp_replace(txt, "[A-Z]", ""))
+      .cast("double")) / len
+    ((nTok * 0.01) - (punct * 3.0)) + (upper * 1.5)
+  }
+
+  /** DuckDB replay of [[qualityLogit]] over `text`. DuckDB
+    * decimal-point literals are DECIMALs (exact arithmetic); Spark's are
+    * doubles — `::DOUBLE` makes both engines round identically at every
+    * step.
+    */
+  private[graft] val qualityLogitSql =
+    """((CAST(len(regexp_split_to_array(trim(text), '\s+'))
+      |      AS DOUBLE) * 0.01::DOUBLE)
+      |   - ((CAST(length(text)
+      |        - length(regexp_replace(text, '[.,!?]', '', 'g'))
+      |        AS DOUBLE) / CAST(length(text) AS DOUBLE))
+      |      * 3.0::DOUBLE))
+      |  + ((CAST(length(text)
+      |       - length(regexp_replace(text, '[A-Z]', '', 'g'))
+      |       AS DOUBLE) / CAST(length(text) AS DOUBLE))
+      |     * 1.5::DOUBLE)""".stripMargin
 
   def entries: Seq[Q] = Seq(
 
@@ -165,42 +201,16 @@ object RegistryWide {
     //      the output so the oracle compare stays bit-exact — exp()
     //      rounding differs across engines, +*/- does not ----------------
     Q("l09_quality_logit",
-      (s, dir) => {
-        val txt = col("text")
-        val nTok = size(split(trim(txt), "\\s+")).cast("double")
-        val len = length(txt).cast("double")
-        val punct = (len - length(regexp_replace(txt, "[.,!?]", ""))
-          .cast("double")) / len
-        val upper = (len - length(regexp_replace(txt, "[A-Z]", ""))
-          .cast("double")) / len
-        t(s, dir, "documents")
-          .filter(length(txt) > 0)
-          .select(col("doc_id"),
-            (((nTok * 0.01) - (punct * 3.0)) + (upper * 1.5)).as("logit"))
-          .withColumn("keep", (col("logit") > 0.4).cast("int"))
-          .orderBy("doc_id")
-      },
-      // DuckDB decimal-point literals are DECIMALs (exact arithmetic);
-      // Spark's are doubles — force ::DOUBLE so both engines round
-      // identically at every step.
-      Some("""WITH f AS (
-             |  SELECT doc_id,
-             |    CAST(len(regexp_split_to_array(trim(text), '\s+'))
-             |      AS DOUBLE) AS ntok,
-             |    CAST(length(text) AS DOUBLE) AS len,
-             |    CAST(length(text)
-             |      - length(regexp_replace(text, '[.,!?]', '', 'g'))
-             |      AS DOUBLE) AS np,
-             |    CAST(length(text)
-             |      - length(regexp_replace(text, '[A-Z]', '', 'g'))
-             |      AS DOUBLE) AS nu
+      (s, dir) => t(s, dir, "documents")
+        .filter(length(col("text")) > 0)
+        .select(col("doc_id"), qualityLogit(col("text")).as("logit"))
+        .withColumn("keep", (col("logit") > 0.4).cast("int"))
+        .orderBy("doc_id"),
+      Some(s"""WITH f AS (
+             |  SELECT doc_id, $qualityLogitSql AS logit
              |  FROM documents WHERE length(text) > 0)
-             |SELECT doc_id,
-             |  ((ntok * 0.01::DOUBLE) - ((np / len) * 3.0::DOUBLE))
-             |    + ((nu / len) * 1.5::DOUBLE) AS logit,
-             |  CAST((((ntok * 0.01::DOUBLE) - ((np / len) * 3.0::DOUBLE))
-             |    + ((nu / len) * 1.5::DOUBLE)) > 0.4::DOUBLE AS INT)
-             |    AS keep
+             |SELECT doc_id, logit,
+             |  CAST(logit > 0.4::DOUBLE AS INT) AS keep
              |FROM f ORDER BY doc_id""".stripMargin)),
 
     // ---- W17: rolling exact median — `percentile` as a WINDOW function
@@ -479,10 +489,8 @@ object RegistryWide {
           .select(explode(graft.llm.TextAnalysis.tokens(
             lower(col("text")))).as("token")),
         "token", k = 20),
-      Some("""SELECT token AS item, count(*) AS cnt FROM (
-             |  SELECT unnest(list_filter(
-             |    string_split_regex(trim(lower(text)), '\s+'),
-             |    t -> strlen(t) > 0)) AS token
+      Some(s"""SELECT token AS item, count(*) AS cnt FROM (
+             |  SELECT unnest(${tokensSql("lower(text)")}) AS token
              |  FROM documents)
              |GROUP BY 1 ORDER BY cnt DESC, item LIMIT 20""".stripMargin)),
 
@@ -661,9 +669,7 @@ object RegistryWide {
              |  SELECT doc_id, text FROM documents WHERE doc_id < 300
              |  UNION ALL
              |  SELECT doc_id + 1000 AS doc_id,
-             |    array_to_string(list_filter(
-             |      string_split_regex(trim(text), '\\s+'),
-             |      x -> strlen(x) > 0)[1:20], ' ') AS text
+             |    array_to_string(${tokensSql("text")}[1:20], ' ') AS text
              |  FROM documents WHERE doc_id < 300),
              |${Dedup.wordGramsCte("t", "corpus", "doc_id", "text", "doc_id")},
              |${Dedup.gramPairsCtes("t")}
@@ -857,17 +863,10 @@ object RegistryWide {
     //      however large the eval set ------------------------------------
     Q("a34_auc",
       (s, dir) => {
-        val txt = col("text")
-        val nTok = size(split(trim(txt), "\\s+")).cast("double")
-        val len = length(txt).cast("double")
-        val punct = (len - length(regexp_replace(txt, "[.,!?]", ""))
-          .cast("double")) / len
-        val upper = (len - length(regexp_replace(txt, "[A-Z]", ""))
-          .cast("double")) / len
         val scored = t(s, dir, "documents")
-          .filter(length(txt) > 0)
+          .filter(length(col("text")) > 0)
           .select(col("doc_id"), col("lang"),
-            (((nTok * 0.01) - (punct * 3.0)) + (upper * 1.5)).as("logit"))
+            qualityLogit(col("text")).as("logit"))
         val ranked = graft.etl.Ids.denseIds(scored,
           Seq(col("logit"), col("doc_id")), "rk")
         ranked.agg(
@@ -879,18 +878,8 @@ object RegistryWide {
             expr("CAST(pos_rank_sum - (n_pos * (n_pos + 1)) div 2 " +
               "AS DOUBLE) / CAST(n_pos * n_neg AS DOUBLE)").as("auc"))
       },
-      Some("""WITH f AS (
-             |  SELECT doc_id, lang,
-             |    ((CAST(len(regexp_split_to_array(trim(text), '\s+'))
-             |        AS DOUBLE) * 0.01::DOUBLE)
-             |     - ((CAST(length(text)
-             |          - length(regexp_replace(text, '[.,!?]', '', 'g'))
-             |          AS DOUBLE) / CAST(length(text) AS DOUBLE))
-             |        * 3.0::DOUBLE))
-             |    + ((CAST(length(text)
-             |         - length(regexp_replace(text, '[A-Z]', '', 'g'))
-             |         AS DOUBLE) / CAST(length(text) AS DOUBLE))
-             |       * 1.5::DOUBLE) AS logit
+      Some(s"""WITH f AS (
+             |  SELECT doc_id, lang, $qualityLogitSql AS logit
              |  FROM documents WHERE length(text) > 0),
              |r AS (
              |  SELECT lang,

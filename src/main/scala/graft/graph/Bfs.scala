@@ -43,6 +43,13 @@ object Bfs {
     require(maxHops >= 1, s"bfs: maxHops must be >= 1, got $maxHops")
     val big = maxHops + 1L // unreached sentinel; never overflows
     val eSel = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    // Every round reads dist_{i-1} twice and relies on exchange reuse;
+    // a nondeterministic seed set (rand()) defeats that reuse, so each
+    // consumer re-derives its input — 2^k recomputes for k hops, each
+    // with its own seeds. Checked on the analyzed expression: no job.
+    require(eSel.select(col("src").as("id")).select(seeds)
+        .queryExecution.analyzed.expressions.forall(_.deterministic),
+      s"bfs: the seeds predicate must be deterministic, got $seeds")
     // partition count derived from the edge relation's size estimate
     // (Ids.adaptiveParts): an explicit repartition(col) is AQE-exempt,
     // so a fixed count pins shuffle.partitions tasks onto every round's

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import TextAnalysis.tokensSql
+
 /** Byte-pair-encoding tokenizer — train and encode, Spark-first.
   *
   * Training follows the classic word-frequency formulation (Sennrich et
@@ -301,8 +303,7 @@ object Bpe {
     ctes += s"""bp_w0 AS MATERIALIZED (
                |  SELECT d.id, t.w, t.i
                |  FROM (SELECT id,
-               |      list_filter(string_split_regex(trim(txt), '\\s+'),
-               |        x -> strlen(x) > 0) AS ws FROM bp_d) d,
+               |      ${tokensSql("txt")} AS ws FROM bp_d) d,
                |    LATERAL (SELECT unnest(d.ws) AS w,
                |             unnest(range(len(d.ws))) AS i) t)""".stripMargin
     ctes += s"""bp_vocab AS MATERIALIZED (

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import TextAnalysis.{tokenCountSql, tokensSql}
+
 /** The end-to-end cleaning pass a training-data run actually executes,
   * composed from the engine's verified pieces so the WHOLE pipeline is
   * one declarative plan Catalyst can optimize across stage boundaries
@@ -348,8 +350,7 @@ object CorpusPipeline {
                               blockSize: Int): String =
     s"""pk_c AS (
        |  SELECT doc_id,
-       |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-       |      t -> strlen(t) > 0)) AS BIGINT) AS nt
+       |    ${tokenCountSql("text")} AS nt
        |  FROM $from),
        |${packByCountOracleCtes("pk_c", capacity, blockSize)}""".stripMargin
 
@@ -672,19 +673,17 @@ object CorpusPipeline {
       regexp_extract(col("target_uri"), "example\\.org/([^/]+)/", 1)
         .as("source"),
       decode(col("payload"), "UTF-8").as("text"))).toDF()
-    // C4-lite lines; ws binds ONCE per row (the one-element-transform
-    // trick). Four stage aggregates hang off the cleaned frame.
+    // C4-lite lines over the token array bound as a column. Four stage
+    // aggregates hang off the cleaned frame.
     val c1 = graft.CacheScope.harness.track(
       fromWarc.filter(col("text").rlike("\\S"))
+      .select(col("doc_id"), col("source"),
+        TextAnalysis.tokens(col("text")).as("ws"))
       .select(col("doc_id"), col("source"), expr(
-        """element_at(transform(
-          |  array(filter(split(trim(text), '\\s+'),
-          |        x -> length(x) > 0)),
-          |  ws -> filter(
-          |    transform(sequence(0,
-          |        cast(ceil(size(ws) / 7.0) as int) - 1),
-          |      i -> slice(ws, i * 7 + 1, 7)),
-          |    l -> size(l) >= 3)), 1)""".stripMargin).as("kept"))
+        """filter(
+          |  transform(sequence(0, cast(ceil(size(ws) / 7.0) as int) - 1),
+          |    i -> slice(ws, i * 7 + 1, 7)),
+          |  l -> size(l) >= 3)""".stripMargin).as("kept"))
       .filter(size(col("kept")) >= 5)
       .select(col("doc_id"), col("source"), expr(
         "array_join(transform(kept, l -> array_join(l, ' ')), ' ')")
@@ -718,8 +717,7 @@ object CorpusPipeline {
     s"""WITH d AS ($docsSql),
        |w0 AS (
        |  SELECT doc_id, source,
-       |    list_filter(regexp_split_to_array(trim(text), '\\s+'),
-       |      x -> length(x) > 0) AS ws
+       |    ${tokensSql("text")} AS ws
        |  FROM d WHERE regexp_matches(text, '\\S')),
        |k AS (
        |  SELECT doc_id, source,

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import TextAnalysis.tokensSql
+
 /** Deduplication operators for LLM training-data pipelines.
   *
   * Scale design: every near-dup path is banded-LSH — signatures are
@@ -732,9 +734,7 @@ object Dedup {
        |    WHEN len(toks) = 0 THEN ['']
        |    ELSE [array_to_string(toks, ' ')] END AS grams
        |  FROM (SELECT $idCol,
-       |      list_filter(string_split_regex(
-       |        trim(lower(coalesce($textCol, ''))), '\\s+'),
-       |        x -> strlen(x) > 0) AS toks
+       |      ${tokensSql(s"lower(coalesce($textCol, ''))")} AS toks
        |    FROM $from))""".stripMargin
 
   /** DuckDB CTEs replaying the inverted-index self-join of

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import TextAnalysis.tokensSql
+
 /** In-engine TRAINED quality classifier: fixed-iteration batch
   * gradient descent for logistic regression over hashed token-bucket
   * counts — the "train the filter on the corpus itself" story the
@@ -297,22 +299,28 @@ object LogReg {
       (col("m") > 0).cast("int").as("pred"),
       ((col("m") > 0) === col("y")).cast("int").as("correct"))
 
-  /** [[oracleCtes]] for a fit over [[labelledDocs]] of the `documents`
-    * table (256 buckets, 10 iterations, lrDen 4), `lr_d` included.
+  /** DuckDB CTE `name` (doc_id, is_train, is_pos, ts[]) replaying
+    * [[labelledDocs]] of the `documents` table, `ts` its lowercase
+    * tokens.
     */
-  def labelledOracleCtes(salt: String): Seq[String] =
-    s"""lr_d AS (
+  def labelledDocsCte(salt: String, name: String = "lr_d"): String = {
+    val text = "text || CASE WHEN doc_id % 2 = 0 THEN ' m' || lang " +
+      "ELSE '' END"
+    s"""$name AS (
        |  SELECT doc_id,
        |    (CAST(concat('0x', substr(md5('$salt' ||
        |       CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
        |       % 100) < 70 AS is_train,
        |    lang = 'en' AS is_pos,
-       |    list_filter(string_split_regex(trim(lower(
-       |      text || CASE WHEN doc_id % 2 = 0
-       |        THEN ' m' || lang ELSE '' END)), '\\s+'),
-       |      x -> strlen(x) > 0) AS ts
-       |  FROM documents)""".stripMargin +:
-      oracleCtes(buckets = 256, iters = 10, lrDen = 4L)
+       |    ${tokensSql(s"lower($text)")} AS ts
+       |  FROM documents)""".stripMargin
+  }
+
+  /** [[oracleCtes]] for a fit over [[labelledDocs]] of the `documents`
+    * table (256 buckets, 10 iterations, lrDen 4), `lr_d` included.
+    */
+  def labelledOracleCtes(salt: String): Seq[String] =
+    labelledDocsCte(salt) +: oracleCtes(buckets = 256, iters = 10, lrDen = 4L)
 
   /** Oracle CTE list replaying the ENTIRE fit — every margin, fast
     * sigmoid, gradient and weight update of every iteration — plus the

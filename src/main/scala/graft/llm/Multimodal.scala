@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import TextAnalysis.tokenCountSql
+
 /** Multimodal column handling: image/audio/video as opaque `binary`
   * columns with typed metadata, plus decode / feature-extract plumbing.
   *
@@ -1824,9 +1826,7 @@ object Multimodal {
     s"""WITH RECURSIVE ${chainIdsOracleCtes(bound, nKeys, 36)},
        |cnt AS (
        |  SELECT c.id AS doc_id,
-       |    64 + CAST(len(list_filter(string_split_regex(
-       |      trim(coalesce(d.text, '')), '\\s+'),
-       |      t -> strlen(t) > 0)) AS BIGINT) AS nt
+       |    64 + ${tokenCountSql("coalesce(d.text, '')")} AS nt
        |  FROM canon c JOIN documents d ON d.doc_id = c.id),
        |${CorpusPipeline.packByCountOracleCtes("cnt", 256, blockSize)}
        |SELECT stage, n_rows FROM (
@@ -1940,9 +1940,7 @@ object Multimodal {
        |  FROM fr),
        |cnt AS (
        |  SELECT c.id AS doc_id,
-       |    128 + CAST(len(list_filter(string_split_regex(
-       |      trim(coalesce(d.text, '')), '\\s+'),
-       |      t -> strlen(t) > 0)) AS BIGINT) AS nt
+       |    128 + ${tokenCountSql("coalesce(d.text, '')")} AS nt
        |  FROM canon c JOIN documents d ON d.doc_id = c.id),
        |${CorpusPipeline.packByCountOracleCtes("cnt", 384, blockSize)}
        |SELECT stage, n_rows FROM (

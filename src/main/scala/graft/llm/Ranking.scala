@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import TextAnalysis.tokensSql
+
 /** Retrieval-style relevance scoring over a document corpus — the data-
   * curation counterpart of d11's tf-idf pair scoring: score every doc
   * against a fixed query-term set (BM25), e.g. to mine training data
@@ -131,8 +133,7 @@ object Ranking {
        |  SELECT $idCol, len(ts) AS dl,
        |    $tfSel
        |  FROM (SELECT $idCol,
-       |          list_filter(string_split_regex(trim(lower($textCol)),
-       |            '\\s+'), x -> strlen(x) > 0) AS ts
+       |          ${tokensSql(s"lower($textCol)")} AS ts
        |        FROM $table)),
        |st AS (
        |  SELECT count(*) AS n_docs,

@@ -17,8 +17,21 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     array_remove(split(trim(text), "\\s+"), lit(""))
 
+  /** DuckDB replay of [[tokens]] over the SQL expression `textSql`: a
+    * bare `string_split_regex` yields `['']` on empty text and a leading
+    * `''` before a leading tab or newline, so the empty strings go here
+    * too. Every oracle tokenizes through this one string.
+    */
+  def tokensSql(textSql: String): String =
+    s"list_filter(string_split_regex(trim($textSql), '\\s+'), " +
+      "x -> strlen(x) > 0)"
+
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
+
+  /** DuckDB replay of [[tokenCount]]. */
+  def tokenCountSql(textSql: String): String =
+    s"CAST(len(${tokensSql(textSql)}) AS BIGINT)"
 
   /** Intra-document repetition removal: drop every repeated occurrence of
     * a token, keeping first-occurrence order (the cheap in-doc analogue
@@ -48,8 +61,19 @@ object TextAnalysis {
   def stopwordCount(text: Column, stopwords: Seq[String] = DefaultStopwords): Column =
     size(filter(tokens(lower(text)), t => t.isin(stopwords: _*))).cast("long")
 
+  /** `'a', 'b', ...` — a SQL IN list of string literals. */
+  private def sqlList(words: Seq[String]): String =
+    words.map(w => s"'$w'").mkString(", ")
+
+  /** DuckDB replay of [[stopwordCount]] (default stopwords). */
+  def stopwordCountSql(textSql: String): String =
+    s"CAST(len(list_filter(${tokensSql(s"lower($textSql)")}, " +
+      s"x -> x IN (${sqlList(DefaultStopwords)}))) AS BIGINT)"
+
+  val PunctPattern = "[^A-Za-z0-9\\s]"
+
   def punctCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[^A-Za-z0-9\\s]"), lit(0))).cast("long")
+    size(regexp_extract_all(text, lit(PunctPattern), lit(0))).cast("long")
 
   def stopwordRatio(text: Column): Column =
     stopwordCount(text) / greatest(tokenCount(text), lit(1L))
@@ -61,27 +85,43 @@ object TextAnalysis {
     aggregate(tokens(text), lit(0L), (acc, t) => acc + length(t)) /
       greatest(tokenCount(text), lit(1L))
 
-  /** Composite quality score in [0,1]: rewards mid-length docs, penalizes
-    * punctuation soup and stopword-free keyword stuffing (a heuristic in
-    * the C4/Gopher-rules family, reduced to engine-friendly arithmetic).
-    */
-  def qualityScore(text: Column): Column = {
-    val n = tokenCount(text)
-    val lengthOk = (n >= 10 && n <= 100000).cast("double")
-    val sw = stopwordRatio(text)
-    val swOk = (sw >= 0.01).cast("double")
-    val punctOk = (punctRatio(text) <= 0.2).cast("double")
-    (lengthOk + swOk + punctOk) / 3
-  }
-
-  /** [[qualityScore]]'s integer numerator (0..3 gates passed) — the
-    * exact form for bucketing (curriculum phases, stratified reports)
-    * where a float score would invite epsilon trouble.
+  /** Quality phase: the number of gates (0..3) a document passes —
+    * mid-length, not stopword-free keyword stuffing, not punctuation
+    * soup (a heuristic in the C4/Gopher-rules family, reduced to
+    * engine-friendly arithmetic). The exact integer form for bucketing
+    * (curriculum phases, stratified reports), where a float score would
+    * invite epsilon trouble.
     */
   def qualityPhase(text: Column): Column =
     (tokenCount(text).between(10, 100000)).cast("int") +
       (stopwordRatio(text) >= 0.01).cast("int") +
       (punctRatio(text) <= 0.2).cast("int")
+
+  /** Composite quality score in [0,1]: [[qualityPhase]] / 3. */
+  def qualityScore(text: Column): Column = qualityPhase(text).cast("double") / 3
+
+  /** DuckDB replay of the quality features: a select-list fragment
+    * naming `n` (tokens), `nsw` (stopwords), `npunct` and `nchars` over
+    * `textSql`. `nchars` counts characters (`length`, Spark's
+    * `length`), never bytes (`strlen`). [[stopwordRatioSql]],
+    * [[punctRatioSql]], [[qualityPhaseSql]] and [[qualityScoreSql]]
+    * read these columns.
+    */
+  def qualityFeaturesSql(textSql: String): String =
+    s"""${tokenCountSql(textSql)} AS n,
+       |    ${stopwordCountSql(textSql)} AS nsw,
+       |    CAST(len(regexp_extract_all($textSql, '$PunctPattern'))
+       |      AS BIGINT) AS npunct,
+       |    CAST(length($textSql) AS BIGINT) AS nchars""".stripMargin
+
+  val stopwordRatioSql = "nsw / greatest(n, 1)"
+  val punctRatioSql = "npunct / greatest(nchars, 1)"
+  private val qualityGatesSql =
+    s"(CAST(n >= 10 AND n <= 100000 AS INT) + " +
+      s"CAST($stopwordRatioSql >= 0.01 AS INT) + " +
+      s"CAST($punctRatioSql <= 0.2 AS INT))"
+  val qualityPhaseSql = s"CAST($qualityGatesSql AS INT)"
+  val qualityScoreSql = s"$qualityGatesSql / 3.0"
 
   /** Language ID via stopword-hit scoring: argmax over per-language marker
     * sets. A cheap n-gram/stopword heuristic (fastText-style without the
@@ -123,6 +163,17 @@ object TextAnalysis {
     // array_max on structs compares field-by-field: max hits, then max
     // lang code — a deterministic argmax.
     array_max(array(scored: _*)).getField("lang")
+  }
+
+  /** DuckDB replay of [[langId]]: `list_sort` orders the structs field
+    * by field too, so its last element is the same argmax.
+    */
+  def langIdSql(textSql: String): String = {
+    val toks = tokensSql(s"lower($textSql)")
+    LangMarkers.toSeq.sortBy(_._1).map { case (lang, markers) =>
+      s"{'hits': len(list_filter($toks, x -> x IN (${sqlList(markers)}))), " +
+        s"'lang': '$lang'}"
+    }.mkString("list_sort([\n      ", ",\n      ", "])[-1]['lang']")
   }
 
   /** Document fingerprint: md5 over the sorted distinct token set — an
@@ -354,11 +405,13 @@ object TextAnalysis {
                      textCol: String): DataFrame = {
     val toks = docs.select(col(idCol).as("id"),
       tokens(lower(col(textCol))).as("ws"))
+    // bigrams are the zip of two offset windows of the token array (the
+    // knTris shape); size >= 2 keeps the slice length positive
+    val n = size(col("ws")) - 1
     val bg = toks.filter(size(col("ws")) >= 2)
-      .select(col("id"), explode(expr(
-        "transform(sequence(0, size(ws) - 2), " +
-          "i -> struct(element_at(ws, i + 1) AS w1, element_at(ws, i + 2) AS w2))"))
-        .as("b"))
+      .select(col("id"), explode(arrays_zip(
+        slice(col("ws"), lit(1), n).as("w1"),
+        slice(col("ws"), lit(2), n).as("w2"))).as("b"))
       .select(col("id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
     val stats = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     val firsts = bg.groupBy("w1").agg(count(lit(1)).as("cu"))
@@ -610,9 +663,7 @@ object TextAnalysis {
                    trainPred: String, scorePred: String): Seq[String] = {
     def toksCte(name: String, pred: String) =
       s"""$name AS (
-         |  SELECT $idCol AS id, list_filter(
-         |    string_split_regex(trim(lower($textCol)), '\\s+'),
-         |    x -> strlen(x) > 0) AS ws
+         |  SELECT $idCol AS id, ${tokensSql(s"lower($textCol)")} AS ws
          |  FROM $table WHERE $pred)""".stripMargin
     def triCte(name: String, src: String) =
       s"""$name AS (

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import TextAnalysis.tokensSql
+
 /** Unigram-LM (SentencePiece-style) tokenizer — train and encode,
   * Spark-first. The second major tokenizer family a pretraining pipeline
   * runs (Kudo 2018, "Subword Regularization"): a piece VOCABULARY with
@@ -349,8 +351,7 @@ object UnigramLm {
     ctes += s"""ug_w0 AS MATERIALIZED (
                |  SELECT d.id, t.w, t.i
                |  FROM (SELECT id,
-               |      list_filter(string_split_regex(trim(txt), '\\s+'),
-               |        x -> strlen(x) > 0) AS ws FROM ug_d) d,
+               |      ${tokensSql("txt")} AS ws FROM ug_d) d,
                |    LATERAL (SELECT unnest(d.ws) AS w,
                |             unnest(range(len(d.ws))) AS i) t)""".stripMargin
     ctes += s"""ug_vocab AS MATERIALIZED (

@@ -23,8 +23,7 @@ object WordFreq {
 
   /** (w, c) word counts of a corpus slice — exact BIGINTs. */
   def stats(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(lower(col(textCol)), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
+    docs.select(explode(TextAnalysis.tokens(lower(col(textCol)))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
 
   /** Lossless merge of two stats frames (disjoint corpus parts). */

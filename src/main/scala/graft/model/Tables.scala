@@ -17,24 +17,41 @@ object Tables {
     * Catalyst pushes filters + prunes columns at the source, so callers
     * should filter/select early and let the optimizer do the rest.
     *
-    * The footer-inferred schema is memoized per (path) for the JVM's
+    * The footer-inferred schema is memoized per path for the JVM's
     * lifetime — the catalog-metadata role a metastore plays in
     * production. Without it EVERY query load runs a schema-inference
     * Spark job (~30-40 ms); a 337-query sweep pays that ~1000×. This
     * caches METADATA only (Spark itself already caches file listings
     * session-wide the same way); table data is re-read from parquet on
-    * every use, and the testdata dirs are read-only so the schema
-    * cannot drift within a run.
+    * every use. The entry is keyed by the data files' (name, length,
+    * mtime) too — one listing, no job — so a table rewritten in place
+    * (a new schema) is re-inferred instead of read through the old
+    * schema, which would null-fill its new columns.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val st = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val stamp = fileStamp(spark, path)
+    val (_, st) = schemaCache.compute(path, (p, old) =>
+      if (old != null && old._1 == stamp) old
+      else (stamp, spark.read.parquet(p).schema))
     spark.read.schema(st).parquet(path)
   }
 
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  /** (name, length, mtime) of the files under `path` (a parquet file or
+    * directory); empty when the path is missing.
+    */
+  private def fileStamp(spark: SparkSession, path: String)
+      : Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      .sorted
+  }
+
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], StructType)]()
 
   // -- Football-domain schemas (SURVEY §1.2, FIXTURES.md) -----------------
 

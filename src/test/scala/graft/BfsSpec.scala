@@ -65,6 +65,17 @@ class BfsSpec extends SparkSpec {
     assert(d == Map(1L -> -1L, 2L -> -1L))
   }
 
+  test("a nondeterministic seeds predicate fails fast; the registry's " +
+      "seed predicate runs") {
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      Bfs.distances(edges, rand() < 0.5, 2))
+    assert(e.getMessage.contains("deterministic"), e.getMessage)
+    // g05's seeds: user_id % 37 = 0 over the transition graph
+    val g05 = SparkEntry.queries("g05_bfs_distances")(spark, sf).collect()
+    assert(g05.exists(_.getLong(1) == 0L) && g05.exists(_.getLong(1) > 0L))
+  }
+
   test("partition count does not change distances") {
     val edges = (1L to 40L).map(i => (i, (i * 3) % 41))
     val base = Bfs.distances(edges.toDF("src", "dst").repartition(1),

@@ -109,6 +109,54 @@ class RegistryInvariantsSpec extends SparkSpec {
     assert(bad.isEmpty, bad)
   }
 
+  test("every oracle tokenizes through TextAnalysis.tokensSql") {
+    // A hand-copied tokenizer drifts from the Spark one it replays (an
+    // unfiltered split keeps a '' token on empty or tab-led text). The
+    // one other split is l09's logit feature (l09, and a34 ranking it):
+    // the unfiltered count its model was fit on.
+    import graft.llm.TextAnalysis.tokensSql
+    val split = "(?:string_split_regex|regexp_split_to_array)\\(".r
+    val prefix = "list_filter(string_split_regex(trim("
+    def strays(sql: String): Seq[String] = {
+      val rest = sql.replace(RegistryWide.qualityLogitSql, "")
+      // index of the ')' closing the '(' at `open`, quotes skipped
+      def close(open: Int): Int = {
+        var depth = 0; var quoted = false; var i = open
+        while (i < rest.length && !(depth == 1 && !quoted &&
+            rest(i) == ')')) {
+          rest(i) match {
+            case '\'' => quoted = !quoted
+            case '(' if !quoted => depth += 1
+            case ')' if !quoted => depth -= 1
+            case _ =>
+          }
+          i += 1
+        }
+        i
+      }
+      split.findAllMatchIn(rest).map(_.start).filterNot { i =>
+        val start = i - "list_filter(".length
+        start >= 0 && rest.startsWith(prefix, start) && {
+          val open = start + prefix.length - 1
+          val arg = rest.substring(open + 1, close(open))
+          rest.startsWith(tokensSql(arg), start)
+        }
+      }.map(i => rest.slice(i - 12, i + 40)).toSeq
+    }
+    // positive control: the builder's output passes, hand copies do not
+    assert(strays(s"SELECT ${tokensSql("lower(coalesce(text, ''))")}, " +
+      s"len(${tokensSql("text")})").isEmpty)
+    assert(strays("SELECT string_split_regex(trim(text), '\\s+')").size == 1)
+    assert(strays("SELECT list_filter(regexp_split_to_array(trim(text), " +
+      "'\\s+'), x -> length(x) > 0)").size == 1)
+    assert(strays("SELECT list_filter(string_split_regex(trim(text), " +
+      "'\\s+'), w -> w <> '')").size == 1)
+    val bad = Registry.oracleSql.toSeq.flatMap { case (name, sql) =>
+      strays(sql).map(x => s"$name: $x")
+    }
+    assert(bad.isEmpty, bad)
+  }
+
   test("rows-only ratchet: at most 17 entries lack an oracle") {
     val rowsOnly = Registry.all.filter(_.oracle.isEmpty).map(_.name)
     assert(rowsOnly.size <= 17,

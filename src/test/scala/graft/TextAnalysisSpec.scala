@@ -21,16 +21,45 @@ class TextAnalysisSpec extends SparkSpec {
       "na\u00efve caf\u00e9 \u65e5\u672c\u8a9e \u00c5ngstr\u00f6m",
       "\u00a0nbsp\u00a0kept\u00a0", "one")
     val df = texts.toDF("t")
+    // dropping the empty strings makes the trim irrelevant: the
+    // untrimmed split is the same function
     val got = df.select(TextAnalysis.tokens(col("t")),
-      filter(split(trim(col("t")), "\\s+"), x => length(x) > 0))
+      filter(split(trim(col("t")), "\\s+"), x => length(x) > 0),
+      filter(split(col("t"), "\\s+"), x => x =!= ""))
       .collect()
     assert(got.length == texts.length)
     got.zip(texts).foreach { case (r, t) =>
-      assert(Option(r.getSeq[String](0)) == Option(r.getSeq[String](1)),
+      val forms = (0 to 2).map(i => Option(r.getSeq[String](i)))
+      assert(forms.distinct.size == 1,
         s"tokens(${Option(t).map(_.toSeq.map(_.toInt))})")
     }
     assert(got(1).getSeq[String](0) == Seq("a", "b", "c"))
     assert(got(8).isNullAt(0))
+  }
+
+  test("the punctuation gate counts characters, not bytes") {
+    // 22 non-[A-Za-z0-9\s] of 107 characters (0.206 > 0.2: the gate
+    // fails) but of 129 UTF-8 bytes (0.171): a byte count would pass it
+    val t = "the caf\u00e9 na\u00efve " + Seq.fill(10)("\u00e9t\u00e9")
+      .mkString(" ") + " and more plain ascii words here to pad the length ok"
+    val r = Seq(t).toDF("t").select(TextAnalysis.punctRatio(col("t")),
+      TextAnalysis.qualityPhase(col("t")),
+      TextAnalysis.qualityScore(col("t"))).head
+    assert(r.getDouble(0) == 22.0 / 107)
+    assert(r.getInt(1) == 2 && r.getDouble(2) == 2.0 / 3)
+  }
+
+  test("bigram LM entries (t19, t20): sf0.001 checksums pinned") {
+    // (rows, xxhash64 sum) through Bench.checksum of the zipped-slice
+    // bigram stream
+    val pins = Seq(
+      "t19_bigram_lm" -> (500L, 7578995933431249667L),
+      "t20_perplexity_buckets" -> (500L, -6390944922284544080L))
+    val got = pins.map { case (name, _) =>
+      name -> Bench.checksum(SparkEntry.queries(name)(spark, sf))
+    }
+    assert(got == pins.map { case (name, (n, chk)) =>
+      name -> ((n, Some(chk))) })
   }
 
   test("emails, IPs, and phones redact to typed placeholders") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{CombineData, Process, TeamMetrics}
@@ -83,6 +83,21 @@ object Pipeline {
     }
   }
 
+  /** The five stages, each run once. Every `Stats` field is observed on
+    * a sink that runs anyway, so the stats stage submits no Spark job:
+    *   - the fixtures are cleaned once: the run's `scope` tracks
+    *     `Process.cleanFixtures`, the fixtures sink (which adds only the
+    *     O1 sort) materializes the rows, and the combined stage reads the
+    *     cached rows back;
+    *   - one `Observation` on the fixtures sink yields the row count, the
+    *     per-column non-null counts, the date range and the league and
+    *     team sets; the empty-fixtures guard reads its row count;
+    *   - one `Observation` on the combined sink yields `joinedRecords`.
+    * `CollectMetrics` rejects DISTINCT aggregates, so the distinct counts
+    * are the sizes of `collect_set`s. Their driver-side buffers hold one
+    * entry per distinct league or team: dimensions, bounded by the
+    * leagues and clubs that exist, not by the number of fixtures.
+    */
   private def runStages(spark: SparkSession, cfg: Config,
                         scope: CacheScope): Stats = {
     val today = lit(cfg.today).cast("date")
@@ -91,12 +106,32 @@ object Pipeline {
     val rawFixtures = readCsv(spark, cfg.fixturesPath, graft.model.Tables.matches)
       .withColumn("match_id", lit(null).cast("string"))
       .withColumn("kickoff_time", col("start_time"))
-    val fixtures = Process.processFixtures(rawFixtures, today, cfg.aliases)
-    writeCsv(isoDates(fixtures), s"${cfg.outDir}/fixtures")
+    val fixtures = scope.track(
+      Process.cleanFixtures(rawFixtures, today, cfg.aliases))
+    // pipeline_stats parity (`pipeline.py:103-118`, A8/A9/A12)
+    val fixtureCols = Seq("match_id", "date", "home_team", "away_team",
+      "league", "kickoff_time")
+    val fxStats = Seq(
+      count(lit(1)).as("n"),
+      size(collect_set(col("league"))).as("leagues"),
+      size(array_union(collect_set(col("home_team")),
+        collect_set(col("away_team")))).as("teams"),
+      min(col("date")).cast("string").as("start_date"),
+      max(col("date")).cast("string").as("end_date")) ++
+      fixtureCols.map(c => count(col(c)).as(s"nn_$c"))
+    // The sink's plan holds `fixtures` as a subtree, so the cache serves
+    // it. Observations sit above the sinks' sorts: below one, the range
+    // partitioner's sampling job runs them too and every row counts twice.
+    val fxObs = Observation()
+    writeCsv(isoDates(Process.processFixtures(rawFixtures, today, cfg.aliases)
+      .observe(fxObs, fxStats.head, fxStats.tail: _*)), s"${cfg.outDir}/fixtures")
+    val fx = fxObs.get
+    def fxCount(name: String): Long = fx(name).asInstanceOf[Number].longValue
+    val nFix = fxCount("n")
 
     // F7 — non-empty guard (`processors/data_processor.py:43-46` et al):
     // nothing upcoming → emit empty stats, skip the downstream stages.
-    if (fixtures.isEmpty) {
+    if (nFix == 0) {
       val empty = Stats(0, 0, 0, 0, 0.0, "", "", cfg.lookbackMatches)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(cfg.outDir))
@@ -106,15 +141,16 @@ object Pipeline {
       return empty
     }
 
-    // Stage 4 — process team history.
+    // Stage 4 — process team history. O2 orders the sink only.
     val rawHistory = readCsv(spark, cfg.historyPath, graft.model.Tables.teamHistory)
-    val history = Process.processHistory(rawHistory, today, cfg.aliases)
-    writeCsv(isoDates(history), s"${cfg.outDir}/history")
+    writeCsv(isoDates(Process.processHistory(rawHistory, today, cfg.aliases)),
+      s"${cfg.outDir}/history")
 
     // Stage 5a — rolling team metrics (A1–A3; one window pass).
     val statCols = Seq("goals_for", "goals_against", "shots",
       "shots_on_target", "xg", "possession")
-    val metrics = TeamMetrics.rolling(history, "team", "date",
+    val metrics = TeamMetrics.rolling(
+      Process.cleanHistory(rawHistory, today, cfg.aliases), "team", "date",
       statCols, resultCol = Some("result"),
       sumCols = Seq("goals_for", "goals_against"),
       windowDays = cfg.windowDays)
@@ -129,39 +165,24 @@ object Pipeline {
       .withColumn("match_quality",
         Normalize.matchQuality(col("home_win_ratio"), col("away_win_ratio")))
       .orderBy("date", "match_id")                          // O3
-    writeCsv(isoDates(combined), s"${cfg.outDir}/football_data")
+    val joinedObs = Observation()
+    writeCsv(isoDates(combined.observe(joinedObs, count(lit(1)).as("rows"))),
+      s"${cfg.outDir}/football_data")
 
-    // pipeline_stats parity (`pipeline.py:103-118`) — one aggregation
-    // pass per input, scalars collected driver-side (A8/A9/A12).
-    val teams = fixtures.select(col("home_team").as("team"))
-      .unionByName(fixtures.select(col("away_team").as("team")))
-      .distinct()                                           // J2/U2
-    val fixtureCols = Seq("match_id", "date", "home_team", "away_team",
-      "league", "kickoff_time")
-    val fxAggs = Seq(
-      count(lit(1)).as("n"),
-      countDistinct(col("league")).as("leagues"),
-      min(col("date")).cast("string").as("start_date"),
-      max(col("date")).cast("string").as("end_date")) ++
-      fixtureCols.map(c =>
-        sum(col(c).isNotNull.cast("long")).as(s"nn_$c"))
-    val fxAgg = fixtures.agg(fxAggs.head, fxAggs.tail: _*)
-    val fx = fxAgg.collect()(0)
-    val joined = combined.count()
-    val nFix = fx.getAs[Long]("n")
-    val completion =
-      if (nFix == 0) 0.0
-      else fixtureCols.map(c => fx.getAs[Long](s"nn_$c").toDouble / nFix)
-        .sum / fixtureCols.size
-
+    // A NULL team is one row of the parity form's `union … distinct()`,
+    // while `collect_set` drops NULLs.
+    val nullTeam =
+      fxCount("nn_home_team") < nFix || fxCount("nn_away_team") < nFix
     val stats = Stats(
       fixturesCount = nFix,
-      teamsCount = teams.count(),
-      joinedRecords = joined,
-      leaguesCovered = fx.getAs[Long]("leagues"),
-      dataCompletion = completion,
-      startDate = Option(fx.getAs[String]("start_date")).getOrElse(""),
-      endDate = Option(fx.getAs[String]("end_date")).getOrElse(""),
+      teamsCount = fxCount("teams") + (if (nullTeam) 1 else 0),
+      joinedRecords = joinedObs.get("rows").asInstanceOf[Long],
+      leaguesCovered = fxCount("leagues"),
+      dataCompletion =
+        fixtureCols.map(c => fxCount(s"nn_$c").toDouble / nFix).sum /
+          fixtureCols.size,
+      startDate = Option(fx("start_date")).fold("")(_.toString),
+      endDate = Option(fx("end_date")).fold("")(_.toString),
       lookbackMatches = cfg.lookbackMatches)
 
     // K4 — stats JSON sink.

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.llm.{Boilerplate, Bpe, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.llm.{Boilerplate, Bpe, CorpusPipeline, Dedup, Multimodal,
+  Similarity, TextAnalysis}
 import graft.llm.TextAnalysis.{langIdSql, punctRatioSql, qualityFeaturesSql,
-  qualityScoreSql, stopwordRatioSql, tokenCountSql, tokensSql}
+  qualityScoreSql, redactPiiSql, stopwordRatioSql, tokenCountSql, tokensSql}
 import graft.streaming.EventStream
 import Registry._
 
@@ -123,16 +124,12 @@ object RegistryLlm {
             TextAnalysis.redactPii(col("txt")).as("redacted"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id,
-             |  regexp_replace(regexp_replace(regexp_replace(
-             |    text || ' contact user' || CAST(doc_id AS VARCHAR)
-             |      || '@mail.example.com or +1 555-01'
-             |      || lpad(CAST(doc_id AS VARCHAR), 4, '0')
-             |      || ' at 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7',
-             |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-             |    '<EMAIL>', 'g'),
-             |    '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-             |    '\+?\d(?:[\- ]?\d){8,}', '<PHONE>', 'g') AS redacted
+      Some(s"""SELECT doc_id, ${redactPiiSql(
+               "text || ' contact user' || CAST(doc_id AS VARCHAR)" +
+               " || '@mail.example.com or +1 555-01'" +
+               " || lpad(CAST(doc_id AS VARCHAR), 4, '0')" +
+               " || ' at 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'")}
+             |  AS redacted
              |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // ---- D1: exact dedup stats ------------------------------------------------
@@ -468,26 +465,8 @@ object RegistryLlm {
       (s, dir) => graft.llm.CorpusPipeline.cleanCorpus(
           t(s, dir, "documents").filter(col("doc_id") < 500))
         .select(col("doc_id")).orderBy("doc_id"),
-      Some(s"""WITH base AS (
-             |  SELECT doc_id, text FROM documents WHERE doc_id < 500),
-             |feat AS (
-             |  SELECT doc_id, text, ${qualityFeaturesSql("text")},
-             |    ${langIdSql("text")} AS lang_pred
-             |  FROM base),
-             |q AS (
-             |  SELECT doc_id, text, lang_pred, $qualityScoreSql AS quality
-             |  FROM feat),
-             |dedup AS (
-             |  SELECT doc_id, text FROM q
-             |  WHERE quality >= 0.6 AND lang_pred IN ('en')
-             |  QUALIFY row_number() OVER (PARTITION BY md5(text)
-             |    ORDER BY doc_id) = 1),
-             |${Dedup.wordGramsCte("t", "dedup", "doc_id", "text",
-                  "doc_id")},
-             |${Dedup.nearDupsOracleCtes("t", 0.5)}
-             |SELECT doc_id FROM dedup
-             |WHERE doc_id NOT IN (SELECT id_b FROM near)
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${CorpusPipeline.cleanCorpusOracleCtes("documents", 500)}
+             |SELECT doc_id FROM kept ORDER BY doc_id""".stripMargin)),
 
     // ---- L2: cleaning pipeline + PII redaction as the final stage —
     //      same CTE chain as l01 with the redacted text carried out ------
@@ -495,32 +474,9 @@ object RegistryLlm {
       (s, dir) => graft.llm.CorpusPipeline.cleanCorpus(
           t(s, dir, "documents").filter(col("doc_id") < 500), redact = true)
         .select(col("doc_id"), col("text")).orderBy("doc_id"),
-      Some(s"""WITH base AS (
-             |  SELECT doc_id, text FROM documents WHERE doc_id < 500),
-             |feat AS (
-             |  SELECT doc_id, text, ${qualityFeaturesSql("text")},
-             |    ${langIdSql("text")} AS lang_pred
-             |  FROM base),
-             |q AS (
-             |  SELECT doc_id, text, lang_pred, $qualityScoreSql AS quality
-             |  FROM feat),
-             |dedup AS (
-             |  SELECT doc_id, text FROM q
-             |  WHERE quality >= 0.6 AND lang_pred IN ('en')
-             |  QUALIFY row_number() OVER (PARTITION BY md5(text)
-             |    ORDER BY doc_id) = 1),
-             |${Dedup.wordGramsCte("t", "dedup", "doc_id", "text",
-                  "doc_id")},
-             |${Dedup.nearDupsOracleCtes("t", 0.5)}
-             |SELECT doc_id,
-             |  regexp_replace(regexp_replace(regexp_replace(text,
-             |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-             |    '<EMAIL>', 'g'),
-             |    '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '<IP>', 'g'),
-             |    '\\+?\\d(?:[\\- ]?\\d){8,}', '<PHONE>', 'g') AS text
-             |FROM dedup
-             |WHERE doc_id NOT IN (SELECT id_b FROM near)
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${CorpusPipeline.cleanCorpusOracleCtes("documents", 500)}
+             |SELECT doc_id, ${redactPiiSql("text")} AS text
+             |FROM kept ORDER BY doc_id""".stripMargin)),
 
     // ---- L4: corpus-adaptive length-outlier pruning (Tukey fences over
     //      the token-count distribution; one-row quartile agg broadcast

@@ -15,12 +15,34 @@ import graft.functions.Normalize
 object Process {
 
   /** Stage 2 — process_fixtures (`processors/data_processor.py:34-136`):
-    * normalize names/dates (X1/X2), kickoff cleanup (X9), dedup by
-    * match_id keep-first (U3 — made deterministic with a total order),
-    * future filter (F1), multi-key sort (O1).
+    * [[cleanFixtures]], then the multi-key sort (O1).
     */
   def processFixtures(raw: DataFrame, today: Column,
                       aliases: Map[String, String] = Normalize.defaultAliases)
+      : DataFrame =
+    cleanFixtures(raw, today, aliases)
+      .orderBy(col("date"), col("kickoff_time"))          // O1
+
+  /** Stage 4 — process_team_history (`processors/data_processor.py:
+    * 138-269`): [[cleanHistory]], then the mixed-direction sort (O2).
+    */
+  def processHistory(raw: DataFrame, today: Column,
+                     aliases: Map[String, String] = Normalize.defaultAliases)
+      : DataFrame =
+    cleanHistory(raw, today, aliases)
+      .orderBy(col("team"), col("date").desc)              // O2
+
+  // O1 and O2 are the presentation orders of the two sinks. A consumer
+  // that joins, windows or re-sorts reads the clean forms below: an
+  // order it throws away still costs a range shuffle (Catalyst does not
+  // drop a Sort below a Window).
+
+  /** [[processFixtures]] without its sort: normalize names/dates
+    * (X1/X2), kickoff cleanup (X9), dedup by match_id keep-first (U3 —
+    * made deterministic with a total order), future filter (F1).
+    */
+  def cleanFixtures(raw: DataFrame, today: Column,
+                    aliases: Map[String, String] = Normalize.defaultAliases)
       : DataFrame = {
     val normalized = raw
       .withColumn("home_team", Normalize.normalizeTeamName(col("home_team"), aliases))
@@ -31,16 +53,14 @@ object Process {
         Normalize.matchId(col("date"), col("home_team"), col("away_team"))))
     dedupFirst(normalized, Seq("match_id"), Seq(col("date"), col("home_team")))
       .filter(col("date") >= today)                       // F1
-      .orderBy(col("date"), col("kickoff_time"))          // O1
   }
 
-  /** Stage 4 — process_team_history (`processors/data_processor.py:
-    * 138-269`): result standardization (X5), numeric coercion (X3),
-    * derived metrics (X7/X8), match_id backfill (X4), past filter (F2),
-    * mixed-direction sort (O2).
+  /** [[processHistory]] without its sort: result standardization (X5),
+    * numeric coercion (X3), derived metrics (X7/X8), match_id backfill
+    * (X4), past filter (F2).
     */
-  def processHistory(raw: DataFrame, today: Column,
-                     aliases: Map[String, String] = Normalize.defaultAliases)
+  def cleanHistory(raw: DataFrame, today: Column,
+                   aliases: Map[String, String] = Normalize.defaultAliases)
       : DataFrame =
     raw
       .withColumn("team", Normalize.normalizeTeamName(col("team"), aliases))
@@ -55,7 +75,6 @@ object Process {
           col("team"), col("opponent")), Normalize.awayTeam(col("venue"),
           col("team"), col("opponent")))))
       .filter(col("date") <= today)                        // F2
-      .orderBy(col("team"), col("date").desc)              // O2
 
   /** U3/O7 — dedup-by-key keep-first under an explicit total order. The
     * pandas `drop_duplicates(keep='first')` depends on input order, which

@@ -294,7 +294,7 @@ object Bpe {
          |      THEN s || '#NOFIXPOINT#' ELSE s END AS s
          |  FROM $prev LEFT JOIN $best ON TRUE)""".stripMargin
     val initSeg =
-      s"$sep || array_to_string(list_transform(range(strlen(w)), " +
+      s"$sep || array_to_string(list_transform(range(length(w)), " +
         s"i -> substr(w, i + 1, 1)), $sep) || $sep || '$EOW' || $sep"
     val ctes = scala.collection.mutable.ArrayBuffer[String]()
     ctes += s"""bp_d AS MATERIALIZED (

@@ -3,7 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import TextAnalysis.{tokenCountSql, tokensSql}
+import TextAnalysis.{langIdSql, qualityFeaturesSql, qualityScoreSql,
+  tokenCountSql, tokensSql}
 
 /** The end-to-end cleaning pass a training-data run actually executes,
   * composed from the engine's verified pieces so the WHOLE pipeline is
@@ -76,6 +77,33 @@ object CorpusPipeline {
     if (redact) kept.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
     else kept
   }
+
+  /** DuckDB replay of [[cleanCorpus]] with its default gates (quality
+    * >= 0.6, English, keep-first exact dedup, greedy exact-n-gram
+    * near-dup pruning at 0.5) over `table` rows with `doc_id <
+    * maxDocId`: CTEs ending in `kept` (doc_id, text), the unredacted
+    * survivors ([[TextAnalysis.redactPiiSql]] replays `redact`).
+    */
+  def cleanCorpusOracleCtes(table: String, maxDocId: Long): String =
+    s"""base AS (
+       |  SELECT doc_id, text FROM $table WHERE doc_id < $maxDocId),
+       |feat AS (
+       |  SELECT doc_id, text, ${qualityFeaturesSql("text")},
+       |    ${langIdSql("text")} AS lang_pred
+       |  FROM base),
+       |q AS (
+       |  SELECT doc_id, text, lang_pred, $qualityScoreSql AS quality
+       |  FROM feat),
+       |dedup AS (
+       |  SELECT doc_id, text FROM q
+       |  WHERE quality >= 0.6 AND lang_pred IN ('en')
+       |  QUALIFY row_number() OVER (PARTITION BY md5(text)
+       |    ORDER BY doc_id) = 1),
+       |${Dedup.wordGramsCte("t", "dedup", "doc_id", "text", "doc_id")},
+       |${Dedup.nearDupsOracleCtes("t", 0.5)},
+       |kept AS (
+       |  SELECT doc_id, text FROM dedup
+       |  WHERE doc_id NOT IN (SELECT id_b FROM near))""".stripMargin
 
   /** Length-outlier pruning (Tukey fences): drop documents whose token
     * count falls outside [q1 − k·IQR, q3 + k·IQR] of the corpus

@@ -206,6 +206,12 @@ object TextAnalysis {
     regexp_replace(ip, PhonePattern, "<PHONE>")
   }
 
+  /** DuckDB replay of [[redactPii]]: the same patterns in the same order. */
+  def redactPiiSql(text: String): String =
+    s"regexp_replace(regexp_replace(regexp_replace($text, " +
+      s"'$EmailPattern', '<EMAIL>', 'g'), '$IpPattern', '<IP>', 'g'), " +
+      s"'$PhonePattern', '<PHONE>', 'g')"
+
   /** Per-type PII counts with the SAME sequential semantics as
     * [[redactPii]] (emails counted on raw text, IPs on email-redacted,
     * phones on IP-redacted — so a digit run inside a redacted span never

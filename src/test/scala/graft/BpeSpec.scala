@@ -121,6 +121,19 @@ class BpeSpec extends SparkSpec {
     }
   }
 
+  test("t23 shape on non-ASCII words: one symbol per character") {
+    // the DuckDB replay (`Bpe.portableCtes`) splits each word with
+    // `length`/`substr` in characters and returns these same rows
+    val docs = Seq((0L, "Été café naïve été café été naïve"))
+      .toDF("doc_id", "text")
+    val merges = Bpe.fit(docs, "text", numMerges = 8, maxVocabWords = 200)
+    val out = Bpe.encodePortable(docs, "doc_id", "text", merges)
+      .select(col("n_bpe_tokens"), concat_ws(" ", col("tokens")))
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(out == Seq((13, "été</w> c afé</w> n aïve </w> été</w> c afé</w> " +
+      "été</w> n aïve </w>")), out.toString)
+  }
+
   test("applyMerge: cascading left-greedy fold matches the training loop") {
     // odd runs pair left-to-right: [a,a,a,a,a] -> [aa,aa,a]
     assert(Bpe.applyMerge(Seq("a", "a", "a", "a", "a"), "a", "a") ==

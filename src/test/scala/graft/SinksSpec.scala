@@ -1,6 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{Callable, ConcurrentHashMap, CountDownLatch,
+  Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** Sources/sinks (S1/S7, K1–K4) and set-ops on heterogeneous frames (U1). */
@@ -74,30 +83,63 @@ class SinksSpec extends SparkSpec {
     assert(b.isNullAt(b.fieldIndex("xg")))
   }
 
+  private type FixtureRow = (String, String, String, String, String, String,
+    String, String, String, String, String, String)
+
+  /** Raw fixtures in the matches-table shape (FIXTURES.md §1). */
+  private def fixtureRow(date: String, id: String, home: String, away: String,
+                         league: String, kickoff: String,
+                         ts: String = "1748775000"): FixtureRow =
+    (date, id, home, away, league, "England", ts, kickoff,
+      "Not started", "", "1", "api")
+
+  private val historyRows = Seq(
+    ("Arsenal", "2024-2025", "2025-05-01", "PL", "Home", "Brentford",
+      "W", "2", "0", "12", "5"),
+    ("Arsenal", "2024-2025", "2025-05-10", "PL", "Away", "Fulham",
+      "D", "1", "1", "9", "3"),
+    ("Chelsea", "2024-2025", "2025-05-03", "PL", "Home", "Everton",
+      "L", "0", "1", "7", "2"))
+
+  /** Writes the raw fixtures and history CSVs under `dir` and returns the
+    * run's config (today 2025-05-23, output in `dir/out`).
+    */
+  private def pipelineInputs(dir: String, fixtures: Seq[FixtureRow])
+      : Pipeline.Config = {
+    fixtures.toDF("date", "id", "home_team", "away_team", "league", "country",
+      "start_timestamp", "start_time", "status", "venue", "round", "source")
+      .write.option("header", "true").csv(s"$dir/raw_fixtures")
+    historyRows.toDF("team", "season", "date", "competition", "venue",
+      "opponent", "result", "goals_for", "goals_against", "shots",
+      "shots_on_target")
+      .write.option("header", "true").csv(s"$dir/raw_history")
+    Pipeline.Config(fixturesPath = s"$dir/raw_fixtures",
+      historyPath = s"$dir/raw_history", outDir = s"$dir/out",
+      today = "2025-05-23")
+  }
+
+  private val twoFixtures = Seq(
+    fixtureRow("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "12:30"),
+    fixtureRow("2025-06-02", "2", "Man Utd", "Spurs", "Premier League", "15:00",
+      ts = "1748862000"))
+
+  /** A NULL away team, a NULL league, a match_id that occurs twice once
+    * the names are normalized, and a fixture before "today".
+    */
+  private val edgeFixtures = Seq(
+    fixtureRow("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "12:30"),
+    fixtureRow("2025-06-01", "1", "Arsenal", "Chelsea", "Premier League", "12:30"),
+    fixtureRow("2025-06-02", "2", "Man Utd", null, "Premier League", "15:00"),
+    fixtureRow("2025-06-03", "3", "Everton", "Fulham", null, "17:30"),
+    fixtureRow("2025-06-04", "4", "Barcelona", "Chelsea", "La Liga", "20:00"),
+    fixtureRow("2020-01-01", "5", "Old Town", "Gone United", "Premier League", "10:00"))
+
+  private def statsJson(cfg: Pipeline.Config): String =
+    Files.readString(java.nio.file.Paths.get(s"${cfg.outDir}/pipeline_stats.json"))
+
   test("Pipeline end-to-end: stages, sinks, stats JSON parity") {
     val dir = tmp()
-    // raw fixtures in the matches-table shape (FIXTURES.md §1)
-    val fixturesCsv = s"$dir/raw_fixtures"
-    Seq(
-      ("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "England",
-        "1748775000", "12:30", "Not started", "", "1", "api"),
-      ("2025-06-02", "2", "Man Utd", "Spurs", "Premier League", "England",
-        "1748862000", "15:00", "Not started", "", "1", "api")
-    ).toDF("date", "id", "home_team", "away_team", "league", "country",
-      "start_timestamp", "start_time", "status", "venue", "round", "source")
-      .write.option("header", "true").csv(fixturesCsv)
-    // history for two of the teams
-    val historyCsv = s"$dir/raw_history"
-    Seq(
-      ("Arsenal", "2024-2025", "2025-05-01", "PL", "Home", "Brentford",
-        "W", "2", "0", "12", "5"),
-      ("Arsenal", "2024-2025", "2025-05-10", "PL", "Away", "Fulham",
-        "D", "1", "1", "9", "3"),
-      ("Chelsea", "2024-2025", "2025-05-03", "PL", "Home", "Everton",
-        "L", "0", "1", "7", "2")
-    ).toDF("team", "season", "date", "competition", "venue", "opponent",
-      "result", "goals_for", "goals_against", "shots", "shots_on_target")
-      .write.option("header", "true").csv(historyCsv)
+    val cfg = pipelineInputs(dir, twoFixtures)
 
     spark.catalog.clearCache() // isolate the post-run cache assertion
     // A pre-existing user cache must SURVIVE the run (run releases only
@@ -105,9 +147,7 @@ class SinksSpec extends SparkSpec {
     val userCached = Seq(1, 2, 3).toDF("x")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     userCached.count()
-    val stats = Pipeline.run(spark, Pipeline.Config(
-      fixturesPath = fixturesCsv, historyPath = historyCsv,
-      outDir = s"$dir/out", today = "2025-05-23"))
+    val stats = Pipeline.run(spark, cfg)
 
     assert(stats.fixturesCount == 2)
     assert(stats.teamsCount == 4)
@@ -133,5 +173,125 @@ class SinksSpec extends SparkSpec {
     assert(after.size == 1,
       s"Pipeline.run cache leak or over-release: ${after.keySet}")
     userCached.unpersist()
+  }
+
+  /** Sorted data lines of a CSV sink's part files. */
+  private def csvLines(dir: String): Seq[String] =
+    Files.list(java.nio.file.Paths.get(dir)).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .flatMap(p => Files.readAllLines(p).asScala.drop(1)).sorted
+
+  test("Pipeline.run takes its stats from its sinks: parity values, no extra job") {
+    val cfg = pipelineInputs(tmp(), edgeFixtures)
+    // Call site of every job the run submits (tagged from this thread; the
+    // adaptive-execution threads inherit the tag): the job's own, then
+    // its SQL execution's, whose stack holds the caller frames.
+    val tag = s"sinks-spec-${java.util.UUID.randomUUID}"
+    val sites = new ConcurrentHashMap[Int, String]()
+    val executions = new ConcurrentHashMap[Long, String]()
+    val events = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        events.incrementAndGet()
+        val props = Option(e.properties)
+        if (props.flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) {
+          val own = if (e.stageInfos.isEmpty) ""
+            else e.stageInfos.maxBy(_.stageId).details
+          val execution = props
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => Option(executions.get(id.toLong))).getOrElse("")
+          sites.put(e.jobId, own + "\n" + execution)
+        }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        events.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          executions.put(x.executionId, x.details)
+          events.incrementAndGet()
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val stats =
+      try {
+        sc.addJobTag(tag)
+        try Pipeline.run(spark, cfg) finally sc.removeJobTag(tag)
+      } finally {
+        Bench.awaitListenerDrain(events.get)
+        sc.removeSparkListener(listener)
+      }
+
+    // The parity formulas (`pipeline.py:103-118`) over the processed
+    // fixtures: a NULL team is one team, a NULL league is no league.
+    val fixtures = graft.etl.Process.processFixtures(
+      Pipeline.readCsv(spark, cfg.fixturesPath, graft.model.Tables.matches)
+        .withColumn("match_id", lit(null).cast("string"))
+        .withColumn("kickoff_time", col("start_time")),
+      lit(cfg.today).cast("date"))
+    val teams = fixtures.select(col("home_team").as("team"))
+      .unionByName(fixtures.select(col("away_team").as("team")))
+      .distinct().count()
+    val cols = Seq("match_id", "date", "home_team", "away_team", "league",
+      "kickoff_time")
+    val agg = fixtures.agg(count(lit(1)), (Seq(countDistinct(col("league")),
+      min(col("date")).cast("string"), max(col("date")).cast("string")) ++
+      cols.map(c => sum(col(c).isNotNull.cast("long")))): _*).first()
+    val n = agg.getLong(0)
+    val completion =
+      cols.indices.map(i => agg.getLong(4 + i).toDouble / n).sum / cols.size
+    val joined = spark.read.option("header", "true")
+      .csv(s"${cfg.outDir}/football_data").count()
+    assert(stats == Pipeline.Stats(n, teams, joined, agg.getLong(1),
+      completion, agg.getString(2), agg.getString(3), cfg.lookbackMatches))
+    assert((n, teams, joined, agg.getLong(1)) == ((4L, 7L, 4L, 2L)))
+    assert(statsJson(cfg) == "{\"fixtures_count\":4,\"teams_count\":7," +
+      "\"joined_records\":4,\"leagues_covered\":2," +
+      "\"data_completion\":\"92%\",\"start_date\":\"2025-06-01\"," +
+      "\"end_date\":\"2025-06-04\",\"lookback_matches\":7}")
+
+    // Jobs placed by their `runStages` line, as the stage split of the
+    // benchmark does: the three sinks are the jobs whose stack passes
+    // through `writeCsv`; nothing may run after the combined sink, and
+    // no job may come from a probe action.
+    val RunStagesLine = """graft\.Pipeline\$\.runStages\(Pipeline\.scala:(\d+)\)""".r
+    val placed = sites.values.asScala.toSeq.flatMap(s =>
+      RunStagesLine.findFirstMatchIn(s).map(m => (s, m.group(1).toInt)))
+    val sinkLines = placed.filter(_._1.contains("graft.Pipeline$.writeCsv("))
+      .map(_._2).distinct.sorted
+    assert(sinkLines.size == 3, s"sink lines $sinkLines of ${sites.size} jobs")
+    val afterSinks = placed.filter(_._2 > sinkLines.last)
+    assert(afterSinks.isEmpty, s"${afterSinks.size} jobs after the combined " +
+      s"sink:\n${afterSinks.map(_._1.take(300)).mkString("\n--\n")}")
+    val probes = sites.values.asScala.filter(s => Seq("Dataset.isEmpty(",
+      "Dataset.count(", "Dataset.collect(").exists(s.contains))
+    assert(probes.isEmpty, s"${probes.size} jobs from isEmpty/count/collect")
+  }
+
+  test("Pipeline.run: concurrent runs in one session keep their own stats, " +
+      "outputs and caches") {
+    val cfgs = Seq(twoFixtures, edgeFixtures).map(f => pipelineInputs(tmp(), f))
+    val alone = cfgs.map(Pipeline.run(spark, _))
+    assert(alone.distinct.size == 2)
+    val together = cfgs.map(c => c.copy(outDir = c.outDir + "_concurrent"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val pool = Executors.newFixedThreadPool(2)
+    val stats =
+      try {
+        val go = new CountDownLatch(1)
+        val runs = together.map(c => pool.submit(new Callable[Pipeline.Stats] {
+          def call(): Pipeline.Stats = { go.await(); Pipeline.run(spark, c) }
+        }))
+        go.countDown()
+        runs.map(_.get(10, TimeUnit.MINUTES))
+      } finally pool.shutdown()
+    assert(stats == alone)
+    assert(together.map(statsJson) == cfgs.map(statsJson))
+    for (sink <- Seq("fixtures", "history", "football_data"))
+      assert(together.map(c => csvLines(s"${c.outDir}/$sink")) ==
+        cfgs.map(c => csvLines(s"${c.outDir}/$sink")), sink)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
 }

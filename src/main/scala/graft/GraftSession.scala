@@ -5,7 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Single wiring point for engine sessions: extensions (native functions
   * + optimizer rules) and the config every entry point needs. Callers
   * with their own session can instead set
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, and for local files
+  * without a process fork per chmod/readlink (`graft.io`)
+  * `spark.hadoop.fs.file.impl=graft.io.NoForkLocalFileSystem` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl=graft.io.NoForkLocalFs`.
+  * Hadoop caches one `FileSystem` per scheme for the JVM, so the first
+  * local `FileSystem.get` decides its class.
   */
 object GraftSession {
   def builder(cores: String = "4"): SparkSession.Builder =
@@ -35,4 +40,11 @@ object GraftSession {
         s"${sys.props("java.io.tmpdir")}/graft-warehouse-" +
           java.lang.ProcessHandle.current().pid())
       .config("spark.ui.enabled", "false")
+      // local files through graft.io: no fork per chmod or readlink, on
+      // the FileSystem path (sinks) and the FileContext path (streaming
+      // checkpoints)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.NoForkLocalFs].getName)
 }

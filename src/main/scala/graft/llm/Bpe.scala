@@ -39,6 +39,14 @@ object Bpe {
   def words(text: String): Seq[String] =
     text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
 
+  /** A word's initial segmentation: one symbol per code point (a
+    * character outside the BMP is one symbol, not two UTF-16 units — the
+    * DuckDB replay's character split), then [[EOW]].
+    */
+  def symbols(word: String): Vector[String] =
+    word.codePoints.toArray.iterator
+      .map(cp => new String(Character.toChars(cp))).toVector :+ EOW
+
   /** Train `numMerges` merges from a word-frequency table. Pure Scala —
     * callers feed it a collected (word, count) list (see `fit`).
     */
@@ -46,8 +54,7 @@ object Bpe {
                   numMerges: Int): Seq[(String, String)] = {
     // each word as its symbol sequence; parallel count array
     val syms = wordFreq.map { case (w, _) =>
-      scala.collection.mutable.ArrayBuffer[String](
-        (w.map(_.toString) :+ EOW): _*)
+      scala.collection.mutable.ArrayBuffer[String](symbols(w): _*)
     }.toArray
     val counts = wordFreq.map(_._2).toArray
     val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
@@ -131,7 +138,7 @@ object Bpe {
   /** Encode one word with the greedy lowest-rank loop. */
   def encodeWord(word: String,
                  ranks: Map[(String, String), Int]): Seq[String] = {
-    var s = (word.map(_.toString) :+ EOW).toVector
+    var s = symbols(word)
     var done = false
     while (!done && s.length > 1) {
       var bestRank = Int.MaxValue
@@ -202,7 +209,7 @@ object Bpe {
     */
   def encodeInOrder(word: String,
                     merges: Seq[(String, String)]): Seq[String] =
-    merges.foldLeft((word.map(_.toString) :+ EOW): Seq[String]) {
+    merges.foldLeft(symbols(word): Seq[String]) {
       case (s, (a, b)) => applyMerge(s, a, b)
     }
 

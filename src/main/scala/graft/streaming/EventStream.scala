@@ -108,11 +108,19 @@ object EventStream {
   }
 
   /** File-source stream over a directory of event data (the daily-append
-    * directory pattern), parquet or json.
+    * directory pattern), parquet or json. Each micro-batch admits at most
+    * `maxFilesPerTrigger` new files (default 1000), so a drain of a large
+    * backlog — AvailableNow included — runs as bounded batches, not one
+    * batch of the whole backlog.
     */
   def readEvents(spark: SparkSession, dir: String, format: String = "parquet",
-                 schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.format(format).schema(schema).load(dir)
+                 schema: org.apache.spark.sql.types.StructType,
+                 maxFilesPerTrigger: Int = 1000): DataFrame = {
+    require(maxFilesPerTrigger > 0,
+      s"maxFilesPerTrigger must be positive, got $maxFilesPerTrigger")
+    spark.readStream.format(format).schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toLong).load(dir)
+  }
 
   /** Sink with checkpointing; append mode works because the watermark
     * closes windows.

@@ -134,6 +134,21 @@ class BpeSpec extends SparkSpec {
       "été</w> n aïve </w>")), out.toString)
   }
 
+  test("symbols split code points, as DuckDB does: a character outside " +
+      "the BMP is one symbol") {
+    val w = "a\uD83D\uDE00b" // a😀b: 4 UTF-16 units, 3 code points
+    assert(Bpe.symbols(w) == Seq("a", "\uD83D\uDE00", "b", Bpe.EOW))
+    assert(Bpe.encodeWord(w, Map.empty) == Bpe.symbols(w))
+    assert(Bpe.encodeInOrder(w, Nil) == Bpe.symbols(w))
+    // every merge joins whole code points: no lone surrogate is a symbol
+    val merges = Bpe.trainMerges(Seq((w, 3L)), 2)
+    assert(merges == Seq(("a", "\uD83D\uDE00"), ("a\uD83D\uDE00", "b")),
+      merges.toString)
+    assert(Bpe.encodeWord(w, merges.zipWithIndex.toMap) ==
+      Seq("a\uD83D\uDE00b", Bpe.EOW))
+    assert(Bpe.encodeInOrder(w, merges) == Seq("a\uD83D\uDE00b", Bpe.EOW))
+  }
+
   test("applyMerge: cascading left-greedy fold matches the training loop") {
     // odd runs pair left-to-right: [a,a,a,a,a] -> [aa,aa,a]
     assert(Bpe.applyMerge(Seq("a", "a", "a", "a", "a"), "a", "a") ==

@@ -10,11 +10,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sources/sinks (S1/S7, K1–K4) and set-ops on heterogeneous frames (U1). */
 class SinksSpec extends SparkSpec {
   import spark.implicits._
+  import SinksSpec.{edgeFixtures, twoFixtures}
 
   private def tmp(): String =
     Files.createTempDirectory("graft-test").toString
@@ -83,56 +85,8 @@ class SinksSpec extends SparkSpec {
     assert(b.isNullAt(b.fieldIndex("xg")))
   }
 
-  private type FixtureRow = (String, String, String, String, String, String,
-    String, String, String, String, String, String)
-
-  /** Raw fixtures in the matches-table shape (FIXTURES.md §1). */
-  private def fixtureRow(date: String, id: String, home: String, away: String,
-                         league: String, kickoff: String,
-                         ts: String = "1748775000"): FixtureRow =
-    (date, id, home, away, league, "England", ts, kickoff,
-      "Not started", "", "1", "api")
-
-  private val historyRows = Seq(
-    ("Arsenal", "2024-2025", "2025-05-01", "PL", "Home", "Brentford",
-      "W", "2", "0", "12", "5"),
-    ("Arsenal", "2024-2025", "2025-05-10", "PL", "Away", "Fulham",
-      "D", "1", "1", "9", "3"),
-    ("Chelsea", "2024-2025", "2025-05-03", "PL", "Home", "Everton",
-      "L", "0", "1", "7", "2"))
-
-  /** Writes the raw fixtures and history CSVs under `dir` and returns the
-    * run's config (today 2025-05-23, output in `dir/out`).
-    */
-  private def pipelineInputs(dir: String, fixtures: Seq[FixtureRow])
-      : Pipeline.Config = {
-    fixtures.toDF("date", "id", "home_team", "away_team", "league", "country",
-      "start_timestamp", "start_time", "status", "venue", "round", "source")
-      .write.option("header", "true").csv(s"$dir/raw_fixtures")
-    historyRows.toDF("team", "season", "date", "competition", "venue",
-      "opponent", "result", "goals_for", "goals_against", "shots",
-      "shots_on_target")
-      .write.option("header", "true").csv(s"$dir/raw_history")
-    Pipeline.Config(fixturesPath = s"$dir/raw_fixtures",
-      historyPath = s"$dir/raw_history", outDir = s"$dir/out",
-      today = "2025-05-23")
-  }
-
-  private val twoFixtures = Seq(
-    fixtureRow("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "12:30"),
-    fixtureRow("2025-06-02", "2", "Man Utd", "Spurs", "Premier League", "15:00",
-      ts = "1748862000"))
-
-  /** A NULL away team, a NULL league, a match_id that occurs twice once
-    * the names are normalized, and a fixture before "today".
-    */
-  private val edgeFixtures = Seq(
-    fixtureRow("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "12:30"),
-    fixtureRow("2025-06-01", "1", "Arsenal", "Chelsea", "Premier League", "12:30"),
-    fixtureRow("2025-06-02", "2", "Man Utd", null, "Premier League", "15:00"),
-    fixtureRow("2025-06-03", "3", "Everton", "Fulham", null, "17:30"),
-    fixtureRow("2025-06-04", "4", "Barcelona", "Chelsea", "La Liga", "20:00"),
-    fixtureRow("2020-01-01", "5", "Old Town", "Gone United", "Premier League", "10:00"))
+  private def pipelineInputs(dir: String, fixtures: Seq[SinksSpec.FixtureRow])
+      : Pipeline.Config = SinksSpec.pipelineInputs(spark, dir, fixtures)
 
   private def statsJson(cfg: Pipeline.Config): String =
     Files.readString(java.nio.file.Paths.get(s"${cfg.outDir}/pipeline_stats.json"))
@@ -294,4 +248,59 @@ class SinksSpec extends SparkSpec {
         cfgs.map(c => csvLines(s"${c.outDir}/$sink")), sink)
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
+}
+
+/** The `Pipeline.run` inputs of these specs, shared with `LocalFsSpec`. */
+object SinksSpec {
+  type FixtureRow = (String, String, String, String, String, String,
+    String, String, String, String, String, String)
+
+  /** Raw fixtures in the matches-table shape (FIXTURES.md §1). */
+  def fixtureRow(date: String, id: String, home: String, away: String,
+                 league: String, kickoff: String,
+                 ts: String = "1748775000"): FixtureRow =
+    (date, id, home, away, league, "England", ts, kickoff,
+      "Not started", "", "1", "api")
+
+  private val historyRows = Seq(
+    ("Arsenal", "2024-2025", "2025-05-01", "PL", "Home", "Brentford",
+      "W", "2", "0", "12", "5"),
+    ("Arsenal", "2024-2025", "2025-05-10", "PL", "Away", "Fulham",
+      "D", "1", "1", "9", "3"),
+    ("Chelsea", "2024-2025", "2025-05-03", "PL", "Home", "Everton",
+      "L", "0", "1", "7", "2"))
+
+  /** Writes the raw fixtures and history CSVs under `dir` and returns the
+    * run's config (today 2025-05-23, output in `dir/out`).
+    */
+  def pipelineInputs(spark: SparkSession, dir: String,
+                     fixtures: Seq[FixtureRow]): Pipeline.Config = {
+    import spark.implicits._
+    fixtures.toDF("date", "id", "home_team", "away_team", "league", "country",
+      "start_timestamp", "start_time", "status", "venue", "round", "source")
+      .write.option("header", "true").csv(s"$dir/raw_fixtures")
+    historyRows.toDF("team", "season", "date", "competition", "venue",
+      "opponent", "result", "goals_for", "goals_against", "shots",
+      "shots_on_target")
+      .write.option("header", "true").csv(s"$dir/raw_history")
+    Pipeline.Config(fixturesPath = s"$dir/raw_fixtures",
+      historyPath = s"$dir/raw_history", outDir = s"$dir/out",
+      today = "2025-05-23")
+  }
+
+  val twoFixtures = Seq(
+    fixtureRow("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "12:30"),
+    fixtureRow("2025-06-02", "2", "Man Utd", "Spurs", "Premier League", "15:00",
+      ts = "1748862000"))
+
+  /** A NULL away team, a NULL league, a match_id that occurs twice once
+    * the names are normalized, and a fixture before "today".
+    */
+  val edgeFixtures = Seq(
+    fixtureRow("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "12:30"),
+    fixtureRow("2025-06-01", "1", "Arsenal", "Chelsea", "Premier League", "12:30"),
+    fixtureRow("2025-06-02", "2", "Man Utd", null, "Premier League", "15:00"),
+    fixtureRow("2025-06-03", "3", "Everton", "Fulham", null, "17:30"),
+    fixtureRow("2025-06-04", "4", "Barcelona", "Chelsea", "La Liga", "20:00"),
+    fixtureRow("2020-01-01", "5", "Old Town", "Gone United", "Premier League", "10:00"))
 }

@@ -70,6 +70,39 @@ class StreamingSpec extends SparkSpec {
       "late row must be dropped by the persisted watermark")
   }
 
+  test("readEvents admits maxFilesPerTrigger files per batch: a 6-file " +
+      "backlog drains in 6 data batches and equals batch windowedCounts") {
+    val dir = Files.createTempDirectory("graft-admission").toString
+    val in = s"$dir/in"; val out = s"$dir/out"; val cp = s"$dir/cp"
+    for (day <- 1 to 6)
+      Seq((s"2024-01-0$day 01:00:00", "click", 1.0 * day),
+        (s"2024-01-0$day 02:00:00", "click", 2.0),
+        (s"2024-01-0$day 03:00:00", "view", 0.5))
+        .toDF("ts", "event_type", "value")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .coalesce(1).write.mode("append").parquet(in)
+    val q = EventStream.writeCounts(EventStream.windowedCounts(
+      EventStream.readEvents(spark, in, schema = eventsDf.schema,
+        maxFilesPerTrigger = 1)), out, cp).start()
+    q.drain()
+    val progress = q.recentProgress.toSeq
+    assert(progress.filter(_.numInputRows > 0).map(_.numInputRows) ==
+      Seq.fill(6)(3L), progress.map(_.numInputRows))
+    assert(progress.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum == 0)
+    // every window the final watermark closed is in the sink, equal to batch
+    val watermark = java.sql.Timestamp.from(java.time.Instant.parse(
+      progress.last.eventTime.get("watermark")))
+    val batch = EventStream.windowedCounts(spark.read.parquet(in))
+      .filter(col("window_start") + expr("INTERVAL 1 DAY") <= lit(watermark))
+    val sink = spark.read.parquet(out)
+    assert(sink.count() == 8, sink.collect().toSeq) // days 1-4, two types
+    assert(sink.exceptAll(batch).isEmpty && batch.exceptAll(sink).isEmpty)
+    intercept[IllegalArgumentException](
+      EventStream.readEvents(spark, in, schema = eventsDf.schema,
+        maxFilesPerTrigger = 0))
+  }
+
   test("foreachBatch MERGE maintenance: change log folds into the lake table") {
     // The CDC shape end-to-end: a parquet change stream (inserts, updates,
     // tombstones) maintained into a query-ready table across TWO

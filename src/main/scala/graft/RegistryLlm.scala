@@ -700,11 +700,10 @@ object RegistryLlm {
               .as("pooled_sum"))
           .orderBy("doc_id")
       },
-      Some("""SELECT CAST(doc_id AS BIGINT) AS doc_id,
+      Some(s"""SELECT CAST(doc_id AS BIGINT) AS doc_id,
              |  'imageio:gray-pool16' AS decoder,
              |  CAST(16 AS BIGINT) AS feature_dim,
-             |  (SELECT CAST(sum((doc_id*31 + i) % 256) AS BIGINT)
-             |   FROM range(64) t(i)) AS pooled_sum
+             |  ${Multimodal.grayPixelSumSql("doc_id")} AS pooled_sum
              |FROM documents WHERE doc_id < 500
              |ORDER BY doc_id""".stripMargin)),
 
@@ -724,10 +723,8 @@ object RegistryLlm {
             col("sum_gray"))
           .orderBy("doc_id")
       },
-      Some("""SELECT CAST(doc_id AS BIGINT) AS doc_id, 8 AS width,
-             |  8 AS height,
-             |  (SELECT CAST(sum((doc_id*31 + i) % 256) AS BIGINT)
-             |   FROM range(64) t(i)) AS sum_gray
+      Some(s"""SELECT CAST(doc_id AS BIGINT) AS doc_id, 8 AS width,
+             |  8 AS height, ${Multimodal.grayPixelSumSql("doc_id")} AS sum_gray
              |FROM documents WHERE doc_id < 500
              |ORDER BY doc_id""".stripMargin)),
 
@@ -748,11 +745,10 @@ object RegistryLlm {
             col("sum_gray"))
           .orderBy("doc_id")
       },
-      Some("""SELECT CAST(doc_id AS BIGINT) AS doc_id, 4 AS width,
+      Some(s"""SELECT CAST(doc_id AS BIGINT) AS doc_id, 4 AS width,
              |  4 AS height,
-             |  (SELECT CAST(sum((doc_id*31 + 16*(i//4) + 2*(i%4)) % 256)
-             |     AS BIGINT)
-             |   FROM range(16) t(i)) AS sum_gray
+             |  ${Multimodal.grayPixelSumSql("doc_id", pixels = 16,
+                    pixel = "16*(i//4) + 2*(i%4)")} AS sum_gray
              |FROM documents WHERE doc_id < 500
              |ORDER BY doc_id""".stripMargin)),
 
@@ -775,10 +771,10 @@ object RegistryLlm {
             col("width"), col("height"), col("sum_gray"))
           .orderBy("doc_id", "frame_idx")
       },
-      Some("""SELECT CAST(d.doc_id AS BIGINT) AS doc_id, f.frame_idx,
+      Some(s"""SELECT CAST(d.doc_id AS BIGINT) AS doc_id, f.frame_idx,
              |  8 AS width, 8 AS height,
-             |  (SELECT CAST(sum((d.doc_id*31 + f.frame_idx*7 + i) % 256)
-             |     AS BIGINT) FROM range(64) t(i)) AS sum_gray
+             |  ${Multimodal.grayPixelSumSql("d.doc_id", "f.frame_idx*7")}
+             |    AS sum_gray
              |FROM documents d CROSS JOIN
              |  (SELECT unnest(generate_series(0, 4, 2)) AS frame_idx) f
              |WHERE d.doc_id < 200

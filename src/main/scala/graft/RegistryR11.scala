@@ -909,14 +909,10 @@ object RegistryR11 {
         val ids = t(s, dir, "documents")
           .select(col("doc_id").cast("long").as("id"))
           .filter(col("id") < 300)
-        val env = graft.llm.Multimodal.audioWindowEnergy(
-          graft.llm.Multimodal.withSyntheticAudio(ids, "id", genMod = 64L),
-          "id", windows = 10)
-        val feats = env.groupBy("id")
-          .agg(md5(to_json(sort_array(
-            collect_list(struct(col("win"), col("energy"))))))
-            .as("content_key"))
-        graft.llm.Dedup.pairsWithinGroups(feats, "content_key", "id")
+        val mm = graft.llm.Multimodal
+        graft.llm.Dedup.pairsWithinGroups(mm.audioContentKeys(
+            mm.withSyntheticAudio(ids, "id", genMod = 64L), "id"),
+            "content_key", "id")
           .orderBy("id_a", "id_b")
       },
       Some("""SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -1250,13 +1246,9 @@ object RegistryR11 {
     //      gate. ----------------------------------------------------------
     Q("m14_image_dhash_dups",
       (s, dir) => {
-        val ids = t(s, dir, "documents").filter(col("doc_id") < 150)
-          .select(col("doc_id").cast("long").as("id"),
-            (col("doc_id") % 25).as("key"),
-            when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
-        val imgs = graft.llm.Multimodal.withSyntheticImagesScaled(
-          ids, "id", "key", "scale", baseW = 36, baseH = 32)
-        val hashed = graft.llm.Multimodal.dhashes(imgs, "id")
+        val mm = graft.llm.Multimodal
+        val hashed = mm.dhashes(
+            mm.plantedImages(t(s, dir, "documents"), 150, 25), "id")
           .filter(col("dhash").isNotNull)
         graft.llm.Dedup.pairsWithinGroups(hashed, "dhash", "id")
           .withColumn("cross_scale",

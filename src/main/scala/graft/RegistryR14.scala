@@ -105,58 +105,20 @@ object RegistryR14 {
     //      drift anywhere breaks the gate. ----------------------------
     Q("m17_canonical_image",
       (s, dir) => {
-        val ids = t(s, dir, "documents").filter(col("doc_id") < 150)
-          .select(col("doc_id").cast("long").as("id"),
-            (col("doc_id") % 25).as("key"),
-            when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
-        val imgs = graft.llm.Multimodal.withSyntheticImagesScaled(
-          ids, "id", "key", "scale", baseW = 36, baseH = 32)
-        val hashed = graft.llm.Multimodal.dhashes(imgs, "id")
-          .filter(col("dhash").isNotNull)
-        // connectivity only — a STAR edge set (rep = min id per dhash,
-        // n−1 edges, linear) feeds the same connected components the
-        // all-pairs set would; one degenerate perceptual hash at 100 TB
-        // never materializes as a group or a quadratic pair fan-out
-        val pairs = graft.llm.Dedup.starEdges(hashed, "dhash", "id")
-        val cc = graft.llm.Dedup.connectedComponents(
-          hashed.select(col("id")), pairs)
-        // resolution read from the DECODED image, never trusted metadata
-        val meta = graft.llm.Multimodal.decodeImageFeatures(imgs, "id")
-          .select(col("id"), col("width").cast("long").as("width"))
-        // election is the map-side-combinable argmax (the a35 machinery
-        // via Dedup.electCanonical), NEVER a rank window over rep: a
-        // degenerate perceptual cluster must not become a one-task sort
-        graft.llm.Dedup.electCanonical(cc.join(meta, "id"),
-            "rep", "id", "width")
+        val mm = graft.llm.Multimodal
+        mm.canonicalImages(mm.plantedImages(t(s, dir, "documents"), 150, 25))
           .select(col("rep"), col("canonical"), col("width"),
             col("n_members"))
           .orderBy("rep")
       },
-      Some("""WITH RECURSIVE ids AS (
-             |  SELECT doc_id AS id, doc_id % 25 AS key,
-             |    CASE WHEN doc_id < 75 THEN 1 ELSE 2 END AS scale
-             |  FROM documents WHERE doc_id < 150),
-             |e AS (
-             |  SELECT a.id AS a, b.id AS b FROM ids a JOIN ids b
-             |  ON a.key = b.key AND a.id <> b.id),
-             |reach AS (
-             |  SELECT id AS src, id AS dst FROM ids
-             |  UNION
-             |  SELECT r.src, e.b AS dst FROM reach r
-             |  JOIN e ON r.dst = e.a),
-             |cc AS (SELECT src AS id, min(dst) AS rep FROM reach
-             |       GROUP BY src),
-             |m AS (SELECT cc.id, cc.rep, 36 * i.scale AS width
-             |      FROM cc JOIN ids i ON i.id = cc.id),
-             |rk AS (
-             |  SELECT rep, id, width,
-             |    row_number() OVER (PARTITION BY rep
-             |      ORDER BY width DESC, id) AS rk,
-             |    count(*) OVER (PARTITION BY rep) AS n_members
-             |  FROM m)
-             |SELECT rep, id AS canonical, CAST(width AS BIGINT) AS width,
-             |  CAST(n_members AS BIGINT) AS n_members
-             |FROM rk WHERE rk = 1 ORDER BY rep""".stripMargin)),
+      Some(s"""WITH RECURSIVE ${graft.llm.Multimodal.chainIdsOracleCtes(
+               150, 25, 36)}
+             |SELECT c.rep, c.id AS canonical,
+             |  CAST(36 * i.scale AS BIGINT) AS width,
+             |  (SELECT CAST(count(*) AS BIGINT) FROM cc
+             |   WHERE cc.rep = c.rep) AS n_members
+             |FROM canon c JOIN ids i USING (id)
+             |ORDER BY rep""".stripMargin)),
 
     // ---- T33: INCREMENTAL tokenizer refit — the word-frequency table
     //      both tokenizer fits start from becomes a mergeable persisted

@@ -134,7 +134,7 @@ object RegistryR16 {
         // tiny SFs where shard 3 is empty — the oracle's exclusion
         // matches by construction)
         val p = new org.apache.hadoop.fs.Path(s"$tmp/shard-00003.jsonl")
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
         if (fs.exists(p)) {
           val in = fs.open(p)
           val bytes =
@@ -308,16 +308,12 @@ object RegistryR16 {
     Q("m21_media_decontaminate",
       (s, dir) => {
         val mm = graft.llm.Multimodal
-        val corpus = t(s, dir, "documents").filter(col("doc_id") < 150)
-          .select(col("doc_id").cast("long").as("id"),
-            (col("doc_id") % 25).as("key"),
-            when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
         val eval0 = t(s, dir, "documents")
           .filter(col("doc_id") >= 315 && col("doc_id") < 325)
           .select(col("doc_id").cast("long").as("id"),
             (col("doc_id") % 25).as("key"), lit(1).as("scale"))
-        val corpusH = mm.dhashes(mm.withSyntheticImagesScaled(
-            corpus, "id", "key", "scale", baseW = 36, baseH = 32), "id")
+        val corpusH = mm.dhashes(
+            mm.plantedImages(t(s, dir, "documents"), 150, 25), "id")
           .filter(col("dhash").isNotNull)
         val evalH = mm.dhashes(mm.withSyntheticImagesScaled(
             eval0, "id", "key", "scale", baseW = 36, baseH = 32), "id")

@@ -548,31 +548,14 @@ object RegistryR8 {
         val ids = t(s, dir, "documents")
           .select(col("doc_id").cast("long").as("id"))
           .filter(col("id") < 150)
-        val frames = Multimodal.decodeVideoFrames(
-          Multimodal.withSyntheticVideos(ids, "id", frames = 6), "id")
-        val w = Window.partitionBy("id").orderBy("frame_idx")
-        frames
-          .withColumn("prev", lag(col("sum_gray"), 1).over(w))
-          .filter(col("prev").isNotNull)
+        Multimodal.sceneCuts(Multimodal.decodeVideoFrames(
+            Multimodal.withSyntheticVideos(ids, "id", frames = 6), "id"))
           .select(col("id").as("doc_id"),
-            col("frame_idx").cast("long").as("frame_idx"),
-            abs(col("sum_gray") - col("prev")).as("delta"),
-            (abs(col("sum_gray") - col("prev")) > 300)
-              .cast("int").as("is_cut"))
+            col("frame_idx").cast("long").as("frame_idx"), col("delta"),
+            col("is_cut"))
           .orderBy("doc_id", "frame_idx")
       },
-      Some("""WITH fr AS (
-             |  SELECT d.doc_id, f.frame_idx,
-             |    (SELECT CAST(sum((d.doc_id*31 + f.frame_idx*7 + i) % 256)
-             |       AS BIGINT) FROM range(64) t(i)) AS sum_gray
-             |  FROM documents d CROSS JOIN
-             |    (SELECT unnest(generate_series(0, 5)) AS frame_idx) f
-             |  WHERE d.doc_id < 150),
-             |d2 AS (
-             |  SELECT doc_id, frame_idx,
-             |    abs(sum_gray - lag(sum_gray) OVER (PARTITION BY doc_id
-             |      ORDER BY frame_idx)) AS delta
-             |  FROM fr)
+      Some(s"""WITH ${Multimodal.sceneCutsOracleCtes(150)}
              |SELECT CAST(doc_id AS BIGINT) AS doc_id,
              |  CAST(frame_idx AS BIGINT) AS frame_idx,
              |  CAST(delta AS BIGINT) AS delta,

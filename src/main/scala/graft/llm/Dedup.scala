@@ -570,15 +570,12 @@ object Dedup {
       .where(col("u") =!= col("v"))
       .distinct()
       .persist(MEMORY_AND_DISK)
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     var converged = false
     var cached = init
     var i = 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(cached)).persist(MEMORY_AND_DISK)
       val w = nonStarWitness(next) // one action: materializes + tests
-      if (dbg) println(s"CCDBG round $i witness=$w ${(System.nanoTime() - t0) / 1e9}s")
       if (cached ne init) cached.unpersist() // superseded once next is live
       cached = next
       converged = w == 0L

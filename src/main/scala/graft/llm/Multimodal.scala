@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import java.awt.image.BufferedImage
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -55,24 +57,28 @@ object Multimodal {
   def decodeFeatures(df: DataFrame, idCol: String,
                      decoderName: String = ImageIoDecoderName,
                      decoder: Array[Byte] => Array[Float] = imageIoDecode)
-      : DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("byte_len", LongType),
-      StructField("decoder", StringType),
-      StructField("features", ArrayType(FloatType))))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      // One pass per partition; in production this is where a native
-      // decoder batch-processes the payloads.
-      rows.map { r =>
-        val id = r.getLong(0)
+      : DataFrame =
+    batched(df, idCol, col("payload"))(new StructType()
+        .add("id", LongType).add("byte_len", LongType)
+        .add("decoder", StringType).add("features", ArrayType(FloatType))) {
+      _.map { r =>
         val payload = r.getAs[Array[Byte]](1)
-        Row(id, payload.length.toLong, decoderName, decoder(payload))
+        Row(r.getLong(0), payload.length.toLong, decoderName,
+          decoder(payload))
       }
-    }(encoder)
-  }
+    }
+
+  /** The one row-batching pass of every frame op here: select `idCol`
+    * (cast to long, as `id`) and `cols`, then walk each partition's rows
+    * once through `f` into `out` rows (the Scala analog of
+    * `mapInPandas`: no per-row task overhead, no driver collect).
+    * Per-partition setup, such as a decoder or a digest, goes in `f`
+    * before it walks the rows.
+    */
+  private def batched(df: DataFrame, idCol: String, cols: Column*)(
+      out: StructType)(f: Iterator[Row] => Iterator[Row]): DataFrame =
+    df.select(col(idCol).cast("long").as("id") +: cols: _*)
+      .mapPartitions(f)(Encoders.row(out))
 
   /** Name carried by [[decodeFeatures]]' default (real) decoder. */
   val ImageIoDecoderName = "imageio:gray-pool16"
@@ -120,70 +126,172 @@ object Multimodal {
 
   // ----------------------------------------------------- real decode: image
 
-  /** Deterministic 8-bit grayscale gradient image, PNG-encoded with the
-    * JDK's ImageIO (pure JVM, lossless): pixel(x,y) = (id*31 + y*w + x)
-    * mod 256. Exact by construction, so a decode can be oracle-checked
-    * analytically (sum over pixels is computable in SQL).
+  /** The one synthetic raster: an 8-bit gray gradient of (w·scale)×(h·scale)
+    * pixels whose pixel (x, y) is (key·31 + offset + (y/scale)·w + x/scale)
+    * mod 256, written by the JDK's ImageIO writer for `format`. Exact by
+    * construction, so a decode is oracle-checkable analytically
+    * ([[grayPixelSumSql]] replays the luminance sum in SQL).
     */
-  def syntheticGrayPng(id: Long, w: Int = 8, h: Int = 8,
-                       offset: Long = 0L): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+  private def grayGradient(key: Long, w: Int, h: Int, offset: Long,
+                           scale: Int, format: String): Array[Byte] = {
+    val img = new BufferedImage(w * scale, h * scale,
+      BufferedImage.TYPE_BYTE_GRAY)
     val raster = img.getRaster
     var y = 0
-    while (y < h) {
+    while (y < h * scale) {
       var x = 0
-      while (x < w) {
-        raster.setSample(x, y, 0, ((id * 31 + offset + y * w + x) % 256).toInt)
+      while (x < w * scale) {
+        raster.setSample(x, y, 0,
+          ((key * 31 + offset + (y / scale) * w + x / scale) % 256).toInt)
         x += 1
       }
       y += 1
     }
+    encodeImage(img, format)
+  }
+
+  private def encodeImage(img: BufferedImage, format: String): Array[Byte] = {
     val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
+    javax.imageio.ImageIO.write(img, format, baos)
     baos.toByteArray
   }
 
-  /** Attach a real PNG payload per row (batched per-partition encode). */
+  /** [[grayGradient]] as a lossless PNG. The `scale`× image is the exact
+    * pixel-doubling (tripling, …) of the `scale` = 1 base, so perceptual
+    * fingerprints that pool in integer arithmetic (dHash with base dims
+    * divisible by its 9×8 grid) are IDENTICAL across scales while the
+    * encoded bytes differ — the planted ground truth for near-duplicate
+    * (not byte-duplicate) image detection.
+    */
+  def syntheticGrayPng(id: Long, w: Int = 8, h: Int = 8, offset: Long = 0L,
+                       scale: Int = 1): Array[Byte] =
+    grayGradient(id, w, h, offset, scale, "png")
+
+  /** DuckDB: the exact luminance sum of [[syntheticGrayPng]]`(key, 8, 8,
+    * offset)` as a BIGINT scalar subquery — Σ over `pixels` of
+    * (key·31 + offset + pixel) mod 256, `pixel` the source index of output
+    * pixel `i` (a resize samples a subset). The one SQL spelling of the
+    * raster rule; `RegistryInvariantsSpec` fails any other.
+    */
+  def grayPixelSumSql(key: String, offset: String = "0", pixels: Int = 64,
+                      pixel: String = "i"): String =
+    s"(SELECT CAST(sum(($key*31 + $offset + $pixel) % 256) AS BIGINT) " +
+      s"FROM range($pixels) t(i))"
+
+  /** The one batched synthetic-payload pass: (id, payload) rows with
+    * `gen(key, scale)` as the payload.
+    */
+  private def synthetic(df: DataFrame, idCol: String, key: Column,
+                        scale: Column)(
+      gen: (Long, Int) => Array[Byte]): DataFrame =
+    batched(df, idCol, key.cast("long"), scale.cast("int"))(new StructType()
+        .add("id", LongType, nullable = false).add("payload", BinaryType)) {
+      _.map(r => Row(r.getLong(0), gen(r.getLong(1), r.getInt(2))))
+    }
+
+  /** Attach a real w×h PNG payload per row, keyed by the id. */
   def withSyntheticImages(df: DataFrame, idCol: String,
-                          w: Int = 8, h: Int = 8): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("payload", BinaryType)))
-    val in = df.select(col(idCol).cast("long").as("id"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map(r => Row(r.getLong(0), syntheticGrayPng(r.getLong(0), w, h)))
-    }(encoder)
+                          w: Int = 8, h: Int = 8): DataFrame =
+    synthetic(df, idCol, col(idCol), lit(1))((k, _) =>
+      syntheticGrayPng(k, w, h))
+
+  /** Attach a scaled synthetic PNG per row from (key, scale) columns. */
+  def withSyntheticImagesScaled(df: DataFrame, idCol: String,
+                                keyCol: String, scaleCol: String,
+                                baseW: Int, baseH: Int): DataFrame =
+    synthetic(df, idCol, col(keyCol), col(scaleCol))((k, s) =>
+      syntheticGrayPng(k, baseW, baseH, scale = s))
+
+  /** Row-major integer luminance of a decoded image, and its sum. */
+  private final case class Luma(w: Int, h: Int, px: Array[Int], total: Long)
+
+  /** The one image reader: JDK ImageIO (PNG/JPEG/BMP/GIF — no external
+    * library) to integer luminance — the exact band sample of a
+    * single-band gray image, the Rec.601 integer luma of anything else.
+    * A palette-indexed raster is single-band too, but its samples are
+    * palette INDICES, not luminance, so it goes through getRGB. None on
+    * payloads ImageIO cannot decode and on empty images: at corpus scale
+    * corrupt blobs are data, not exceptions.
+    */
+  private def readLuma(bytes: Array[Byte]): Option[Luma] = {
+    val img =
+      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      catch { case _: Exception => null }
+    if (img == null || img.getWidth <= 0 || img.getHeight <= 0) return None
+    val w = img.getWidth; val h = img.getHeight
+    val raster = img.getRaster
+    val singleBand = raster.getNumBands == 1 &&
+      !img.getColorModel.isInstanceOf[java.awt.image.IndexColorModel]
+    val px = new Array[Int](w * h)
+    var total = 0L
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val v =
+          if (singleBand) raster.getSample(x, y, 0)
+          else {
+            val rgb = img.getRGB(x, y)
+            (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
+              114 * (rgb & 0xff)) / 1000
+          }
+        px(y * w + x) = v
+        total += v
+        x += 1
+      }
+      y += 1
+    }
+    Some(Luma(w, h, px, total))
   }
 
-  /** REAL image decode via the JDK's ImageIO (PNG/JPEG/BMP/GIF — no
-    * external library): dimensions, exact integer luminance sum, and a
+  /** (sum, count) of each cell of a rows×cols grid over `l`, row-major:
+    * cell (r, c) spans pixel rows [h·r/rows, h·(r+1)/rows) and columns
+    * [w·c/cols, w·(c+1)/cols) — the pooling of both the feature vector
+    * and dHash, each of which takes its own mean of the integer sum.
+    */
+  private def cellSums(l: Luma, rows: Int, cols: Int): Array[(Long, Int)] =
+    Array.tabulate(rows * cols) { i =>
+      val (r, c) = (i / cols, i % cols)
+      val (yHi, xLo, xHi) =
+        (l.h * (r + 1) / rows, l.w * c / cols, l.w * (c + 1) / cols)
+      var sum = 0L; var n = 0
+      var y = l.h * r / rows
+      while (y < yHi) {
+        var x = xLo
+        while (x < xHi) { sum += l.px(y * l.w + x); n += 1; x += 1 }
+        y += 1
+      }
+      (sum, n)
+    }
+
+  /** REAL image decode: dimensions, exact integer luminance sum, and a
     * grid×grid mean-pooled luminance vector (the cheap "thumbnail
     * embedding" a vision pipeline feeds downstream). Non-decodable
-    * payloads yield null fields — at corpus scale corrupt blobs are data,
-    * not exceptions. Batched per partition like `decodeFeatures`.
+    * payloads yield null fields. Batched per partition like
+    * `decodeFeatures`.
     */
   def decodeImageFeatures(df: DataFrame, idCol: String,
-                          grid: Int = 4): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sum_gray", LongType),
-      StructField("features", ArrayType(FloatType))))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
+                          grid: Int = 4): DataFrame =
+    batched(df, idCol, col("payload"))(new StructType()
+        .add("id", LongType).add("width", IntegerType)
+        .add("height", IntegerType).add("sum_gray", LongType)
+        .add("features", ArrayType(FloatType))) {
+      _.map { r =>
         decodeImage(r.getAs[Array[Byte]](1), grid) match {
-          case Some((w, h, sum, feats)) => Row(id, w, h, sum, feats)
-          case None => Row(id, null, null, null, null)
+          case Some((w, h, sum, feats)) => Row(r.getLong(0), w, h, sum, feats)
+          case None => Row(r.getLong(0), null, null, null, null)
         }
       }
-    }(encoder)
-  }
+    }
+
+  /** @return (width, height, integer luminance sum, grid² mean-pool). */
+  def decodeImage(bytes: Array[Byte],
+                  grid: Int): Option[(Int, Int, Long, Array[Float])] =
+    readLuma(bytes).map { l =>
+      (l.w, l.h, l.total, cellSums(l, grid, grid).map { case (sum, n) =>
+        if (n > 0) sum.toFloat / n / 255f else 0f
+      })
+    }
 
   /** REAL image resize: nearest-neighbor with integer floor mapping
     * (src = dst·srcDim/dstDim), re-encoded as grayscale PNG bytes. The
@@ -191,126 +299,94 @@ object Multimodal {
     * drawImage so the output bytes are bit-deterministic across JVMs and
     * renderers — a resize whose pixels depend on the rasterizer can't be
     * content-addressed, deduped, or oracle-checked. Color inputs are
-    * resized in the same Rec.601 integer-luma space `decodeImage` uses.
-    * None on undecodable payloads (corrupt blobs are data, not
-    * exceptions).
+    * resized in `decodeImage`'s integer-luma space. None on undecodable
+    * payloads.
     */
   def resizeImage(bytes: Array[Byte], dstW: Int,
                   dstH: Int): Option[Array[Byte]] = {
     require(dstW > 0 && dstH > 0)
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Exception => null }
-    if (img == null) return None
-    val w = img.getWidth; val h = img.getHeight
-    if (w <= 0 || h <= 0) return None
-    // a palette-indexed raster is also single-band, but its samples
-    // are palette INDICES, not luminance - route it through getRGB
-    val singleBand = img.getRaster.getNumBands == 1 &&
-      !img.getColorModel.isInstanceOf[java.awt.image.IndexColorModel]
-    val out = new java.awt.image.BufferedImage(
-      dstW, dstH, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = out.getRaster
-    var y = 0
-    while (y < dstH) {
-      val sy = y * h / dstH
-      var x = 0
-      while (x < dstW) {
-        val sx = x * w / dstW
-        val v =
-          if (singleBand) img.getRaster.getSample(sx, sy, 0)
-          else {
-            val rgb = img.getRGB(sx, sy)
-            (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
-              114 * (rgb & 0xff)) / 1000
-          }
-        raster.setSample(x, y, 0, v)
-        x += 1
-      }
-      y += 1
+    readLuma(bytes).map { l =>
+      val out = new BufferedImage(dstW, dstH, BufferedImage.TYPE_BYTE_GRAY)
+      val raster = out.getRaster
+      for (y <- 0 until dstH; x <- 0 until dstW)
+        raster.setSample(x, y, 0, l.px((y * l.h / dstH) * l.w + x * l.w / dstW))
+      encodeImage(out, "png")
     }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(out, "png", baos)
-    Some(baos.toByteArray)
   }
 
   /** Batched per-partition resize over a binary payload column — the
-    * thumbnail stage of an image-corpus pipeline (same mapPartitions
-    * shape as the decode ops; at scale the batch amortizes codec setup).
-    * Undecodable payloads become null thumbnails.
+    * thumbnail stage of an image-corpus pipeline. Undecodable payloads
+    * become null thumbnails.
     */
   def resizeImages(df: DataFrame, idCol: String, dstW: Int,
-                   dstH: Int): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("thumb", BinaryType)))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.getLong(0),
-          resizeImage(r.getAs[Array[Byte]](1), dstW, dstH).orNull)
-      }
-    }(encoder)
-  }
-
-  /** @return (width, height, integer luminance sum, grid² mean-pool). */
-  def decodeImage(bytes: Array[Byte],
-                  grid: Int): Option[(Int, Int, Long, Array[Float])] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Exception => null }
-    if (img == null) return None
-    val w = img.getWidth; val h = img.getHeight
-    if (w <= 0 || h <= 0) return None
-    // Integer luminance per pixel: exact band sample for single-band
-    // grayscale; Rec.601 integer luma for color. Both deterministic.
-    // a palette-indexed raster is also single-band, but its samples
-    // are palette INDICES, not luminance - route it through getRGB
-    val singleBand = img.getRaster.getNumBands == 1 &&
-      !img.getColorModel.isInstanceOf[java.awt.image.IndexColorModel]
-    val lum = new Array[Int](w * h)
-    var total = 0L
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val v =
-          if (singleBand) img.getRaster.getSample(x, y, 0)
-          else {
-            val rgb = img.getRGB(x, y)
-            (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
-              114 * (rgb & 0xff)) / 1000
-          }
-        lum(y * w + x) = v
-        total += v
-        x += 1
-      }
-      y += 1
+                   dstH: Int): DataFrame =
+    batched(df, idCol, col("payload"))(
+        new StructType().add("id", LongType).add("thumb", BinaryType)) {
+      _.map(r => Row(r.getLong(0),
+        resizeImage(r.getAs[Array[Byte]](1), dstW, dstH).orNull))
     }
-    // grid×grid mean pool with WAV-window-style cell boundaries.
-    val feats = new Array[Float](grid * grid)
-    var gy = 0
-    while (gy < grid) {
-      val yLo = h * gy / grid; val yHi = h * (gy + 1) / grid
-      var gx = 0
-      while (gx < grid) {
-        val xLo = w * gx / grid; val xHi = w * (gx + 1) / grid
-        var ss = 0L; var n = 0
-        var yy = yLo
-        while (yy < yHi) {
-          var xx = xLo
-          while (xx < xHi) { ss += lum(yy * w + xx); n += 1; xx += 1 }
-          yy += 1
-        }
-        feats(gy * grid + gx) = if (n > 0) ss.toFloat / n / 255f else 0f
-        gx += 1
-      }
-      gy += 1
-    }
-    Some((w, h, total, feats))
-  }
 
+  /** 64-bit perceptual difference hash (dHash, the standard cheap
+    * near-duplicate image fingerprint): decode → integer luminance →
+    * 9×8 integer mean-pool → each bit compares horizontally adjacent
+    * cells (`cell[r][c+1] > cell[r][c]`), row-major MSB-first. All
+    * integer arithmetic (truncating cell means), so the hash is
+    * bit-deterministic — and SCALE-INVARIANT whenever the resize
+    * preserves cell means (e.g. pixel doubling), which is exactly what
+    * byte-level digests (m09's `content_key`) cannot see: a re-encoded
+    * or upscaled copy has different bytes but the same dHash. None on
+    * undecodable payloads and on images under 9×8.
+    */
+  def dhashImage(bytes: Array[Byte]): Option[Long] =
+    readLuma(bytes).filter(l => l.w >= 9 && l.h >= 8).map { l =>
+      val cells = cellSums(l, 8, 9).map { case (sum, n) =>
+        if (n > 0) sum / n else 0L
+      }
+      var hash = 0L
+      for (r <- 0 until 8; c <- 0 until 8)
+        hash = (hash << 1) |
+          (if (cells(r * 9 + c + 1) > cells(r * 9 + c)) 1L else 0L)
+      hash
+    }
+
+  /** Batched per-partition dHash over a binary payload column — ONE
+    * decode per image (the m09 lesson: decode IS the query cost at an
+    * image-corpus scale). Undecodable payloads yield null.
+    */
+  def dhashes(df: DataFrame, idCol: String): DataFrame =
+    batched(df, idCol, col("payload"))(
+        new StructType().add("id", LongType).add("dhash", LongType)) {
+      _.map(r => Row(r.getLong(0),
+        dhashImage(r.getAs[Array[Byte]](1)).map(Long.box).orNull))
+    }
+
+  /** The planted cross-scale image fixture: per doc below `bound`, a
+    * 36×32-base gradient PNG keyed doc_id mod `nKeys` (the planted
+    * duplicate clusters; 36×32 divides the dHash grid), the first half
+    * at scale 1 and the second half pixel-doubled. (id, payload).
+    * [[chainIdsOracleCtes]] replays it.
+    */
+  def plantedImages(docs: DataFrame, bound: Long, nKeys: Int): DataFrame =
+    withSyntheticImagesScaled(chainIds(docs, bound, nKeys), "id", "key",
+      "scale", baseW = 36, baseH = 32)
+
+  /** The highest-resolution rendition per perceptual cluster of (id,
+    * payload) images: dHash → STAR edges (rep = min id per hash, linear
+    * — one degenerate hash never fans out quadratically) → connected
+    * components → election by DECODED width desc, id asc (resolution
+    * read from the image, never trusted metadata) through the
+    * map-side-combinable argmax, never a rank window over the rep key.
+    * Pixels never shuffle: (id, dhash, width) scalars do. Output: (rep,
+    * canonical, width, n_members).
+    */
+  def canonicalImages(imgs: DataFrame): DataFrame = {
+    val hashed = dhashes(imgs, "id").filter(col("dhash").isNotNull)
+    val cc = Dedup.connectedComponents(hashed.select(col("id")),
+      Dedup.starEdges(hashed, "dhash", "id"))
+    val meta = decodeImageFeatures(imgs, "id")
+      .select(col("id"), col("width").cast("long").as("width"))
+    Dedup.electCanonical(cc.join(meta, "id"), "rep", "id", "width")
+  }
   // ---------------------------------------------- real decode: video (AVI)
 
   /** Parsed AVI container: header timing plus the raw per-frame payloads
@@ -319,74 +395,76 @@ object Multimodal {
   final case class AviInfo(usPerFrame: Long, totalFrames: Long,
                            frames: IndexedSeq[Array[Byte]])
 
-  /** RIFF/AVI container walker — the same chunk arithmetic as the WAV
-    * decoder, two levels deep: `LIST hdrl` → `avih` for timing,
-    * `LIST movi` → video chunks for frame payloads. Handles the `rec `
-    * grouping LISTs interleaved AVIs use. Returns None on anything that
-    * is not a well-formed AVI.
+  /** The one RIFF chunk walk (AVI and WAV): (fourcc, data offset, data
+    * size) of each word-aligned chunk in `b[from, to)`. None when a
+    * declared size overruns `to` — checked in Long arithmetic, so a size
+    * near Int.MaxValue is damage, never a wrapped offset.
+    */
+  private def riffChunks(b: Array[Byte], from: Int,
+                         to: Int): Option[Seq[(String, Int, Int)]] = {
+    val out = scala.collection.mutable.ArrayBuffer[(String, Int, Int)]()
+    var pos = from
+    while (pos + 8 <= to) {
+      val size = readLe32(b, pos + 4)
+      if (size < 0 || pos + 8L + size > to) return None
+      out += ((fourcc(b, pos), pos + 8, size))
+      pos += 8 + size + (size & 1)
+    }
+    Some(out.toSeq)
+  }
+
+  private def readLe32(b: Array[Byte], i: Int): Int =
+    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) |
+      ((b(i + 3) & 0xff) << 24)
+
+  private def fourcc(b: Array[Byte], i: Int): String =
+    new String(b, i, 4, "US-ASCII")
+
+  /** RIFF/AVI container walker, two levels deep: `LIST hdrl` → `avih`
+    * for timing, `LIST movi` → video chunks for frame payloads. Handles
+    * the `rec ` grouping LISTs interleaved AVIs use. Returns None on
+    * anything that is not a well-formed AVI.
     */
   def parseAvi(bytes: Array[Byte]): Option[AviInfo] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) |
-      (u8(i + 3) << 24)
-    def tag(i: Int) = new String(bytes, i, 4, "US-ASCII")
-    if (bytes.length < 24 || tag(0) != "RIFF" || tag(8) != "AVI ") return None
-
+    if (bytes.length < 24 || fourcc(bytes, 0) != "RIFF" ||
+        fourcc(bytes, 8) != "AVI ") return None
     var usPerFrame = 0L; var totalFrames = 0L; var seenAvih = false
     val frames = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
 
+    def isList(id: String, off: Int, size: Int, sub: String): Boolean =
+      id == "LIST" && size >= 4 && fourcc(bytes, off) == sub
     def isVideoChunk(id: String): Boolean =
       id.length == 4 && id(0).isDigit && id(1).isDigit &&
         (id.endsWith("dc") || id.endsWith("db"))
 
-    def walkMovi(from: Int, to: Int): Boolean = {
-      var pos = from
-      while (pos + 8 <= to) {
-        val id = tag(pos); val size = le32(pos + 4)
-        if (size < 0 || pos + 8L + size > to) return false
-        if (id == "LIST" && size >= 4 && tag(pos + 8) == "rec ") {
-          if (!walkMovi(pos + 12, pos + 8 + size)) return false
-        } else if (isVideoChunk(id)) {
-          frames += java.util.Arrays.copyOfRange(bytes, pos + 8,
-            pos + 8 + size)
+    def walkMovi(from: Int, to: Int): Boolean =
+      riffChunks(bytes, from, to).exists(_.forall { case (id, off, size) =>
+        if (isList(id, off, size, "rec ")) walkMovi(off + 4, off + size)
+        else {
+          if (isVideoChunk(id))
+            frames += java.util.Arrays.copyOfRange(bytes, off, off + size)
+          true
         }
-        pos += 8 + size + (size & 1)
-      }
-      true
-    }
+      })
 
-    def walkHdrl(from: Int, to: Int): Boolean = {
-      var pos = from
-      while (pos + 8 <= to) {
-        val id = tag(pos); val size = le32(pos + 4)
-        if (size < 0 || pos + 8L + size > to) return false
-        if (id == "avih" && size >= 32) {
+    def walkHdrl(from: Int, to: Int): Boolean =
+      riffChunks(bytes, from, to).map(_.foreach {
+        case ("avih", off, size) if size >= 32 =>
           // both DWORDs are unsigned: mask like usPerFrame so an AVI
           // declaring >= 2^31 frames reports the true count, not negative
-          usPerFrame = le32(pos + 8).toLong & 0xffffffffL
-          totalFrames = le32(pos + 8 + 16).toLong & 0xffffffffL
+          usPerFrame = readLe32(bytes, off).toLong & 0xffffffffL
+          totalFrames = readLe32(bytes, off + 16).toLong & 0xffffffffL
           seenAvih = true
-        }
-        pos += 8 + size + (size & 1)
-      }
-      true
-    }
+        case _ => ()
+      }).isDefined
 
-    var pos = 12
-    while (pos + 8 <= bytes.length) {
-      val id = tag(pos); val size = le32(pos + 4)
-      if (size < 0 || pos + 8L + size > bytes.length) return None
-      if (id == "LIST" && size >= 4) {
-        val sub = tag(pos + 8)
-        val ok =
-          if (sub == "hdrl") walkHdrl(pos + 12, pos + 8 + size)
-          else if (sub == "movi") walkMovi(pos + 12, pos + 8 + size)
-          else true
-        if (!ok) return None
-      }
-      pos += 8 + size + (size & 1)
-    }
-    if (!seenAvih || frames.isEmpty) None
+    val ok = riffChunks(bytes, 12, bytes.length).exists(_.forall {
+      case (id, off, size) =>
+        if (isList(id, off, size, "hdrl")) walkHdrl(off + 4, off + size)
+        else if (isList(id, off, size, "movi")) walkMovi(off + 4, off + size)
+        else true
+    })
+    if (!ok || !seenAvih || frames.isEmpty) None
     else Some(AviInfo(usPerFrame, totalFrames, frames.toIndexedSeq))
   }
 
@@ -438,21 +516,9 @@ object Multimodal {
     * decodes are oracle-checkable (see m05).
     */
   def withSyntheticVideos(df: DataFrame, idCol: String, frames: Int = 6,
-                          w: Int = 8, h: Int = 8): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("payload", BinaryType)))
-    val in = df.select(col(idCol).cast("long").as("id"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, buildAvi(
-          (0 until frames).map(f => syntheticGrayPng(id, w, h, f * 7L)),
-          w, h))
-      }
-    }(encoder)
-  }
+                          w: Int = 8, h: Int = 8): DataFrame =
+    synthetic(df, idCol, col(idCol), lit(1))((k, _) => buildAvi(
+      (0 until frames).map(f => syntheticGrayPng(k, w, h, f * 7L)), w, h))
 
   /** REAL video decode for the MJPEG/AVI family: walk the container
     * (`parseAvi`), take every `everyNth` frame (the `sampleFrames`
@@ -467,16 +533,11 @@ object Multimodal {
   def decodeVideoFrames(df: DataFrame, idCol: String,
                         everyNth: Int = 1): DataFrame = {
     require(everyNth > 0, s"everyNth must be positive, got $everyNth")
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sum_gray", LongType)))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
+    batched(df, idCol, col("payload"))(new StructType()
+        .add("id", LongType).add("frame_idx", IntegerType)
+        .add("width", IntegerType).add("height", IntegerType)
+        .add("sum_gray", LongType)) {
+      _.flatMap { r =>
         val id = r.getLong(0)
         parseAvi(r.getAs[Array[Byte]](1)).toSeq.flatMap { avi =>
           (0 until avi.frames.length by everyNth).flatMap { fi =>
@@ -486,8 +547,40 @@ object Multimodal {
           }
         }
       }
-    }(encoder)
+    }
   }
+
+  /** Scene cuts over [[decodeVideoFrames]]' rows: every frame after a
+    * video's first, with `delta` = |Δ`sum_gray`| to the previous frame
+    * and `is_cut` = delta > 300 — the standard cheap shot-boundary
+    * signal. [[sceneCutsOracleCtes]] replays it.
+    */
+  def sceneCuts(frames: DataFrame): DataFrame = {
+    val delta = abs(col("sum_gray") - col("prev"))
+    frames.withColumn("prev", lag(col("sum_gray"), 1)
+        .over(Window.partitionBy("id").orderBy("frame_idx")))
+      .filter(col("prev").isNotNull)
+      .select(col("id"), col("frame_idx"), delta.as("delta"),
+        (delta > 300).cast("int").as("is_cut"))
+  }
+
+  /** DuckDB replay of [[sceneCuts]] over [[withSyntheticVideos]]' 6-frame
+    * 8×8 videos of the docs below `bound`: `fr` (doc_id, frame_idx,
+    * sum_gray), then `d2` (doc_id, frame_idx, delta; delta NULL on a
+    * video's first frame).
+    */
+  def sceneCutsOracleCtes(bound: Long): String =
+    s"""fr AS (
+       |  SELECT d.doc_id, f.frame_idx,
+       |    ${grayPixelSumSql("d.doc_id", "f.frame_idx*7")} AS sum_gray
+       |  FROM documents d CROSS JOIN
+       |    (SELECT unnest(generate_series(0, 5)) AS frame_idx) f
+       |  WHERE d.doc_id < $bound),
+       |d2 AS (
+       |  SELECT doc_id, frame_idx,
+       |    abs(sum_gray - lag(sum_gray) OVER (PARTITION BY doc_id
+       |      ORDER BY frame_idx)) AS delta
+       |  FROM fr)""".stripMargin
 
   /** Per-frame content digests: walk the AVI container and md5 each
     * frame's bytes — the index behind exact CROSS-VIDEO frame matching
@@ -495,14 +588,11 @@ object Multimodal {
     * 16-byte digest equi-join, never through pixel data; non-AVI
     * payloads contribute no rows.
     */
-  def frameHashes(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("frame_md5", StringType, nullable = false)))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
+  def frameHashes(df: DataFrame, idCol: String): DataFrame =
+    batched(df, idCol, col("payload"))(new StructType()
+        .add("id", LongType, nullable = false)
+        .add("frame_idx", IntegerType, nullable = false)
+        .add("frame_md5", StringType, nullable = false)) { rows =>
       val md = java.security.MessageDigest.getInstance("MD5")
       rows.flatMap { r =>
         val id = r.getLong(0)
@@ -512,144 +602,7 @@ object Multimodal {
           }
         }
       }
-    }(encoder)
-  }
-
-  /** 64-bit perceptual difference hash (dHash, the standard cheap
-    * near-duplicate image fingerprint): decode → integer luminance →
-    * 9×8 integer mean-pool → each bit compares horizontally adjacent
-    * cells (`cell[r][c+1] > cell[r][c]`), row-major MSB-first. All
-    * integer arithmetic (truncating cell means), so the hash is
-    * bit-deterministic — and SCALE-INVARIANT whenever the resize
-    * preserves cell means (e.g. pixel doubling), which is exactly what
-    * byte-level digests (m09's `content_key`) cannot see: a re-encoded
-    * or upscaled copy has different bytes but the same dHash. None on
-    * undecodable payloads (corrupt blobs are data, not exceptions).
-    */
-  def dhashImage(bytes: Array[Byte]): Option[Long] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Exception => null }
-    if (img == null) return None
-    val w = img.getWidth; val h = img.getHeight
-    if (w < 9 || h < 8) return None
-    // a palette-indexed raster is also single-band, but its samples
-    // are palette INDICES, not luminance - route it through getRGB
-    val singleBand = img.getRaster.getNumBands == 1 &&
-      !img.getColorModel.isInstanceOf[java.awt.image.IndexColorModel]
-    val lum = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        lum(y * w + x) =
-          if (singleBand) img.getRaster.getSample(x, y, 0)
-          else {
-            val rgb = img.getRGB(x, y)
-            (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
-              114 * (rgb & 0xff)) / 1000
-          }
-        x += 1
-      }
-      y += 1
     }
-    val cells = Array.ofDim[Long](8, 9)
-    var r = 0
-    while (r < 8) {
-      val yLo = h * r / 8; val yHi = h * (r + 1) / 8
-      var c = 0
-      while (c < 9) {
-        val xLo = w * c / 9; val xHi = w * (c + 1) / 9
-        var ss = 0L; var n = 0L
-        var yy = yLo
-        while (yy < yHi) {
-          var xx = xLo
-          while (xx < xHi) { ss += lum(yy * w + xx); n += 1; xx += 1 }
-          yy += 1
-        }
-        cells(r)(c) = if (n > 0) ss / n else 0L
-        c += 1
-      }
-      r += 1
-    }
-    var hash = 0L
-    r = 0
-    while (r < 8) {
-      var c = 0
-      while (c < 8) {
-        hash = (hash << 1) | (if (cells(r)(c + 1) > cells(r)(c)) 1L else 0L)
-        c += 1
-      }
-      r += 1
-    }
-    Some(hash)
-  }
-
-  /** Batched per-partition dHash over a binary payload column — ONE
-    * decode per image (the m09 lesson: decode IS the query cost at an
-    * image-corpus scale). Undecodable payloads yield null.
-    */
-  def dhashes(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("dhash", LongType)))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.getLong(0),
-          dhashImage(r.getAs[Array[Byte]](1))
-            .map(Long.box).orNull)
-      }
-    }(encoder)
-  }
-
-  /** [[syntheticGrayPng]]'s scale-aware sibling: the `scale`× image is
-    * the exact pixel-doubling (tripling, …) of the `scale`=1 base, so
-    * perceptual fingerprints that pool in integer arithmetic (dHash
-    * with base dims divisible by the 9×8 grid) are IDENTICAL across
-    * scales while the encoded bytes differ — the planted ground truth
-    * for near-duplicate (not byte-duplicate) image detection.
-    */
-  def syntheticGrayPngScaled(key: Long, baseW: Int, baseH: Int,
-                             scale: Int): Array[Byte] = {
-    val w = baseW * scale; val h = baseH * scale
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        raster.setSample(x, y, 0,
-          ((key * 31 + (y / scale) * baseW + (x / scale)) % 256).toInt)
-        x += 1
-      }
-      y += 1
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
-    baos.toByteArray
-  }
-
-  /** Attach a scaled synthetic PNG per row from (key, scale) columns. */
-  def withSyntheticImagesScaled(df: DataFrame, idCol: String,
-                                keyCol: String, scaleCol: String,
-                                baseW: Int, baseH: Int): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("payload", BinaryType)))
-    val in = df.select(col(idCol).cast("long").as("id"),
-      col(keyCol).cast("long").as("key"),
-      col(scaleCol).cast("int").as("scale"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.getLong(0),
-          syntheticGrayPngScaled(r.getLong(1), baseW, baseH, r.getInt(2)))
-      }
-    }(encoder)
-  }
 
   // ------------------------------------------------------- real decode: WAV
 
@@ -661,24 +614,17 @@ object Multimodal {
     * data, not exceptions.
     */
   def decodeAudioFeatures(df: DataFrame, idCol: String,
-                          windows: Int = FeatureDim): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("sample_rate", IntegerType),
-      StructField("num_samples", LongType),
-      StructField("rms", ArrayType(FloatType))))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
+                          windows: Int = FeatureDim): DataFrame =
+    batched(df, idCol, col("payload"))(new StructType()
+        .add("id", LongType).add("sample_rate", IntegerType)
+        .add("num_samples", LongType).add("rms", ArrayType(FloatType))) {
+      _.map { r =>
         decodeWav(r.getAs[Array[Byte]](1), windows) match {
-          case Some((rate, n, rms)) => Row(id, rate, n, rms)
-          case None => Row(id, null, null, null)
+          case Some((rate, n, rms)) => Row(r.getLong(0), rate, n, rms)
+          case None => Row(r.getLong(0), null, null, null)
         }
       }
-    }(encoder)
-  }
+    }
 
   /** Minimal RIFF/WAVE writer (16-bit PCM mono) — the audio counterpart
     * of `buildAvi`, for synthesizing decodable payloads in-engine.
@@ -707,8 +653,7 @@ object Multimodal {
   /** Deterministic synthetic WAV payloads: sample i of id is
     * `((id*31 + i*7) mod 65536) - 32768` — same arithmetic family as the
     * synthetic video frames, so oracles can reason about the fields.
-    */
-  /** @param genMod when > 0, samples derive from `id % genMod` instead
+    * @param genMod when > 0, samples derive from `id % genMod` instead
     *   of the raw id — ids in the same residue class get byte-identical
     *   audio (dup planting for the content-dedup gates, the audio twin
     *   of the image generator's mod-256 congruence).
@@ -716,242 +661,162 @@ object Multimodal {
   def withSyntheticAudio(df: DataFrame, idCol: String,
                          nSamples: Int = 1000, rate: Int = 8000,
                          genMod: Long = 0L): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType)))
-    val in = df.select(col(idCol).cast("long").as("id"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val gen = if (genMod > 0) id % genMod else id
-        val samples = Array.tabulate(nSamples)(i =>
-          (((gen * 31 + i.toLong * 7) % 65536) - 32768).toShort)
-        Row(id, buildWav(samples, rate))
-      }
-    }(encoder)
+    val id = col(idCol).cast("long")
+    withSyntheticAudioScaled(df.select(id.as("id"),
+        (if (genMod > 0) id % genMod else id).as("key"), lit(1).as("scale")),
+      "id", "key", "scale", nSamples, rate)
   }
 
-  /** [[withSyntheticAudio]]'s scale-aware sibling (the audio twin of
-    * [[withSyntheticImagesScaled]]): the `scale`× rendition repeats each
-    * base sample `scale` times (integer upsampling), so the
-    * duration-invariant envelope ([[decodeWavEnvelope]]) is IDENTICAL
-    * across scales while the encoded bytes and the decoded duration
-    * differ — the planted ground truth for cross-duration audio
-    * near-dup detection plus longest-rendition canonical election.
-    * Base sample j of key k is ((k·31 + j·7) mod 65536) − 32768.
+  /** The one synthetic WAV generator (the audio twin of
+    * [[withSyntheticImagesScaled]]): base sample j of key k is
+    * ((k·31 + j·7) mod 65536) − 32768, and the `scale`× rendition repeats
+    * each base sample `scale` times (integer upsampling), so the
+    * duration-invariant envelope ([[audioEnvelopes]]) is IDENTICAL across
+    * scales while the encoded bytes and the decoded duration differ —
+    * the planted ground truth for cross-duration audio near-dup
+    * detection plus longest-rendition canonical election.
     */
   def withSyntheticAudioScaled(df: DataFrame, idCol: String,
                                keyCol: String, scaleCol: String,
                                baseSamples: Int = 1000,
-                               rate: Int = 8000): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType)))
-    val in = df.select(col(idCol).cast("long").as("id"),
-      col(keyCol).cast("long").as("key"),
-      col(scaleCol).cast("int").as("scale"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        val key = r.getLong(1); val scale = r.getInt(2)
-        val samples = Array.tabulate(baseSamples * scale)(i =>
-          (((key * 31 + (i / scale).toLong * 7) % 65536) - 32768).toShort)
-        Row(r.getLong(0), buildWav(samples, rate))
-      }
-    }(encoder)
-  }
+                               rate: Int = 8000): DataFrame =
+    synthetic(df, idCol, col(keyCol), col(scaleCol))((k, s) =>
+      buildWav(Array.tabulate(baseSamples * s)(i =>
+        (((k * 31 + (i / s).toLong * 7) % 65536) - 32768).toShort), rate))
 
-  /** DURATION-INVARIANT audio fingerprint: per-window truncating MEAN
-    * energy (Σ amp² div window sample count) plus the decoded sample
-    * count. An integer-upsampled rendition (each sample repeated k
-    * times) has per-window energy k·E over k·c samples, and
-    * floor(kE / kc) = floor(E / c) exactly — so envelopes agree across
-    * scales while byte digests (m13's `content_key`) cannot, the audio
-    * analogue of dHash's pooling invariance. Requires window boundaries
-    * to land on whole base samples: sample counts divisible by
-    * `windows` (the synthetic plants use 1000·scale over 10 windows).
-    * @return (numSamples, per-window mean energies), None if not PCM WAV
+  /** The one PCM window walk: over `windows` equal frame ranges
+    * [n·w/windows, n·(w+1)/windows), each window's EXACT energy
+    * Σ (channel-summed amplitude)² and its frame count. Every audio
+    * feature here is a final step over it. None if not a 16-bit PCM WAV.
     */
-  def decodeWavEnvelope(bytes: Array[Byte], windows: Int)
-      : Option[(Long, Array[Long])] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    val (_, channels, dataOff, n) = parsePcmWav(bytes) match {
-      case Some(h) => h
-      case None => return None
-    }
-    val frameBytes = 2 * channels
-    val out = new Array[Long](windows)
-    var w = 0
-    while (w < windows) {
-      val lo = (n.toLong * w / windows).toInt
-      val hi = (n.toLong * (w + 1) / windows).toInt
-      var ss = 0L; var i = lo
-      while (i < hi) {
-        var c = 0; var amp = 0L
-        while (c < channels) {
-          amp += le16(dataOff + i * frameBytes + 2 * c).toShort
-          c += 1
-        }
-        ss += amp * amp; i += 1
-      }
-      out(w) = if (hi > lo) ss / (hi - lo) else 0L
-      w += 1
-    }
-    Some((n.toLong, out))
-  }
+  private final case class PcmWindows(rate: Int, channels: Int, frames: Int,
+                                      energy: Array[Long], count: Array[Int])
 
-  /** Batched [[decodeWavEnvelope]]: one row per decodable payload with
-    * (id, num_samples, envelope) — ONE decode per asset (the m09/m13
-    * lesson); undecodable payloads yield no rows.
+  private def pcmWindows(bytes: Array[Byte], windows: Int): Option[PcmWindows] =
+    parsePcmWav(bytes).map { case (rate, channels, dataOff, n) =>
+      val frameBytes = 2 * channels
+      val energy = new Array[Long](windows)
+      val count = new Array[Int](windows)
+      var w = 0
+      while (w < windows) {
+        val lo = (n.toLong * w / windows).toInt
+        val hi = (n.toLong * (w + 1) / windows).toInt
+        var ss = 0L; var i = lo
+        while (i < hi) {
+          var c = 0; var amp = 0L
+          while (c < channels) {
+            val at = dataOff + i * frameBytes + 2 * c // little-endian
+            amp += ((bytes(at) & 0xff) | (bytes(at + 1) << 8)).toShort
+            c += 1
+          }
+          ss += amp * amp; i += 1
+        }
+        energy(w) = ss; count(w) = hi - lo
+        w += 1
+      }
+      PcmWindows(rate, channels, n, energy, count)
+    }
+
+  /** RIFF/WAVE decode for 16-bit PCM (mono or stereo, channels averaged).
+    * Window RMS of the [-1, 1] samples is sqrt(E / 2^30 / ch² / frames)
+    * over [[pcmWindows]]' integer energy E: each sample's square is an
+    * exact double, so this is the sequential double sum of squares to
+    * the last bit while a window holds fewer than 2^21 frames (2^23
+    * mono).
+    * @return (sampleRate, numSamples, per-window RMS)
+    */
+  def decodeWav(bytes: Array[Byte], windows: Int): Option[(Int, Long, Array[Float])] =
+    pcmWindows(bytes, windows).map { p =>
+      (p.rate, p.frames.toLong, Array.tabulate(windows) { w =>
+        if (p.count(w) > 0) math.sqrt(p.energy(w).toDouble / (1 << 30) /
+          (p.channels * p.channels) / p.count(w)).toFloat
+        else 0f
+      })
+    }
+
+  /** DURATION-INVARIANT audio fingerprint, one row per decodable payload:
+    * (id, num_samples, envelope), the envelope holding each window's
+    * truncating MEAN energy (energy div frame count). An
+    * integer-upsampled rendition (each sample repeated k times) has
+    * per-window energy k·E over k·c samples, and floor(kE / kc) =
+    * floor(E / c) exactly — so envelopes agree across scales while byte
+    * digests (m13's `content_key`) cannot, the audio analogue of dHash's
+    * pooling invariance. Requires window boundaries to land on whole
+    * base samples: sample counts divisible by `windows` (the synthetic
+    * plants use 1000·scale over 10 windows). ONE decode per asset;
+    * undecodable payloads yield no rows.
     */
   def audioEnvelopes(df: DataFrame, idCol: String, windows: Int = 10)
-      : DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("num_samples", LongType),
-      StructField("envelope", ArrayType(LongType))))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        decodeWavEnvelope(r.getAs[Array[Byte]](1), windows) match {
-          case Some((n, env)) => Iterator.single(Row(id, n, env))
-          case None => Iterator.empty
+      : DataFrame =
+    batched(df, idCol, col("payload"))(new StructType()
+        .add("id", LongType).add("num_samples", LongType)
+        .add("envelope", ArrayType(LongType))) {
+      _.flatMap { r =>
+        pcmWindows(r.getAs[Array[Byte]](1), windows).map { p =>
+          Row(r.getLong(0), p.frames.toLong, Array.tabulate(windows) { w =>
+            if (p.count(w) > 0) p.energy(w) / p.count(w) else 0L
+          })
         }
       }
-    }(encoder)
-  }
+    }
 
-  /** RIFF/WAVE walker for 16-bit PCM (mono or stereo, channels averaged).
-    * @return (sampleRate, numSamples, per-window RMS of [-1,1] samples)
+  /** EXACT windowed audio energy: one row per (id, window) with
+    * [[pcmWindows]]' BIGINT energy — the integer counterpart of
+    * [[decodeWav]]'s float RMS, so an analytic oracle can hash-match the
+    * decode bit-for-bit (floats can't cross engines exactly; int64 can).
+    * Undecodable payloads yield no rows.
     */
-  def decodeWav(bytes: Array[Byte], windows: Int): Option[(Int, Long, Array[Float])] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    val (rate, channels, dataOff, n) = parsePcmWav(bytes) match {
-      case Some(h) => h
-      case None => return None
-    }
-    val frameBytes = 2 * channels
-
-    // Per-window sum of squares in double; sequential order, reproducible.
-    val rms = new Array[Float](windows)
-    var w = 0
-    while (w < windows) {
-      val lo = (n.toLong * w / windows).toInt
-      val hi = (n.toLong * (w + 1) / windows).toInt
-      var ss = 0.0; var i = lo
-      while (i < hi) {
-        var c = 0; var acc = 0.0
-        while (c < channels) {
-          val s = le16(dataOff + i * frameBytes + 2 * c).toShort
-          acc += s / 32768.0; c += 1
+  def audioWindowEnergy(df: DataFrame, idCol: String, windows: Int = 10)
+      : DataFrame =
+    batched(df, idCol, col("payload"))(new StructType()
+        .add("id", LongType).add("win", IntegerType)
+        .add("energy", LongType)) {
+      _.flatMap { r =>
+        pcmWindows(r.getAs[Array[Byte]](1), windows).iterator.flatMap {
+          _.energy.iterator.zipWithIndex.map { case (e, w) =>
+            Row(r.getLong(0), w, e)
+          }
         }
-        val x = acc / channels
-        ss += x * x; i += 1
       }
-      rms(w) = if (hi > lo) math.sqrt(ss / (hi - lo)).toFloat else 0f
-      w += 1
     }
-    Some((rate, n.toLong, rms))
-  }
+
+  /** Exact audio content key of (id, payload) WAVs: (id, content_key),
+    * the md5 of the sorted 10-window [[audioWindowEnergy]] list — byte-
+    * identical PCM gets one key through the decode.
+    */
+  def audioContentKeys(wavs: DataFrame, idCol: String): DataFrame =
+    audioWindowEnergy(wavs, idCol, windows = 10)
+      .groupBy("id")
+      .agg(md5(to_json(sort_array(
+        collect_list(struct(col("win"), col("energy"))))))
+        .as("content_key"))
 
   /** RIFF/WAVE header walk shared by the decoders: returns
     * (sampleRate, channels, dataOffset, numFrames) for well-formed 16-bit
     * PCM (mono/stereo), None otherwise.
     */
   private def parsePcmWav(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) |
-      (u8(i + 3) << 24)
-    def tag(i: Int) = new String(bytes, i, 4, "US-ASCII")
-    if (bytes.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
+    if (bytes.length < 44 || fourcc(bytes, 0) != "RIFF" ||
+        fourcc(bytes, 8) != "WAVE") return None
+    def le16(i: Int) = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
     var fmtOk = false; var channels = 0; var rate = 0
     var dataOff = -1; var dataLen = 0
-    var pos = 12
-    while (pos + 8 <= bytes.length) {
-      val id = tag(pos); val size = le32(pos + 4)
-      if (size < 0 || pos + 8L + size > bytes.length) return None
-      id match {
-        case "fmt " if size >= 16 =>
-          val audioFormat = le16(pos + 8)
-          channels = le16(pos + 10)
-          rate = le32(pos + 12)
-          val bits = le16(pos + 22)
-          fmtOk = audioFormat == 1 && bits == 16 &&
+    riffChunks(bytes, 12, bytes.length) match {
+      case None => return None
+      case Some(chunks) => chunks.foreach {
+        case ("fmt ", off, size) if size >= 16 =>
+          channels = le16(off + 2)
+          rate = readLe32(bytes, off + 4)
+          fmtOk = le16(off) == 1 && le16(off + 14) == 16 &&  // PCM, 16 bits
             (channels == 1 || channels == 2) && rate > 0
-        case "data" => dataOff = pos + 8; dataLen = size
+        case ("data", off, size) => dataOff = off; dataLen = size
         case _ => ()
       }
-      pos += 8 + size + (size & 1) // chunks are word-aligned
     }
     if (!fmtOk || dataOff < 0) return None
     val frameBytes = 2 * channels
     val n = dataLen / frameBytes
     if (n == 0) None else Some((rate, channels, dataOff, n))
-  }
-
-  /** EXACT per-window energy: Σ (channel-summed amplitude)² over each of
-    * `windows` equal index ranges, as BIGINT — the integer counterpart of
-    * [[decodeWav]]'s float RMS, so an analytic oracle can hash-match the
-    * decode bit-for-bit (floats can't cross engines exactly; int64 can).
-    */
-  def decodeWavWindowEnergy(bytes: Array[Byte], windows: Int)
-      : Option[Array[Long]] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    val (_, channels, dataOff, n) = parsePcmWav(bytes) match {
-      case Some(h) => h
-      case None => return None
-    }
-    val frameBytes = 2 * channels
-    val out = new Array[Long](windows)
-    var w = 0
-    while (w < windows) {
-      val lo = (n.toLong * w / windows).toInt
-      val hi = (n.toLong * (w + 1) / windows).toInt
-      var ss = 0L; var i = lo
-      while (i < hi) {
-        var c = 0; var amp = 0L
-        while (c < channels) {
-          amp += le16(dataOff + i * frameBytes + 2 * c).toShort
-          c += 1
-        }
-        ss += amp * amp; i += 1
-      }
-      out(w) = ss; w += 1
-    }
-    Some(out)
-  }
-
-  /** Batched exact windowed audio energy: one row per (id, window) with
-    * the BIGINT sum-of-squares energy. Same mapPartitions batching shape
-    * as the other decoders; undecodable payloads yield no rows (corrupt
-    * media is data, not an exception).
-    */
-  def audioWindowEnergy(df: DataFrame, idCol: String, windows: Int = 10)
-      : DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("win", IntegerType),
-      StructField("energy", LongType)))
-    val in = df.select(col(idCol).cast("long").as("id"), col("payload"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        decodeWavWindowEnergy(r.getAs[Array[Byte]](1), windows) match {
-          case Some(es) => es.iterator.zipWithIndex.map {
-            case (e, w) => Row(id, w, e)
-          }
-          case None => Iterator.empty
-        }
-      }
-    }(encoder)
   }
 
   // ------------------------------------------------------------------
@@ -1063,70 +928,62 @@ object Multimodal {
     * bytes_saved, corrupt).
     */
   def pngMeta(df: DataFrame, idCol: String,
-              payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("bit_depth", IntegerType),
-      StructField("color_type", IntegerType),
-      StructField("keyword", StringType),
-      StructField("value", StringType),
-      StructField("bytes_saved", LongType),
-      StructField("corrupt", BooleanType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val png = r.getAs[Array[Byte]](1)
-          val (chunks, corrupt) = pngChunks(
-            if (png == null) Array.emptyByteArray else png)
-          val ihdr = chunks.find(_._1 == "IHDR")
-          val (w, h, bd, ct) = ihdr match {
-            case Some((_, off, len)) if len >= 13 =>
-              (readBe32(png, off).toInt.asInstanceOf[Integer],
-                readBe32(png, off + 4).toInt.asInstanceOf[Integer],
-                (png(off + 8) & 0xff).asInstanceOf[Integer],
-                (png(off + 9) & 0xff).asInstanceOf[Integer])
-            case _ => (null: Integer, null: Integer,
-              null: Integer, null: Integer)
-          }
-          val saved = chunks.filter(c => (c._1.charAt(0) & 0x20) != 0)
-            .map(12L + _._3).sum.asInstanceOf[java.lang.Long]
-          val texts = chunks.filter(_._1 == "tEXt").map { case (_, off, len) =>
-            val data = new String(png, off, len, "ISO-8859-1")
-            val z = data.indexOf(0.toChar)
-            if (z < 0) (data, null: String)
-            else (data.substring(0, z), data.substring(z + 1))
-          }
-          if (texts.isEmpty)
-            Iterator.single(Row(id, w, h, bd, ct, null, null, saved, corrupt))
-          else texts.iterator.map { case (k, v) =>
-            Row(id, w, h, bd, ct, k, v, saved, corrupt)
-          }
+              payloadCol: String): DataFrame =
+    batched(df, idCol, col(payloadCol))(new StructType()
+        .add("id", LongType, nullable = false)
+        .add("width", IntegerType).add("height", IntegerType)
+        .add("bit_depth", IntegerType).add("color_type", IntegerType)
+        .add("keyword", StringType).add("value", StringType)
+        .add("bytes_saved", LongType)
+        .add("corrupt", BooleanType, nullable = false)) {
+      _.flatMap { r =>
+        val id = r.getLong(0)
+        val png = r.getAs[Array[Byte]](1)
+        val (chunks, corrupt) = pngChunks(
+          if (png == null) Array.emptyByteArray else png)
+        val ihdr = chunks.find(_._1 == "IHDR")
+        val (w, h, bd, ct) = ihdr match {
+          case Some((_, off, len)) if len >= 13 =>
+            (readBe32(png, off).toInt.asInstanceOf[Integer],
+              readBe32(png, off + 4).toInt.asInstanceOf[Integer],
+              (png(off + 8) & 0xff).asInstanceOf[Integer],
+              (png(off + 9) & 0xff).asInstanceOf[Integer])
+          case _ => (null: Integer, null: Integer,
+            null: Integer, null: Integer)
         }
-      }(enc)
-  }
+        val saved = chunks.filter(c => (c._1.charAt(0) & 0x20) != 0)
+          .map(12L + _._3).sum.asInstanceOf[java.lang.Long]
+        val texts = chunks.filter(_._1 == "tEXt").map { case (_, off, len) =>
+          val data = new String(png, off, len, "ISO-8859-1")
+          val z = data.indexOf(0.toChar)
+          if (z < 0) (data, null: String)
+          else (data.substring(0, z), data.substring(z + 1))
+        }
+        if (texts.isEmpty)
+          Iterator.single(Row(id, w, h, bd, ct, null, null, saved, corrupt))
+        else texts.iterator.map { case (k, v) =>
+          Row(id, w, h, bd, ct, k, v, saved, corrupt)
+        }
+      }
+    }
 
-  /** Strip twin as a frame op: (id, payload, bytes_saved). */
+  /** Strip twin as a frame op: (id, payload, bytes_saved). A NULL
+    * payload stays NULL and saves nothing (corrupt-is-data).
+    */
   def stripPngMeta(df: DataFrame, idCol: String,
-                   payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType),
-      StructField("bytes_saved", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val png = r.getAs[Array[Byte]](1)
-          val out = pngStripAncillary(
-            if (png == null) Array.emptyByteArray else png)
+                   payloadCol: String): DataFrame =
+    batched(df, idCol, col(payloadCol))(new StructType()
+        .add("id", LongType, nullable = false).add("payload", BinaryType)
+        .add("bytes_saved", LongType, nullable = false)) {
+      _.map { r =>
+        val png = r.getAs[Array[Byte]](1)
+        if (png == null) Row(r.getLong(0), null, 0L)
+        else {
+          val out = pngStripAncillary(png)
           Row(r.getLong(0), out, (png.length - out.length).toLong)
         }
-      }(enc)
-  }
+      }
+    }
 
   // ------------------------------------------------------------------
   // JPEG segment surgery: EXIF metadata extraction + APPn/COM strip —
@@ -1156,38 +1013,16 @@ object Multimodal {
     * strip(planted) against strip(original) of the SAME encode, so the
     * encoder's bit choices cancel out of every gate.
     */
-  def syntheticGrayJpeg(id: Long, w: Int = 8, h: Int = 8): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        raster.setSample(x, y, 0, ((id * 31 + y * w + x) % 256).toInt)
-        x += 1
-      }
-      y += 1
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", baos)
-    baos.toByteArray
-  }
+  def syntheticGrayJpeg(id: Long, w: Int = 8, h: Int = 8): Array[Byte] =
+    grayGradient(id, w, h, 0L, 1, "jpg")
 
-  /** Attach a real JPEG payload per row (batched per-partition encode,
-    * the [[withSyntheticImages]] shape).
+  /** Attach a real JPEG payload per row (the [[withSyntheticImages]]
+    * shape).
     */
   def withSyntheticJpegs(df: DataFrame, idCol: String,
-                         w: Int = 8, h: Int = 8): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("payload", BinaryType)))
-    val in = df.select(col(idCol).cast("long").as("id"))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    in.mapPartitions { rows =>
-      rows.map(r => Row(r.getLong(0), syntheticGrayJpeg(r.getLong(0), w, h)))
-    }(encoder)
-  }
+                         w: Int = 8, h: Int = 8): DataFrame =
+    synthetic(df, idCol, col(idCol), lit(1))((k, _) =>
+      syntheticGrayJpeg(k, w, h))
 
   /** Walk a JPEG's marker segments to SOS: (marker, offset, totalLen)
     * triples, `marker = -1` for the entropy-coded tail (SOS data + EOI,
@@ -1337,31 +1172,33 @@ object Multimodal {
     * immediately after SOI — the [[withPlantedText]] twin for JPEG.
     */
   def withPlantedExif(df: DataFrame, idCol: String, payloadCol: String,
-                      kvCols: Seq[(String, String)]): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val cols = col(idCol).cast("long") +: col(payloadCol) +:
-      kvCols.map(kv => col(kv._2).cast("string"))
-    df.select(cols: _*)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val jpeg = r.getAs[Array[Byte]](1)
-          // corrupt-is-data: a null payload passes through unchanged and
-          // null tag values coalesce to "" (the extractors' convention —
-          // jpegExif/stripJpegMeta null-guard theirs the same way)
-          if (jpeg == null) Row(r.getLong(0), null)
-          else {
-            val seg = buildExifApp1(kvCols.zipWithIndex.map {
-              case ((k, _), i) =>
-                k -> (if (r.isNullAt(2 + i)) "" else r.getString(2 + i))
-            })
-            Row(r.getLong(0), jpeg.take(2) ++ seg ++ jpeg.drop(2))
-          }
-        }
-      }(enc)
-  }
+                      kvCols: Seq[(String, String)]): DataFrame =
+    planted(df, idCol, payloadCol, kvCols) { (jpeg, kvs) =>
+      jpeg.take(2) ++ buildExifApp1(kvs) ++ jpeg.drop(2)
+    }
+
+  /** The planters' shared pass: (id, payload) with `plant(payload, kvs)`
+    * as the payload, kvs the keyword → value pairs read from `kvCols`.
+    * Corrupt-is-data: a NULL payload passes through unchanged and NULL
+    * values coalesce to "" (the extractors null-guard theirs the same
+    * way).
+    */
+  private def planted(df: DataFrame, idCol: String, payloadCol: String,
+                      kvCols: Seq[(String, String)])(
+      plant: (Array[Byte], Seq[(String, String)]) => Array[Byte])
+      : DataFrame =
+    batched(df, idCol, col(payloadCol) +:
+        kvCols.map(kv => col(kv._2).cast("string")): _*)(new StructType()
+        .add("id", LongType, nullable = false).add("payload", BinaryType)) {
+      _.map { r =>
+        val payload = r.getAs[Array[Byte]](1)
+        if (payload == null) Row(r.getLong(0), null)
+        else Row(r.getLong(0), plant(payload, kvCols.zipWithIndex.map {
+          case ((k, _), i) =>
+            k -> (if (r.isNullAt(2 + i)) "" else r.getString(2 + i))
+        }))
+      }
+    }
 
   /** Parse the [[ExifAsciiTags]] entries out of one APP1/Exif payload
     * (both byte orders; inline and offset-addressed ASCII values).
@@ -1387,6 +1224,25 @@ object Multimodal {
         case _ => None
       }
     }
+  }
+
+  /** `parse` over each APP1/Exif segment of `segs` (the marker walk of
+    * `jpeg`), and whether any parse threw: a damaged Exif body latches
+    * `corrupt`, never an executor exception.
+    */
+  private def parseExif[T](jpeg: Array[Byte], segs: Seq[(Int, Int, Int)])(
+      parse: (Array[Byte], Int, Int) => Seq[T]): (Seq[T], Boolean) = {
+    var damaged = false
+    val out = segs
+      .filter { case (m, off, len) =>
+        m == 0xe1 && len >= 10 &&
+          new String(jpeg, off + 4, 4, "US-ASCII") == "Exif"
+      }
+      .flatMap { case (_, off, len) =>
+        try parse(jpeg, off, len)
+        catch { case scala.util.control.NonFatal(_) => damaged = true; Nil }
+      }
+    (out, damaged)
   }
 
   /** Build an APP1/Exif segment holding ONLY a GPS IFD (little-endian):
@@ -1427,29 +1283,24 @@ object Multimodal {
 
   /** Plant a GPS Exif segment from integer micro-degree columns. */
   def withPlantedGps(df: DataFrame, idCol: String, payloadCol: String,
-                     latMicroCol: String, lonMicroCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(idCol).cast("long"), col(payloadCol),
-        col(latMicroCol).cast("long"), col(lonMicroCol).cast("long"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val jpeg = r.getAs[Array[Byte]](1)
-          // corrupt-is-data: null payload passes through; null
-          // coordinates coalesce to 0 micro-degrees (the extractors'
-          // null-guard convention)
-          if (jpeg == null) Row(r.getLong(0), null)
-          else {
-            val seg = buildGpsApp1(
-              if (r.isNullAt(2)) 0L else r.getLong(2),
-              if (r.isNullAt(3)) 0L else r.getLong(3))
-            Row(r.getLong(0), jpeg.take(2) ++ seg ++ jpeg.drop(2))
-          }
+                     latMicroCol: String, lonMicroCol: String): DataFrame =
+    batched(df, idCol, col(payloadCol), col(latMicroCol).cast("long"),
+        col(lonMicroCol).cast("long"))(new StructType()
+        .add("id", LongType, nullable = false).add("payload", BinaryType)) {
+      _.map { r =>
+        val jpeg = r.getAs[Array[Byte]](1)
+        // corrupt-is-data: null payload passes through; null
+        // coordinates coalesce to 0 micro-degrees (the extractors'
+        // null-guard convention)
+        if (jpeg == null) Row(r.getLong(0), null)
+        else {
+          val seg = buildGpsApp1(
+            if (r.isNullAt(2)) 0L else r.getLong(2),
+            if (r.isNullAt(3)) 0L else r.getLong(3))
+          Row(r.getLong(0), jpeg.take(2) ++ seg ++ jpeg.drop(2))
         }
-      }(enc)
-  }
+      }
+    }
 
   /** Parse GPS coordinates out of one APP1/Exif payload: follows the
     * IFD0 GPSInfo pointer, reads the ref ASCII + the 3-slot RATIONAL,
@@ -1513,42 +1364,26 @@ object Multimodal {
     * m15 strip removes): (id, lat_micro, lon_micro, corrupt); images
     * without GPS keep their row with nulls.
     */
-  def jpegGps(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("lat_micro", LongType),
-      StructField("lon_micro", LongType),
-      StructField("corrupt", BooleanType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val jpeg = r.getAs[Array[Byte]](1)
-          val (segs, walkCorrupt) = jpegSegments(
-            if (jpeg == null) Array.emptyByteArray else jpeg)
-          var corrupt = walkCorrupt
-          val gps = segs
-            .filter { case (m, off, len) =>
-              m == 0xe1 && len >= 10 &&
-                new String(jpeg, off + 4, 4, "US-ASCII") == "Exif"
-            }
-            .flatMap { case (_, off, len) =>
-              try parseExifGps(jpeg, off, len)
-              catch {
-                case scala.util.control.NonFatal(_) =>
-                  corrupt = true; None
-              }
-            }.headOption
-          gps match {
-            case Some((la, lo)) =>
-              Row(id, java.lang.Long.valueOf(la),
-                java.lang.Long.valueOf(lo), corrupt)
-            case None => Row(id, null, null, corrupt)
-          }
+  def jpegGps(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    batched(df, idCol, col(payloadCol))(new StructType()
+        .add("id", LongType, nullable = false).add("lat_micro", LongType)
+        .add("lon_micro", LongType)
+        .add("corrupt", BooleanType, nullable = false)) {
+      _.map { r =>
+        val id = r.getLong(0)
+        val jpeg = r.getAs[Array[Byte]](1)
+        val (segs, walkCorrupt) = jpegSegments(
+          if (jpeg == null) Array.emptyByteArray else jpeg)
+        val (gps, damaged) = parseExif(jpeg, segs)(parseExifGps(_, _, _).toList)
+        val corrupt = walkCorrupt || damaged
+        gps.headOption match {
+          case Some((la, lo)) =>
+            Row(id, java.lang.Long.valueOf(la),
+              java.lang.Long.valueOf(lo), corrupt)
+          case None => Row(id, null, null, corrupt)
         }
-      }(enc)
-  }
+      }
+    }
 
   /** Per-image EXIF metadata frame — the [[pngMeta]] twin for JPEG: one
     * row per extracted ASCII tag (images without any keep ONE row with
@@ -1558,58 +1393,41 @@ object Multimodal {
     * tag, value, bytes_saved, corrupt).
     */
   def jpegExif(df: DataFrame, idCol: String,
-               payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("tag", StringType),
-      StructField("value", StringType),
-      StructField("bytes_saved", LongType),
-      StructField("corrupt", BooleanType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val jpeg = r.getAs[Array[Byte]](1)
-          val (segs, walkCorrupt) = jpegSegments(
-            if (jpeg == null) Array.emptyByteArray else jpeg)
-          // SOF0..SOF15 carry geometry; C4/C8/CC are DHT/JPG/DAC
-          val sof = segs.find(s => s._1 >= 0xc0 && s._1 <= 0xcf &&
-            s._1 != 0xc4 && s._1 != 0xc8 && s._1 != 0xcc && s._3 >= 9)
-          val (w, h) = sof match {
-            case Some((_, off, _)) =>
-              ((((jpeg(off + 7) & 0xff) << 8) | (jpeg(off + 8) & 0xff))
-                .asInstanceOf[Integer],
-                ((((jpeg(off + 5) & 0xff) << 8) | (jpeg(off + 6) & 0xff))
-                  .asInstanceOf[Integer]))
-            case None => (null: Integer, null: Integer)
-          }
-          val saved = segs
-            .filter(s => (s._1 >= 0xe1 && s._1 <= 0xef) || s._1 == 0xfe)
-            .map(_._3.toLong).sum.asInstanceOf[java.lang.Long]
-          var corrupt = walkCorrupt
-          val tags = segs
-            .filter { case (m, off, len) =>
-              m == 0xe1 && len >= 10 &&
-                new String(jpeg, off + 4, 4, "US-ASCII") == "Exif"
-            }
-            .flatMap { case (_, off, len) =>
-              try parseExifAscii(jpeg, off, len)
-              catch {
-                case scala.util.control.NonFatal(_) =>
-                  corrupt = true; Nil
-              }
-            }
-          if (tags.isEmpty)
-            Iterator.single(Row(id, w, h, null, null, saved, corrupt))
-          else tags.iterator.map { case (k, v) =>
-            Row(id, w, h, k, v, saved, corrupt)
-          }
+               payloadCol: String): DataFrame =
+    batched(df, idCol, col(payloadCol))(new StructType()
+        .add("id", LongType, nullable = false)
+        .add("width", IntegerType).add("height", IntegerType)
+        .add("tag", StringType).add("value", StringType)
+        .add("bytes_saved", LongType)
+        .add("corrupt", BooleanType, nullable = false)) {
+      _.flatMap { r =>
+        val id = r.getLong(0)
+        val jpeg = r.getAs[Array[Byte]](1)
+        val (segs, walkCorrupt) = jpegSegments(
+          if (jpeg == null) Array.emptyByteArray else jpeg)
+        // SOF0..SOF15 carry geometry; C4/C8/CC are DHT/JPG/DAC
+        val sof = segs.find(s => s._1 >= 0xc0 && s._1 <= 0xcf &&
+          s._1 != 0xc4 && s._1 != 0xc8 && s._1 != 0xcc && s._3 >= 9)
+        val (w, h) = sof match {
+          case Some((_, off, _)) =>
+            ((((jpeg(off + 7) & 0xff) << 8) | (jpeg(off + 8) & 0xff))
+              .asInstanceOf[Integer],
+              ((((jpeg(off + 5) & 0xff) << 8) | (jpeg(off + 6) & 0xff))
+                .asInstanceOf[Integer]))
+          case None => (null: Integer, null: Integer)
         }
-      }(enc)
-  }
+        val saved = segs
+          .filter(s => (s._1 >= 0xe1 && s._1 <= 0xef) || s._1 == 0xfe)
+          .map(_._3.toLong).sum.asInstanceOf[java.lang.Long]
+        val (tags, damaged) = parseExif(jpeg, segs)(parseExifAscii)
+        val corrupt = walkCorrupt || damaged
+        if (tags.isEmpty)
+          Iterator.single(Row(id, w, h, null, null, saved, corrupt))
+        else tags.iterator.map { case (k, v) =>
+          Row(id, w, h, k, v, saved, corrupt)
+        }
+      }
+    }
 
   /** Strip APP1..APP15 + COM segments (JFIF APP0 and everything the
     * decoder needs survive; pixels untouched — the entropy-coded tail is
@@ -1618,55 +1436,35 @@ object Multimodal {
     * Output: (id, payload, bytes_saved).
     */
   def stripJpegMeta(df: DataFrame, idCol: String,
-                    payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType),
-      StructField("bytes_saved", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val jpeg = r.getAs[Array[Byte]](1)
-          val bytes = if (jpeg == null) Array.emptyByteArray else jpeg
-          val (segs, corrupt) = jpegSegments(bytes)
-          val out =
-            if (corrupt) bytes
-            else {
-              val buf = new java.io.ByteArrayOutputStream(bytes.length)
-              segs.foreach { case (m, off, len) =>
-                if (!((m >= 0xe1 && m <= 0xef) || m == 0xfe))
-                  buf.write(bytes, off, len)
-              }
-              buf.toByteArray
+                    payloadCol: String): DataFrame =
+    batched(df, idCol, col(payloadCol))(new StructType()
+        .add("id", LongType, nullable = false).add("payload", BinaryType)
+        .add("bytes_saved", LongType, nullable = false)) {
+      _.map { r =>
+        val jpeg = r.getAs[Array[Byte]](1)
+        val bytes = if (jpeg == null) Array.emptyByteArray else jpeg
+        val (segs, corrupt) = jpegSegments(bytes)
+        val out =
+          if (corrupt) bytes
+          else {
+            val buf = new java.io.ByteArrayOutputStream(bytes.length)
+            segs.foreach { case (m, off, len) =>
+              if (!((m >= 0xe1 && m <= 0xef) || m == 0xfe))
+                buf.write(bytes, off, len)
             }
-          Row(r.getLong(0), out, (bytes.length - out.length).toLong)
-        }
-      }(enc)
-  }
+            buf.toByteArray
+          }
+        Row(r.getLong(0), out, (bytes.length - out.length).toLong)
+      }
+    }
 
   /** Plant `tEXt` chunks from row columns onto an existing PNG payload:
     * `kvCols` maps each keyword to the (string) column holding its
     * value. Batched per partition like the other encode passes.
     */
   def withPlantedText(df: DataFrame, idCol: String, payloadCol: String,
-                      kvCols: Seq[(String, String)]): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val cols = col(idCol).cast("long") +: col(payloadCol) +:
-      kvCols.map(kv => col(kv._2).cast("string"))
-    df.select(cols: _*)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val kvs = kvCols.zipWithIndex.map { case ((k, _), i) =>
-            k -> r.getString(2 + i)
-          }
-          Row(r.getLong(0), pngInsertText(r.getAs[Array[Byte]](1), kvs))
-        }
-      }(enc)
-  }
+                      kvCols: Seq[(String, String)]): DataFrame =
+    planted(df, idCol, payloadCol, kvCols)(pngInsertText)
 
   /** The degenerate-key pair VALVE on the real media decode path:
     * synthetic 200-sample WAVs for the docs below `bound` — every 10th
@@ -1686,13 +1484,8 @@ object Multimodal {
         lit(1).as("scale"))
     val wavs = withSyntheticAudioScaled(keyed, "id", "key", "scale",
       baseSamples = 200, rate = 8000)
-    val feats = audioWindowEnergy(wavs, "id", windows = 10)
-      .groupBy("id")
-      .agg(md5(to_json(sort_array(
-        collect_list(struct(col("win"), col("energy"))))))
-        .as("content_key"))
-    Dedup.pairsWithinGroups(feats, "content_key", "id",
-      maxGroupSize = maxGroupSize)
+    Dedup.pairsWithinGroups(audioContentKeys(wavs, "id"), "content_key",
+      "id", maxGroupSize = maxGroupSize)
   }
 
   /** Fixture ids for the composed media chains: doc_id < `bound`, key
@@ -1761,8 +1554,7 @@ object Multimodal {
                  parts: Int, blockSize: Int): DataFrame = {
     val cp = CorpusPipeline
     val docsIn = docs.filter(col("doc_id") < bound)
-    val pristine = withSyntheticImagesScaled(chainIds(docs, bound, nKeys),
-      "id", "key", "scale", baseW = 36, baseH = 32)
+    val pristine = plantedImages(docs, bound, nKeys)
     val gpsVals = docsIn.select(col("doc_id").cast("long").as("id"),
       format_string("lat=%d;lon=%d",
         col("doc_id") * 1003 % 180000000L - 90000000L,
@@ -1789,15 +1581,7 @@ object Multimodal {
       .join(stripPngMeta(pristine, "id", "payload")
         .select(col("id"), md5(col("payload")).as("m0")), "id")
       .filter(col("m1") === col("m0"))
-    val hashed = dhashes(stripped, "id").filter(col("dhash").isNotNull)
-    val cc = Dedup.connectedComponents(hashed.select(col("id")),
-      Dedup.starEdges(hashed, "dhash", "id"))
-    val meta = decodeImageFeatures(stripped, "id")
-      .select(col("id"), col("width").cast("long").as("width"))
-    // the map-side-combinable argmax election — never a rank window
-    // over the connected-components rep key
-    val canonical = Dedup.electCanonical(cc.join(meta, "id"), "rep", "id",
-        "width")
+    val canonical = canonicalImages(stripped)
       .select(col("rep"), col("canonical"))
     val caps = captions(samples)
     val withCap = canonical.join(caps, canonical("canonical") === caps("id"))
@@ -1896,12 +1680,8 @@ object Multimodal {
       cc.join(env.select(col("id"), col("num_samples")), "id"),
       "rep", "id", "num_samples")
     // video features: the real AVI walk, the scene-cut rule
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy("frame_idx")
-    val cuts = decodeVideoFrames(samplesByExt(samples, "avi"), "id")
-      .withColumn("prev", lag(col("sum_gray"), 1).over(w))
-      .filter(col("prev").isNotNull &&
-        abs(col("sum_gray") - col("prev")) > 300)
+    val cuts = sceneCuts(decodeVideoFrames(samplesByExt(samples, "avi"), "id"))
+      .filter(col("is_cut") === 1)
     val caps = captions(samples)
     val withCap = canonical.join(caps, canonical("canonical") === caps("id"))
     val counts = withCap.select(col("canonical").as("doc_id"),
@@ -1926,18 +1706,7 @@ object Multimodal {
     */
   def avChainOracleSql(bound: Long, nKeys: Int, blockSize: Int): String =
     s"""WITH RECURSIVE ${chainIdsOracleCtes(bound, nKeys, 1000)},
-       |fr AS (
-       |  SELECT d.doc_id, f.frame_idx,
-       |    (SELECT CAST(sum((d.doc_id*31 + f.frame_idx*7 + i) % 256)
-       |       AS BIGINT) FROM range(64) t(i)) AS sum_gray
-       |  FROM documents d CROSS JOIN
-       |    (SELECT unnest(generate_series(0, 5)) AS frame_idx) f
-       |  WHERE d.doc_id < $bound),
-       |d2 AS (
-       |  SELECT doc_id,
-       |    abs(sum_gray - lag(sum_gray) OVER (PARTITION BY doc_id
-       |      ORDER BY frame_idx)) AS delta
-       |  FROM fr),
+       |${sceneCutsOracleCtes(bound)},
        |cnt AS (
        |  SELECT c.id AS doc_id,
        |    128 + ${tokenCountSql("coalesce(d.text, '')")} AS nt
@@ -1973,8 +1742,8 @@ object Multimodal {
     * and canon (rep, id) — the largest `unit · scale` rendition, ties to
     * the smaller id. Needs `WITH RECURSIVE`.
     */
-  private def chainIdsOracleCtes(bound: Long, nKeys: Int,
-                                 unit: Int): String =
+  private[graft] def chainIdsOracleCtes(bound: Long, nKeys: Int,
+                                        unit: Int): String =
     s"""ids AS (
        |  SELECT doc_id AS id, doc_id % $nKeys AS key,
        |    CASE WHEN doc_id < ${bound / 2} THEN 1 ELSE 2 END AS scale

@@ -113,7 +113,7 @@ object ShardManifest {
       : Long = {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val dfs = dirPath.getFileSystem(
-      new org.apache.hadoop.conf.Configuration())
+      blocks.sparkSession.sessionState.newHadoopConf())
     if (dfs.exists(dirPath)) {
       (dfs.globStatus(new org.apache.hadoop.fs.Path(dirPath,
         "shard-*.jsonl")) ++
@@ -156,10 +156,12 @@ object ShardManifest {
         col(countCol).cast("long").as("nt"))
       .repartition(nShards, col("shard"))
       .sortWithinPartitions("shard", "block", "bin", "id")
+    val sessionConf = new org.apache.spark.util.SerializableConfiguration(
+      assigned.sparkSession.sessionState.newHadoopConf())
     rows.rdd.mapPartitions { it =>
       if (!it.hasNext) Iterator.single(0L)
       else {
-        val conf = new org.apache.hadoop.conf.Configuration()
+        val conf = sessionConf.value
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
         var out: org.apache.hadoop.fs.FSDataOutputStream = null

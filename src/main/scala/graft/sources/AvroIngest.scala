@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Avro Object-Container-File ingest — the row-oriented second format
   * beside ORC's columnar slot (SURVEY §2.1). This environment ships the
@@ -143,13 +144,14 @@ object AvroIngest {
                    recordName: String = "GraftRow"): Long = {
     val schema = df.schema
     val avroJson = avroSchema(schema, recordName).toString // serializable
+    val conf = new SerializableConfiguration(
+      df.sparkSession.sessionState.newHadoopConf())
     df.rdd.mapPartitionsWithIndex { (idx, rows) =>
       if (!rows.hasNext) Iterator.single(0L)
       else {
         val avro = new org.apache.avro.Schema.Parser().parse(avroJson)
-        val conf = new org.apache.hadoop.conf.Configuration()
         val path = new org.apache.hadoop.fs.Path(dir, f"part-$idx%05d.avro")
-        val fs = path.getFileSystem(conf)
+        val fs = path.getFileSystem(conf.value)
         val out = fs.create(path, true)
         val w = new DataFileWriter[GenericRecord](
           new org.apache.avro.generic.GenericDatumWriter[GenericRecord](avro))

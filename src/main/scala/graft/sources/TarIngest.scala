@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** POSIX-tar shard ingest — the WebDataset layout (`.tar` / `.tar.gz`
   * shards whose members group into samples by basename prefix:
@@ -265,7 +266,11 @@ object TarIngest {
       : (DataFrame, DataFrame) = {
     import org.apache.hadoop.fs.{GlobFilter, Path}
     val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = basePath.getFileSystem(hadoopConf)
+    // executors open the shards under the session's conf (its
+    // `spark.hadoop.*` keys), shipped from the driver
+    val conf = new SerializableConfiguration(hadoopConf)
     val qualified = fs.makeQualified(basePath)
     val baseUriPath = qualified.toUri.getPath.stripSuffix("/")
     val filter = new GlobFilter(glob)
@@ -300,8 +305,7 @@ object TarIngest {
             private def ensureOpen(): Unit =
               if (walk == null && !openFailed) try {
                 val p = new Path(uri)
-                val pfs = p.getFileSystem(
-                  new org.apache.hadoop.conf.Configuration())
+                val pfs = p.getFileSystem(conf.value)
                 walk = new MemberWalk(pfs.open(p), maxMemberBytes)
                 val w = walk
                 Option(org.apache.spark.TaskContext.get()).foreach(
@@ -374,12 +378,13 @@ object TarIngest {
     val nameIdx = schema.fieldIndex("name")
     val payloadIdx = schema.fieldIndex("payload")
     val ext = if (gzip) ".tar.gz" else ".tar"
+    val conf = new SerializableConfiguration(
+      df.sparkSession.sessionState.newHadoopConf())
     df.rdd.mapPartitionsWithIndex { (idx, rows) =>
       if (!rows.hasNext) Iterator.single(0L)
       else {
-        val conf = new org.apache.hadoop.conf.Configuration()
         val path = new org.apache.hadoop.fs.Path(dir, f"part-$idx%05d$ext")
-        val fs = path.getFileSystem(conf)
+        val fs = path.getFileSystem(conf.value)
         val raw = fs.create(path, true)
         val out: java.io.OutputStream =
           if (gzip) new GZIPOutputStream(raw, 64 * 1024) else raw

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** WARC / WET crawl-archive ingest (ISO 28500 / the CommonCrawl layout)
   * — the canonical input format of a web-scale text corpus, and the
@@ -215,7 +216,11 @@ object WarcIngest {
     // same cost class as Spark's FileIndex (and ~100k archive names at
     // 100 TB is megabytes, not a collect of data)
     val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = basePath.getFileSystem(hadoopConf)
+    // executors open the archives under the session's conf (its
+    // `spark.hadoop.*` keys), shipped from the driver
+    val conf = new SerializableConfiguration(hadoopConf)
     val qualified = fs.makeQualified(basePath)
     val baseUriPath = qualified.toUri.getPath.stripSuffix("/")
     val filter = new GlobFilter(glob)
@@ -250,8 +255,7 @@ object WarcIngest {
             private def ensureOpen(): Unit =
               if (walk == null && !openFailed) try {
                 val p = new Path(uri)
-                val pfs = p.getFileSystem(
-                  new org.apache.hadoop.conf.Configuration())
+                val pfs = p.getFileSystem(conf.value)
                 walk = new RecordWalk(pfs.open(p), maxRecordBytes)
                 val w = walk
                 Option(org.apache.spark.TaskContext.get()).foreach(
@@ -320,12 +324,13 @@ object WarcIngest {
       "content_type" -> schema.fieldIndex("content_type"),
       "payload" -> schema.fieldIndex("payload"))
     val ext = if (gzip) ".warc.gz" else ".warc"
+    val conf = new SerializableConfiguration(
+      df.sparkSession.sessionState.newHadoopConf())
     df.rdd.mapPartitionsWithIndex { (idx, rows) =>
       if (!rows.hasNext) Iterator.single(0L)
       else {
-        val conf = new org.apache.hadoop.conf.Configuration()
         val path = new org.apache.hadoop.fs.Path(dir, f"part-$idx%05d$ext")
-        val fs = path.getFileSystem(conf)
+        val fs = path.getFileSystem(conf.value)
         val raw = fs.create(path, true)
         // one gzip member per RECORD (the CommonCrawl layout): a reader
         // can seek to a member boundary and decode one record alone

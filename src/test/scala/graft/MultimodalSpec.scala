@@ -125,6 +125,50 @@ class MultimodalSpec extends SparkSpec {
     assert(out(2).isNullAt(1) && out(2).isNullAt(3))
   }
 
+  test("decodeWav: integer-energy RMS equals the double sum-of-squares loop") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // decodeWav's per-sample double loop before its windows came from
+    // the integer energy walk, kept as the reference
+    def reference(s: Array[Short], channels: Int,
+                  windows: Int): Array[Float] = {
+      val n = s.length / channels
+      Array.tabulate(windows) { w =>
+        val lo = (n.toLong * w / windows).toInt
+        val hi = (n.toLong * (w + 1) / windows).toInt
+        var ss = 0.0; var i = lo
+        while (i < hi) {
+          var c = 0; var acc = 0.0
+          while (c < channels) { acc += s(i * channels + c) / 32768.0; c += 1 }
+          val x = acc / channels
+          ss += x * x; i += 1
+        }
+        if (hi > lo) math.sqrt(ss / (hi - lo)).toFloat else 0f
+      }
+    }
+    // mono and stereo, 1..2500 frames, 1..37 windows: most counts do
+    // not divide the frame count, and short payloads leave empty windows
+    val gen = for {
+      channels <- Gen.oneOf(1, 2)
+      frames <- Gen.chooseNum(1, 2500)
+      windows <- Gen.chooseNum(1, 37)
+      samples <- Gen.listOfN(frames * channels,
+        Gen.chooseNum(Short.MinValue, Short.MaxValue))
+    } yield (channels, samples.toArray, windows)
+    def bits(a: Array[Float]) = a.toSeq.map(java.lang.Float.floatToIntBits)
+    val res = SCTest.check(SCTest.Parameters.default
+        .withMinSuccessfulTests(200), Prop.forAll(gen) {
+      case (ch, s, windows) =>
+        val Some((_, n, rms)) =
+          Multimodal.decodeWav(wavBytes(s, 8000, channels = ch), windows)
+        n == s.length / ch && bits(rms) == bits(reference(s, ch, windows))
+    })
+    assert(res.passed, res.status.toString)
+    // full-scale stereo: every term at its largest magnitude
+    val loud = Array.fill(4002)(Short.MinValue)
+    assert(bits(Multimodal.decodeWav(wavBytes(loud, 8000, channels = 2),
+      7).get._3) == bits(reference(loud, 2, 7)))
+  }
+
   test("decodeImage: real PNG round trip, exact luminance sum + pooling") {
     val id = 7L
     val bytes = Multimodal.syntheticGrayPng(id, 8, 8)
@@ -319,25 +363,47 @@ class MultimodalSpec extends SparkSpec {
     assert(mm.pngStripAncillary(bad).sameElements(bad))
   }
 
+  test("PNG ops pass NULL payloads through and read NULL values as \"\"") {
+    import spark.implicits._
+    val mm = Multimodal
+    val png = mm.syntheticGrayPng(5L)
+    val in = Seq((1L, png, "a"), (2L, null, "b"), (3L, png, null))
+      .toDF("id", "payload", "v")
+    val planted = mm.withPlantedText(in, "id", "payload", Seq("k" -> "v"))
+    val p = planted.orderBy("id").collect()
+    assert(p(1).isNullAt(1))                       // NULL payload rides
+    val meta = mm.pngMeta(planted, "id", "payload").orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getAs[String]("keyword"),
+        r.getAs[String]("value"), r.getAs[Boolean]("corrupt")))
+    assert(meta.toSeq == Seq((1L, "k", "a", false), (2L, null, null, true),
+      (3L, "k", "", false)))
+    val strip = mm.stripPngMeta(planted, "id", "payload").orderBy("id")
+      .collect()
+    assert(strip(0).getAs[Array[Byte]](1).sameElements(png))
+    assert(strip.map(_.getLong(2)).toSeq == Seq(15L, 0L, 14L))
+    assert(strip(1).isNullAt(1))
+    assert(strip(2).getAs[Array[Byte]](1).sameElements(png))
+  }
+
   test("dHash: scale-invariant on pixel-doubled copies, key-sensitive, corrupt-safe") {
     // base dims divide the 9x8 grid, so the 2x pixel-doubled image has
     // identical integer cell means -> identical hash, different bytes
     val keys = 0L until 25L
     val h1 = keys.map(k => Multimodal.dhashImage(
-      Multimodal.syntheticGrayPngScaled(k, 36, 32, 1)))
+      Multimodal.syntheticGrayPng(k, 36, 32, scale = 1)))
     val h2 = keys.map(k => Multimodal.dhashImage(
-      Multimodal.syntheticGrayPngScaled(k, 36, 32, 2)))
+      Multimodal.syntheticGrayPng(k, 36, 32, scale = 2)))
     assert(h1.forall(_.isDefined))
     assert(h1 == h2)                       // perceptual equality
     assert(h1.map(_.get).distinct.size == 25)   // no key collision
-    assert(!Multimodal.syntheticGrayPngScaled(0L, 36, 32, 1)
-      .sameElements(Multimodal.syntheticGrayPngScaled(0L, 36, 32, 2)))
+    assert(!Multimodal.syntheticGrayPng(0L, 36, 32, scale = 1)
+      .sameElements(Multimodal.syntheticGrayPng(0L, 36, 32, scale = 2)))
     // corrupt / undersized payloads are data, not exceptions
     assert(Multimodal.dhashImage("not a png".getBytes).isEmpty)
     assert(Multimodal.dhashImage(
       Multimodal.syntheticGrayPng(1L, 4, 4)).isEmpty)
     // dataframe pass: null dhash for corrupt rows, one decode per row
-    val df = Seq((1L, Multimodal.syntheticGrayPngScaled(7L, 36, 32, 1)),
+    val df = Seq((1L, Multimodal.syntheticGrayPng(7L, 36, 32, scale = 1)),
       (2L, "junk".getBytes)).toDF("id", "payload")
     val out = Multimodal.dhashes(df, "id").orderBy("id").collect()
     assert(out(0).getLong(1) == h1(7).get)
@@ -399,5 +465,39 @@ class MultimodalSpec extends SparkSpec {
       "4_scene_cuts" -> 743L, "5_clusters" -> 25L,
       "6_canonical_idsum" -> 2175L, "7_caption_join" -> 25L,
       "8_blocks" -> 16L, "9_tokens" -> 4658L))
+  }
+
+  test("media family: sf0.001 checksums pinned") {
+    // (rows, xxhash64 sum) of each m-entry's output through
+    // Bench.checksum, pinned so a changed bit in a shared decode,
+    // generator or chain step fails here, without the DuckDB oracle
+    val pins = Seq(
+      "m01_binary_meta" -> (500L, 2906978541749670921L),
+      "m02_decode_features" -> (500L, 4094780854738144392L),
+      "m03_image_roundtrip" -> (500L, -5965473298798895590L),
+      "m04_frame_sample" -> (1505L, 1655417364041114359L),
+      "m05_video_roundtrip" -> (600L, 8375046100969467488L),
+      "m06_image_resize" -> (500L, -1415378039861936815L),
+      "m07_audio_roundtrip" -> (200L, 1812382525701563375L),
+      "m08_shared_frames" -> (230L, 383727343444236028L),
+      "m09_image_dups" -> (244L, 412276567965867381L),
+      "m10_audio_energy" -> (2000L, 1943856637289810368L),
+      "m11_scene_cuts" -> (750L, 3649908867125309109L),
+      "m12_image_metadata" -> (400L, -7562420302215888002L),
+      "m13_audio_dups" -> (560L, 5957085457468935255L),
+      "m14_image_dhash_dups" -> (375L, 7241856558671318054L),
+      "m15_jpeg_exif" -> (400L, -2122180802809405325L),
+      "m16_jpeg_gps" -> (200L, -776187902180631493L),
+      "m17_canonical_image" -> (25L, 8984772148047413483L),
+      "m18_multimodal_chain" -> (8L, 7711290650199413975L),
+      "m19_av_chain" -> (10L, 1648741754572155283L),
+      "m20_capped_media_pairs" -> (504L, 3021538528125953996L),
+      "m21_media_decontaminate" -> (150L, -4675577821334603769L))
+    pins.foreach { case (name, (n, chk)) =>
+      val got = Bench.checksum(SparkEntry.queries(name)(spark, sf))
+      CacheScope.harness.release()
+      assert(got == (n, Some(chk)), s"$name: $got")
+    }
+    spark.catalog.clearCache()
   }
 }

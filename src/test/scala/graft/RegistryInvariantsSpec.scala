@@ -157,6 +157,40 @@ class RegistryInvariantsSpec extends SparkSpec {
     assert(bad.isEmpty, bad)
   }
 
+  test("every synthetic pixel sum is Multimodal.grayPixelSumSql") {
+    // The gradient raster has one Scala writer and one SQL replay; a
+    // hand-spelled pixel-sum subquery drifts from the writer it replays.
+    import graft.llm.Multimodal.grayPixelSumSql
+    val sum = "(?s)% 256\\)\\s*AS BIGINT\\)\\s*FROM range\\(".r
+    // the builder's layout, stopping at the first "% 256" after "(SELECT"
+    val form = ("\\(SELECT CAST\\(sum\\(\\(([^)]*?)\\*31 \\+ ([^)]*?) \\+ " +
+      "((?:(?!% 256).)*?)\\) % 256\\) AS BIGINT\\) FROM range\\((\\d+)\\) " +
+      "t\\(i\\)\\)").r
+    def strays(sql: String): Seq[String] =
+      sum.findAllMatchIn(sql).map(_.start).filterNot { i =>
+        val open = sql.lastIndexOf("(SELECT", i)
+        open >= 0 && form.findPrefixMatchOf(sql.substring(open)).exists {
+          m => sql.startsWith(grayPixelSumSql(m.group(1), m.group(2),
+            m.group(4).toInt, m.group(3)), open)
+        }
+      }.map(i => sql.slice(i - 60, i + 20)).toSeq
+    // positive control: the builder's output passes, hand copies do not
+    assert(strays(s"SELECT ${grayPixelSumSql("doc_id")}, " +
+      grayPixelSumSql("d.doc_id", "f.frame_idx*7", 16,
+        "16*(i//4) + 2*(i%4)")).isEmpty)
+    assert(strays("""SELECT (SELECT CAST(sum((doc_id*31 + i) % 256)
+                    |  AS BIGINT) FROM range(64) t(i))""".stripMargin)
+      .size == 1)
+    assert(strays("SELECT (SELECT CAST(sum((d.doc_id*31 + f.frame_idx*7 " +
+      "+ i) % 256) AS BIGINT)\n   FROM range(64) t(i))").size == 1)
+    assert(strays("SELECT (SELECT CAST(sum((x*31 + 0 + i) % 256) AS BIGINT) " +
+      "FROM range(64) t(j))").size == 1)
+    val bad = Registry.oracleSql.toSeq.flatMap { case (name, sql) =>
+      strays(sql).map(x => s"$name: $x")
+    }
+    assert(bad.isEmpty, bad)
+  }
+
   test("rows-only ratchet: at most 17 entries lack an oracle") {
     val rowsOnly = Registry.all.filter(_.oracle.isEmpty).map(_.name)
     assert(rowsOnly.size <= 17,

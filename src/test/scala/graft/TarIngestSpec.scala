@@ -173,4 +173,46 @@ class TarIngestSpec extends SparkSpec {
     assert(got == Set(("shard0/00042", "jpg"), ("shard0/00042", "seg.json"),
       ("00043", "txt"), ("README", null)))
   }
+
+  test("executors read and write through the session's Hadoop conf") {
+    // the `graftscheme:` filesystem exists only as a key of the session's
+    // Hadoop conf: a writer or reader that builds its own Configuration
+    // on an executor cannot resolve the scheme (the writer fails, the
+    // reader would audit every shard as corrupt). A running context takes
+    // no new `spark.hadoop.*` key (Spark copies those into Hadoop when
+    // the context starts), so the key is a runtime session key, which
+    // `sessionState.newHadoopConf` carries the same way.
+    import spark.implicits._
+    val key = "fs.graftscheme.impl"
+    spark.conf.set(key, classOf[SchemeOnlyLocalFs].getName)
+    try {
+      val out = "graftscheme://" +
+        Files.createTempDirectory("graft-tar-scheme").toString
+      val df = Seq(("a/00001.txt", "alpha"), ("a/00002.txt", "beta"))
+        .toDF("name", "text")
+        .select($"name", org.apache.spark.sql.functions.encode($"text",
+          "UTF-8").as("payload"))
+      assert(TarIngest.writeTarDir(df.repartition(2), out) == 2L)
+      val (rows, audit) = TarIngest.readTarDir(spark, out)
+      assert(audit.filter("corrupt").count() == 0)
+      assert(rows.select("name").as[String].collect().sorted.toSeq ==
+        Seq("a/00001.txt", "a/00002.txt"))
+    } finally spark.conf.unset(key)
+  }
+}
+
+/** The local disk under the `graftscheme:` scheme, which Hadoop resolves
+  * only through `fs.graftscheme.impl`. Statuses are plain `FileStatus`es:
+  * the local ones read their permissions through a `file:` URI.
+  */
+class SchemeOnlyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("graftscheme:///")
+  override def getScheme: String = "graftscheme"
+  override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(plain)
+  private def plain(s: FileStatus): FileStatus = new FileStatus(s.getLen,
+    s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime,
+    s.getPath)
 }

@@ -33,6 +33,14 @@ object GraftSession {
       // operator surface (guide §1.2 per-task work: don't recompile what
       // you already compiled).
       .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // Spark 4.1 keys that cache by (class loader, code). With artifact
+      // isolation on, every streaming start runs in a cloned session whose
+      // executor tasks get a fresh session class loader, so each stream
+      // drain recompiled every class it had compiled before (22 classes,
+      // 44 generated-class loads per AvailableNow drain of the events
+      // pipeline). Isolation separates per-session added jars and class
+      // files; these sessions add none, so one shared loader loses nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // bucketed tables (sources.Bucketing) land outside the repo tree;
       // per-JVM suffix so concurrent runs on one host cannot overwrite
       // each other's saveAsTable paths

@@ -92,7 +92,11 @@ object Pipeline {
     *   - one `Observation` on the fixtures sink yields the row count, the
     *     per-column non-null counts, the date range and the league and
     *     team sets; the empty-fixtures guard reads its row count;
-    *   - one `Observation` on the combined sink yields `joinedRecords`.
+    *   - one `Observation` on the combined sink yields `joinedRecords`;
+    *   - the history is cleaned once the same way: the scope tracks
+    *     `Process.cleanHistory`, the history sink (clean + O2) and its
+    *     range sampling read the cache, and the combined stage's
+    *     `TeamMetrics.asOf` aggregates the cached rows.
     * `CollectMetrics` rejects DISTINCT aggregates, so the distinct counts
     * are the sizes of `collect_set`s. Their driver-side buffers hold one
     * entry per distinct league or team: dimensions, bounded by the
@@ -141,27 +145,27 @@ object Pipeline {
       return empty
     }
 
-    // Stage 4 — process team history. O2 orders the sink only.
+    // Stage 4 — process team history. The run's scope tracks the clean
+    // rows and the cache serves them to the sink's plan (clean + O2): its
+    // range sampling job materializes them, the sink and the metrics read
+    // them back, so the history CSV is parsed and cleaned once.
     val rawHistory = readCsv(spark, cfg.historyPath, graft.model.Tables.teamHistory)
+    val history = scope.track(
+      Process.cleanHistory(rawHistory, today, cfg.aliases))
     writeCsv(isoDates(Process.processHistory(rawHistory, today, cfg.aliases)),
       s"${cfg.outDir}/history")
 
-    // Stage 5a — rolling team metrics (A1–A3; one window pass).
+    // Stage 5a — each team's latest rolling metrics (A1–A3, as-of J1).
     val statCols = Seq("goals_for", "goals_against", "shots",
       "shots_on_target", "xg", "possession")
-    val metrics = TeamMetrics.rolling(
-      Process.cleanHistory(rawHistory, today, cfg.aliases), "team", "date",
-      statCols, resultCol = Some("result"),
-      sumCols = Seq("goals_for", "goals_against"),
-      windowDays = cfg.windowDays)
+    val metrics = TeamMetrics.asOf(history, "team", "date",
+      TeamMetrics.standard(statCols, resultCol = Some("result"),
+        sumCols = Seq("goals_for", "goals_against")),
+      windowDays = cfg.windowDays).drop("window_n")
 
     // Stage 5b — combined output (J1 + P3), corrected as-of form.
-    val metricCols = Seq("team", "date") ++
-      statCols.map(c => s"rolling_$c") ++
-      Seq("total_goals_for", "total_goals_against", "win_ratio")
     val combined = CombineData.combine(
-      fixtures, metrics.select(metricCols.map(col): _*),
-      "team", "home_team", "away_team", "date", Nil, scope = scope)
+      fixtures, metrics, "team", "home_team", "away_team", scope = scope)
       .withColumn("match_quality",
         Normalize.matchQuality(col("home_win_ratio"), col("away_win_ratio")))
       .orderBy("date", "match_id")                          // O3

@@ -31,8 +31,10 @@ object RegistryCore {
 
   /** J1 flagship — fixtures double-left-join vs latest per-team rolling
     * metrics with home_/away_ prefix fan-out + X11 match quality
-    * (`utils/data_utils.py:122-191`). Metrics legs broadcast; single
-    * shuffle (the rolling window) in the whole plan.
+    * (`utils/data_utils.py:122-191`). The metrics are `TeamMetrics.asOf`'s
+    * per-team dim: two map-side-combined aggregates, computed once and
+    * broadcast to both legs; the orders rows are never sorted or
+    * shuffled, only the final ORDER BY sorts.
     */
   def combinedQuery(s: SparkSession, dir: String): DataFrame = {
     val od = ordersD(s, dir)
@@ -40,18 +42,17 @@ object RegistryCore {
       col("o_orderkey").as("match_id"), col("date"),
       col("o_custkey").as("home_team"),
       ((col("o_custkey") * 13 + 7) % 100).as("away_team"))
-    val w = rolling90("team", "date")
-    val n = count(lit(1)).over(w)
-    val metrics = od.select(
-        col("o_custkey").as("team"), col("date"), col("o_orderkey"),
-        col("o_totalprice"), col("o_orderstatus"))
-      .select(col("team"), col("date"), col("o_orderkey"),
-        (sum(statusPoints(col("o_orderstatus")).cast("decimal(9,1)")).over(w)
-          .cast("double") / n).as("win_ratio"),
-        (sum(col("o_totalprice").cast("decimal(18,2)")).over(w)
-          .cast("double") / n).as("avg_price"))
+    val metrics = TeamMetrics.asOf(
+        od.select(col("o_custkey").as("team"), col("date"),
+          col("o_totalprice"), col("o_orderstatus")),
+        "team", "date", Seq(
+          TeamMetrics.Metric("win_ratio", statusPoints(col("o_orderstatus")),
+            "decimal(9,1)"),
+          TeamMetrics.Metric("avg_price", col("o_totalprice"),
+            "decimal(18,2)")))
+      .select("team", "win_ratio", "avg_price")
     val combined = CombineData.combine(fixtures, metrics,
-      "team", "home_team", "away_team", "date", Seq("o_orderkey"))
+      "team", "home_team", "away_team")
     combined.select(
         col("match_id"),
         date_format(col("date"), "yyyy-MM-dd").as("date"),

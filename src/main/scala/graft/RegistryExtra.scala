@@ -71,7 +71,7 @@ object RegistryExtra {
         val metrics = od.select(col("o_custkey").as("team"),
           col("o_orderkey").as("mkey"), col("o_totalprice").as("price"))
         CombineData.combine(fixtures, metrics, "team",
-            "home_team", "away_team", "date", Nil, faithful = true)
+            "home_team", "away_team", faithful = true)
           .select(col("match_id"), col("home_mkey"), col("away_mkey"),
             col("home_price"), col("away_price"))
           .orderBy("match_id", "home_mkey", "away_mkey")

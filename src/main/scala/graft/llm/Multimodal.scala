@@ -46,7 +46,8 @@ object Multimodal {
     * decoder is the REAL JDK ImageIO path ([[imageIoDecode]]:
     * PNG/JPEG/BMP/GIF → 4×4 mean-pooled luminance, the same proven
     * kernel as `decodeImageFeatures`); payloads ImageIO cannot decode
-    * yield null features (corrupt-is-data). A stub decoder
+    * yield null features (corrupt-is-data), and a NULL payload a NULL
+    * `byte_len` and NULL features. A stub decoder
     * ([[stubDecode]]) remains available as an explicit test seam for
     * formats with no in-JVM codec. The decoder's NAME travels in every
     * output row's `decoder` column: a 100 TB run downstream can always
@@ -63,7 +64,8 @@ object Multimodal {
         .add("decoder", StringType).add("features", ArrayType(FloatType))) {
       _.map { r =>
         val payload = r.getAs[Array[Byte]](1)
-        Row(r.getLong(0), payload.length.toLong, decoderName,
+        if (payload == null) Row(r.getLong(0), null, decoderName, null)
+        else Row(r.getLong(0), payload.length.toLong, decoderName,
           decoder(payload))
       }
     }
@@ -426,7 +428,7 @@ object Multimodal {
     * anything that is not a well-formed AVI.
     */
   def parseAvi(bytes: Array[Byte]): Option[AviInfo] = {
-    if (bytes.length < 24 || fourcc(bytes, 0) != "RIFF" ||
+    if (bytes == null || bytes.length < 24 || fourcc(bytes, 0) != "RIFF" ||
         fourcc(bytes, 8) != "AVI ") return None
     var usPerFrame = 0L; var totalFrames = 0L; var seenAvih = false
     val frames = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
@@ -796,7 +798,7 @@ object Multimodal {
     * PCM (mono/stereo), None otherwise.
     */
   private def parsePcmWav(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
-    if (bytes.length < 44 || fourcc(bytes, 0) != "RIFF" ||
+    if (bytes == null || bytes.length < 44 || fourcc(bytes, 0) != "RIFF" ||
         fourcc(bytes, 8) != "WAVE") return None
     def le16(i: Int) = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
     var fmtOk = false; var channels = 0; var rate = 0
@@ -1433,6 +1435,7 @@ object Multimodal {
     * decoder needs survive; pixels untouched — the entropy-coded tail is
     * copied verbatim). Corrupt input comes back unchanged (the audit
     * flag belongs to [[jpegExif]]; a strip must never invent bytes).
+    * A NULL payload stays NULL and saves nothing, as in [[stripPngMeta]].
     * Output: (id, payload, bytes_saved).
     */
   def stripJpegMeta(df: DataFrame, idCol: String,
@@ -1441,20 +1444,22 @@ object Multimodal {
         .add("id", LongType, nullable = false).add("payload", BinaryType)
         .add("bytes_saved", LongType, nullable = false)) {
       _.map { r =>
-        val jpeg = r.getAs[Array[Byte]](1)
-        val bytes = if (jpeg == null) Array.emptyByteArray else jpeg
-        val (segs, corrupt) = jpegSegments(bytes)
-        val out =
-          if (corrupt) bytes
-          else {
-            val buf = new java.io.ByteArrayOutputStream(bytes.length)
-            segs.foreach { case (m, off, len) =>
-              if (!((m >= 0xe1 && m <= 0xef) || m == 0xfe))
-                buf.write(bytes, off, len)
+        val bytes = r.getAs[Array[Byte]](1)
+        if (bytes == null) Row(r.getLong(0), null, 0L)
+        else {
+          val (segs, corrupt) = jpegSegments(bytes)
+          val out =
+            if (corrupt) bytes
+            else {
+              val buf = new java.io.ByteArrayOutputStream(bytes.length)
+              segs.foreach { case (m, off, len) =>
+                if (!((m >= 0xe1 && m <= 0xef) || m == 0xfe))
+                  buf.write(bytes, off, len)
+              }
+              buf.toByteArray
             }
-            buf.toByteArray
-          }
-        Row(r.getLong(0), out, (bytes.length - out.length).toLong)
+          Row(r.getLong(0), out, (bytes.length - out.length).toLong)
+        }
       }
     }
 

@@ -385,6 +385,39 @@ class MultimodalSpec extends SparkSpec {
     assert(strip(2).getAs[Array[Byte]](1).sameElements(png))
   }
 
+  test("NULL payloads are data in every decode and strip op, never an NPE") {
+    val mm = Multimodal
+    val nul = null.asInstanceOf[Array[Byte]]
+    def withNull(valid: Array[Byte]) =
+      Seq((1L, valid), (2L, nul)).toDF("doc_id", "payload")
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").collect().map(_.getLong(0)).distinct.sorted.toSeq
+    val frame = mm.syntheticGrayPng(1L)
+    val avi = withNull(mm.buildAvi(Seq(frame, frame), 8, 8))
+    val wav = withNull(wavBytes(Array.tabulate(1000)(i => (i * 37).toShort),
+      8000))
+    // the ops that drop undecodable payloads emit no row for NULL
+    assert(ids(mm.decodeVideoFrames(avi, "doc_id")) == Seq(1L))
+    assert(ids(mm.frameHashes(avi, "doc_id")) == Seq(1L))
+    assert(ids(mm.audioEnvelopes(wav, "doc_id")) == Seq(1L))
+    assert(ids(mm.audioWindowEnergy(wav, "doc_id")) == Seq(1L))
+    // the ops that keep one row per payload keep it with NULL fields
+    val audio = mm.decodeAudioFeatures(wav, "doc_id").orderBy("id").collect()
+    assert(audio.length == 2 && !audio(0).isNullAt(1))
+    assert((1 to 3).forall(audio(1).isNullAt))
+    val feats = mm.decodeFeatures(withNull(frame), "doc_id").orderBy("id")
+      .collect()
+    assert(feats.length == 2 && !feats(0).isNullAt(3))
+    assert(feats(1).isNullAt(1) && feats(1).isNullAt(3) &&
+      feats(1).getString(2) == mm.ImageIoDecoderName)
+    // stripJpegMeta keeps NULL as NULL and saves nothing, like the PNG op
+    val jpeg = mm.syntheticGrayJpeg(7L)
+    val strip = mm.stripJpegMeta(withNull(jpeg), "doc_id", "payload")
+      .orderBy("id").collect()
+    assert(!strip(0).isNullAt(1))
+    assert(strip(1).isNullAt(1) && strip(1).getLong(2) == 0L)
+  }
+
   test("dHash: scale-invariant on pixel-doubled copies, key-sensitive, corrupt-safe") {
     // base dims divide the 9x8 grid, so the 2x pixel-doubled image has
     // identical integer cell means -> identical hash, different bytes

@@ -55,7 +55,10 @@ class RegistryInvariantsSpec extends SparkSpec {
       // the KN trigram LM: its stat exchanges are reused across
       // consumers, which must not depend on the shuffle width
       "t30_kn_trigram_lm", "t31_kn_perplexity_buckets",
-      "t32_kn_incremental")
+      "t32_kn_incremental",
+      // the flagship join: its as-of metrics are exact decimal sums from
+      // partial aggregates merged in task order
+      "j01_combined")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val base = names.map(n =>

@@ -12,6 +12,12 @@ import graft.etl.TeamMetrics
   */
 case class RollRec(team: String, epochDay: Int, value: Double)
 
+/** A history row for the as-of property: NULL-able team, day, second of
+  * the day, stat and result.
+  */
+case class AsOfRec(team: String, epochDay: Option[Int], second: Int,
+                   value: Option[Double], result: String)
+
 class RollingPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -51,6 +57,49 @@ class RollingPropertySpec extends SparkSpec {
       assert(math.abs(gv._1 - wv._1) < 1e-9 && gv._2 == wv._2 &&
         gv._3 == wv._3,
         s"value mismatch at $gk: got $gv want $wv")
+    }
+  }
+
+  test("asOf equals latestPerTeam(rolling) on its columns, bit for bit") {
+    val rnd = new scala.util.Random(20261019L)
+    def rec(team: String, day: Option[Int]): AsOfRec =
+      AsOfRec(team, day, rnd.nextInt(86400),
+        if (rnd.nextInt(10) == 0) None
+        else Some((rnd.nextInt(2000) - 1000) / 100.0),
+        Seq("W", "D", "L", "x", null)(rnd.nextInt(5)))
+    val random = (1 to 300).map(_ =>
+      rec(s"t${rnd.nextInt(5)}", Some(rnd.nextInt(200))))
+    // the latest day twice, then rows exactly 1, 7, 90 days before it
+    // and one day further out
+    val edges = Seq(300, 300, 299, 298, 293, 292, 210, 209, 150)
+      .map(d => rec("edges", Some(d)))
+    val special =
+      Seq(rec("solo", Some(42))) ++                       // one-row team
+      Seq(10, 10, 55, 100).map(d => rec(null, Some(d))) ++ // the NULL team
+      Seq.fill(3)(rec("undated", None)) ++                // all dates NULL
+      Seq(rec("mixed", None), rec("mixed", Some(7)), rec("mixed", Some(5)))
+    val base = rnd.shuffle(random ++ edges ++ special).toDF()
+      .withColumn("date", date_add(lit("2024-01-01").cast("date"),
+        col("epochDay")))
+      .withColumn("ts", (col("date").cast("timestamp").cast("long") +
+        col("second")).cast("timestamp"))
+      .repartition(3)
+    val cols = Seq("team", "date", "rolling_value", "total_value",
+      "win_ratio", "window_n")
+
+    for (dateCol <- Seq("date", "ts"); days <- Seq(1, 7, 90)) {
+      val df = base.drop(if (dateCol == "date") "ts" else "date")
+        .withColumnRenamed(dateCol, "date")
+      val want = TeamMetrics.latestPerTeam(
+          TeamMetrics.rolling(df, "team", "date", Seq("value"),
+            Some("result"), Seq("value"), days),
+          "team", "date", Nil)
+        .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      val got = TeamMetrics.asOf(df, "team", "date", TeamMetrics.standard(
+          Seq("value"), Some("result"), Seq("value")), days)
+        .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      assert(want.size == 10, s"$dateCol/$days: teams $want")
+      assert(got == want, s"$dateCol, $days days")
     }
   }
 }

@@ -7,8 +7,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -224,6 +225,77 @@ class SinksSpec extends SparkSpec {
     assert(probes.isEmpty, s"${probes.size} jobs from isEmpty/count/collect")
   }
 
+  test("Pipeline.run reads the history CSV once and releases every block " +
+      "it cached") {
+    val dir = tmp()
+    val cfg = pipelineInputs(dir, edgeFixtures)
+      .copy(historyPath = s"$dir/long_history")
+    val nHistory = SinksSpec.writeLongHistory(spark, cfg.historyPath)
+    val nFixtures = edgeFixtures.size.toLong
+    val recordsRead = new AtomicLong
+    val cachedRdds = ConcurrentHashMap.newKeySet[Int]()
+    val events = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        events.incrementAndGet()
+        Option(e.taskMetrics).foreach(m =>
+          recordsRead.addAndGet(m.inputMetrics.recordsRead))
+      }
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        events.incrementAndGet()
+        e.blockUpdatedInfo.blockId.asRDDId.foreach(b => cachedRdds.add(b.rddId))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val stats =
+      try Pipeline.run(spark, cfg)
+      finally {
+        Bench.awaitListenerDrain(events.get)
+        sc.removeSparkListener(listener)
+      }
+    assert(stats.fixturesCount == 4)
+    // Task input records count CSV rows, and one record per cached batch
+    // read back (a handful here). Parsing the history twice would add
+    // another nHistory.
+    val read = recordsRead.get
+    assert(read >= nHistory + nFixtures && read < nHistory + nFixtures + 100,
+      s"$read input records for $nHistory history and $nFixtures fixture rows")
+    // The run cached the clean fixtures, the clean history and the dim,
+    // and its scope's release removes their blocks.
+    assert(cachedRdds.size == 3, s"cached RDDs $cachedRdds")
+    val deadline = System.currentTimeMillis() + 30000
+    def left = sc.getRDDStorageInfo.filter(i =>
+      cachedRdds.contains(i.id) && i.numCachedPartitions > 0).map(_.id)
+    while (left.nonEmpty && System.currentTimeMillis() < deadline)
+      Thread.sleep(100)
+    assert(left.isEmpty, s"blocks of RDDs ${left.toSeq} outlived the run")
+  }
+
+  test("Pipeline.run output does not depend on the shuffle width or AQE") {
+    val dir = tmp()
+    val base = pipelineInputs(dir, edgeFixtures)
+      .copy(historyPath = s"$dir/long_history")
+    SinksSpec.writeLongHistory(spark, base.historyPath)
+    def run(tag: String, conf: (String, String)*)
+        : (Pipeline.Stats, Seq[String]) = {
+      val cfg = base.copy(outDir = s"$dir/out_$tag")
+      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        (Pipeline.run(spark, cfg), csvLines(s"${cfg.outDir}/football_data"))
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val want = run("default")
+    assert(want._2.size == 4)
+    assert(run("p1", "spark.sql.shuffle.partitions" -> "1") == want)
+    assert(run("p7", "spark.sql.shuffle.partitions" -> "7") == want)
+    assert(run("noaqe", "spark.sql.adaptive.enabled" -> "false") == want)
+  }
+
   test("Pipeline.run: concurrent runs in one session keep their own stats, " +
       "outputs and caches") {
     val cfgs = Seq(twoFixtures, edgeFixtures).map(f => pipelineInputs(tmp(), f))
@@ -286,6 +358,34 @@ object SinksSpec {
     Pipeline.Config(fixturesPath = s"$dir/raw_fixtures",
       historyPath = s"$dir/raw_history", outDir = s"$dir/out",
       today = "2025-05-23")
+  }
+
+  /** Writes a raw history CSV of 4,000 rows (40 teams, among them the
+    * fixtures' teams by their raw names, over the 200 days before the
+    * config's "today", with duplicate dates) in 3 part files and returns
+    * its row count.
+    */
+  def writeLongHistory(spark: SparkSession, path: String): Long = {
+    val teams = Seq("Arsenal", "Chelsea", "Man Utd", "Everton", "Fulham",
+      "Barcelona") ++ (6 until 40).map(i => s"Club $i")
+    val n = 4000L
+    val id = col("id")
+    spark.range(0, n, 1, 3).select(
+        element_at(typedLit(teams), (id % teams.size + 1).cast("int")).as("team"),
+        lit("2024-2025").as("season"),
+        date_sub(lit("2025-05-23").cast("date"), (id * 7919 % 200).cast("int"))
+          .cast("string").as("date"),
+        lit("PL").as("competition"),
+        when(id % 2 === 0, "Home").otherwise("Away").as("venue"),
+        concat(lit("Opp "), (id % 13).cast("string")).as("opponent"),
+        element_at(typedLit(Seq("W", "D", "L", "win")), (id % 4 + 1).cast("int"))
+          .as("result"),
+        (id % 5).cast("string").as("goals_for"),
+        (id % 3).cast("string").as("goals_against"),
+        (id % 17).cast("string").as("shots"),
+        (id % 7).cast("string").as("shots_on_target"))
+      .write.option("header", "true").csv(path)
+    n
   }
 
   val twoFixtures = Seq(

@@ -30,6 +30,37 @@ class StreamingSpec extends SparkSpec {
     assert(out(2).getAs[Double]("total_value") == 4.0)
   }
 
+  test("a repeated identical AvailableNow drain compiles no codegen class") {
+    // Spark keys its codegen cache by (class loader, code). A streaming
+    // start runs in a cloned session; with artifact isolation on, that
+    // clone's tasks got a fresh class loader and every drain recompiled
+    // the classes the previous one had compiled (GraftSession turns it off).
+    val dir = Files.createTempDirectory("graft-codegen").toString
+    Seq(Seq(("2024-01-01 01:00:00", "click", 1.0)),
+        Seq(("2024-01-03 00:00:00", "view", 5.0))).foreach { data =>
+      data.toDF("ts", "event_type", "value")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .coalesce(1).write.mode("append").parquet(s"$dir/in")
+    }
+    def drain(run: Int): Unit = {
+      val stream = EventStream.readEvents(spark, s"$dir/in",
+        schema = eventsDf.schema, maxFilesPerTrigger = 1)
+      EventStream.writeCounts(EventStream.windowedCounts(stream),
+        s"$dir/out$run", s"$dir/cp$run").start().drain()
+    }
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    drain(1)
+    val before = compiled.getCount
+    drain(2)
+    assert(compiled.getCount == before,
+      s"${compiled.getCount - before} classes compiled by the second drain")
+    // the 2024-01-01 window closed, in both runs alike
+    val outs = Seq(1, 2).map(r =>
+      spark.read.parquet(s"$dir/out$r").collect().map(_.toString).toSeq)
+    assert(outs(0).size == 1 && outs(1) == outs(0))
+  }
+
   test("Append mode: a row later than the 1-day watermark is dropped") {
     // Two AvailableNow runs over one checkpoint: run 1 processes on-time
     // rows plus a 2024-01-03 row that advances the watermark to 01-02,

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-stage job list of the last traced `Pipeline.run` in a perfbench run.
 
-    python3 plans/pr10/stage_jobs.py .bench_build/runs/reference_jobs-s3-t1/spans.jsonl
+    python3 tools/stage_jobs.py .bench_build/runs/reference_jobs-s3-t1/spans.jsonl
 
 Prints each stage of the run (fixtures, history, combined, stats) with its
 wall time and its jobs. A job is shown with the Spark action that submitted

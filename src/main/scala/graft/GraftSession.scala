@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single wiring point for engine sessions: extensions (native functions
-  * + optimizer rules) and the config every entry point needs. Callers
+/** Single wiring point for engine sessions: extensions (native
+  * functions) and the config every entry point needs. Callers
   * with their own session can instead set
   * `spark.sql.extensions=graft.plans.GraftExtensions`, and for local files
   * without a process fork per chmod/readlink (`graft.io`)

@@ -88,12 +88,6 @@ object Registry {
   /** Exact decimal sum surfaced as double (order-independent). */
   def decSum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
 
-  /** 90-day rolling frame over a date column, per-team (SURVEY A1–A3). */
-  def rolling90(team: String, date: String) =
-    Window.partitionBy(team)
-      .orderBy(col(date).cast("timestamp").cast("long"))
-      .rangeBetween(-90L * 86400L, 0L)
-
   /** o_orderstatus → match-result points, X6 shape: F=win, P=draw, O=loss. */
   def statusPoints(c: Column): Column =
     when(c === "F", 1.0).when(c === "P", 0.5).otherwise(0.0)

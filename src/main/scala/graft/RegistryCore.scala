@@ -243,7 +243,7 @@ object RegistryCore {
     // ---- A1: 90-day rolling mean ------------------------------------------
     Q("a01_rolling_mean",
       (s, dir) => {
-        val w = rolling90("o_custkey", "date")
+        val w = TeamMetrics.rollingWindow("o_custkey", "date")
         ordersD(s, dir).select(col("o_orderkey"), col("o_custkey"),
           date_format(col("date"), "yyyy-MM-dd").as("date"),
           (sum(col("o_totalprice").cast("decimal(18,2)")).over(w)
@@ -265,7 +265,7 @@ object RegistryCore {
     // ---- A2: 90-day rolling sum -------------------------------------------
     Q("a02_rolling_sum",
       (s, dir) => {
-        val w = rolling90("o_custkey", "date")
+        val w = TeamMetrics.rollingWindow("o_custkey", "date")
         ordersD(s, dir).select(col("o_orderkey"),
           sum(col("o_totalprice").cast("decimal(18,2)")).over(w)
             .cast("double").as("total_price_90d"))
@@ -283,7 +283,7 @@ object RegistryCore {
     // ---- A3: 90-day rolling win ratio -------------------------------------
     Q("a03_rolling_win_ratio",
       (s, dir) => {
-        val w = rolling90("o_custkey", "date")
+        val w = TeamMetrics.rollingWindow("o_custkey", "date")
         ordersD(s, dir).select(col("o_orderkey"),
           (sum(statusPoints(col("o_orderstatus")).cast("decimal(9,1)")).over(w)
             .cast("double") / count(lit(1)).over(w)).as("win_ratio"))

@@ -13,7 +13,7 @@ import Registry._
   * analysis, dedup, similarity search, multimodal plumbing, plus the
   * batch form of the streaming windowed aggregation. Oracle SQL is
   * provided wherever DuckDB can express the same computation; hash-based
-  * ops whose hash family DuckDB lacks (xxhash64 minhash/simhash, seeded
+  * ops whose hash family DuckDB lacks (xxhash64 minhash, seeded
   * LSH planes) register as rows-only checks with summary rows so the
   * check is never vacuous.
   */
@@ -162,10 +162,8 @@ object RegistryLlm {
 
     // ---- D3: SimHash signatures — the PORTABLE md5-bit variant, so the
     //      oracle replays the whole signature bit-for-bit in DuckDB SQL
-    //      (generated below: 64 vote sums + 16 nibble chars). The
-    //      seeded-xxhash64 Dedup.simhash stays available for hot paths;
-    //      correctness-wise this row now hash-matches instead of the
-    //      former rows-only gate ------------------------------------------
+    //      (generated below: 64 vote sums + 16 nibble chars), so this
+    //      row hash-matches instead of the former rows-only gate -------
     Q("d03_simhash",
       (s, dir) => Dedup.portableSimhash(t(s, dir, "documents"),
           "text", "doc_id")

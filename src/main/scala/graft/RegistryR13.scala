@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.llm.TextAnalysis
@@ -100,65 +99,20 @@ object RegistryR13 {
         // NB scored is consumed twice (sample chain + final join), but
         // caching it was MEASURED SLOWER (3.0 -> 3.9 s): the cache
         // barrier costs more than exchange-reuse recomputation
-        val scored = graft.llm.TextAnalysis.knTrigramScores(
-            docs.filter(col("doc_id") < 400), docs, "doc_id", "text")
-          .join(docs.select(col("doc_id").as("id"), col("source")), "id")
-        val sample = graft.plans.TopKPerKey(
-            scored.filter(col("n_trigrams") > 0)
-              .select(col("source"), col("id"), col("avg_logp")),
-            keys = Seq(col("source")), order = Seq(col("id").asc), k = 100)
-        val ranked = sample
-          .withColumn("r", row_number().over(Window.partitionBy("source")
-            .orderBy(col("avg_logp").desc, col("id"))))
-          .withColumn("n",
-            count(lit(1)).over(Window.partitionBy("source")))
-        val th = ranked.filter(col("r") === expr("(n + 2) div 3"))
-          .select(col("source"), col("avg_logp").as("t1"))
-          .join(ranked.filter(col("r") === expr("(2 * n + 2) div 3"))
-            .select(col("source"), col("avg_logp").as("t2")), "source")
-        scored.join(broadcast(th), Seq("source"), "left")
-          .select(col("id").as("doc_id"), col("source"),
-            when(col("avg_logp").isNull, "unscored")
-              .when(col("avg_logp") >= col("t1"), "head")
-              .when(col("avg_logp") >= col("t2"), "middle")
-              .otherwise("tail").as("bucket"))
-          .orderBy("doc_id")
+        TextAnalysis.perplexityBuckets(
+          TextAnalysis.knTrigramScores(
+              docs.filter(col("doc_id") < 400), docs, "doc_id", "text")
+            .join(docs.select(col("doc_id").as("id"), col("source")), "id"),
+          "n_trigrams")
       },
-      Some {
-        val ctes = graft.llm.TextAnalysis.knOracleCtes("documents",
-          "doc_id", "text", "doc_id < 400", "doc_id >= 0")
-        s"""WITH ${ctes.mkString(",\n")},
-           |kb_scored AS (
-           |  SELECT o.id, d.source, o.n_trigrams, o.avg_logp
-           |  FROM kn_out o JOIN documents d ON d.doc_id = o.id),
-           |kb_smp AS (
-           |  SELECT source, id, avg_logp FROM (
-           |    SELECT source, id, avg_logp,
-           |      row_number() OVER (PARTITION BY source ORDER BY id)
-           |        AS sr
-           |    FROM kb_scored WHERE n_trigrams > 0)
-           |  WHERE sr <= 100),
-           |kb_rk AS (
-           |  SELECT source, id, avg_logp,
-           |    row_number() OVER (PARTITION BY source
-           |                       ORDER BY avg_logp DESC, id) AS r,
-           |    count(*) OVER (PARTITION BY source) AS n
-           |  FROM kb_smp),
-           |kb_th AS (
-           |  SELECT a.source, a.avg_logp AS t1, b.avg_logp AS t2
-           |  FROM (SELECT source, avg_logp FROM kb_rk
-           |        WHERE r = (n + 2) // 3) a
-           |  JOIN (SELECT source, avg_logp FROM kb_rk
-           |        WHERE r = (2 * n + 2) // 3) b
-           |    ON b.source = a.source)
-           |SELECT s.id AS doc_id, s.source,
-           |  CASE WHEN s.avg_logp IS NULL THEN 'unscored'
-           |    WHEN s.avg_logp >= t.t1 THEN 'head'
-           |    WHEN s.avg_logp >= t.t2 THEN 'middle'
-           |    ELSE 'tail' END AS bucket
-           |FROM kb_scored s LEFT JOIN kb_th t ON t.source = s.source
-           |ORDER BY doc_id""".stripMargin
-      }),
+      Some(TextAnalysis.perplexityBucketsOracleSql(
+        TextAnalysis.knOracleCtes("documents", "doc_id", "text",
+          "doc_id < 400", "doc_id >= 0") :+
+          """kb_scored AS (
+            |  SELECT o.id, d.source, o.n_trigrams, o.avg_logp
+            |  FROM kn_out o JOIN documents d ON d.doc_id = o.id)"""
+            .stripMargin,
+        "kb_scored", "n_trigrams"))),
 
     // ---- D33: ExactSubstr against the MAINTAINED window-digest index —
     //      closes the incremental family (d12/d19/t18/a33 all have a

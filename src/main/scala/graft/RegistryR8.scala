@@ -666,21 +666,19 @@ object RegistryR8 {
              |WHERE d.doc_id < 200
              |GROUP BY 1, 2 ORDER BY doc_id, win""".stripMargin)),
 
-    // ---- W24: top-3 orders per customer through the NATIVE TopKPerKey
-    //      physical operator (plans/TopKPerKey.scala — custom LogicalPlan
-    //      + injected SparkStrategy + partial/final SparkPlan pair). The
-    //      w01 Window formulation shuffles and sorts EVERY row; this
-    //      plan's partial stage prunes each map partition to <=3 rows per
+    // ---- W24: top-3 orders per customer as `row_number() <= 3`, which
+    //      Spark plans natively (InferWindowGroupLimit): a partial
+    //      WindowGroupLimit prunes each map partition to <=3 rows per
     //      customer BEFORE the exchange, so at 100 TB the shuffle carries
-    //      ~|customers|*k rows instead of the fact table. Total order
-    //      (price desc, orderkey asc) => deterministic, oracle-exact. ---
+    //      ~|customers|*k rows instead of the fact table, and a final
+    //      WindowGroupLimit above it. Total order (price desc, orderkey
+    //      asc) => deterministic, oracle-exact. ------------------------
     Q("w24_native_topk",
-      (s, dir) => graft.plans.TopKPerKey(
-          t(s, dir, "orders")
-            .select("o_custkey", "o_orderkey", "o_totalprice"),
-          keys = Seq(col("o_custkey")),
-          order = Seq(col("o_totalprice").desc, col("o_orderkey").asc),
-          k = 3)
+      (s, dir) => t(s, dir, "orders")
+        .select("o_custkey", "o_orderkey", "o_totalprice")
+        .withColumn("rn", row_number().over(Window.partitionBy("o_custkey")
+          .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
+        .filter(col("rn") <= 3).drop("rn")
         .orderBy("o_custkey", "o_orderkey"),
       Some("""SELECT o_custkey, o_orderkey, o_totalprice FROM (
              |  SELECT o_custkey, o_orderkey, o_totalprice,
@@ -705,17 +703,16 @@ object RegistryR8 {
     // ---- D21: per-domain document caps (RefinedWeb-style URL/domain
     //      frequency policy): keep at most 10 docs per source, chosen by
     //      portable md5 priority (an unbiased sample, not id-order bias).
-    //      Runs through the NATIVE TopKPerKey operator — at 100 TB the
-    //      partial stage prunes each map partition to <=10 rows per
-    //      domain before anything shuffles. ----------------------------
+    //      The `row_number() <= 10` window plans a partial
+    //      WindowGroupLimit, so at 100 TB each map partition is pruned to
+    //      <=10 rows per domain before anything shuffles. --------------
     Q("d21_domain_cap",
-      (s, dir) => graft.plans.TopKPerKey(
-          t(s, dir, "documents")
-            .select(col("source"), col("doc_id"),
-              md5(concat(lit("cap:"), col("doc_id").cast("string"))).as("pri")),
-          keys = Seq(col("source")),
-          order = Seq(col("pri").asc, col("doc_id").asc),
-          k = 10)
+      (s, dir) => t(s, dir, "documents")
+        .select(col("source"), col("doc_id"),
+          md5(concat(lit("cap:"), col("doc_id").cast("string"))).as("pri"))
+        .withColumn("rn", row_number().over(Window.partitionBy("source")
+          .orderBy(col("pri"), col("doc_id"))))
+        .filter(col("rn") <= 10)
         .select("source", "doc_id").orderBy("source", "doc_id"),
       Some("""SELECT source, doc_id FROM (
              |  SELECT source, doc_id,
@@ -760,9 +757,10 @@ object RegistryR8 {
     //      embeddings quantize to round(1e6·x) BIGINT, centroids are
     //      integer mean (sum div n) per dimension, dot/norms are integer
     //      sums — so the only floats are one row-wise sqrt/divide at the
-    //      end, identical on any engine. Top-5 per label through the
-    //      native TopKPerKey operator. (The float-mean version of this
-    //      can never hash-match: summation order.) ----------------------
+    //      end, identical on any engine. Top-5 per label by
+    //      `row_number() <= 5` (a partial WindowGroupLimit below the
+    //      exchange). (The float-mean version of this can never
+    //      hash-match: summation order.) --------------------------------
     Q("n10_centroid_cosine",
       (s, dir) => {
         val sim = graft.llm.Similarity
@@ -778,12 +776,11 @@ object RegistryR8 {
             sum(expr("qe * qe")).as("n2v"),
             sum(expr("cq * cq")).as("n2c"))
           .withColumn("cos", expr(sim.cosSql("dot", "n2v", "n2c")))
-        graft.plans.TopKPerKey(
-            scored.select(col("label").cast("int").as("label"),
-              col("vec_id"), col("cos")),
-            keys = Seq(col("label")),
-            order = Seq(col("cos").desc, col("vec_id").asc),
-            k = 5)
+        scored.select(col("label").cast("int").as("label"),
+            col("vec_id"), col("cos"))
+          .withColumn("rn", row_number().over(Window.partitionBy("label")
+            .orderBy(col("cos").desc, col("vec_id"))))
+          .filter(col("rn") <= 5).drop("rn")
           .orderBy("label", "vec_id")
       },
       Some(s"""WITH ${graft.llm.Similarity.qeSql("embeddings", "vec_id",
@@ -1303,13 +1300,8 @@ object RegistryR8 {
 
     // ---- T20: CCNet-style perplexity buckets — head/middle/tail per
     //      source from the bigram-LM score (t19's bit-stable doubles),
-    //      with tercile thresholds fitted on a BOUNDED DETERMINISTIC
-    //      per-source sample (first 100 ids via the native TopKPerKey —
-    //      partial heaps prune before the exchange), exactly how CCNet
-    //      thresholds on a sample rather than exact global quantiles.
-    //      Threshold ranks are integer arithmetic (ceil(n/3) = (n+2)
-    //      div 3); classification is a broadcast join — no per-source
-    //      one-task window over the corpus. -------------------------
+    //      thresholds fitted on a bounded per-source sample
+    //      (TextAnalysis.perplexityBuckets). -------------------------
     Q("t20_perplexity_buckets",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -1317,31 +1309,12 @@ object RegistryR8 {
         // caching it was MEASURED SLOWER (2.2 -> 3.0 s): the cache
         // barrier costs more than exchange-reuse recomputation of the
         // post-shuffle aggregates
-        val scored = graft.llm.TextAnalysis.bigramLmScores(
-            docs, "doc_id", "text")
-          .join(docs.select(col("doc_id").as("id"), col("source")), "id")
-        val sample = graft.plans.TopKPerKey(
-            scored.filter(col("n_bigrams") > 0)
-              .select(col("source"), col("id"), col("avg_logp")),
-            keys = Seq(col("source")), order = Seq(col("id").asc), k = 100)
-        val ranked = sample
-          .withColumn("r", row_number().over(Window.partitionBy("source")
-            .orderBy(col("avg_logp").desc, col("id"))))
-          .withColumn("n",
-            count(lit(1)).over(Window.partitionBy("source")))
-        val th = ranked.filter(col("r") === expr("(n + 2) div 3"))
-          .select(col("source"), col("avg_logp").as("t1"))
-          .join(ranked.filter(col("r") === expr("(2 * n + 2) div 3"))
-            .select(col("source"), col("avg_logp").as("t2")), "source")
-        scored.join(broadcast(th), Seq("source"), "left")
-          .select(col("id").as("doc_id"), col("source"),
-            when(col("avg_logp").isNull, "unscored")
-              .when(col("avg_logp") >= col("t1"), "head")
-              .when(col("avg_logp") >= col("t2"), "middle")
-              .otherwise("tail").as("bucket"))
-          .orderBy("doc_id")
+        TextAnalysis.perplexityBuckets(
+          TextAnalysis.bigramLmScores(docs, "doc_id", "text")
+            .join(docs.select(col("doc_id").as("id"), col("source")), "id"),
+          "n_bigrams")
       },
-      Some(s"""WITH toks AS (
+      Some(TextAnalysis.perplexityBucketsOracleSql(Seq(s"""toks AS (
              |  SELECT doc_id AS id, ${tokensSql("lower(text)")} AS ws
              |  FROM documents),
              |bg AS (
@@ -1367,34 +1340,8 @@ object RegistryR8 {
              |  FROM sc GROUP BY id),
              |scored AS (
              |  SELECT d.doc_id AS id, d.source, a.n_bigrams, a.avg_logp
-             |  FROM documents d LEFT JOIN agg a ON a.id = d.doc_id),
-             |smp AS (
-             |  SELECT source, id, avg_logp FROM (
-             |    SELECT source, id, avg_logp,
-             |      row_number() OVER (PARTITION BY source ORDER BY id)
-             |        AS sr
-             |    FROM scored WHERE n_bigrams > 0)
-             |  WHERE sr <= 100),
-             |rk AS (
-             |  SELECT source, id, avg_logp,
-             |    row_number() OVER (PARTITION BY source
-             |                       ORDER BY avg_logp DESC, id) AS r,
-             |    count(*) OVER (PARTITION BY source) AS n
-             |  FROM smp),
-             |th AS (
-             |  SELECT a.source, a.avg_logp AS t1, b.avg_logp AS t2
-             |  FROM (SELECT source, avg_logp FROM rk
-             |        WHERE r = (n + 2) // 3) a
-             |  JOIN (SELECT source, avg_logp FROM rk
-             |        WHERE r = (2 * n + 2) // 3) b
-             |    ON b.source = a.source)
-             |SELECT s.id AS doc_id, s.source,
-             |  CASE WHEN s.avg_logp IS NULL THEN 'unscored'
-             |    WHEN s.avg_logp >= th.t1 THEN 'head'
-             |    WHEN s.avg_logp >= th.t2 THEN 'middle'
-             |    ELSE 'tail' END AS bucket
-             |FROM scored s LEFT JOIN th ON th.source = s.source
-             |ORDER BY doc_id""".stripMargin)),
+             |  FROM documents d LEFT JOIN agg a ON a.id = d.doc_id)"""
+          .stripMargin), "scored", "n_bigrams"))),
 
     // ---- A45: PORTABLE HyperLogLog — the audit twin of the rows-only
     //      a36 sketch store (the d23 pattern applied to sketches):

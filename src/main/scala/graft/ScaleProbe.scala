@@ -209,17 +209,8 @@ object ScaleProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null)
-            shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      })
+    val rec = new FixedCost.Recorder
+    spark.sparkContext.addSparkListener(rec)
     // dev iteration filter (comma-separated probe-name prefixes)
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -228,7 +219,7 @@ object ScaleProbe {
         .foreach { case (name, fn) =>
         CacheScope.harness.release()
         spark.catalog.clearCache()
-        shuffleRecords.set(0L)
+        rec.reset()
         val t0 = System.nanoTime()
         // force EVERY output column through Bench.checksum (a bare
         // count() lets Catalyst eliminate cardinality-preserving joins
@@ -237,9 +228,9 @@ object ScaleProbe {
         // from drifting, incl. the map/variant to_json routing)
         val (rows, _) = Bench.checksum(fn(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
-        Bench.awaitListenerDrain(shuffleRecords.get)
+        val shuffleRecords = rec.stages.map(_.shuffleRecords).sum
         val line =
-          f"""{"probe":"$name","dir":"$dir","sec":$sec%.2f,"rows":$rows,"shuffle_records":${shuffleRecords.get}}"""
+          f"""{"probe":"$name","dir":"$dir","sec":$sec%.2f,"rows":$rows,"shuffle_records":$shuffleRecords}"""
         println(line)
       }
     }

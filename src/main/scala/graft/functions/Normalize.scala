@@ -22,17 +22,14 @@ object Normalize {
     * `config.py:40-76`): trim, strip club-suffix regex, then apply a
     * cross-source alias map. The map is a `typedLit` literal (constant
     * folded + broadcast with the plan — never a per-row UDF dictionary
-    * like the reference); lookup is guarded with `map_contains_key` so it
-    * is ANSI-safe.
+    * like the reference); one `try_element_at` probe per row, null on a
+    * miss under ANSI too, falls back to the stripped name. An alias
+    * whose value is null leaves the name unchanged.
     */
   def normalizeTeamName(c: Column, aliases: Map[String, String]): Column = {
     val stripped = regexp_replace(trim(c), "\\s+(FC|CF|AFC)$", "")
     if (aliases.isEmpty) stripped
-    else {
-      val m = typedLit(aliases)
-      when(map_contains_key(m, stripped), element_at(m, stripped))
-        .otherwise(stripped)
-    }
+    else coalesce(try_element_at(typedLit(aliases), stripped), stripped)
   }
 
   /** The complete cross-source alias table (`config.py:40-76`,

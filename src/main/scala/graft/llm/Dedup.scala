@@ -332,25 +332,6 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash per document: per-token hash bit votes summed in ONE
-    * groupBy over exploded tokens (64 aggregate columns, single shuffle),
-    * then folded into a long.
-    */
-  def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = graft.sources.Scans.withParallelismFloor(
-      df.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"),
-        explode(TextAnalysis.tokens(lower(col("__t")))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val votes = (0 until 64).map(i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1)
-        .otherwise(-1)).as(s"b$i"))
-    val agg = toks.groupBy(col("id")).agg(votes.head, votes.tail: _*)
-    val sim = (0 until 64).map(i =>
-      when(col(s"b$i") > 0, lit(1L << i)).otherwise(0L)).reduce(_ + _)
-    agg.select(col("id"), sim.as("simhash"))
-  }
-
   /** Decode one lowercase hex char to its 0–15 nibble value. */
   private def hexNibble(c: Column): Column = conv(c, 16, 10).cast("int")
 
@@ -358,12 +339,11 @@ object Dedup {
     * Per-token bits are the first 64 bits of `md5(token)` (nibble-major,
     * MSB-first within each nibble), so the whole signature is replayable
     * bit-for-bit by ANY engine with md5 — the d03/d09 oracles recompute
-    * it in DuckDB SQL, which the seeded-xxhash64 [[simhash]] cannot
-    * offer. Every intermediate stays a 0–15 nibble int: no 64-bit
-    * overflow anywhere, ANSI-safe in both engines. Same aggregation
-    * shape as [[simhash]]: bit votes summed in ONE groupBy over exploded
-    * tokens (64 aggregate columns, single shuffle), then 16 hex chars
-    * rebuilt from the vote signs (tie → bit 0).
+    * it in DuckDB SQL. Every intermediate stays a 0–15 nibble int: no
+    * 64-bit overflow anywhere, ANSI-safe in both engines. Bit votes are
+    * summed in ONE groupBy over exploded tokens (64 aggregate columns,
+    * single shuffle), then 16 hex chars rebuilt from the vote signs
+    * (tie → bit 0).
     */
   def portableSimhash(df: DataFrame, textCol: String,
                       idCol: String): DataFrame = {
@@ -400,11 +380,14 @@ object Dedup {
   }
 
   /** Portable-SimHash near-dup pairs at Hamming distance <= `maxDist`
-    * (<= 3), exact by the same 4-band pigeonhole as [[simhashNearDups]]
-    * but over the hex-string signatures of [[portableSimhash]]: bands
-    * are 4-hex-char substrings (16 bits), candidates come from the
-    * band-bucket equi-join (never all-pairs), and the Hamming verify is
-    * 16 nibble xor popcounts — all 0–15 ints, replayable in DuckDB.
+    * over the hex-string signatures of [[portableSimhash]], EXACT by
+    * pigeonhole: the 64-bit signature splits into 4 bands of 16 bits
+    * (4-hex-char substrings), and a pair differing in at most 3 bits
+    * must agree on at least one whole band — so the band-bucket
+    * equi-join loses NO qualifying pair while never forming an
+    * all-pairs product. `maxDist` > 3 would need more bands to stay
+    * exact. The Hamming verify is 16 nibble xor popcounts — all 0–15
+    * ints, replayable in DuckDB.
     */
   def portableSimhashNearDups(df: DataFrame, textCol: String,
                               idCol: String, maxDist: Int = 3): DataFrame = {
@@ -427,35 +410,6 @@ object Dedup {
         col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"))
       .distinct()
       .select(col("id_a"), col("id_b"), hamming.cast("long").as("hamming"))
-      .filter(col("hamming") <= maxDist)
-  }
-
-  /** SimHash near-duplicate pairs at Hamming distance <= `maxDist`,
-    * EXACT by pigeonhole: the 64-bit signature splits into 4 bands of 16
-    * bits, and a pair differing in at most 3 bits must agree on at least
-    * one whole band — so the band-bucket equi-join loses NO qualifying
-    * pair while never forming an all-pairs product. Verification is one
-    * `bit_count(xor)` per candidate. `maxDist` > 3 would need more bands
-    * to stay exact; the standard near-dup setting is 3.
-    */
-  def simhashNearDups(df: DataFrame, textCol: String, idCol: String,
-                      maxDist: Int = 3): DataFrame = {
-    require(maxDist <= 3,
-      s"maxDist $maxDist > 3 breaks the 4-band pigeonhole guarantee")
-    val sigs = simhash(df, textCol, idCol)
-    val banded = sigs.withColumn("bk", explode(array((0 until 4).map(b =>
-        struct(lit(b).as("b"),
-          shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xffffL))
-            .as("v"))): _*)))
-      .select(col("id"), col("simhash"),
-        col("bk.b").as("b"), col("bk.v").as("v"))
-    val a = banded.as("a"); val b = banded.as("b")
-    a.join(b, col("a.b") === col("b.b") && col("a.v") === col("b.v") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .as("hamming"))
-      .distinct()
       .filter(col("hamming") <= maxDist)
   }
 

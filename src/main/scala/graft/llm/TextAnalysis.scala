@@ -729,6 +729,74 @@ object TextAnalysis {
          |  WHERE d.$idCol IN (SELECT id FROM kn_sc))""".stripMargin)
   }
 
+  /** CCNet-style perplexity buckets (t20, t31): head/middle/tail per
+    * source, with tercile thresholds fitted on a BOUNDED DETERMINISTIC
+    * per-source sample — the first 100 scored ids, by `row_number() <=
+    * 100`, whose partial WindowGroupLimit prunes before the exchange —
+    * exactly how CCNet thresholds on a sample rather than exact global
+    * quantiles. Threshold ranks are integer arithmetic (ceil(n/3) =
+    * (n+2) div 3); classification is a broadcast join, so no per-source
+    * window runs over the corpus. `scored` has `id`, `source`,
+    * `avg_logp` (NULL: "unscored") and `countCol`, the scored n-gram
+    * count; only docs with `countCol > 0` enter the sample.
+    */
+  def perplexityBuckets(scored: DataFrame, countCol: String): DataFrame = {
+    val bySource = org.apache.spark.sql.expressions.Window
+      .partitionBy("source")
+    val sample = scored.filter(col(countCol) > 0)
+      .select(col("source"), col("id"), col("avg_logp"))
+      .withColumn("s", row_number().over(bySource.orderBy("id")))
+      .filter(col("s") <= 100).drop("s")
+    val ranked = sample
+      .withColumn("r", row_number().over(
+        bySource.orderBy(col("avg_logp").desc, col("id"))))
+      .withColumn("n", count(lit(1)).over(bySource))
+    val th = ranked.filter(col("r") === expr("(n + 2) div 3"))
+      .select(col("source"), col("avg_logp").as("t1"))
+      .join(ranked.filter(col("r") === expr("(2 * n + 2) div 3"))
+        .select(col("source"), col("avg_logp").as("t2")), "source")
+    scored.join(broadcast(th), Seq("source"), "left")
+      .select(col("id").as("doc_id"), col("source"),
+        when(col("avg_logp").isNull, "unscored")
+          .when(col("avg_logp") >= col("t1"), "head")
+          .when(col("avg_logp") >= col("t2"), "middle")
+          .otherwise("tail").as("bucket"))
+      .orderBy("doc_id")
+  }
+
+  /** DuckDB replay of [[perplexityBuckets]]: `ctes` end in `scored`, a
+    * CTE with the same columns as the Spark frame.
+    */
+  def perplexityBucketsOracleSql(ctes: Seq[String], scored: String,
+                                 countCol: String): String =
+    s"""WITH ${ctes.mkString(",\n")},
+       |pb_smp AS (
+       |  SELECT source, id, avg_logp FROM (
+       |    SELECT source, id, avg_logp,
+       |      row_number() OVER (PARTITION BY source ORDER BY id) AS sr
+       |    FROM $scored WHERE $countCol > 0)
+       |  WHERE sr <= 100),
+       |pb_rk AS (
+       |  SELECT source, id, avg_logp,
+       |    row_number() OVER (PARTITION BY source
+       |                       ORDER BY avg_logp DESC, id) AS r,
+       |    count(*) OVER (PARTITION BY source) AS n
+       |  FROM pb_smp),
+       |pb_th AS (
+       |  SELECT a.source, a.avg_logp AS t1, b.avg_logp AS t2
+       |  FROM (SELECT source, avg_logp FROM pb_rk
+       |        WHERE r = (n + 2) // 3) a
+       |  JOIN (SELECT source, avg_logp FROM pb_rk
+       |        WHERE r = (2 * n + 2) // 3) b
+       |    ON b.source = a.source)
+       |SELECT s.id AS doc_id, s.source,
+       |  CASE WHEN s.avg_logp IS NULL THEN 'unscored'
+       |    WHEN s.avg_logp >= t.t1 THEN 'head'
+       |    WHEN s.avg_logp >= t.t2 THEN 'middle'
+       |    ELSE 'tail' END AS bucket
+       |FROM $scored s LEFT JOIN pb_th t ON t.source = s.source
+       |ORDER BY doc_id""".stripMargin
+
   /** DuckDB replay of [[ngramNovelty]] (n = 3) over `table`. */
   def ngramNoveltyOracleSql(table: String, idCol: String,
                             textCol: String): String =

@@ -122,7 +122,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(JaroWinklerSim.descriptor)
     ext.injectFunction(MultiMatch.descriptor)
     ext.injectFunction(NfcNormalize.descriptor)
-    ext.injectOptimizerRule(_ => AliasLookupSimplification)
-    ext.injectPlannerStrategy(_ => TopKPerKey.Strategy)
   }
 }

@@ -32,14 +32,6 @@ object Reports {
   def countByKey(df: DataFrame, key: String): DataFrame =
     df.groupBy(col(key)).count().orderBy(desc("count"), col(key))
 
-  /** A10 — pivot cross-tab (`:284-290`): home × away mean match quality. */
-  def qualityPivot(df: DataFrame, rowKey: String, colKey: String,
-                   value: Column, pivotValues: Seq[String]): DataFrame =
-    df.groupBy(col(rowKey))
-      .pivot(colKey, pivotValues) // explicit values: one pass, no discovery job
-      .agg(meanOf(value))
-      .orderBy(col(rowKey))
-
   /** O6 — global top-N with a total order (ties broken by key so the
     * result SET is deterministic — `sort_values().head(10)` in pandas is
     * order-dependent).

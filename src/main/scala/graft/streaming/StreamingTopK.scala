@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Incremental top-k per key over an unbounded stream — the streaming
-  * counterpart of the batch `plans.TopKPerKey` operator: same contract
-  * (k best rows per key under a total order: score desc, then item id
-  * asc as the tie-break), maintained as bounded LIST state so the
+  * counterpart of the batch `row_number() <= k` window (w24): same
+  * contract (k best rows per key under a total order: score desc, then
+  * item id asc as the tie-break), maintained as bounded LIST state so the
   * leaderboard is always current without ever rescanning history.
   *
   * Each batch folds new (item, score) observations into the key's

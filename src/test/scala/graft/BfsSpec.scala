@@ -76,6 +76,34 @@ class BfsSpec extends SparkSpec {
     assert(g05.exists(_.getLong(1) == 0L) && g05.exists(_.getLong(1) > 0L))
   }
 
+  test("k = 8 and 12 cut the lineage: driver-side BFS distances, a plan " +
+      "no larger than twice k = 4's") {
+    // a 30-node chain with a shortcut 0 -> 10 and a branch off node 3
+    val edges = (0L until 29L).map(i => (i, i + 1)) ++
+      Seq((0L, 10L), (3L, 40L), (40L, 41L))
+    val adj = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    def driverBfs(k: Int): Map[Long, Long] = {
+      var dist = Map(0L -> 0L)
+      var frontier = Seq(0L)
+      for (hop <- 1 to k) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil))
+          .filterNot(dist.contains).distinct
+        dist ++= frontier.map(_ -> hop.toLong)
+      }
+      nodes.map(n => n -> dist.getOrElse(n, -1L)).toMap
+    }
+    def planNodes(k: Int): Int = Bfs.distances(edges.toDF("src", "dst"),
+      col("id") === 0L, k).queryExecution.optimizedPlan.collect {
+        case p => p }.size
+    for (k <- Seq(8, 12))
+      assert(run(edges, _ == 0L, k) == driverBfs(k), s"k=$k")
+    assert(driverBfs(12).values.max == 12L) // the horizon binds at 12
+    assert(driverBfs(12).values.count(_ == -1L) == 8) // nodes 22..29
+    val (p4, p12) = (planNodes(4), planNodes(12))
+    assert(p12 <= 2 * p4, s"k=12: $p12 plan nodes, k=4: $p4")
+  }
+
   test("partition count does not change distances") {
     val edges = (1L to 40L).map(i => (i, (i * 3) % 41))
     val base = Bfs.distances(edges.toDF("src", "dst").repartition(1),

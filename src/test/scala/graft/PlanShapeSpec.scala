@@ -573,7 +573,7 @@ class PlanShapeSpec extends SparkSpec {
     // earlier partition-less audit can't see it (the window IS
     // partitioned); this sweep requires every such window to sit above
     // a per-group-bounded input: a limit, a per-dim aggregate (≤ |dims|
-    // rows), or a TopKPerKey (≤ k rows per key). Unbounded per-dim
+    // rows), or a WindowGroupLimit (≤ k rows per key). Unbounded per-dim
     // prefix sums must ride Ids.runningTotalByKey, whose window
     // partitions by (__part, dim) — not the dim alone.
     import org.apache.spark.sql.catalyst.plans.logical._
@@ -585,8 +585,8 @@ class PlanShapeSpec extends SparkSpec {
       case a: Aggregate if a.groupingExpressions.forall(e =>
         e.references.nonEmpty &&
           e.references.forall(r => lowCard(r.name))) => true
-      // the native per-key top-k: ≤ k rows per window group
-      case _: graft.plans.TopKPerKeyNode => true
+      // `row_number() <= k`'s per-key limit: ≤ k rows per window group
+      case _: WindowGroupLimit => true
       case j: Join => boundedPerGroup(j.left) && boundedPerGroup(j.right)
       case _: LeafNode => false
       case other if other.children.nonEmpty =>

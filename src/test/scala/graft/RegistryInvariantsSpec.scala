@@ -33,10 +33,11 @@ class RegistryInvariantsSpec extends SparkSpec {
     val names = Seq("t14_bm25", "a41_group_ols", "t16_zipf_fit",
       "n09_knn_eval", "a43_percentile_cont", "x33_linear_interpolate",
       // this round's determinism claims: integer graph fixpoints, the
-      // native TopK operator's total order, quantized-integer cosine,
+      // per-key top-k's total order, quantized-integer cosine,
       // round-9 bigram logprobs, and the portable LSH pipeline
       "g01_pagerank", "g03_triangles", "g04_label_propagation",
-      "w24_native_topk", "n10_centroid_cosine", "t19_bigram_lm",
+      "w24_native_topk", "d21_domain_cap", "n10_centroid_cosine",
+      "t19_bigram_lm",
       "d22_segment_dedup", "d23_decontaminate_portable",
       // round-9 determinism claims: integer BFS distances, the portable
       // SemDeDup twin's quantized cosines, real-decode pooled features

@@ -3,49 +3,39 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Normalize
-import graft.plans.AliasLookupSimplification
 
-/** Injected optimizer rule: guarded alias-map lookup → single-probe
-  * coalesce form.
+/** `Normalize.normalizeTeamName`'s alias lookup is one map probe under
+  * either ANSI setting, and the native functions `GraftExtensions`
+  * injects are callable from SQL.
   */
 class RulesSpec extends SparkSpec {
   import spark.implicits._
 
   private val aliases = Map("Spurs" -> "Tottenham", "Wolves" -> "Wanderers")
 
-  test("injected rule fires in the production optimizer pipeline") {
-    // parquet scan input: a LocalRelation would be evaluated wholesale by
-    // ConvertToLocalRelation before the rule could observe anything
-    val df = spark.read.parquet(s"$sf/part.parquet")
-      .select(Normalize.normalizeTeamName(col("p_name"), aliases).as("team"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.contains("CASE WHEN"), optimized)
-    assert(optimized.contains("coalesce") && optimized.contains("element_at"),
-      optimized)
-  }
-
-  test("rule also matches the pre-replacement (analyzed-plan) shape") {
-    val df = Seq("Spurs").toDF("v")
-      .select(Normalize.normalizeTeamName(col("v"), aliases).as("team"))
-    val analyzed = df.queryExecution.analyzed
-    assert(analyzed.expressions.map(_.toString).mkString
-      .contains("CASE WHEN"))
-    val s = AliasLookupSimplification(analyzed)
-      .expressions.map(_.toString).mkString
-    assert(!s.contains("CASE WHEN"), s)
-    assert(s.contains("coalesce") && s.contains("element_at"), s)
-  }
-
-  test("rewrite is semantics-preserving (hit, miss, null input)") {
-    val df = Seq(Some("Spurs"), Some("Arsenal FC"), None).toDF("v")
-    val viaCase = df.select(
-      Normalize.normalizeTeamName(col("v"), aliases).as("t")).collect()
-    val viaCoalesce = df.select({
-      val stripped = regexp_replace(trim(col("v")), "\\s+(FC|CF|AFC)$", "")
-      coalesce(element_at(typedLit(aliases), stripped), stripped).as("t")
-    }).collect()
-    assert(viaCase.map(r => Option(r.get(0))).toSeq ==
-      viaCoalesce.map(r => Option(r.get(0))).toSeq)
+  test("normalizeTeamName: one element_at and no CASE WHEN, same values, " +
+      "with ANSI off and on") {
+    for (ansi <- Seq("false", "true")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        // a fresh frame per setting (a DataFrame caches its plan); a
+        // parquet scan, because ConvertToLocalRelation would evaluate a
+        // LocalRelation wholesale
+        val optimized = spark.read.parquet(s"$sf/part.parquet")
+          .select(Normalize.normalizeTeamName(col("p_name"), aliases)
+            .as("team"))
+          .queryExecution.optimizedPlan.toString
+        assert("element_at\\(".r.findAllIn(optimized).length == 1,
+          s"ansi=$ansi\n$optimized")
+        assert(!optimized.contains("CASE WHEN"), s"ansi=$ansi\n$optimized")
+        val got = Seq(Some("Spurs"), Some("Arsenal"), Some("Wolves FC"),
+            Some(" Spurs AFC "), None).toDF("v")
+          .select(Normalize.normalizeTeamName(col("v"), aliases))
+          .as[Option[String]].collect().toSeq
+        assert(got == Seq(Some("Tottenham"), Some("Arsenal"),
+          Some("Wanderers"), Some("Tottenham"), None), s"ansi=$ansi")
+      } finally spark.conf.set("spark.sql.ansi.enabled", "false")
+    }
   }
 
   test("injected native functions are callable from SQL") {

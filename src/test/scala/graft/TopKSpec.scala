@@ -1,13 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{TopKPerKey, TopKPerKeyExec}
-
-/** Native TopKPerKey operator (plans/TopKPerKey.scala): physical plan
-  * shape, equivalence with the Window row_number formulation, partial-
-  * flush correctness under a tiny key cap, and the float-key guard.
+/** Per-key top-k as `row_number() <= k` (w24, d21, n10, t20, t31): Spark
+  * infers a `WindowGroupLimit` that prunes each map partition to k rows
+  * per key before the exchange. Its rows must equal the plain window's,
+  * the plan with the limit inference switched off.
   */
 class TopKSpec extends SparkSpec {
   import spark.implicits._
@@ -18,64 +18,52 @@ class TopKSpec extends SparkSpec {
     ("c", 7L, 9.0)
   ).toDF("key", "id", "score").repartition(4)
 
-  private def windowTopK(k: Int) = {
-    val w = Window.partitionBy("key")
-      .orderBy(col("score").desc, col("id").asc)
-    sample.withColumn("rn", row_number().over(w))
+  private def topK(df: DataFrame, order: Seq[org.apache.spark.sql.Column],
+                   k: Int): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy("key").orderBy(order: _*)))
       .filter(col("rn") <= k).drop("rn")
-  }
 
-  test("topKPerKey matches the Window row_number formulation") {
-    for (k <- Seq(1, 2, 3, 10)) {
-      val native = TopKPerKey(sample, Seq(col("key")),
-        Seq(col("score").desc, col("id").asc), k)
-        .orderBy("key", "id").collect().toSeq
-      val win = windowTopK(k).orderBy("key", "id").collect().toSeq
-      assert(native == win, s"k=$k")
-    }
+  /** Rows of the window WITHOUT the inferred group limit. */
+  private def plainWindow(df: => DataFrame): Seq[org.apache.spark.sql.Row] = {
+    val key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val d = df
+      assert(!d.queryExecution.optimizedPlan.toString
+        .contains("WindowGroupLimit"))
+      d.collect().toSeq
+    } finally spark.conf.set(key, prev)
   }
 
   test("plan is partial prune -> exchange -> sort -> final prune") {
-    val df = TopKPerKey(sample, Seq(col("key")),
-      Seq(col("score").desc, col("id").asc), 2)
-    df.collect() // force adaptive plan finalization
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val df = topK(sample, Seq(col("score").desc, col("id").asc), 2)
+    assert(df.orderBy("key", "id").as[(String, Long, Double)].collect()
+      .toSeq == Seq(("a", 2L, 30.0), ("a", 3L, 30.0), ("b", 5L, 5.0),
+        ("b", 6L, 1.0), ("c", 7L, 9.0)))
     // AQE's toString prints Final + Initial sections; audit the final one
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
-    assert(plan.contains("GraftTopKPerKeyPartial"), plan)
-    assert(plan.contains("GraftTopKPerKeyFinal"), plan)
-    // partial runs BELOW the key exchange (appears after it in tree
-    // print), final above; exactly one hash exchange (the repartition(4)
-    // in `sample` is round-robin, not hash)
-    val exchanges = "Exchange hashpartitioning".r
-      .findAllIn(plan).length
-    assert(exchanges == 1, plan)
-    assert(plan.indexOf("GraftTopKPerKeyFinal") <
-      plan.indexOf("GraftTopKPerKeyPartial"), plan)
-  }
-
-  test("partial flush under a 1-key cap never loses rows") {
-    // cap=1: every new key in a partition flushes the map — the final
-    // stage must still produce exactly the top-k per key.
-    val big = (1 to 400).map(i => (s"k${i % 13}", i.toLong, (i * 37 % 101).toDouble))
-      .toDF("key", "id", "score").repartition(7)
-    val native = TopKPerKey(big, Seq(col("key")),
-      Seq(col("score").desc, col("id").asc), 3, maxPartialKeys = 1)
-      .orderBy("key", "id").collect().toSeq
-    val w = Window.partitionBy("key").orderBy(col("score").desc, col("id").asc)
-    val win = big.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3).drop("rn").orderBy("key", "id").collect().toSeq
-    assert(native == win)
+    // exactly one hash exchange (the repartition(4) is round-robin)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, plan)
+    // the tree prints top-down: Final, the exchange, then Partial — so
+    // Spark still prunes each map partition before the shuffle
+    val limits = plan.linesIterator.zipWithIndex
+      .filter(_._1.contains("WindowGroupLimit")).toSeq
+    assert(limits.map(_._1.contains("Final")) == Seq(true, false), plan)
+    assert(limits.map(_._1.contains("Partial")) == Seq(false, true), plan)
+    val exchange = plan.linesIterator.indexWhere(
+      _.contains("Exchange hashpartitioning"))
+    assert(limits(0)._2 < exchange && exchange < limits(1)._2, plan)
   }
 
   test("ascending order and k larger than any group") {
-    val native = TopKPerKey(sample, Seq(col("key")),
-      Seq(col("score").asc, col("id").asc), 2)
-      .orderBy("key", "id").collect().toSeq
-    val w = Window.partitionBy("key").orderBy(col("score").asc, col("id").asc)
-    val win = sample.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2).drop("rn").orderBy("key", "id").collect().toSeq
-    assert(native == win)
+    val order = Seq(col("score").asc, col("id").asc)
+    assert(topK(sample, order, 2).orderBy("key", "id").collect().toSeq ==
+      plainWindow(topK(sample, order, 2).orderBy("key", "id")))
+    assert(topK(sample, order, 10).count() == 7)
   }
 
   test("null keys group together; null sort values follow SortOrder defaults") {
@@ -83,13 +71,12 @@ class TopKSpec extends SparkSpec {
       (Some("a"), 1L, Some(5.0)), (None, 2L, Some(3.0)),
       (None, 3L, Some(7.0)), (None, 4L, None), (Some("a"), 5L, None)
     ).toDF("key", "id", "score").repartition(3)
-    val native = TopKPerKey(df, Seq(col("key")),
-      Seq(col("score").desc, col("id").asc), 2)
-      .orderBy("id").collect().toSeq
-    val w = Window.partitionBy("key").orderBy(col("score").desc, col("id").asc)
-    val win = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2).drop("rn").orderBy("id").collect().toSeq
-    assert(native == win)
+    val order = Seq(col("score").desc, col("id").asc)
+    // desc puts NULL scores last: key a keeps 1 and 5, key NULL 3 and 2
+    assert(topK(df, order, 2).orderBy("id").select("id").as[Long].collect()
+      .toSeq == Seq(1L, 2L, 3L, 5L))
+    assert(topK(df, order, 2).orderBy("id").collect().toSeq ==
+      plainWindow(topK(df, order, 2).orderBy("id")))
   }
 
   test("randomized parity with the Window formulation (nulls, dup scores)") {
@@ -104,24 +91,10 @@ class TopKSpec extends SparkSpec {
       val df = rows.toDF("key", "id", "score")
         .repartition(1 + rnd.nextInt(8))
       for (k <- Seq(1, 2, 5)) {
-        val native = TopKPerKey(df, Seq(col("key")),
-          Seq(col("score").desc, col("id").asc), k,
-          maxPartialKeys = 1 + rnd.nextInt(4))
-          .orderBy("key", "id").collect().toSeq
-        val w = Window.partitionBy("key")
-          .orderBy(col("score").desc, col("id").asc)
-        val win = df.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= k).drop("rn")
-          .orderBy("key", "id").collect().toSeq
-        assert(native == win, s"trial=$trial k=$k")
+        def q = topK(df, Seq(col("score").desc, col("id").asc), k)
+          .orderBy("key", "id")
+        assert(q.collect().toSeq == plainWindow(q), s"trial=$trial k=$k")
       }
     }
-  }
-
-  test("floating-point grouping keys are rejected") {
-    val e = intercept[IllegalArgumentException] {
-      TopKPerKey(sample, Seq(col("score")), Seq(col("id").asc), 1)
-    }
-    assert(e.getMessage.contains("floating-point"))
   }
 }

@@ -13,8 +13,7 @@ class RulesSpec extends SparkSpec {
 
   private val aliases = Map("Spurs" -> "Tottenham", "Wolves" -> "Wanderers")
 
-  test("normalizeTeamName: one element_at and no CASE WHEN, same values, " +
-      "with ANSI off and on") {
+  test("normalizeTeamName: one element_at, no CASE WHEN, ANSI off and on") {
     for (ansi <- Seq("false", "true")) {
       spark.conf.set("spark.sql.ansi.enabled", ansi)
       try {

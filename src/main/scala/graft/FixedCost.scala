@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Decompose the FIXED per-query cost of the bench (guide §1: measure
   * first): for a sample of registry queries, run `reps` sweeps and
@@ -15,17 +15,22 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * counts. The gap `wall − tasks − phases − codegen` is scheduler/AQE
   * barrier latency. The last sweep also prints its 40 costliest stages
   * (the UI's Stages tab, which is disabled here): task count, summed
-  * run time, wall, shuffle read/write bytes and spill, named by query.
+  * run time, wall, shuffle read/write bytes, spill and execution memory
+  * (the tasks' summed and largest `peakExecutionMemory`), named by query.
   *
   *   sbt "runMain graft.FixedCost /root/testdata/sf0.1 2 a06,a07,j01"
   *   sbt "runMain graft.FixedCost /root/testdata/sf0.1 2 d31_exact_substr"
   */
 object FixedCost {
 
-  /** One completed stage. */
+  /** One completed stage. `peakMem` sums its tasks' peak execution
+    * memory (Tungsten pages and arrays); `maxTaskPeakMem` is the largest
+    * single task's.
+    */
   final case class Stage(name: String, tasks: Int, runMs: Long, wallMs: Long,
                          shuffleRead: Long, shuffleWrite: Long,
-                         shuffleRecords: Long, spill: Long)
+                         shuffleRecords: Long, spill: Long,
+                         peakMem: Long, maxTaskPeakMem: Long)
 
   /** The measurement mains' one listener: jobs started and stages
     * completed since the last [[reset]]. Written on the listener-bus
@@ -34,6 +39,7 @@ object FixedCost {
   final class Recorder extends SparkListener {
     val jobs = new AtomicLong
     private val stageJob = new ConcurrentHashMap[Int, (Int, String)]()
+    private val taskPeak = new ConcurrentHashMap[Int, java.lang.Long]()
     private val done = new ConcurrentLinkedQueue[Stage]()
 
     override def onJobStart(ev: SparkListenerJobStart): Unit = {
@@ -44,10 +50,16 @@ object FixedCost {
       ev.stageIds.foreach(sid => stageJob.put(sid, (ev.jobId, desc.take(60))))
     }
 
+    override def onTaskEnd(ev: SparkListenerTaskEnd): Unit =
+      Option(ev.taskMetrics).foreach { m =>
+        taskPeak.merge(ev.stageId, m.peakExecutionMemory, (a, b) => math.max(a, b))
+      }
+
     override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
       val si = ev.stageInfo
       val m = si.taskMetrics
       val (jid, desc) = stageJob.getOrDefault(si.stageId, (-1, ""))
+      val maxPeak: Long = Option(taskPeak.remove(si.stageId)).fold(0L)(_.longValue)
       done.add(Stage(s"job$jid s${si.stageId} " +
           si.name.takeWhile(_ != '\n') +
           (if (desc.nonEmpty) s" [$desc]" else ""),
@@ -55,10 +67,13 @@ object FixedCost {
         si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
         m.shuffleReadMetrics.totalBytesRead,
         m.shuffleWriteMetrics.bytesWritten,
-        m.shuffleWriteMetrics.recordsWritten, m.diskBytesSpilled))
+        m.shuffleWriteMetrics.recordsWritten, m.diskBytesSpilled,
+        m.peakExecutionMemory, maxPeak))
     }
 
-    def reset(): Unit = { jobs.set(0L); stageJob.clear(); done.clear() }
+    def reset(): Unit = {
+      jobs.set(0L); stageJob.clear(); taskPeak.clear(); done.clear()
+    }
 
     /** The stages completed since [[reset]], once the bus has drained. */
     def stages: Seq[Stage] = {
@@ -118,7 +133,9 @@ object FixedCost {
       if (r == reps) stages.sortBy(-_.runMs).take(40).foreach { s =>
         println(f"[fixed] ${s.runMs}%6d ms run ${s.wallMs}%6d ms wall " +
           f"${s.tasks}%4d tasks shR ${s.shuffleRead}%9d " +
-          f"shW ${s.shuffleWrite}%9d spill ${s.spill}%8d  ${s.name}%s")
+          f"shW ${s.shuffleWrite}%9d spill ${s.spill}%8d " +
+          f"mem ${s.peakMem >> 10}%7d KiB max ${s.maxTaskPeakMem >> 10}%6d KiB  " +
+          s.name)
       }
     }
     println(f"[fixed] codegen total: ${compileMs.getCount} units, " +

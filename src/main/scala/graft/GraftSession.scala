@@ -11,13 +11,47 @@ import org.apache.spark.sql.SparkSession
   * `spark.hadoop.fs.AbstractFileSystem.file.impl=graft.io.NoForkLocalFs`.
   * Hadoop caches one `FileSystem` per scheme for the JVM, so the first
   * local `FileSystem.get` decides its class.
+  *
+  * Memory pages: a hash aggregate, a sort or a string-key broadcast
+  * relation takes one whole Tungsten page (`spark.buffer.pageSize`) when
+  * it receives its first row, and keeps it while it lives. Spark's own
+  * default is `execution pool / cores / 16` rounded up to a power of two
+  * (on 4 cores: 8 MiB at a 2 GiB heap, 64 MiB at 8 GiB), so a 30-row
+  * aggregate held 8–64 MiB. The builder sets the page to
+  * [[pageSizeFor]] of this JVM's heap instead: the smallest power of two
+  * of at least 1 MiB whose 8192 pages cover the heap, at most 64 MiB.
+  * The floor is the page table, not a taste: a task addresses at most
+  * 8192 pages (`TaskMemoryManager`'s 13-bit page number), and a task
+  * that runs out of page numbers fails rather than spills, so the pages
+  * must be large enough that 8192 of them hold any heap. A record larger
+  * than a page still gets a page of its own size. Cluster executors run
+  * on their own heaps: pass the same rule for the executor heap through
+  * the submit conf (`--conf spark.buffer.pageSize=…`).
   */
 object GraftSession {
+
+  /** Spark's page table size (`TaskMemoryManager.PAGE_TABLE_SIZE`). */
+  val PageTableSize: Long = 1L << 13
+  private val MinPage = 1L << 20
+  private val MaxPage = 64L << 20
+
+  /** The page size for a JVM heap of `maxHeapBytes`: the smallest power
+    * of two in [1 MiB, 64 MiB] such that [[PageTableSize]] pages cover
+    * the heap (1 MiB for every heap up to 8 GiB; capped above 512 GiB).
+    */
+  def pageSizeFor(maxHeapBytes: Long): Long = {
+    var page = MinPage
+    while (page < MaxPage && page * PageTableSize < maxHeapBytes) page <<= 1
+    page
+  }
+
   def builder(cores: String = "4"): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.buffer.pageSize",
+        pageSizeFor(Runtime.getRuntime.maxMemory).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // pandas-parity null-on-failure semantics (see functions.Normalize)
       .config("spark.sql.ansi.enabled", "false")

@@ -1,7 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.etl.{CombineData, Process, TeamMetrics}
 import graft.functions.Normalize
@@ -69,8 +76,9 @@ object Pipeline {
     */
   def run(spark: SparkSession, cfg: Config): Stats = {
     val scope = new CacheScope
+    val sinks = new SinkMetrics(spark)
     try {
-      val stats = runStages(spark, cfg, scope)
+      val stats = runStages(spark, cfg, scope, sinks)
       cfg.webhookUrl.foreach(u =>
         Notify.send(Notify.successMessage(stats), u))
       stats
@@ -79,8 +87,46 @@ object Pipeline {
         cfg.webhookUrl.foreach(u => Notify.send(Notify.errorMessage(e), u))
         throw e
     } finally {
+      sinks.close()
       scope.release()
     }
+  }
+
+  /** The `observe` metrics of one run's sinks. Spark's `Observation`
+    * completes through a session-wide `ObservationManager` listener that
+    * stays registered for the session's lifetime, and in Spark 4.1.2 that
+    * listener rethrows the analysis error of every later query that fails
+    * analysis, which the listener bus logs as an ERROR with a full stack.
+    * This listener lives for one run and reads only queries that
+    * succeeded; its metric names carry a per-run id, so runs sharing a
+    * session never read each other's.
+    */
+  private final class SinkMetrics(spark: SparkSession)
+      extends QueryExecutionListener {
+    private val id = java.util.UUID.randomUUID().toString.replace("-", "")
+    private val results =
+      new ConcurrentHashMap[String, Promise[Map[String, Any]]]()
+    private def slot(name: String) =
+      results.computeIfAbsent(name, _ => Promise[Map[String, Any]]())
+    spark.listenerManager.register(this)
+
+    def observe(df: DataFrame, name: String, metrics: Seq[Column]): DataFrame =
+      df.observe(s"${name}_$id", metrics.head, metrics.tail: _*)
+
+    /** `name`'s metrics, once the sink that computed them has finished. */
+    def get(name: String): Map[String, Any] =
+      Await.result(slot(s"${name}_$id").future, Duration.Inf)
+
+    override def onSuccess(funcName: String, qe: QueryExecution,
+                           durationNs: Long): Unit =
+      qe.observedMetrics.foreach { case (k, row) =>
+        if (k.endsWith(id)) slot(k).trySuccess(row.getValuesMap(row.schema.fieldNames))
+      }
+
+    override def onFailure(funcName: String, qe: QueryExecution,
+                           exception: Exception): Unit = ()
+
+    def close(): Unit = spark.listenerManager.unregister(this)
   }
 
   /** The five stages, each run once. Every `Stats` field is observed on
@@ -89,10 +135,10 @@ object Pipeline {
     *     `Process.cleanFixtures`, the fixtures sink (which adds only the
     *     O1 sort) materializes the rows, and the combined stage reads the
     *     cached rows back;
-    *   - one `Observation` on the fixtures sink yields the row count, the
+    *   - one `observe` on the fixtures sink yields the row count, the
     *     per-column non-null counts, the date range and the league and
     *     team sets; the empty-fixtures guard reads its row count;
-    *   - one `Observation` on the combined sink yields `joinedRecords`;
+    *   - one `observe` on the combined sink yields `joinedRecords`;
     *   - the history is cleaned once the same way: the scope tracks
     *     `Process.cleanHistory`, the history sink (clean + O2) and its
     *     range sampling read the cache, and the combined stage's
@@ -103,7 +149,7 @@ object Pipeline {
     * leagues and clubs that exist, not by the number of fixtures.
     */
   private def runStages(spark: SparkSession, cfg: Config,
-                        scope: CacheScope): Stats = {
+                        scope: CacheScope, sinks: SinkMetrics): Stats = {
     val today = lit(cfg.today).cast("date")
 
     // Stage 2 — process fixtures (extract stage 1 is the captured file).
@@ -126,10 +172,10 @@ object Pipeline {
     // The sink's plan holds `fixtures` as a subtree, so the cache serves
     // it. Observations sit above the sinks' sorts: below one, the range
     // partitioner's sampling job runs them too and every row counts twice.
-    val fxObs = Observation()
-    writeCsv(isoDates(Process.processFixtures(rawFixtures, today, cfg.aliases)
-      .observe(fxObs, fxStats.head, fxStats.tail: _*)), s"${cfg.outDir}/fixtures")
-    val fx = fxObs.get
+    writeCsv(isoDates(sinks.observe(
+      Process.processFixtures(rawFixtures, today, cfg.aliases), "fixtures",
+      fxStats)), s"${cfg.outDir}/fixtures")
+    val fx = sinks.get("fixtures")
     def fxCount(name: String): Long = fx(name).asInstanceOf[Number].longValue
     val nFix = fxCount("n")
 
@@ -169,9 +215,8 @@ object Pipeline {
       .withColumn("match_quality",
         Normalize.matchQuality(col("home_win_ratio"), col("away_win_ratio")))
       .orderBy("date", "match_id")                          // O3
-    val joinedObs = Observation()
-    writeCsv(isoDates(combined.observe(joinedObs, count(lit(1)).as("rows"))),
-      s"${cfg.outDir}/football_data")
+    writeCsv(isoDates(sinks.observe(combined, "joined",
+      Seq(count(lit(1)).as("rows")))), s"${cfg.outDir}/football_data")
 
     // A NULL team is one row of the parity form's `union … distinct()`,
     // while `collect_set` drops NULLs.
@@ -180,7 +225,7 @@ object Pipeline {
     val stats = Stats(
       fixturesCount = nFix,
       teamsCount = fxCount("teams") + (if (nullTeam) 1 else 0),
-      joinedRecords = joinedObs.get("rows").asInstanceOf[Long],
+      joinedRecords = sinks.get("joined")("rows").asInstanceOf[Long],
       leaguesCovered = fxCount("leagues"),
       dataCompletion =
         fixtureCols.map(c => fxCount(s"nn_$c").toDouble / nFix).sum /

@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * 10x probe tables (`tools/gen_scale_probe.py`), and this main prints
   * one JSON line per (probe, dir) with wall seconds AND total shuffle
   * records — so the observed exponent separates "CPU got 10x work"
-  * (fine) from "the shuffle grew superlinearly" (a plan problem).
+  * (fine) from "the shuffle grew superlinearly" (a plan problem). It
+  * also prints the largest stage's and the largest task's peak execution
+  * memory, and that task's peak in memory pages (`task_pages`; Spark
+  * fails a task that needs more than 8192 pages).
   *
   * Every row CALLS the library function (or the registry entry) the
   * system runs — never a copy of it. Where the registry pins a constant
@@ -211,6 +214,7 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("WARN")
     val rec = new FixedCost.Recorder
     spark.sparkContext.addSparkListener(rec)
+    val pageSize = org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes
     // dev iteration filter (comma-separated probe-name prefixes)
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -228,9 +232,15 @@ object ScaleProbe {
         // from drifting, incl. the map/variant to_json routing)
         val (rows, _) = Bench.checksum(fn(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
-        val shuffleRecords = rec.stages.map(_.shuffleRecords).sum
+        val stages = rec.stages
+        val shuffleRecords = stages.map(_.shuffleRecords).sum
+        // execution memory: the largest stage (its tasks' summed peaks)
+        // and the largest task, also in pages of this session's size
+        val stageMem = stages.map(_.peakMem).maxOption.getOrElse(0L)
+        val taskMem = stages.map(_.maxTaskPeakMem).maxOption.getOrElse(0L)
+        val taskPages = (taskMem + pageSize - 1) / pageSize
         val line =
-          f"""{"probe":"$name","dir":"$dir","sec":$sec%.2f,"rows":$rows,"shuffle_records":$shuffleRecords}"""
+          f"""{"probe":"$name","dir":"$dir","sec":$sec%.2f,"rows":$rows,"shuffle_records":$shuffleRecords,"stage_peak_mem_mb":${stageMem / 1048576.0}%.1f,"task_peak_mem_mb":${taskMem / 1048576.0}%.1f,"task_pages":$taskPages}"""
         println(line)
       }
     }

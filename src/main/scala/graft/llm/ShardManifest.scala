@@ -203,8 +203,12 @@ object ShardManifest {
   /** Read [[writeShards]]' JSONL artifacts back: (shard, doc_id, block,
     * bin, n_tokens), shard parsed from the FILE NAME — the loader's
     * view of the corpus, scanned with an explicit schema (no inference
-    * pass) and the `shard-*.jsonl` glob (per-attempt `.tmp` orphans are
-    * invisible by construction).
+    * pass) and the `shard-*.jsonl` file-name filter (per-attempt `.tmp`
+    * orphans are invisible by construction). The scan names the
+    * directory, not a glob path: Spark looks up a single read path with
+    * `getFileStatus` to find a streaming sink's metadata log, and on a
+    * glob that lookup fails and logs a `FileNotFoundException` on every
+    * read.
     */
   def readShards(spark: org.apache.spark.sql.SparkSession,
                  dir: String): DataFrame = {
@@ -216,7 +220,8 @@ object ShardManifest {
     // here, so [[auditShards]] reports it as missing mass on its shard —
     // never an all-null row that would trip the bkey guard mid-audit
     spark.read.schema(schema).option("mode", "DROPMALFORMED")
-      .json(s"$dir/shard-*.jsonl")
+      .option("pathGlobFilter", "shard-*.jsonl")
+      .json(dir)
       .filter(col("doc_id").isNotNull && col("block").isNotNull &&
         col("bin").isNotNull && col("n_tokens").isNotNull)
       .withColumn("shard",

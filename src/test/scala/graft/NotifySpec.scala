@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import com.sun.net.httpserver.HttpServer
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Webhook notification (pipeline.py:123-139 parity) against a local
   * JDK HttpServer sink: payload shape, escaping, failure-swallowing,
@@ -92,5 +94,38 @@ class NotifySpec extends SparkSpec {
       assert(received.size == 1)
       assert(received.peek().startsWith("{\"text\":\"❌ Football ETL pipeline failed:"))
     }
+  }
+
+  test("a failed run after a successful one logs no listener-bus ERROR") {
+    // a fresh session: no other suite's Observation has touched its
+    // listeners, so only what Pipeline.run registers can log here
+    val s = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("graft-notify-log").toString
+    val ok = SinksSpec.pipelineInputs(s, dir, SinksSpec.twoFixtures)
+    assert(Pipeline.run(s, ok).fixturesCount == 2L)
+    // the listener bus calls a session's listeners in registration order
+    // on one thread, so once this one has seen the failure, every
+    // listener registered before it has handled (and logged) it too
+    val failureSeen = new java.util.concurrent.CountDownLatch(1)
+    val last = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        failureSeen.countDown()
+    }
+    s.listenerManager.register(last)
+    try withServer { (url, received) =>
+      val (out, logs) = capturingLogs {
+        try Pipeline.run(s, ok.copy(fixturesPath = "/nonexistent/fixtures",
+          webhookUrl = Some(url)))
+        finally assert(failureSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      }
+      assert(out.failed.get.getMessage.contains("PATH_NOT_FOUND"))
+      assert(received.size == 1)
+      assert(received.peek().startsWith("{\"text\":\"❌ Football ETL pipeline failed:"))
+      val busErrors = logs.filter(e =>
+        e.getLoggerName.endsWith("ExecutionListenerBus") &&
+          e.getLevel == org.apache.logging.log4j.Level.ERROR)
+      assert(busErrors.isEmpty, busErrors.map(_.getMessage.getFormattedMessage))
+    } finally s.listenerManager.unregister(last)
   }
 }

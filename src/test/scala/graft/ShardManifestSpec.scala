@@ -190,6 +190,22 @@ class ShardManifestSpec extends SparkSpec {
     assert(audit.forall(_.getAs[Long]("n_misplaced") == 0L))
   }
 
+  test("readShards names the directory: no FileNotFoundException is " +
+      "logged for the shard-*.jsonl pattern") {
+    val blocks = (0L until 20L).map(i => (i, i / 8L, i % 2L, 5L + i))
+      .toDF("doc_id", "block", "bin", "n_tokens")
+    val dir = Registry.scratchDir("sm_read_log") + "/out"
+    ShardManifest.writeShards(blocks, dir, nShards = 3)
+    val (n, logs) = capturingLogs {
+      ShardManifest.readShards(spark, dir).count()
+    }
+    assert(n.get == 20L)
+    val missing = logs.filter(e => Option(e.getThrown).exists(
+        _.isInstanceOf[java.io.FileNotFoundException]) ||
+      e.getMessage.getFormattedMessage.contains("shard-*.jsonl"))
+    assert(missing.isEmpty, missing.map(_.getMessage.getFormattedMessage))
+  }
+
   test("auditShards localizes a fully missing shard file and flags a " +
       "misplaced row") {
     val blocks = (0L until 60L).map(i => (i, i / 16L, i % 4L, 10L + i))

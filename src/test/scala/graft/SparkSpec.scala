@@ -65,6 +65,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
       } finally q.stop()
   }
 
+  /** Run `body` and return what it logged through log4j at the session's
+    * level: every event of this JVM, on any thread, while it ran.
+    */
+  def capturingLogs[T](body: => T)
+      : (scala.util.Try[T], Seq[org.apache.logging.log4j.core.LogEvent]) = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val appender = new org.apache.logging.log4j.core.appender
+        .AbstractAppender("graft-capture", null, null, true,
+          org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    appender.start()
+    val root = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(appender)
+    try {
+      val out = scala.util.Try(body)
+      (out, events.toArray(Array.empty[LogEvent]).toSeq)
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   /** Leak guard: no streaming query may outlive its test — a live
     * stream's micro-batch thread races the next test's file cleanup,
     * and a restart on its checkpoint force-stops it mid-batch.

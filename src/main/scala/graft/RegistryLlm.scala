@@ -48,6 +48,21 @@ object RegistryLlm {
        |SELECT id, $chars AS simhash FROM vt_sh""".stripMargin
   }
 
+  /** The ANN audits' shared calls over `embeddings`, queries id < 5,
+    * top 3: the exact float baseline (n01, n05–n08) and the
+    * 16-cell, 6-probe IVF (n04, n06), each with its DuckDB replay.
+    */
+  private def exactTop3(emb: org.apache.spark.sql.DataFrame) =
+    Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
+      "vec_id", "embedding", 3)
+  private val exactTop3Sql = Similarity.bruteForceTopKOracleSql(
+    "embeddings", "vec_id", "embedding", 5L, 3)
+  private def ivfTop3(emb: org.apache.spark.sql.DataFrame) =
+    Similarity.ivfTopKPortable(emb, "vec_id", "embedding", 5L, 3,
+      nCells = 16, nProbe = 6)
+  private val ivfTop3Sql = Similarity.ivfTopKPortableOracleSql(
+    "embeddings", "vec_id", "embedding", 5L, 3, nCells = 16, nProbe = 6)
+
   def entries: Seq[Q] = Seq(
 
     // ---- T1: token counting ------------------------------------------------
@@ -568,30 +583,10 @@ object RegistryLlm {
 
     // ---- N1: exact ANN (brute-force cosine top-k baseline) -----------------------
     Q("n01_ann_bruteforce",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 5)
-        Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 3)
-          .select(col("query_id"), col("neighbor_id"), col("rank"))
-          .orderBy("query_id", "rank")
-      },
-      Some("""WITH q AS (
-             |  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-             |  FROM embeddings WHERE vec_id < 5),
-             |scored AS (
-             |  SELECT q.query_id, c.vec_id AS neighbor_id,
-             |    CASE WHEN list_dot_product(q.qv, q.qv) = 0
-             |      OR list_dot_product(c.embedding::DOUBLE[],
-             |        c.embedding::DOUBLE[]) = 0 THEN 0.0
-             |    ELSE list_cosine_similarity(q.qv, c.embedding::DOUBLE[])
-             |    END AS sim
-             |  FROM q JOIN embeddings c ON c.vec_id <> q.query_id)
-             |SELECT query_id, neighbor_id,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY sim DESC, neighbor_id) AS INT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 3
-             |ORDER BY query_id, rank""".stripMargin)),
+      (s, dir) => exactTop3(t(s, dir, "embeddings"))
+        .select(col("query_id"), col("neighbor_id"), col("rank"))
+        .orderBy("query_id", "rank"),
+      Some(exactTop3Sql)),
 
     // ---- N2: LSH-bucketed ANN (the scale path; planes not in SQL) -----------------
     Q("n02_ann_lsh",
@@ -605,29 +600,25 @@ object RegistryLlm {
       },
       None),
 
-    // ---- N4: IVF-bucketed ANN (centroid cells, multi-probe) -------------------------
+    // ---- N4: IVF-bucketed ANN (Forgy centroid cells, multi-probe) ------------------
     Q("n04_ann_ivf",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 5)
-        Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 3,
-            nProbe = 6)
-          .select(col("query_id"), col("neighbor_id"), col("rank"))
-          .orderBy("query_id", "rank")
-      },
-      None),
+      (s, dir) => ivfTop3(t(s, dir, "embeddings"))
+        .select(col("query_id"), col("neighbor_id"),
+          col("rank").cast("int").as("rank"))
+        .orderBy("query_id", "rank"),
+      Some("SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank\nFROM (" +
+        ivfTop3Sql + ")\nORDER BY query_id, rank")),
 
-    // ---- N5/N6: recall@3 of the approximate paths vs the exact top-k ---------
-    // Single-row quantitative summaries (exact_pairs, hit_pairs, recall) so
-    // the rows-only driver check is non-vacuous; the >=0.8 floor is asserted
-    // in SimilaritySpec. No oracle: the LSH planes / k-means fit are seeded
-    // engine-side constructs DuckDB cannot reproduce.
+    // ---- N5/N6/N7: recall@3 of the approximate paths vs the exact top-k ------
+    // Single-row quantitative summaries (exact_pairs, hit_pairs, recall);
+    // the floors are asserted in SimilaritySpec. n05 has no oracle: its
+    // LSH planes are seeded engine-side constructs DuckDB cannot
+    // reproduce.
     Q("n05_lsh_recall",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id") < 5)
-        Similarity.recallAtK(
-          Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 3),
+        Similarity.recallAtK(exactTop3(emb),
           Similarity.lshTopK(emb, queries, "vec_id", "embedding", 3,
             nPlanes = 6, nTables = 8))
       },
@@ -636,23 +627,19 @@ object RegistryLlm {
     Q("n07_sq_recall",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 5)
-        Similarity.recallAtK(
-          Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 3),
-          Similarity.sqBruteForceTopK(emb, queries, "vec_id", "embedding", 3))
+        Similarity.recallAtK(exactTop3(emb),
+          Similarity.sqTopKPortable(emb, "vec_id", "embedding", 5L, 3))
       },
-      None),
+      Some(Similarity.recallAtKOracleSql(exactTop3Sql,
+        Similarity.sqTopKPortableOracleSql("embeddings", "vec_id",
+          "embedding", 5L, 3)))),
 
     Q("n06_ivf_recall",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 5)
-        Similarity.recallAtK(
-          Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 3),
-          Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 3,
-            nProbe = 6))
+        Similarity.recallAtK(exactTop3(emb), ivfTop3(emb))
       },
-      None),
+      Some(Similarity.recallAtKOracleSql(exactTop3Sql, ivfTop3Sql))),
 
     // ---- N3: embedding-cosine near-dup summary -------------------------------------
     Q("n03_cosine_neardup",
@@ -1290,20 +1277,25 @@ object RegistryLlm {
       None),
 
     // ---- D16: SemDeDup (arXiv:2303.09540) — semantic near-duplicate
-    //      pruning via k-means cells + within-cell cosine threshold,
-    //      keep-lowest-id; capped pair generation (cosineNearDups shape)
-    //      so a degenerate cell is O(cap²+N), never O(N²). Per-cell
-    //      summary keeps the rows-only check non-vacuous; planted-dup
-    //      recall is pinned in SimilaritySpec ------------------------------
+    //      pruning via Forgy cells + within-cell quantized-cosine
+    //      threshold, keep-lowest-id; capped pair generation
+    //      (cosineNearDups shape) so a degenerate cell is O(cap²+N),
+    //      never O(N²). Per-cell summary of
+    //      Similarity.semanticDedupPortable; planted-dup recall is pinned
+    //      in SimilaritySpec ------------------------------------------------
     Q("d16_semantic_dedup",
-      (s, dir) => Similarity.semanticDedup(
+      (s, dir) => Similarity.semanticDedupPortable(
           t(s, dir, "embeddings"), "vec_id", "embedding",
-          nCells = 16, threshold = 0.92)
+          nCells = 16, threshold = 0.92, cap = 64)
         .groupBy("cell")
         .agg(count(lit(1)).as("docs"),
           sum(col("kept").cast("long")).as("kept_docs"))
         .orderBy("cell"),
-      None),
+      Some("SELECT cell, count(*) AS docs,\n" +
+        "  CAST(sum(CAST(kept AS BIGINT)) AS BIGINT) AS kept_docs\nFROM (" +
+        Similarity.semanticDedupPortableOracleSql("embeddings", "vec_id",
+          "embedding", nCells = 16, threshold = 0.92, cap = 64) +
+        ")\nGROUP BY cell ORDER BY cell")),
 
     // ---- N8: IVF-PQ recall audit — the 100 TB ANN composition: IVF
     //      cells bound which vectors a query touches, 8-byte PQ codes
@@ -1314,8 +1306,7 @@ object RegistryLlm {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id") < 5)
-        Similarity.recallAtK(
-          Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 3),
+        Similarity.recallAtK(exactTop3(emb),
           Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding", 3,
             nCells = 16, nProbe = 6, m = 8, ksub = 32, rerank = 8))
       },

@@ -115,22 +115,15 @@ object RegistryR11 {
              |ORDER BY record_id""".stripMargin)),
 
     // ---- N17: incremental IVF maintenance — the steady-state append
-    //      path: centroids fit on the PRIOR corpus (vec_id < 400) only,
-    //      the NEW batch assigned through the broadcast codebook
-    //      (Similarity.ivfAppend — never a refit), rolled up per cell
-    //      with the outlier-fraction refit signal attached. Rows-only
-    //      by design (the seeded k-means fit is not SQL-expressible);
-    //      the n18 portable twin replays the same append contract
-    //      bit-for-bit. ------------------------------------------------
+    //      path: Forgy cells from the PRIOR corpus (vec_id < 400) only,
+    //      the NEW batch assigned against the broadcast index
+    //      (Similarity.ivfAppendPortable — never a refit), rolled up per
+    //      cell with the outlier-fraction refit signal attached. ---------
     Q("n17_ivf_append",
       (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val prior = emb.filter(col("vec_id") < 400)
-        val batch = emb.filter(col("vec_id") >= 400)
-        val centroids = graft.llm.Similarity.kmeansFit(
-          prior, "vec_id", "embedding", k = 16)
-        val asg = graft.llm.Similarity.ivfAppend(
-          batch, "vec_id", "embedding", centroids, minCos = 0.5)
+        val asg = graft.llm.Similarity.ivfAppendPortable(
+          t(s, dir, "embeddings"), "vec_id", "embedding", splitId = 400L,
+          nCells = 16, minCos = 0.5)
         val sig = graft.llm.Similarity.ivfRefitSignal(asg,
           maxOutlierFrac = 0.25)
         asg.groupBy(col("cell"))
@@ -139,14 +132,22 @@ object RegistryR11 {
           .crossJoin(broadcast(sig.select(col("refit"))))
           .orderBy("cell")
       },
-      None),
+      {
+        val asg = graft.llm.Similarity.ivfAppendPortableOracleSql(
+          "embeddings", "vec_id", "embedding", splitId = 400L, nCells = 16,
+          minCos = 0.5)
+        Some("SELECT a.cell, count(*) AS n_assigned,\n" +
+          "  CAST(sum(a.is_outlier) AS BIGINT) AS n_outliers, s.refit\n" +
+          "FROM (" + asg + ") a,\n  (" +
+          graft.llm.Similarity.ivfRefitSignalOracleSql(asg,
+            maxOutlierFrac = 0.25) +
+          ") s\nGROUP BY a.cell, s.refit ORDER BY a.cell")
+      }),
 
-    // ---- N18: PORTABLE incremental-IVF twin — Forgy cells from the
-    //      prior corpus, quantized-integer-cosine assignment of the new
-    //      batch, outlier verdicts — every row hash-exact in DuckDB
-    //      (Similarity.ivfAppendPortable). Completes the incremental
-    //      family's audit story: d12/d19/t18/a33 all have exact gates;
-    //      now the ANN append does too. -------------------------------
+    // ---- N18: the per-row form of n17 — Forgy cells from the prior
+    //      corpus, quantized-integer-cosine assignment of the new batch,
+    //      outlier verdicts — every row hash-exact in DuckDB
+    //      (Similarity.ivfAppendPortable, 8 cells). -----------------------
     Q("n18_ivf_append_portable",
       (s, dir) => graft.llm.Similarity.ivfAppendPortable(
           t(s, dir, "embeddings"), "vec_id", "embedding", splitId = 400L)

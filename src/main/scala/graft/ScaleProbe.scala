@@ -197,6 +197,27 @@ object ScaleProbe {
       sm.auditShards(sm.readShards(s, tmp),
         sm.manifest(packed, nShards = 64), nShards = 64)
     }),
+    // n04/n17/d16 shapes: the IVF, append and SemDeDup operators over the
+    // FULL embeddings table — 16 cells, each vector scored against the
+    // broadcast index row. IVF probes 6 cells for a constant 1% of the
+    // vectors as queries; append folds the last 10% into an index fit on
+    // the first 90%. The claim measured: the corpus never shuffles for
+    // its cell, so shuffle tracks candidate pairs and the batch, not
+    // vectors × cells.
+    "n04_ivf" -> ((s, dir) => {
+      val e = Registry.t(s, dir, "embeddings")
+      graft.llm.Similarity.ivfTopKPortable(e, "vec_id", "embedding",
+        e.count() / 100, 3, nCells = 16, nProbe = 6)
+    }),
+    "n17_append" -> ((s, dir) => {
+      val e = Registry.t(s, dir, "embeddings")
+      graft.llm.Similarity.ivfAppendPortable(e, "vec_id", "embedding",
+        9 * e.count() / 10, nCells = 16, minCos = 0.5)
+    }),
+    "d16_semdedup" -> ((s, dir) =>
+      graft.llm.Similarity.semanticDedupPortable(
+        Registry.t(s, dir, "embeddings"), "vec_id", "embedding",
+        nCells = 16, threshold = 0.92, cap = 64)),
     // round-16 batch 2: waterfill over DOMAIN-cardinality sources (997
     // synthetic domains) — the distributed runningTotal path priced at
     // 10x; the corpus shuffles once into the skinny per-source frame.

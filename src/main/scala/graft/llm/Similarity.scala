@@ -4,27 +4,29 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{CosineSim, NearestCells, QCosineSim, SignBucket, SqQuantize}
+import graft.plans.{CosineSim, NearestCells, QCosineSim, SignBucket}
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
-  * Three paths:
+  * The search paths:
   *  - brute-force top-k: broadcast the (small) query set against the
   *    corpus — a broadcast nested-loop that scans the corpus ONCE however
-  *    large it is; correct baseline and the oracle for recall tests.
+  *    large it is; exact, and the baseline of every recall audit;
   *  - LSH-bucketed (random hyperplanes): corpus is bucketed by sign
-  *    pattern scan-side, queries probe their bucket via an equi-join.
-  *  - IVF (centroid cells): corpus assigned to nearest centroid, queries
-  *    probe their nProbe nearest cells.
+  *    pattern scan-side, queries probe their bucket via an equi-join;
+  *  - IVF (centroid cells): corpus assigned to its nearest cell, queries
+  *    probe their nProbe nearest cells ([[ivfTopKPortable]]; IVF-PQ adds
+  *    product-quantized codes, [[ivfPqTopK]]);
+  *  - int8 scalar quantization ([[sqTopKPortable]]).
   *
-  * All vector math runs through the native kernels in
+  * The float paths run through the native kernels in
   * `graft.plans.VectorKernels` — one compiled call per row instead of
-  * per-element interpreted `aggregate`/`zip_with` dispatch (the round-2
-  * scale blocker). Summation is a sequential left fold in double, so
-  * results are reproducible across partitionings and match a
-  * row-at-a-time oracle bit-for-bit. The hash-exact `*Portable` twins
-  * run their integer arithmetic through the same kernels (see the
-  * portable-family helpers below).
+  * per-element interpreted `aggregate`/`zip_with` dispatch. Summation is
+  * a sequential left fold in double, so results are reproducible across
+  * partitionings and match a row-at-a-time oracle bit-for-bit. The
+  * hash-exact `*Portable` operators (IVF, append, SemDeDup and SQ exist
+  * only in that form) run their integer arithmetic through the same
+  * kernels (see the portable-family helpers below).
   *
   * The embedding dimension is DERIVED from the data (first row) wherever
   * hyperplanes/centroids are built, and every kernel fails fast on a
@@ -72,24 +74,34 @@ object Similarity {
       .withColumn("cell",
         (row_number().over(Window.orderBy("id")) - 1).cast("int"))
 
-  /** `(id, cell, cos)`: every quantized vector of `q (id, qv)` against
-    * every centroid of `cent (cell, cv)` — the centroids broadcast
-    * against one scan of `q`.
+  /** `q`'s columns plus `cs`: each quantized vector of `q (id, qv, ...)`
+    * scored against every centroid of `cent (cell, cv)` as an array of
+    * `(cos, negcell)`. The ≤nCells centroids travel as ONE broadcast
+    * array row and each vector is scored in its own row, so `q` never
+    * shuffles. An empty index leaves no rows, as a join with it would.
+    * Struct order is `(cos DESC, cell)`, the order of [[nearestCellSql]]
+    * and of the `probes` CTE: `array_max` is the nearest cell and a
+    * descending `sort_array` ranks the probes.
     */
-  private def cellCosines(q: DataFrame, cent: DataFrame): DataFrame =
-    q.crossJoin(broadcast(cent))
-      .select(col("id"), col("cell"), QCosineSim(col("qv"), col("cv")).as("cos"))
+  private def cellScores(q: DataFrame, cent: DataFrame): DataFrame = {
+    val index = cent.agg(collect_list(struct(col("cell"), col("cv"))).as("cells"))
+      .filter(size(col("cells")) > 0)
+    q.crossJoin(broadcast(index)).select(q.columns.toSeq.map(col) :+
+      transform(col("cells"), c => struct(
+        QCosineSim(col("qv"), c("cv")).as("cos"), (-c("cell")).as("negcell")))
+        .as("cs"): _*)
+  }
 
-  /** `(id, cell, cos)`: each id's nearest cell of a [[cellCosines]]
-    * frame, ties to the smallest cell — `max(struct(cos, -cell))`, the
-    * `row_number(ORDER BY cos DESC, cell)` of [[nearestCellSql]].
+  /** The cell of a [[cellScores]] `(cos, negcell)` element. */
+  private def cellOf(score: Column): Column = (-score("negcell")).cast("int")
+
+  /** `q`'s columns plus `cell` and `cos`: each vector's nearest cell of
+    * `cent`, ties to the smallest cell.
     */
-  private def nearestCell(scored: DataFrame): DataFrame =
-    scored.groupBy("id")
-      .agg(max(struct(col("cos").as("cos"),
-        (-col("cell")).cast("long").as("negcell"))).as("b"))
-      .select(col("id"), (-col("b.negcell")).cast("int").as("cell"),
-        col("b.cos").as("cos"))
+  private def nearestCell(q: DataFrame, cent: DataFrame): DataFrame =
+    cellScores(q, cent).withColumn("b", array_max(col("cs")))
+      .select(q.columns.toSeq.map(col) :+ cellOf(col("b")).as("cell") :+
+        col("b.cos").as("cos"): _*)
 
   /** `(query_id, rank, neighbor_id, cos)`: per-query top-k of a scored
     * `(qid, id, cos)` frame by (cos DESC, id) — [[topKSql]]'s order.
@@ -170,7 +182,7 @@ object Similarity {
        |$cent AS (SELECT c.$cell, q.pos, q.qe AS cq
        |         FROM cid c JOIN qe q ON q.id = c.id)""".stripMargin
 
-  /** SQL: [[cellCosines]] — `cosv(id, cell, cos)` over `qe` × `cent`. */
+  /** SQL: [[cellScores]] — `cosv(id, cell, cos)` over `qe` × `cent`. */
   private def cellCosSql(where: String = ""): String =
     s"""cosv AS (
        |  SELECT id, cell, ${cosSql("dot", "n2a", "n2b")} AS cos FROM (
@@ -256,6 +268,31 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
   }
+
+  /** DuckDB replay of [[bruteForceTopK]] over `table`, queries
+    * `id < queryMaxId`: `(query_id, neighbor_id, rank INT)`. DuckDB's
+    * `list_cosine_similarity` over DOUBLE lists gives the kernel's bits;
+    * the zero-vector guard is spelled out.
+    */
+  def bruteForceTopKOracleSql(table: String, idCol: String, vecCol: String,
+                              queryMaxId: Long, k: Int): String =
+    s"""WITH q AS (
+       |  SELECT $idCol AS query_id, $vecCol::DOUBLE[] AS qv
+       |  FROM $table WHERE $idCol < $queryMaxId),
+       |scored AS (
+       |  SELECT q.query_id, c.$idCol AS neighbor_id,
+       |    CASE WHEN list_dot_product(q.qv, q.qv) = 0
+       |      OR list_dot_product(c.$vecCol::DOUBLE[],
+       |        c.$vecCol::DOUBLE[]) = 0 THEN 0.0
+       |    ELSE list_cosine_similarity(q.qv, c.$vecCol::DOUBLE[])
+       |    END AS sim
+       |  FROM q JOIN $table c ON c.$idCol <> q.query_id)
+       |SELECT query_id, neighbor_id,
+       |  CAST(row_number() OVER (PARTITION BY query_id
+       |    ORDER BY sim DESC, neighbor_id) AS INT) AS rank
+       |FROM scored
+       |QUALIFY rank <= $k
+       |ORDER BY query_id, rank""".stripMargin
 
   /** Deterministic random hyperplanes (fixed seed): `nPlanes` × `dim`. */
   def hyperplanes(dim: Int, nPlanes: Int, seed: Long = 42L): Array[Array[Double]] = {
@@ -425,35 +462,6 @@ object Similarity {
     }
   }
 
-  /** IVF-style ANN — the other classic scale path: corpus vectors are
-    * assigned to their nearest of K centroids (one scan-side pass,
-    * bucketed by centroid id); queries probe their `nProbe` nearest
-    * centroids and rank only within those cells. Centroids come from a
-    * deterministic seeded k-means++ fit over a bounded corpus sample
-    * (`kmeansFit`); cell assignment + ranking run through the native
-    * `NearestCells` kernel — all K distances in one compiled pass.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    val centroids = kmeansFit(corpus, idCol, vecCol, nCells)
-
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("cell",
-        element_at(NearestCells(col("cv"), centroids, 1), 1))
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("qv"))
-      .withColumn("cell", explode(NearestCells(col("qv"), centroids, nProbe))))
-    val scored = c.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
-  }
-
   /** IVF-PQ ANN — the composition that actually runs at 100 TB: IVF
     * cells bound WHICH corpus vectors a query touches (`nProbe` cells of
     * `nCells`), and PQ codes bound what each touch COSTS (M bytes + an
@@ -518,44 +526,10 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
   }
 
-  /** Incremental IVF index MAINTENANCE — fold a new embedding batch
-    * into an existing index WITHOUT refit, the missing
-    * incremental-family member beside `Dedup.incrementalDedup` /
-    * `incrementalNearDups` / `Ranking.bm25Incremental` / the
-    * incremental aggregates: a daily batch must not force a full
-    * codebook rebuild. New vectors are assigned to their nearest
-    * EXISTING cell through the same compiled `NearestCells` kernel the
-    * initial build uses — an appended vector's cell is bit-identical to
-    * what a full rebuild with the same centroids would assign — and
-    * each carries its cosine to the assigned centroid so coverage decay
-    * is observable per row (`is_outlier` = cos below `minCos`).
-    *
-    * Scale shape: ONE scan-side pass over the batch. The codebook is a
-    * plan constant inside the kernel, the centroid-vector join is a
-    * broadcast of `nCells` rows, and the batch itself never shuffles —
-    * steady-state append cost is O(batch · nCells · dim), independent
-    * of the indexed corpus size.
-    */
-  def ivfAppend(batch: DataFrame, idCol: String, vecCol: String,
-                centroids: Array[Array[Double]],
-                minCos: Double = 0.5): DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val centDf = broadcast(centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "cv"))
-    batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cell",
-        element_at(NearestCells(col("v"), centroids, 1), 1))
-      .join(centDf, Seq("cell"))
-      .select(col("id"), col("cell"),
-        cosine(col("v"), col("cv")).as("cos"))
-      .withColumn("is_outlier", col("cos") < minCos)
-  }
-
-  /** One-row refit signal over [[ivfAppend]]'s output: when the batch's
-    * outlier fraction exceeds `maxOutlierFrac`, the codebook no longer
-    * describes the incoming data and the caller schedules a refit — the
-    * assign-cheap / refit-rare steady state. The comparison is
+  /** One-row refit signal over [[ivfAppendPortable]]'s output: when the
+    * batch's outlier fraction exceeds `maxOutlierFrac`, the codebook no
+    * longer describes the incoming data and the caller schedules a refit
+    * — the assign-cheap / refit-rare steady state. The comparison is
     * cross-multiplied in exact integer arithmetic (no float fraction on
     * the decision path).
     */
@@ -570,10 +544,25 @@ object Similarity {
           col("n_assigned") * lit((maxOutlierFrac * 10000L).round))
           .as("refit"))
 
-  /** Hash-verified PORTABLE twin of [[semanticDedup]] (the d23 pattern:
-    * the fast native path stays rows-only-audited, this exact replay is
-    * the one DuckDB re-derives bit-for-bit). Differences, each for
-    * replayability only:
+  /** DuckDB replay of [[ivfRefitSignal]] over the query `assignments`
+    * (an [[ivfAppendPortableOracleSql]]).
+    */
+  def ivfRefitSignalOracleSql(assignments: String,
+                              maxOutlierFrac: Double = 0.1): String =
+    s"""SELECT n_assigned, n_outliers,
+       |  n_outliers * 10000 > n_assigned * ${(maxOutlierFrac * 10000L).round}
+       |    AS refit
+       |FROM (SELECT count(*) AS n_assigned,
+       |        CAST(coalesce(sum(is_outlier), 0) AS BIGINT) AS n_outliers
+       |      FROM ($assignments))""".stripMargin
+
+  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
+    * deduplication via embedding clustering — cells bound the candidate
+    * space (duplicates land in the same cell), then within each cell any
+    * document whose cosine to a LOWER-id document reaches `threshold` is
+    * dropped (keep-lowest-id, the deterministic stand-in for the paper's
+    * keep-lowest-centroid-distance). Returns (id, cell, kept) for every
+    * input row, and DuckDB replays every verdict bit for bit:
     *
     *  - cells come from a FORGY fit — the centroids are the first
     *    `nCells` corpus vectors by id (k-means with 0 Lloyd rounds on
@@ -584,20 +573,19 @@ object Similarity {
     *    and the final `dot / (sqrt(n2a)·sqrt(n2b))` is one fixed shape
     *    of correctly-rounded IEEE ops — bit-identical on any engine.
     *
-    * Same candidate topology as [[semanticDedup]]: within-cell head
-    * all-pairs capped at `cap`, tail rows star-paired against the
-    * cell's min-id representative — O(cap² + N) per cell, never O(N²).
-    * The centroid frame is `orderBy(id).limit(n)` (distributed
-    * TakeOrdered, then a window over the n surviving rows) and joins
-    * back via broadcast; nothing here collects the corpus.
+    * Scale shape: each vector meets the broadcast centroids in its own
+    * row ([[cellScores]]); candidate pairs exist only WITHIN a cell,
+    * with the same head/star cap as `cosineNearDups` — within-cell head
+    * all-pairs capped at `cap`, tail rows star-paired against the cell's
+    * min-id representative — so a cell of N near-identical vectors
+    * costs O(cap² + N) pairs, never O(N²), and still collapses to one
+    * survivor. Nothing here collects the corpus.
     */
   def semanticDedupPortable(emb: DataFrame, idCol: String, vecCol: String,
                             nCells: Int = 8, threshold: Double = 0.95,
                             cap: Int = 16): DataFrame = {
-    val q = quantizedVecs(emb, idCol, vecCol)
-    val cent = ivfCentroidsPortable(emb, idCol, vecCol, nCells)
-    val assigned = q.join(
-      nearestCell(cellCosines(q, cent)).select("id", "cell"), "id")
+    val assigned = nearestCell(quantizedVecs(emb, idCol, vecCol),
+      ivfCentroidsPortable(emb, idCol, vecCol, nCells))
     val wC = Window.partitionBy(col("cell")).orderBy(col("id"))
     val ranked = assigned.withColumn("rn", row_number().over(wC))
     val a = ranked.as("a"); val b = ranked.as("b")
@@ -616,7 +604,7 @@ object Similarity {
       .filter(QCosineSim(col("va"), col("vb")) >= threshold)
       .select(col("id_b").as("id")).distinct()
       .withColumn("__drop", lit(true))
-    assigned.join(dropped, Seq("id"), "left")
+    ranked.select("id", "cell").join(dropped, Seq("id"), "left")
       .select(col("id"), col("cell"),
         coalesce(!col("__drop"), lit(true)).as("kept"))
   }
@@ -802,24 +790,25 @@ object Similarity {
     * index: corpus rows land on their nearest cell, queries probe their
     * `nProbe` nearest cells, candidates exist only inside the (cell)
     * equi-join, exact quantized-cosine rerank on the survivors. The
-    * index broadcasts (≤nCells rows); one scan pass assigns the corpus.
+    * index broadcasts as one row and the probes (queries × nProbe rows)
+    * broadcast too, so one scan pass assigns and scores the corpus, the
+    * vectors ride along, and only each task's top k per query shuffles.
     */
   def ivfTopKFromIndex(emb: DataFrame, idCol: String, vecCol: String,
                        cent: DataFrame, queryMaxId: Long, k: Int,
                        nProbe: Int = 2): DataFrame = {
-    val q = quantizedVecs(emb, idCol, vecCol)
-    val scored = cellCosines(q, cent)
+    val scored = cellScores(quantizedVecs(emb, idCol, vecCol), cent)
     // corpus: nearest cell; queries: nProbe nearest cells
-    val assigned = nearestCell(scored).select("id", "cell")
+    val assigned = scored.select(col("id"), col("qv"),
+      cellOf(array_max(col("cs"))).as("cell"))
     val probes = scored.filter(col("id") < queryMaxId)
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("cos").desc, col("cell"))))
-      .filter(col("pr") <= nProbe)
-      .select(col("id").as("qid"), col("cell"))
-    val cand = assigned.join(probes, Seq("cell"))
+      .select(col("id").as("qid"), col("qv").as("va"),
+        explode(slice(sort_array(col("cs"), asc = false), 1, nProbe)).as("p"))
+      .select(col("qid"), col("va"), cellOf(col("p")).as("cell"))
+    topKByCos(assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id")).distinct()
-    topKByCos(pairCosines(cand, q, "qid", "id"), k)
+      .select(col("qid"), col("id"), QCosineSim(col("va"), col("qv")).as("cos")),
+      k)
   }
 
   /** Hash-verified PORTABLE IVF ANN twin — completes the ANN audit
@@ -831,9 +820,8 @@ object Similarity {
     * cells' members by quantized cosine. Every cell assignment, probe
     * choice and ranked neighbor replays bit-for-bit in DuckDB.
     *
-    * Scale shape = [[ivfTopK]]: the probe is a cell equi-join — touched
-    * candidates are bounded by the probed cells' populations, never the
-    * corpus.
+    * Scale shape: the probe is a cell equi-join — touched candidates
+    * are bounded by the probed cells' populations, never the corpus.
     */
   def ivfTopKPortable(emb: DataFrame, idCol: String, vecCol: String,
                       queryMaxId: Long, k: Int, nCells: Int = 8,
@@ -868,16 +856,15 @@ object Similarity {
     * kernel without the incremental split): cells are the first `nCells`
     * vectors by id, every row lands on its quantized-cosine-nearest cell
     * — the cluster-membership primitive topic/balance operators build on
-    * (l15 samples per cell; n04/n08 probe per cell). Broadcast centroids,
+    * (l15 samples per cell; n04/n13 probe per cell). Broadcast centroids,
     * one scan pass, argmax via the one-shape struct-max; bit-exact in
     * DuckDB per the n12/n13 checklist.
     */
   def forgyAssignPortable(emb: DataFrame, idCol: String, vecCol: String,
-                          nCells: Int = 8): DataFrame = {
-    val cent = ivfCentroidsPortable(emb, idCol, vecCol, nCells)
-    nearestCell(cellCosines(quantizedVecs(emb, idCol, vecCol), cent))
+                          nCells: Int = 8): DataFrame =
+    nearestCell(quantizedVecs(emb, idCol, vecCol),
+      ivfCentroidsPortable(emb, idCol, vecCol, nCells))
       .select("id", "cell")
-  }
 
   /** DuckDB replay of [[forgyAssignPortable]] composed with the l15
     * balanced-sampling arithmetic: per-cell counts, micro-rate
@@ -903,15 +890,23 @@ object Similarity {
        |FROM asg a JOIN rt USING (cell)
        |ORDER BY a.id""".stripMargin
 
-  /** Hash-verified PORTABLE incremental-IVF twin (the n13 pattern):
-    * the index's cells are a Forgy fit over the PRIOR corpus (first
-    * `nCells` vectors with id < `splitId`, by id — SQL-expressible
-    * where the seeded k-means of [[ivfAppend]] is not), and the NEW
-    * batch (id >= `splitId`) is assigned to its quantized-cosine-nearest
-    * cell with the outlier verdict on the same quantized cosine — every
+  /** Incremental IVF index MAINTENANCE — fold a new embedding batch
+    * into an existing index WITHOUT refit (the incremental-family member
+    * beside `Dedup.incrementalDedup` / `incrementalNearDups` /
+    * `Ranking.bm25Incremental`): the index's cells are a Forgy fit over
+    * the PRIOR corpus (first `nCells` vectors with id < `splitId`, by
+    * id), and the NEW batch (id >= `splitId`) is assigned to its
+    * quantized-cosine-nearest cell — the cell a full rebuild with the
+    * same centroids would pick — with `is_outlier` (1 when the cosine is
+    * below `minCos`) so coverage decay is observable per row. Every
     * assignment and verdict replays bit-for-bit in DuckDB. The prior
     * corpus's own assignments never recompute: only batch rows appear
     * in the scored relation, the incremental contract.
+    *
+    * Scale shape: ONE scan-side pass over the batch against the
+    * broadcast index row; the batch never shuffles, so steady-state
+    * append cost is O(batch · nCells · dim), independent of the indexed
+    * corpus size.
     */
   def ivfAppendPortable(emb: DataFrame, idCol: String, vecCol: String,
                         splitId: Long, nCells: Int = 8,
@@ -919,9 +914,9 @@ object Similarity {
     val cent = ivfCentroidsPortable(emb.filter(col(idCol) < splitId),
       idCol, vecCol, nCells)
     val batch = quantizedVecs(emb, idCol, vecCol).filter(col("id") >= splitId)
-    nearestCell(cellCosines(batch, cent))
-      .withColumn("is_outlier",
-        when(col("cos") < minCos, 1).otherwise(0))
+    nearestCell(batch, cent)
+      .select(col("id"), col("cell"), col("cos"),
+        when(col("cos") < minCos, 1).otherwise(0).as("is_outlier"))
   }
 
   /** DuckDB replay of [[ivfAppendPortable]] over `table`. */
@@ -936,52 +931,6 @@ object Similarity {
        |  CASE WHEN cos < $minCos THEN 1 ELSE 0 END AS is_outlier
        |FROM ($nearestCellSql)
        |ORDER BY id""".stripMargin
-
-  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    * deduplication via embedding clustering — k-means cells bound the
-    * candidate space (duplicates land in the same cell), then within
-    * each cell any document whose cosine to a LOWER-id document exceeds
-    * `threshold` is dropped (keep-lowest-id, the deterministic stand-in
-    * for the paper's keep-lowest-centroid-distance).
-    *
-    * Scale shape: candidate pairs exist only WITHIN a cell, generated
-    * with the same head/star cap as `cosineNearDups` — a cell of N
-    * near-identical vectors costs O(cap² + N) pairs, never O(N²), and
-    * every member still meets the cell's minimum-id representative, so
-    * a degenerate all-duplicates cell still collapses to one survivor.
-    * Returns (id, cell, kept) for every input row.
-    */
-  def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
-                    nCells: Int = 16, threshold: Double = 0.95,
-                    cap: Int = 64): DataFrame = {
-    val centroids = kmeansFit(emb, idCol, vecCol, nCells)
-    val v = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cell",
-        element_at(NearestCells(col("v"), centroids, 1), 1))
-    val wC = Window.partitionBy(col("cell")).orderBy(col("id"))
-    val ranked = v.withColumn("rn", row_number().over(wC))
-
-    val a = ranked.as("a"); val b = ranked.as("b")
-    val headPairs = a.join(b,
-        col("a.cell") === col("b.cell") && col("a.id") < col("b.id") &&
-          col("a.rn") <= cap && col("b.rn") <= cap)
-      .select(col("a.v").as("va"), col("b.id").as("id_b"),
-        col("b.v").as("vb"))
-    val reps = ranked.filter(col("rn") === 1)
-      .select(col("cell"), col("v").as("rep_v"))
-    val tailPairs = ranked.filter(col("rn") > cap).as("t")
-      .join(reps, Seq("cell"))
-      .select(col("rep_v").as("va"), col("t.id").as("id_b"),
-        col("t.v").as("vb"))
-
-    val dropped = headPairs.unionByName(tailPairs)
-      .filter(cosine(col("va"), col("vb")) >= threshold)
-      .select(col("id_b").as("id")).distinct()
-      .withColumn("__drop", lit(true))
-    v.join(dropped, Seq("id"), "left")
-      .select(col("id"), col("cell"),
-        coalesce(!col("__drop"), lit(true)).as("kept"))
-  }
 
   /** Embedding-cosine near-duplicate pairs, skew-safe: B independent
     * sign-LSH tables (banding — same family as `Dedup.bandHashes`), each
@@ -1040,40 +989,6 @@ object Similarity {
       .distinct()
   }
 
-  /** Int8 scalar quantization of an embedding column (native kernel):
-    * 4× memory compression vs float32. Cosine is scale-invariant, so the
-    * per-vector scale is dropped and `qCosine` ranks directly on the
-    * codes — the standard SQ shortlist trick (quantized rank, optional
-    * full-precision re-rank of the shortlist).
-    */
-  def quantize(vec: Column): Column = SqQuantize(vec)
-
-  /** Cosine over two int8-quantized vectors (exact integer accumulation,
-    * one double division).
-    */
-  def qCosine(a: Column, b: Column): Column = QCosineSim(a, b)
-
-  /** Brute-force top-k over QUANTIZED vectors — same broadcast
-    * nested-loop shape as `bruteForceTopK`, but the corpus scanned per
-    * query is int8 codes (4× less memory traffic). Ranking error vs the
-    * exact path is bounded by the quantization step; `n07_sq_recall`
-    * audits recall@k against the float baseline.
-    */
-  def sqBruteForceTopK(corpus: DataFrame, queries: DataFrame,
-                       idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      quantize(col(vecCol)).as("qq")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      quantize(col(vecCol)).as("cq"))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", qCosine(col("qq"), col("cq")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
-  }
-
   /** Sparse TF-cosine near-dup pairs over an inverted token index — the
     * bag-of-words complement to the shingle/embedding paths: robust to
     * local word reordering that breaks n-grams, cheaper than embeddings.
@@ -1113,28 +1028,32 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
-  /** Hash-verified PORTABLE int8 scalar-quantization twin — the audit
-    * twin of the rows-only recall-gated [[sqBruteForceTopK]] (n07),
-    * completing the brute(n01)/LSH(n12)/IVF(n13)/pairs(n14) family for
-    * the SQ path: per-vector max-abs int8 codes from pure INTEGER
-    * arithmetic (`code = (qe·127) div maxabs` over the ×1e6-quantized
-    * components — truncating division, identical in Spark `div` and
-    * DuckDB `//`), then the integer-cosine ranking over the codes. The
-    * per-vector scale cancels in cosine exactly as in the native
-    * kernel, and every code, dot, and verdict replays bit-for-bit.
+  /** Int8 scalar-quantization codes of the [[quantized]] BIGINT array
+    * column `qv`: per-vector max-abs codes from pure INTEGER arithmetic,
+    * `code = (qe·127) div maxabs` — truncating division, identical in
+    * Spark `div` and DuckDB `//` — so every code lies in [-127, 127] and
+    * an all-zero vector codes to zeros. The per-vector max-abs binds once
+    * per row (a lambda variable), not once per component.
+    */
+  private[graft] def sqCodes(qv: String): Column =
+    expr(s"element_at(transform(array(array_max(transform($qv, " +
+      s"x -> abs(x)))), m -> transform($qv, x -> CASE WHEN m = 0 " +
+      "THEN 0L ELSE (x * 127L) div m END)), 1)")
+
+  /** Int8 scalar-quantized brute-force top-k: [[sqCodes]] per vector (4×
+    * less memory traffic than float32 components), then the
+    * integer-cosine ranking over the codes. Cosine is scale-invariant,
+    * so the per-vector scale cancels, and every code, dot and verdict
+    * replays bit-for-bit in DuckDB. `n07_sq_recall` audits recall@k
+    * against the float baseline.
     *
-    * Same shape as the native path: SQ is compression, not pruning —
-    * the query set (id < queryMaxId, audit-bounded) broadcasts against
-    * one corpus scan of 1-byte-per-component codes.
+    * SQ is compression, not pruning: the query set (id < queryMaxId,
+    * audit-bounded) broadcasts against one corpus scan of the codes.
     */
   def sqTopKPortable(emb: DataFrame, idCol: String, vecCol: String,
                      queryMaxId: Long, k: Int): DataFrame = {
-    // the per-vector max-abs binds once per row (a lambda variable), not
-    // once per component
-    val codes = quantizedVecs(emb, idCol, vecCol).select(col("id"),
-      expr("element_at(transform(array(array_max(transform(qv, " +
-        "x -> abs(x)))), m -> transform(qv, x -> CASE WHEN m = 0 " +
-        "THEN 0L ELSE (x * 127L) div m END)), 1)").as("code"))
+    val codes = quantizedVecs(emb, idCol, vecCol)
+      .select(col("id"), sqCodes("qv").as("code"))
     val scored = codes.select(col("id"), col("code").as("cb"))
       .join(broadcast(codes.filter(col("id") < queryMaxId)
         .select(col("id").as("qid"), col("code").as("ca"))),
@@ -1185,8 +1104,15 @@ object Similarity {
                      ksub: Int = 16, dim: Int = 64): DataFrame = {
     require(dim % m == 0, s"pqTopKPortable: dim $dim not divisible by m=$m")
     val dsub = dim / m
+    // a vector of another width fails the query, as the kernels do: its
+    // subspace count would not be m, and the n_sub filter below would
+    // drop every pair it meets without a word
+    val v = col(vecCol)
+    val checked = when(v.isNull || size(v) === dim, v).otherwise(raise_error(
+      concat(lit("pqTopKPortable: vector dimension "), size(v).cast("string"),
+        lit(s" does not match dim $dim"))))
     val qe = emb.select(col(idCol).as("id"),
-        posexplode(quantized(col(vecCol))).as(Seq("pos", "qe")))
+        posexplode(quantized(checked)).as(Seq("pos", "qe")))
       .withColumn("s", expr(s"pos div $dsub"))
     // Forgy codebooks: code c of subspace s = subvector of the (c+1)-th
     // corpus vector by id
@@ -1543,4 +1469,18 @@ object Similarity {
         (col("hit_pairs").cast("double") / col("exact_pairs"))
           .as("recall"))
   }
+
+  /** DuckDB replay of [[recallAtK]] over the queries `exact` and
+    * `approx`, each with `(query_id, neighbor_id)` columns.
+    */
+  def recallAtKOracleSql(exact: String, approx: String): String =
+    s"""SELECT exact_pairs, hit_pairs,
+       |  CAST(hit_pairs AS DOUBLE) / exact_pairs AS recall
+       |FROM (
+       |  SELECT count(*) AS exact_pairs,
+       |    CAST(sum(CASE WHEN a.query_id IS NULL THEN 0 ELSE 1 END)
+       |      AS BIGINT) AS hit_pairs
+       |  FROM ($exact) e
+       |  LEFT JOIN ($approx) a
+       |    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id)""".stripMargin
 }

@@ -34,12 +34,14 @@ import org.apache.spark.sql.types._
   * codegen granularity is the row, and the row's work here is a bulk
   * primitive loop that is compiled Scala either way.
   *
-  * Users: the native similarity operators (float vectors) and the
-  * portable, hash-exact family in `graft.llm.Similarity` (`*Portable`),
-  * which quantizes to `round(x·10⁶)` BIGINT arrays and scores every
-  * pair and centroid through `QCosineSim` and every integer-lattice LSH
-  * bucket through `SignBucket`'s exact `Long` mode. Their DuckDB
-  * replays spell the same integer arithmetic in SQL.
+  * Users: `graft.llm.Similarity`. Its float operators — brute force
+  * (`CosineSim`), seeded LSH (`SignBucket`) and IVF-PQ (`NearestCells`,
+  * `L2Normalize`, `PqEncode`, `PqAdc`) — and its portable, hash-exact
+  * family (`*Portable`: IVF, append, SemDeDup, SQ and the rest), which
+  * quantizes to `round(x·10⁶)` BIGINT arrays and scores every pair and
+  * centroid through `QCosineSim` and every integer-lattice LSH bucket
+  * through `SignBucket`'s exact `Long` mode. Their DuckDB replays spell
+  * the same integer arithmetic in SQL.
   */
 object VecOps {
 
@@ -278,63 +280,10 @@ object NearestCells {
       centroids.toSeq.map(_.toSeq), nProbe))
 }
 
-/** Int8 scalar quantization: `q_i = round(v_i / (maxAbs/127))`, clamped
-  * to [-127, 127] (an all-zero vector quantizes to all zeros). 4× (from
-  * float) / 8× (from double) memory compression for ANN shortlists —
-  * at 100 TB the embedding column IS the working set, so this is the
-  * difference between an index that fits executor memory and one that
-  * spills. The per-vector scale is NOT stored: cosine is
-  * scale-invariant, so `QCosineSim` over the quantized codes needs no
-  * dequantization.
-  */
-case class SqQuantize(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VecOps.isVecType(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sq_quantize expects ARRAY<FLOAT|DOUBLE>, got ${child.dataType.catalogString}")
-
-  private lazy val isFloat = VecOps.isFloatVec(child.dataType)
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = VecOps.toDoubles(input.asInstanceOf[ArrayData], isFloat)
-    if (v == null) return null
-    var maxAbs = 0.0
-    var i = 0
-    while (i < v.length) {
-      val a = math.abs(v(i)); if (a > maxAbs) maxAbs = a; i += 1
-    }
-    val q = new Array[Byte](v.length)
-    if (maxAbs > 0) {
-      val inv = 127.0 / maxAbs
-      i = 0
-      while (i < v.length) {
-        val r = math.rint(v(i) * inv)
-        q(i) = math.max(-127.0, math.min(127.0, r)).toByte
-        i += 1
-      }
-    }
-    new GenericArrayData(q)
-  }
-
-  override def prettyName: String = "sq_quantize"
-
-  override protected def withNewChildInternal(newChild: Expression): SqQuantize =
-    copy(child = newChild)
-}
-
-object SqQuantize {
-  def apply(vec: Column): Column =
-    ColumnBridge.column(SqQuantize(ColumnBridge.expression(vec)))
-}
-
-/** Cosine over two integer vectors — the int8 codes of `SqQuantize`
-  * (ARRAY<TINYINT>) or the `round(x·10⁶)` BIGINT arrays of the portable
-  * similarity family (ARRAY<BIGINT>). Dot and norms accumulate exactly in
-  * `Long` (`Math.multiplyExact`/`addExact`: an overflow raises
+/** Cosine over two integer vectors: the `round(x·10⁶)` BIGINT arrays of
+  * the portable similarity family (and the int8 codes derived from them,
+  * `Similarity.sqCodes`). Dot and norms accumulate exactly in `Long`
+  * (`Math.multiplyExact`/`addExact`: an overflow raises
   * `ArithmeticException`, as the ANSI long form does, instead of
   * wrapping), then 0.0 for a zero norm, else one double division. The
   * per-vector quantization scales cancel in cosine, so this needs no
@@ -347,20 +296,12 @@ case class QCosineSim(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  private def isIntVec(dt: DataType): Boolean = dt match {
-    case ArrayType(ByteType, _) | ArrayType(LongType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isIntVec(left.dataType) && isIntVec(right.dataType))
+    if (VecOps.isLongVec(left.dataType) && VecOps.isLongVec(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"q_cosine_sim expects two ARRAY<TINYINT|BIGINT>, got " +
+      s"q_cosine_sim expects two ARRAY<BIGINT>, got " +
         s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-
-  private lazy val leftLong = VecOps.isLongVec(left.dataType)
-  private lazy val rightLong = VecOps.isLongVec(right.dataType)
 
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
@@ -370,8 +311,8 @@ case class QCosineSim(left: Expression, right: Expression)
     val n = a.numElements()
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (leftLong) a.getLong(i) else a.getByte(i).toLong
-      val y = if (rightLong) b.getLong(i) else b.getByte(i).toLong
+      val x = a.getLong(i)
+      val y = b.getLong(i)
       ab = Math.addExact(ab, Math.multiplyExact(x, y))
       aa = Math.addExact(aa, Math.multiplyExact(x, x))
       bb = Math.addExact(bb, Math.multiplyExact(y, y))

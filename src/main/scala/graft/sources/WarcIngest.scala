@@ -242,8 +242,14 @@ object WarcIngest {
     import spark.implicits._
     val slices = math.max(1,
       math.min(files.length, spark.sparkContext.defaultParallelism))
-    val decoded = files.toSeq.toDF("rel_path", "uri")
-      .repartition(slices)
+    // tasks by position in the path-sorted list: a local directory lists
+    // in creation order, which parallel writer tasks make timing-dependent,
+    // and a round-robin split orders rows by a hash of the full uris — so
+    // either would group different archives per task from run to run
+    val decoded = files.toSeq.sortBy(_._1).zipWithIndex
+      .map { case ((rel, uri), i) => (rel, uri, i) }
+      .toDF("rel_path", "uri", "pos")
+      .repartition(slices, col("pos"))
       .mapPartitions { part =>
         part.flatMap { fr =>
           val rel = fr.getString(0); val uri = fr.getString(1)

@@ -110,13 +110,26 @@ class PlanShapeSpec extends SparkSpec {
     assert(!joinLine.contains("text"), joinLine)
   }
 
-  test("semanticDedup pairs only within cells: no cartesian, no nested loop") {
+  test("semanticDedup pairs only within cells: no cartesian, one-row nested-loop builds") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    object H extends AdaptiveSparkPlanHelper
     val emb = (0L until 50L).map(i =>
       (i, Array.tabulate(8)(j => (i * 8 + j).toFloat))).toDF("vec_id", "embedding")
-    val plan = graft.llm.Similarity.semanticDedup(emb, "vec_id", "embedding",
-      nCells = 4).queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan.take(600))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(600))
+    val out = graft.llm.Similarity.semanticDedupPortable(emb, "vec_id",
+      "embedding", nCells = 4)
+    assert(out.collect().length == 50)
+    val plan = out.queryExecution.executedPlan
+    assert(!plan.toString.contains("CartesianProduct"), plan.toString.take(600))
+    // the only nested loop scores each vector against the index, which
+    // broadcasts as ONE array row: no pair is ever formed by a loop
+    val builds = H.collect(plan) { case j: BroadcastNestedLoopJoinExec =>
+      H.collect(if (j.buildSide == BuildRight) j.right else j.left) {
+        case b: BroadcastExchangeExec => b.metrics("numOutputRows").value }
+    }.flatten
+    assert(builds.nonEmpty && builds.forall(_ == 1L), s"$builds\n$plan")
   }
 
   test("composite predicates and projections reach the parquet scan") {

@@ -53,6 +53,9 @@ class RegistryInvariantsSpec extends SparkSpec {
       "n19_kmeans_portable", "n20_power_iteration", "n21_hard_negatives",
       "n22_matryoshka_topk", "n23_ivf_persisted",
       "l15_cluster_balanced_sample",
+      // the IVF, append, SemDeDup and SQ entries on the same family
+      "n04_ann_ivf", "n06_ivf_recall", "n07_sq_recall", "n17_ivf_append",
+      "d16_semantic_dedup",
       // the KN trigram LM: its stat exchanges are reused across
       // consumers, which must not depend on the shuffle width
       "t30_kn_trigram_lm", "t31_kn_perplexity_buckets",
@@ -109,7 +112,7 @@ class RegistryInvariantsSpec extends SparkSpec {
     val bad = Registry.oracleSql.toSeq.flatMap { case (name, sql) =>
       clashes(sql).map(n => s"$name: $n")
     }
-    assert(Registry.oracleSql.size == 320)
+    assert(Registry.oracleSql.size == 325)
     assert(bad.isEmpty, bad)
   }
 
@@ -195,9 +198,9 @@ class RegistryInvariantsSpec extends SparkSpec {
     assert(bad.isEmpty, bad)
   }
 
-  test("rows-only ratchet: at most 17 entries lack an oracle") {
+  test("rows-only ratchet: at most 12 entries lack an oracle") {
     val rowsOnly = Registry.all.filter(_.oracle.isEmpty).map(_.name)
-    assert(rowsOnly.size <= 17,
+    assert(rowsOnly.size <= 12,
       s"${rowsOnly.size} rows-only entries (the set never grows): $rowsOnly")
   }
 

@@ -54,8 +54,8 @@ class SimilaritySpec extends SparkSpec {
         "embedding", 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 5,
-        nCells = 16, nProbe = 6)
+    val ivf = Similarity.ivfTopKPortable(emb, "vec_id", "embedding",
+        queryMaxId = 10L, k = 5, nCells = 16, nProbe = 6)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & ivf).size.toDouble / exact.size
@@ -94,8 +94,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF with k-means fit: recall@3 >= 0.8 on a clustered corpus") {
-    // 4 well-separated clusters; id-sample centroids (the round-2 form)
-    // would all land in cluster 0 here — the k-means++ fit must spread.
+    // 4 well-separated clusters: the k-means++ fit must spread its 8
+    // cells over all four, and its centroids, quantized, serve as the
+    // index of the portable query path.
     val rnd = new scala.util.Random(11)
     val centers = Array(
       Array.fill(16)(5f), Array.fill(16)(-5f),
@@ -111,8 +112,12 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.bruteForceTopK(corpus, queries,
       "vec_id", "embedding", 3))
-    val ivf = pairs(Similarity.ivfTopK(corpus, queries,
-      "vec_id", "embedding", 3, nCells = 8, nProbe = 2))
+    val index = Similarity.kmeansFit(corpus, "vec_id", "embedding", 8)
+      .zipWithIndex.map { case (c, cell) => (cell, c) }.toSeq
+      .toDF("cell", "c")
+      .select(col("cell"), Similarity.quantized(col("c")).as("cv"))
+    val ivf = pairs(Similarity.ivfTopKFromIndex(corpus, "vec_id",
+      "embedding", index, queryMaxId = 8L, k = 3, nProbe = 2))
     val recall = (exact & ivf).size.toDouble / exact.size
     assert(recall >= 0.8, s"IVF recall too low: $recall")
   }
@@ -126,8 +131,8 @@ class SimilaritySpec extends SparkSpec {
       "embedding", 3)
     val lsh = Similarity.recallAtK(exact, Similarity.lshTopK(emb, queries,
       "vec_id", "embedding", 3, nPlanes = 6, nTables = 8)).head()
-    val ivf = Similarity.recallAtK(exact, Similarity.ivfTopK(emb, queries,
-      "vec_id", "embedding", 3, nProbe = 6)).head()
+    val ivf = Similarity.recallAtK(exact, Similarity.ivfTopKPortable(emb,
+      "vec_id", "embedding", 5L, 3, nCells = 16, nProbe = 6)).head()
     assert(lsh.getAs[Long]("exact_pairs") == 15L)
     assert(lsh.getAs[Double]("recall") >= 0.8,
       s"LSH recall ${lsh.getAs[Double]("recall")} below floor")
@@ -146,13 +151,15 @@ class SimilaritySpec extends SparkSpec {
 
   test("int8 quantization: codes bounded, zero-safe, cosine within 0.03") {
     import spark.implicits._
+    import graft.plans.QCosineSim
     val vecs = Seq(
       (1L, Array(0.5f, -1.5f, 3.0f, 0.25f)),
       (2L, Array(-2.0f, 0.0f, 1.0f, 0.5f)),
       (3L, Array(0.0f, 0.0f, 0.0f, 0.0f))) // zero vector must not divide by 0
       .toDF("id", "v")
-    val q = vecs.select(col("id"), Similarity.quantize(col("v")).as("q"))
-      .as[(Long, Seq[Byte])].collect.toMap
+    val q = vecs.select(col("id"), Similarity.quantized(col("v")).as("qv"))
+      .select(col("id"), Similarity.sqCodes("qv"))
+      .as[(Long, Seq[Long])].collect.toMap
     assert(q(1L).max == 127 && q(1L).forall(b => b >= -127 && b <= 127))
     assert(q(3L).forall(_ == 0))
     // quantized cosine tracks exact cosine within the int8 step
@@ -161,8 +168,10 @@ class SimilaritySpec extends SparkSpec {
     val exact = Seq((pair(0).toArray, pair(1).toArray)).toDF("a", "b")
       .select(Similarity.cosine(col("a"), col("b"))).as[Double].head
     val approx = Seq((pair(0).toArray, pair(1).toArray)).toDF("a", "b")
-      .select(Similarity.qCosine(Similarity.quantize(col("a")),
-        Similarity.quantize(col("b")))).as[Double].head
+      .select(Similarity.quantized(col("a")).as("qa"),
+        Similarity.quantized(col("b")).as("qb"))
+      .select(QCosineSim(Similarity.sqCodes("qa"), Similarity.sqCodes("qb")))
+      .as[Double].head
     assert(math.abs(exact - approx) < 0.03, s"exact=$exact approx=$approx")
   }
 
@@ -171,8 +180,7 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 5)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
       "embedding", 3)
-    val sq = Similarity.sqBruteForceTopK(emb, queries, "vec_id",
-      "embedding", 3)
+    val sq = Similarity.sqTopKPortable(emb, "vec_id", "embedding", 5L, 3)
     val r = Similarity.recallAtK(exact, sq).head()
     assert(r.getAs[Long]("exact_pairs") == 15L)
     assert(r.getAs[Double]("recall") >= 0.9,
@@ -276,35 +284,21 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.9, s"clustered IVF-PQ recall@3 = $recall")
   }
 
-  test("semanticDedup: planted duplicate pair collapses to one survivor") {
-    def vec(seed: Int) = {
-      val r = new scala.util.Random(seed)
-      Array.fill(16)(r.nextGaussian().toFloat)
+  test("pqTopKPortable: a vector width other than dim fails the query") {
+    // 32 or 128 components against the default dim 64 give 4 or 16
+    // subspaces, not m = 8: the query must fail, not return an empty
+    // top-k
+    Seq(32, 128).foreach { width =>
+      val r = new scala.util.Random(width)
+      val emb = (0 until 40).map(i =>
+        (i.toLong, Array.fill(width)(r.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+      val out = Similarity.pqTopKPortable(emb, "vec_id", "embedding",
+        queryMaxId = 3L, k = 3)
+      val e = intercept[Exception](out.collect())
+      assert(e.getMessage.contains(s"vector dimension $width does not " +
+        "match dim 64"), e.getMessage)
     }
-    // 30 distinct vectors + 3 exact copies of vector 5
-    val base = (0 until 30).map(i => (i.toLong, vec(i)))
-    val dups = Seq(100L, 101L, 102L).map(id => (id, vec(5)))
-    val emb = (base ++ dups).toDF("vec_id", "embedding")
-    val out = Similarity.semanticDedup(emb, "vec_id", "embedding",
-        nCells = 4, threshold = 0.99)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    assert(out(5L), "lowest-id copy must be kept")
-    assert(!out(100L) && !out(101L) && !out(102L),
-      "higher-id exact copies must be dropped")
-    assert(out.size == 33 && out.values.count(identity) == 30,
-      s"expected 30 survivors of 33, got ${out.values.count(identity)}")
-  }
-
-  test("semanticDedup: degenerate all-duplicate corpus stays sub-quadratic") {
-    // 300 near-identical vectors, cap 16: candidate pairs must be
-    // O(cap² + N), and exactly the lowest id survives
-    val v = Array.fill(8)(0.5f)
-    val emb = (0 until 300).map(i => (i.toLong, v)).toDF("vec_id", "embedding")
-    val out = Similarity.semanticDedup(emb, "vec_id", "embedding",
-      nCells = 2, threshold = 0.99, cap = 16)
-    val kept = out.filter(col("kept")).select("id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(kept == Seq(0L), s"expected only id 0 kept, got $kept")
   }
 
   test("semanticDedupPortable: planted dups collapse; bit-stable under repartitioning") {
@@ -427,15 +421,15 @@ class SimilaritySpec extends SparkSpec {
     // The maintenance contract: given the SAME centroids, assigning a
     // new batch incrementally must land every vector in exactly the cell
     // a from-scratch assignment would pick — append never degrades the
-    // index, it only skips the refit.
+    // index, it only skips the refit. The prior corpus (ids < 400) holds
+    // the first 8 ids, so a full Forgy assignment uses the same cells.
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val prior = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    val cents = Similarity.kmeansFit(prior, "vec_id", "embedding", k = 8)
-    val appended = Similarity.ivfAppend(batch, "vec_id", "embedding", cents)
+    val appended = Similarity.ivfAppendPortable(emb, "vec_id", "embedding",
+        splitId = 400L, nCells = 8)
       .select("id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val rebuilt = Similarity.ivfAppend(emb, "vec_id", "embedding", cents)
+    val rebuilt = Similarity.forgyAssignPortable(emb, "vec_id", "embedding",
+        nCells = 8)
       .filter(col("id") >= 400)
       .select("id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -443,38 +437,35 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfAppend outliers + refit signal: planted drift trips the threshold") {
-    // Index fit on one subspace direction; the "drifted" batch is
-    // orthogonal to every centroid → cosine 0 → outlier. Signal is an
-    // exact integer cross-multiply: 3/10 > 0.25 trips, 2/10 does not.
+    // Index fit on one subspace direction (prior ids < 100); the
+    // "drifted" batch is orthogonal to every centroid → cosine 0 →
+    // outlier. Signal is an exact integer cross-multiply: 3/10 > 0.25
+    // trips, 2/10 does not.
     val prior = (0L until 20L)
       .map(i => (i, Array.tabulate(4)(j => if (j == 0) 1f else 0f)))
-      .toDF("vec_id", "embedding")
-    val cents = Similarity.kmeansFit(prior, "vec_id", "embedding", k = 2)
-    def batch(nOut: Int) = ((0 until (10 - nOut))
+    def emb(nOut: Int) = (prior ++ (0 until (10 - nOut))
       .map(i => (100L + i, Array(1f, 0f, 0f, 0f))) ++
       (0 until nOut).map(i => (200L + i, Array(0f, 1f, 0f, 0f))))
       .toDF("vec_id", "embedding")
-    val a3 = Similarity.ivfAppend(batch(3), "vec_id", "embedding", cents,
-      minCos = 0.5)
-    assert(a3.filter(col("is_outlier")).count() == 3)
+    def append(nOut: Int) = Similarity.ivfAppendPortable(emb(nOut),
+      "vec_id", "embedding", splitId = 100L, nCells = 2, minCos = 0.5)
+    val a3 = append(3)
+    assert(a3.filter(col("is_outlier") === 1).count() == 3)
     val s3 = Similarity.ivfRefitSignal(a3, maxOutlierFrac = 0.25).collect()(0)
     assert(s3.getAs[Long]("n_assigned") == 10L &&
       s3.getAs[Long]("n_outliers") == 3L && s3.getAs[Boolean]("refit"))
-    val s2 = Similarity.ivfRefitSignal(
-      Similarity.ivfAppend(batch(2), "vec_id", "embedding", cents,
-        minCos = 0.5), maxOutlierFrac = 0.25).collect()(0)
+    val s2 = Similarity.ivfRefitSignal(append(2), maxOutlierFrac = 0.25)
+      .collect()(0)
     assert(s2.getAs[Long]("n_outliers") == 2L && !s2.getAs[Boolean]("refit"))
   }
 
   test("ivfAppend plan: batch never shuffles — codebook is broadcast") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val cents = Similarity.kmeansFit(
-      emb.filter(col("vec_id") < 400), "vec_id", "embedding", k = 8)
-    val plan = Similarity.ivfAppend(emb.filter(col("vec_id") >= 400),
-      "vec_id", "embedding", cents)
+    val plan = Similarity.ivfAppendPortable(emb, "vec_id", "embedding",
+        splitId = 400L, nCells = 8)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan.take(600))
-    // the only exchange is the nCells-row broadcast, never a
+    assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(600))
+    // the only exchanges carry the ≤nCells index rows, never a
     // repartition of the batch
     assert(!plan.toLowerCase.contains("hashpartitioning(id"), plan.take(600))
     assert(!plan.toLowerCase.contains("rangepartitioning"), plan.take(600))
@@ -637,7 +628,9 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 3)
     Seq(
       Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 21),
-      Similarity.sqBruteForceTopK(emb, queries, "vec_id", "embedding", 21)
+      Similarity.sqTopKPortable(emb, "vec_id", "embedding", 3L, 21)
+        .select(col("query_id"), col("neighbor_id"),
+          col("rank").cast("int").as("rank"), col("cos").as("sim"))
     ).foreach { out =>
       val rows = out.collect()
       assert(rows.filter(_.getAs[Int]("rank") == 1)
@@ -775,10 +768,16 @@ class SimilaritySpec extends SparkSpec {
       "n20_power_iteration" -> (64L, 177593510022357832L),
       "n21_hard_negatives" -> (55L, -8016413840658177253L),
       "n22_matryoshka_topk" -> (100L, 1014412829913338140L),
-      "n23_ivf_persisted" -> (60L, 4139618371408559794L))
-    pins.foreach { case (name, (n, chk)) =>
+      "n23_ivf_persisted" -> (60L, 4139618371408559794L),
+      "n04_ann_ivf" -> (15L, 2164929613074195303L),
+      "n06_ivf_recall" -> (1L, -779494867681363133L),
+      "n07_sq_recall" -> (1L, -779494867681363133L),
+      "n17_ivf_append" -> (15L, -2687724174924903864L),
+      "d16_semantic_dedup" -> (16L, -2901699131822786402L))
+    val bad = pins.flatMap { case (name, (n, chk)) =>
       val got = Bench.checksum(SparkEntry.queries(name)(spark, sf))
-      assert(got == (n, Some(chk)), s"$name: $got")
+      if (got == (n, Some(chk))) None else Some(s"$name: $got")
     }
+    assert(bad.isEmpty, bad)
   }
 }

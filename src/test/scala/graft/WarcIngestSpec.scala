@@ -125,6 +125,24 @@ class WarcIngestSpec extends SparkSpec {
     }
   }
 
+  test("archives reach the same tasks whatever order the directory lists them in") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val archives = (0 until 8).map(i => f"a$i%02d.warc.gz" ->
+      gz(record("conversion", s"<urn:o:$i>", s"https://o/$i",
+        s"doc $i".getBytes(StandardCharsets.UTF_8), "\r\n")))
+    // the same files in two directories, created in opposite orders
+    def layout(files: Seq[(String, Array[Byte])]): Map[String, Int] = {
+      val dir = Files.createTempDirectory("graft-warc-order").toFile
+      files.foreach { case (n, b) => Files.write(new File(dir, n).toPath, b) }
+      WarcIngest.readWarcDir(spark, dir.getAbsolutePath)._1
+        .select(col("rel_path"), spark_partition_id()).collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+    }
+    val forward = layout(archives)
+    assert(forward.size == 8)
+    assert(layout(archives.reverse) == forward)
+  }
+
   test("archive LARGER than the old 64 MB file cap streams through whole") {
     // The round-10 path listed files through a 64 MB cap and silently
     // dropped anything bigger (a standard ~1 GB CommonCrawl archive

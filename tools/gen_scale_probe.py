@@ -2,8 +2,9 @@
 """Generate the sf1-scale probe tables (10x sf0.1) for the heavy-family
 scaling-exponent measurement (BENCH_NOTES.md "sf1 scaling probe").
 
-Writes /root/repo/bench_sf1/{documents,events}.parquet with the SAME
-statistical shape as the driver's sf0.1 testdata (measured, not guessed):
+Writes bench_sf1/{documents,events,embeddings}.parquet at the repository
+root with the SAME statistical shape as the sf0.1 testdata (measured, not
+guessed):
 
   documents: 50,000 rows (10x 5,000); 31-word vocabulary; 10..100 words
   per doc uniform; lang mix en 40% / de,es,fr,zh 15%; 20 sources;
@@ -11,6 +12,8 @@ statistical shape as the driver's sf0.1 testdata (measured, not guessed):
   events: 1,000,000 rows (10x 100,000); 15,000 users (10x 1,500 -- the
   per-user event density stays constant, the honest way to scale a
   stream); 5 event types uniform; 30-day timestamp span.
+  embeddings: 20,000 rows (10x 2,000); 64-wide unit-norm vectors with
+  Gaussian components (sd 0.125); 10 labels uniform, carrying no geometry.
 
 Deterministic: every random choice is a DuckDB hash() of the row id.
 The probe tables are local build artifacts (gitignored); this script is
@@ -73,6 +76,30 @@ FROM (SELECT unnest(range(1000000)) AS i)
 ORDER BY ts""")
 con.execute(f"COPY ev TO '{OUT}/events.parquet' (FORMAT PARQUET)")
 
+# embeddings: the sf0.1 table, measured: 2,000 unit-norm 64-wide vectors
+# whose components look independent Gaussian (sd 0.12500 = 1/sqrt(64)),
+# and 10 labels of 182-218 rows that carry no geometry (per-label
+# centroid norms 0.06-0.07, what noise gives at ~200 rows). Write the
+# same shape 10x: 20,000 vectors of Box-Muller normals from hash
+# uniforms, normalised to unit norm, labels uniform over 10.
+dim, n_labels = 64, 10
+con.execute(f"""
+CREATE TABLE emb AS
+WITH u AS (
+  SELECT i, j,
+    (CAST(hash(i * {dim} + j, 1) >> 11 AS DOUBLE) + 0.5) / 9007199254740992.0 AS u1,
+    (CAST(hash(i * {dim} + j, 2) >> 11 AS DOUBLE) + 0.5) / 9007199254740992.0 AS u2
+  FROM (SELECT unnest(range(20000)) AS i), (SELECT unnest(range({dim})) AS j)),
+g AS (
+  SELECT i, list(sqrt(-2 * ln(u1)) * cos(2 * pi() * u2) ORDER BY j) AS v
+  FROM u GROUP BY i)
+SELECT CAST(i AS BIGINT) AS vec_id,
+  CAST(list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS FLOAT[])
+    AS embedding,
+  CAST(abs(hash(i * 59 + 29)) % {n_labels} AS INTEGER) AS label
+FROM g ORDER BY vec_id""")
+con.execute(f"COPY emb TO '{OUT}/embeddings.parquet' (FORMAT PARQUET)")
+
 print("docs:", con.execute(f"""
   SELECT count(*), avg(strlen(text)),
     count(*) - count(DISTINCT md5(text))
@@ -80,3 +107,7 @@ print("docs:", con.execute(f"""
 print("events:", con.execute(f"""
   SELECT count(*), count(DISTINCT user_id)
   FROM read_parquet('{OUT}/events.parquet')""").fetchall())
+print("embeddings:", con.execute(f"""
+  SELECT count(*), count(DISTINCT label), stddev_pop(x)
+  FROM (SELECT label, unnest(embedding) AS x
+        FROM read_parquet('{OUT}/embeddings.parquet'))""").fetchall())
